@@ -260,17 +260,18 @@ def main() -> None:
     # Per-query artifact serving state (r10 verdict #3): round-over-
     # round comparisons kept conflating plan changes with store state
     # (cold build vs warm read of the same artifact differs 3-10x).
-    # The store logs every get_or_build outcome; the FIRST sample of
-    # each query is the one that consults the store (later reps hit
-    # the session memo above it), so its drain decides the label.
-    # "n/a" = the store was never consulted (non-artifact query, or a
-    # session-memo hit left warm by an earlier query in this process).
+    # The store logs every get_or_build outcome and every session-memo
+    # hit; the FIRST sample of each query is the one that consults the
+    # store (later reps hit the session memo above it), so its drain
+    # decides the label. "memo" = every shared frame the first sample
+    # used was already in the session memo (left there by an earlier
+    # query in this process); "n/a" = a non-artifact query.
     def _served(entries: list[tuple[str, str]]) -> str:
         if not entries:
             return "n/a"
-        return (
-            "cold" if any(s == "cold" for _, s in entries) else "warm"
-        )
+        if any(s == "cold" for _, s in entries):
+            return "cold"
+        return "memo" if all(s == "memo" for _, s in entries) else "warm"
 
     served: dict[str, str] = {}
     served_kinds: dict[str, list[str]] = {}

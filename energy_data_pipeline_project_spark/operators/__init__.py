@@ -9,84 +9,45 @@ DuckDB oracle twin. ``all_queries()`` / ``all_oracles()`` merge them for
 from __future__ import annotations
 
 from collections.abc import Callable
+from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-def all_queries() -> dict[str, QueryFn]:
-    from . import (
-        clustering,
-        curation,
-        dedup,
-        graph,
-        multimodal,
-        pq,
-        relational,
-        similarity,
-        text,
-        timeseries,
-        tpch_shapes,
-        training,
-        warehouse,
-    )
+# Operator modules in registration order (later modules win on a name
+# clash). Imported lazily so importing this package stays cheap.
+_MODULES = (
+    "relational",
+    "tpch_shapes",
+    "timeseries",
+    "warehouse",
+    "dedup",
+    "similarity",
+    "clustering",
+    "graph",
+    "text",
+    "multimodal",
+    "curation",
+    "training",
+    "pq",
+)
 
-    out: dict[str, QueryFn] = {}
-    for mod in (
-        relational,
-        tpch_shapes,
-        timeseries,
-        warehouse,
-        dedup,
-        similarity,
-        clustering,
-        graph,
-        text,
-        multimodal,
-        curation,
-        training,
-        pq,
-    ):
-        out.update(mod.QUERIES)
+
+def _merged(attr: str) -> dict:
+    out: dict = {}
+    for name in _MODULES:
+        out.update(getattr(import_module(f".{name}", __name__), attr))
     return out
+
+
+def all_queries() -> dict[str, QueryFn]:
+    return _merged("QUERIES")
 
 
 def all_oracles() -> dict[str, str]:
-    from . import (
-        clustering,
-        curation,
-        dedup,
-        graph,
-        multimodal,
-        pq,
-        relational,
-        similarity,
-        text,
-        timeseries,
-        tpch_shapes,
-        training,
-        warehouse,
-    )
-
-    out: dict[str, str] = {}
-    for mod in (
-        relational,
-        tpch_shapes,
-        timeseries,
-        warehouse,
-        dedup,
-        similarity,
-        clustering,
-        graph,
-        text,
-        multimodal,
-        curation,
-        training,
-        pq,
-    ):
-        out.update(mod.ORACLES)
-    return out
+    return _merged("ORACLES")
 
 
 # Gate carried by each DELIBERATELY oracle-less query (the driver

@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import hashing as H
+from ..pipeline import artifacts as A
 from ..sources.tables import load_table
 from ._registry import make_registry
 from . import dedup as D
@@ -272,16 +273,16 @@ def shared_semantic_assignment(
         f"sem_ec@r{_SEM_EC_CHAIN_REV}"
         f"-k{SEM_K}q{SEM_QUANT}c{COSINE_QUANT}"
     )
-    return D._shared_corpus_frame(
+    return A.shared(
         spark,
-        sf_dir,
         kind,
-        "ec",
-        lambda: semantic_assigned_melt(
-            load_table(spark, sf_dir, "embeddings")
-        ),
-        table="embeddings",
-    )
+        sf_dir,
+        "embeddings",
+        ("ec",),
+        lambda: {
+            "ec": semantic_assigned_melt(load_table(spark, sf_dir, "embeddings"))
+        },
+    )["ec"]
 
 
 @query("dedup_semantic", _semantic_oracle())
@@ -709,7 +710,6 @@ def trained_bpe_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode, bench, parity — reads the published table and pays only
     its apply pass. At 100 TB a tokenizer build is precisely this
     shape: one expensive offline trainer, many cheap appliers."""
-    from ..pipeline import artifacts as A
 
     def _build() -> dict[str, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
@@ -733,10 +733,11 @@ def trained_bpe_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = out.unionAll(r)
         return {"rules": out}
 
-    return A.get_or_build(
+    return A.shared(
         spark,
         f"bpe_rules@r{_BPE_CHAIN_REV}-i{BPE_ITERS}",
-        A.corpus_fingerprint(sf_dir, table="documents"),
+        sf_dir,
+        "documents",
         ("rules",),
         _build,
     )["rules"]

@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import hashing as H
+from ..pipeline import artifacts as A
 from ..sources.tables import load_table
 from ._registry import make_registry
 
@@ -518,7 +519,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Session-memoized pair frame shared by the graph/CC/curation consumers
+# Shared pair frame for the graph/CC/curation consumers
 # ---------------------------------------------------------------------------
 # Six query entrypoints consume the same near-dup pair graph of the
 # documents table (cluster_cc, pagerank, triangles, k-core, LPA, BFS,
@@ -526,23 +527,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per query dominated their bench cost (VERDICT r03 perf audit), and
 # it misrepresents the real pipeline, where signatures are computed
 # once per corpus snapshot and every downstream job reads the pair
-# frame. The memo is keyed by (Spark application, resolved table path,
-# file mtime) so a rewritten fixture in the same session misses the
-# cache; the persisted frame is deliberately NOT registered with
-# ``_CACHED_FRAMES`` so per-query ``release_cached_frames()`` keeps
-# it warm across consumers. Results are bit-identical to per-query
-# recomputation — the pair generation is deterministic.
-#
-# Below the session memo sits the cross-process LAKE tier (r09 verdict
-# #2, same layering as the IVF/PQ training chains): the pair frame is
-# a deterministic, corpus-fingerprinted derivation — exactly the thing
-# a 100 TB pipeline publishes once per corpus snapshot — so a COLD
-# process reads the published symmetric edge table instead of
-# re-shuffling the corpus through shingle→minhash→band→bucket-join.
-# est_jaccard values are exact multiples of 1/MINHASH_K, so the
-# parquet round-trip is bit-exact and oracles (which replay the chain
-# in SQL) stay hash-identical whichever tier answered.
-_SHARED_PAIRS: dict[tuple[str, str, str, int], DataFrame] = {}
+# frame. ``artifacts.shared`` memoizes it per session and publishes it
+# to the lake, so a COLD process reads the published symmetric edge
+# table instead of re-shuffling the corpus through
+# shingle→minhash→band→bucket-join. est_jaccard values are exact
+# multiples of 1/MINHASH_K, so the parquet round-trip is bit-exact and
+# oracles (which replay the chain in SQL) stay hash-identical whichever
+# tier answered.
 
 # Bump on ANY change to the pair derivation (shingling, hash family,
 # banding, cap or threshold semantics) so a stale published frame can
@@ -554,58 +545,6 @@ _SHARED_PAIRS: dict[tuple[str, str, str, int], DataFrame] = {}
 _LSH_PAIRS_CHAIN_REV = 2
 
 
-def _shared_corpus_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    kind: str,
-    frame: str,
-    build,
-    table: str = "documents",
-) -> DataFrame:
-    """Session-memoized, lake-published deterministic derivation of
-    ``{sf_dir}/{table}`` (the train-once/serve-many tier, generalized
-    r11 from the LSH pair frame to every shared corpus frame; r12
-    adds the ``table`` parameter so embeddings-derived frames ride the
-    same tier). ``kind`` must carry an ``@rN-...`` signature covering
-    every constant and logic revision of the derivation; ``build()``
-    returns the frame."""
-    import os
-
-    path = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    key = (spark.sparkContext.applicationId, kind, path, mtime)
-    df = _SHARED_PAIRS.get(key)
-    if df is None:
-        # evict superseded entries for the same (kind, table path)
-        # (rewritten fixture → new mtime): without this, each rewrite
-        # leaks a persisted frame for the application lifetime, and the
-        # CacheManager keeps plan-substituting the stale data
-        for k in [
-            k
-            for k in _SHARED_PAIRS
-            if k[0] == key[0] and k[1] == kind and k[2] == path
-        ]:
-            try:
-                _SHARED_PAIRS.pop(k).unpersist()
-            except Exception:
-                pass
-
-        from ..pipeline import artifacts as A
-
-        df = A.get_or_build(
-            spark,
-            kind,
-            A.corpus_fingerprint(sf_dir, table=table),
-            (frame,),
-            lambda: {frame: build()},
-        )[frame].persist()
-        _SHARED_PAIRS[key] = df
-    return df
-
-
 def shared_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted ``minhash_lsh_pairs`` over ``{sf_dir}/documents``."""
     kind = (
@@ -613,23 +552,16 @@ def shared_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"-k{H.MINHASH_K}b{H.MINHASH_BANDS}"
         f"c{LSH_BUCKET_CAP}t{MINHASH_THRESHOLD}"
     )
-    return _shared_corpus_frame(
+    return A.shared(
         spark,
-        sf_dir,
         kind,
-        "pairs",
-        lambda: minhash_lsh_pairs(load_table(spark, sf_dir, "documents")),
-    )
-
-
-def release_shared_pairs() -> None:
-    """Unpersist and forget every memoized shared corpus frame."""
-    for df in _SHARED_PAIRS.values():
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-    _SHARED_PAIRS.clear()
+        sf_dir,
+        "documents",
+        ("pairs",),
+        lambda: {
+            "pairs": minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
+        },
+    )["pairs"]
 
 
 # ---------------------------------------------------------------------------
@@ -2095,13 +2027,16 @@ def shared_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     kind = (
         f"shingle_postings@r{_SHINGLE_POSTINGS_CHAIN_REV}-n{SHINGLE_N}"
     )
-    return _shared_corpus_frame(
+    return A.shared(
         spark,
-        sf_dir,
         kind,
-        "postings",
-        lambda: _shingle_hashes(load_table(spark, sf_dir, "documents")),
-    )
+        sf_dir,
+        "documents",
+        ("postings",),
+        lambda: {
+            "postings": _shingle_hashes(load_table(spark, sf_dir, "documents"))
+        },
+    )["postings"]
 
 
 def shared_token_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2114,21 +2049,22 @@ def shared_token_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict #1b)."""
     h = H.md5_int64("tok", duck=False)
 
-    def _build() -> DataFrame:
-        return (
-            load_table(spark, sf_dir, "documents")
+    def _build() -> dict[str, DataFrame]:
+        return {
+            "postings": load_table(spark, sf_dir, "documents")
             .select("doc_id", F.explode(F.expr(_TOKS_SPARK)).alias("tok"))
             .selectExpr("doc_id", f"{h} AS h")
             .distinct()
-        )
+        }
 
-    return _shared_corpus_frame(
+    return A.shared(
         spark,
-        sf_dir,
         f"tok_postings@r{_TOK_POSTINGS_CHAIN_REV}",
-        "postings",
+        sf_dir,
+        "documents",
+        ("postings",),
         _build,
-    )
+    )["postings"]
 
 
 def _sn_oracle() -> str:

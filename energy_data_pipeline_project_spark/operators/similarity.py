@@ -50,6 +50,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import vectors as V
+from ..pipeline import artifacts as A
 from ..sources.tables import load_table
 from ._registry import make_registry
 
@@ -396,17 +397,16 @@ def _ivf_centroid_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return {"centroids": carr}
 
-    from ..pipeline import artifacts as A
-
     # the @r2-q{grid} suffix is the algorithm signature (see
     # pq._PQ_CHAIN_REV's comment): a changed derivation must never
     # serve an index published by the old code. r2: VALID_VEC now
     # excludes NaN/Inf-element vectors, changing the training
     # population (r10 third-wave sweep).
-    return A.get_or_build(
+    return A.shared(
         spark,
         f"ivf_coarse@r2-q{IVF_GRID_QUANT}",
-        A.corpus_fingerprint(sf_dir),
+        sf_dir,
+        "embeddings",
         ("centroids",),
         _build,
     )["centroids"]

@@ -129,6 +129,12 @@ def window_partition_specs(plan_text: str) -> list[tuple[str, ...]]:
                 # spec is empty (order carries ASC/DESC); [fns],
                 # [parts] when the ORDER is the empty one.
                 part = "" if re.search(r"\b(ASC|DESC)\b", groups[1]) else groups[1]
+            elif len(groups) == 1 and "windowspecdefinition" in groups[0]:
+                # Window with BOTH specs empty (``over ()`` with no
+                # orderBy): only [fns] survives argString — a global
+                # window that used to fall into the WindowGroupLimit
+                # branch and escape the audit
+                part = ""
             elif groups:
                 # WindowGroupLimit: [partitionSpec], [orderSpec]
                 part = groups[0]

@@ -51,18 +51,15 @@ class PQIndex:
 
 def build_pq_index(spark: SparkSession, sf_dir: str) -> PQIndex:
     # _trained_m is the tiered Lloyd chain the batch twins train
-    # against (same melted frame, same PQ_TRAIN_SAMPLE cap): session
-    # memo → published lake artifact → training. Since r09 the server
-    # therefore reads the SAME persisted index the batch queries
-    # serve from (r08 verdict #3's unification) — a cold serving
-    # process trains nothing if any prior run published the chain.
-    # Bit-identical either way.
-    melted = _melted(spark, sf_dir)
+    # against (same melted frame, same PQ_TRAIN_SAMPLE cap), served by
+    # artifacts.shared: session memo → published lake artifact →
+    # training. The server therefore reads the SAME persisted index the
+    # batch queries serve from (r08 verdict #3's unification) — a cold
+    # serving process trains nothing if any prior run published the
+    # chain. Bit-identical either way.
     codes, cent = _trained_m(spark, sf_dir)
     return PQIndex(
-        codes=codes,
-        centroids=cent.localCheckpoint(eager=True),
-        corpus_melted=melted,
+        codes=codes, centroids=cent, corpus_melted=_melted(spark, sf_dir)
     )
 
 

@@ -80,6 +80,8 @@ WINDOW_JUSTIFICATIONS: dict[str, str] = {
     "percent_rank_suppliers": "() = running sum over DISTINCT s_acctbal — value-domain-bounded",
     "text_vocab_coverage": "() = prefix over distinct frequency LEVELS — O(√corpus_tokens) rows by Zipf",
     "text_heavy_hitters": "() = rank over merged Misra-Gries sketch — ≤ n_tasks×HH_K rows by sketch size",
+    "dq_distribution_drift": "() = global sum over the PSI bucket grid — PSI_BUCKETS (16) rows",
+    "dq_benford_audit": "() = global sum over first-digit counts — ≤ 9 rows",
 }
 
 

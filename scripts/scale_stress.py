@@ -118,8 +118,10 @@ def main() -> int:
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         ents = drain_serve_log()
-        served = ("cold" if any(s == "cold" for _, s in ents)
-                  else "warm" if ents else "n/a")
+        served = ("n/a" if not ents
+                  else "cold" if any(s == "cold" for _, s in ents)
+                  else "memo" if all(s == "memo" for _, s in ents)
+                  else "warm")
         return best, rows, served
 
     results = {}

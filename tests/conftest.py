@@ -53,7 +53,8 @@ def _isolated_artifact_store():
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "slow: sf0.1-scale gates (run by default; deselect with -m 'not slow')",
+        "slow: sf0.1-scale gates (full tier: run only with "
+        "SPARK_GRAFT_FULL_TESTS=1 or when named explicitly)",
     )
 
 
@@ -95,6 +96,28 @@ _FULL_TIER_TESTS = {
 }
 
 
+def _skip_as_full_tier(item, config) -> bool:
+    """True when ``item`` is full tier (its file, or the test itself)
+    and was not named on the command line. A full-tier file named by
+    path, or a full-tier test named by ``path::test`` node id, is an
+    explicit request and runs."""
+    name = getattr(item, "originalname", item.name)
+    whole_file = os.path.basename(str(item.fspath)) in _FULL_TIER_FILES
+    if not whole_file and name not in _FULL_TIER_TESTS:
+        return False
+    path = os.path.abspath(str(item.fspath))
+    for arg in config.invocation_params.args:
+        target, _, rest = str(arg).partition("::")
+        target = os.path.join(str(config.invocation_params.dir), target)
+        if os.path.abspath(target) != path:
+            continue
+        if whole_file and not rest:
+            return False
+        if rest.split("::")[-1].split("[")[0] == name:
+            return False
+    return True
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS", "") not in ("", "0"):
         return
@@ -103,10 +126,7 @@ def pytest_collection_modifyitems(config, items):
         "the driver verify inside its window; r11 verdict #4)"
     )
     for item in items:
-        if (
-            os.path.basename(str(item.fspath)) in _FULL_TIER_FILES
-            or getattr(item, "originalname", item.name) in _FULL_TIER_TESTS
-        ):
+        if _skip_as_full_tier(item, config):
             item.add_marker(skip)
 
 

@@ -95,7 +95,7 @@ def test_ivfpq_artifact_equals_fresh_training(spark, art_root):
     frames."""
     import energy_data_pipeline_project_spark.operators.pq as pq
 
-    pq.release_pq_memos()
+    A.release_shared()
     c1 = pq.embedding_pq_codes(spark, SF_SMOKE)
     rows1 = sorted(map(tuple, c1.collect()))
 
@@ -107,18 +107,18 @@ def test_ivfpq_artifact_equals_fresh_training(spark, art_root):
     fp = A.corpus_fingerprint(SF_SMOKE)
     assert glob.glob(os.path.join(art_root, "pq_m@*", fp, "_COMPLETE"))
 
-    pq.release_pq_memos()  # simulate a cold process
+    A.release_shared()  # simulate a cold process
     rows2 = sorted(map(tuple, pq.embedding_pq_codes(spark, SF_SMOKE).collect()))
     assert rows1 == rows2
 
     # ivfpq: four frames published, cold read matches
-    pq.release_pq_memos()
+    A.release_shared()
     r1 = sorted(map(tuple, pq.ann_topk_ivfpq(spark, SF_SMOKE).collect()))
     for frame in ("coarse", "cells", "codes", "codebook"):
         assert glob.glob(
             os.path.join(art_root, "ivfpq@*", fp, frame)
         ), frame
-    pq.release_pq_memos()
+    A.release_shared()
     r2 = sorted(map(tuple, pq.ann_topk_ivfpq(spark, SF_SMOKE).collect()))
     assert r1 == r2
 
@@ -132,6 +132,7 @@ def test_ivf_centroid_artifact_matches_inline(spark, art_root, monkeypatch):
 
     with_store = sorted(map(tuple, ann_topk_ivf(spark, SF_SMOKE).collect()))
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "off")
+    A.release_shared()  # a memo hit would skip the inline derivation
     inline = sorted(map(tuple, ann_topk_ivf(spark, SF_SMOKE).collect()))
     assert with_store == inline
 
@@ -211,7 +212,7 @@ def test_shared_lsh_pairs_artifact_serves_cold_process(
 
     from energy_data_pipeline_project_spark.operators import dedup
 
-    dedup.release_shared_pairs()
+    A.release_shared()
     try:
         rows1 = sorted(
             map(tuple, dedup.shared_lsh_pairs(spark, SF_SMOKE).collect())
@@ -221,7 +222,7 @@ def test_shared_lsh_pairs_artifact_serves_cold_process(
             os.path.join(art_root, "lsh_pairs@*", fp, "_COMPLETE")
         )
 
-        dedup.release_shared_pairs()  # cold process: memo gone
+        A.release_shared()  # cold process: memo gone
 
         def _boom(*a, **k):
             raise AssertionError(
@@ -234,7 +235,7 @@ def test_shared_lsh_pairs_artifact_serves_cold_process(
         )
         assert rows1 == rows2
     finally:
-        dedup.release_shared_pairs()
+        A.release_shared()
         dedup.release_cached_frames()
 
 
@@ -258,6 +259,7 @@ def test_bpe_rules_artifact_serves_cold_process(spark, art_root, monkeypatch):
         raise AssertionError("cold call retrained instead of reading store")
 
     monkeypatch.setattr(curation, "_bpe_merge_round", _boom)
+    A.release_shared()  # cold process: memo gone
     rows2 = sorted(
         map(tuple, curation.trained_bpe_rules(spark, SF_SMOKE).collect())
     )
@@ -396,7 +398,7 @@ def test_token_postings_artifact_serves_cold_process(
     from energy_data_pipeline_project_spark.operators import dedup
     from energy_data_pipeline_project_spark.sources import tables
 
-    dedup.release_shared_pairs()
+    A.release_shared()
     try:
         rows1 = sorted(
             map(tuple, dedup.shared_token_postings(spark, SF_SMOKE).collect())
@@ -406,7 +408,7 @@ def test_token_postings_artifact_serves_cold_process(
             os.path.join(art_root, "tok_postings@*", fp, "_COMPLETE")
         )
 
-        dedup.release_shared_pairs()  # cold process: memo gone
+        A.release_shared()  # cold process: memo gone
 
         def _boom(*a, **k):
             raise AssertionError(
@@ -420,7 +422,7 @@ def test_token_postings_artifact_serves_cold_process(
         )
         assert rows1 == rows2
     finally:
-        dedup.release_shared_pairs()
+        A.release_shared()
         dedup.release_cached_frames()
 
 
@@ -428,7 +430,7 @@ def test_serve_log_records_cold_then_warm(spark, art_root, monkeypatch):
     """get_or_build must log "cold" when it ran the build chain (store
     miss OR tier disabled) and "warm" on a store read — the signal
     bench uses to stop conflating plan changes with store state (r10
-    verdict #3)."""
+    verdict #3). A shared() session-memo hit logs "memo"."""
     A.drain_serve_log()
 
     def build():
@@ -440,9 +442,56 @@ def test_serve_log_records_cold_then_warm(spark, art_root, monkeypatch):
     A.get_or_build(spark, "ksrv", fp, ("t",), build)
     assert A.drain_serve_log() == [("ksrv", "warm")]
     assert A.drain_serve_log() == []  # drained
+    A.release_shared()
+    try:
+        first = A.shared(spark, "kshr@r1", SF_SMOKE, "documents", ("t",), build)
+        assert A.drain_serve_log() == [("kshr@r1", "cold")]
+        again = A.shared(spark, "kshr@r1", SF_SMOKE, "documents", ("t",), build)
+        assert A.drain_serve_log() == [("kshr@r1", "memo")]
+        assert again["t"] is first["t"]
+        A.release_shared()  # cold process: memo gone, store published
+        A.shared(spark, "kshr@r1", SF_SMOKE, "documents", ("t",), build)
+        assert A.drain_serve_log() == [("kshr@r1", "warm")]
+    finally:
+        A.release_shared()
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "off")
     A.get_or_build(spark, "ksrv", fp, ("t",), build)
     assert A.drain_serve_log() == [("ksrv", "cold")]
+
+
+def test_shared_evicts_other_applications_and_stale_fingerprints(
+    spark, art_root, tmp_path
+):
+    """A stopped session's memo entries are unusable: the next miss
+    drops every entry keyed under another Spark application instead
+    of leaking it for the process lifetime. A rewritten table (new
+    fingerprint) replaces its superseded entry rather than adding one."""
+    import shutil
+
+    class _Stale:
+        def unpersist(self):
+            raise RuntimeError("session already stopped")
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    shutil.copy(f"{SF_SMOKE}/documents.parquet", f"{sf}/documents.parquet")
+    A.release_shared()
+    try:
+        A._SHARED[("app-gone", "kevict@r1", "fp")] = ("/gone", {"t": _Stale()})
+
+        def build():
+            return {"t": spark.range(3)}
+
+        A.shared(spark, "kevict@r1", sf, "documents", ("t",), build)
+        assert [k[0] for k in A._SHARED] == [
+            spark.sparkContext.applicationId
+        ]
+        os.utime(f"{sf}/documents.parquet", ns=(1, 2))
+        A.shared(spark, "kevict@r1", sf, "documents", ("t",), build)
+        (key,) = A._SHARED
+        assert key[2] == A.corpus_fingerprint(sf, "documents")
+    finally:
+        A.release_shared()
 
 
 def test_fuzz_hunt_script_isolates_artifact_store(tmp_path):

@@ -11,6 +11,7 @@ does not fire.
 from __future__ import annotations
 
 from energy_data_pipeline_project_spark.operators import dedup
+from energy_data_pipeline_project_spark.pipeline.artifacts import release_shared
 from energy_data_pipeline_project_spark.sources.tables import load_table
 
 from .conftest import SF_SMOKE
@@ -95,7 +96,7 @@ def test_release_cached_frames_unpersists(spark):
     # session. A still-persisted shared_lsh_pairs frame would be
     # plan-substituted by the CacheManager into this fresh run (its
     # logical plan is identical), so drop the memo first.
-    dedup.release_shared_pairs()
+    release_shared()
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     docs = load_table(spark, SF_SMOKE, "documents")
@@ -277,7 +278,7 @@ def test_shared_lsh_pairs_matches_fresh_and_keys_on_mtime(spark, tmp_path):
         os.utime(f"{sf}/documents.parquet")
         assert dedup.shared_lsh_pairs(spark, sf) is not shared1
     finally:
-        dedup.release_shared_pairs()
+        release_shared()
         dedup.release_cached_frames()
 
 
