@@ -11,11 +11,12 @@ are enumerated and error-gated; see tests/test_entry_rotation.py).
 
 The driver's correctness gate stamps at most ~50 queries per round
 (CORRECTNESS_r01/r02 both cut off at exactly 50 entries), so
-``queries()`` orders the surface by how often each query has already
-earned a passing stamp in recorded ``CORRECTNESS_r*.json`` files:
-never-stamped queries come first, then least-recently-covered ones.
-Over successive rounds this rotates driver coverage across the whole
-query surface with no manual curation. Ordering changes nothing
+``queries()`` orders the surface by staleness alone, read from the
+recorded ``CORRECTNESS_r*.json`` files: never-stamped queries first,
+then by the round of each query's last passing stamp (oldest first),
+then by its passing-stamp count; remaining ties keep registration
+order. Over successive rounds this rotates driver coverage across the
+whole query surface with no manual curation. Ordering changes nothing
 semantically — every query remains independently runnable.
 """
 
@@ -84,110 +85,6 @@ def _stamp_stats(
     return counts, last
 
 
-def _passing_stamp_counts() -> dict[str, int]:
-    return _stamp_stats()[0]
-
-
-# Ordered queue-jump list within the stamp-count tier. Round-4
-# strategy (VERDICT r03 "Next round" #2): ~84 queries have never
-# received a driver stamp and the driver takes ~50/round, so the
-# slots go to the algorithmically riskiest oracles first — the ones
-# with the most machinery that could diverge at the driver's sf0.01
-# (LSH/PPJoin/CC/graph iteration, BPE, pandas aggregation, UDTF,
-# recursive-CTE dechunk, sampling caps) — then this round's fixes
-# (events_ab_lift fixed-point rewrite) and new additions. Simpler
-# never-stamped SQL shapes follow in registration order behind them.
-_PRIORITY = (
-    # round-5 red re-checks first (HUGEINT oracle typing, fixed r05),
-    # then the latent same-class fixes
-    "pagerank_dup_graph",
-    "agg_trimmed_mean_pandas",
-    "kmeans_embeddings",
-    "chunk_pack_sequences",
-    "embedding_quantize_int8",
-    "text_quality_classifier",
-    "events_conversion_latency",
-    "events_outlier_iqr",
-    "events_quantile_histogram",
-    # round-5 additions: the algorithmically riskiest new oracles
-    # (iterative PI, span gaps-and-islands, RRF fusion, LM backoff)
-    "embedding_power_iteration",
-    "dedup_substring_spans",
-    "dedup_span_removal",
-    "retrieval_rrf_hybrid",
-    "text_lm_backoff_score",
-    "embedding_random_projection",
-    "events_attribution",
-    "dq_referential_integrity",
-    "orders_cohort_ltv",
-    # round-3 red row, rewritten to integer fixed-point r04
-    "events_ab_lift",
-    # round-4 additions
-    "events_dau_mau_sketch",
-    "ann_topk_ivfpq",
-    "dq_column_profile",
-    "events_funnel_steps",
-    "join_fuzzy_editdist",
-    "events_ewma_trend",
-    # hardest unstamped dedup/graph/text oracles (judge's list)
-    "dedup_prefix_jaccard",
-    "dedup_cluster_cc",
-    "dedup_simhash_hamming",
-    "dedup_incremental_lsh",
-    "corpus_dedup_keep_best",
-    "text_bpe_merges",
-    "graph_triangle_count",
-    "graph_kcore",
-    "graph_label_propagation",
-    "graph_bfs_distances",
-    "pagerank_dup_graph",
-    "text_containment",
-    "text_bm25_topk",
-    "text_segments_udtf",
-    "agg_trimmed_mean_pandas",
-    # remaining heavy-machinery unstamped queries
-    "kmeans_embeddings",
-    "dedup_semantic",
-    "dedup_contamination",
-    "dedup_contamination_bloom",
-    "dedup_lsh_quality_eval",
-    "text_dechunk_sql",
-    "corpus_curation_e2e",
-    "corpus_quality_funnel",
-    "corpus_mix_upsample",
-    "chunk_pack_sequences",
-    "embedding_quantize_int8",
-    "embedding_norm_stats",
-    "embedding_centroid_drift",
-    "embedding_label_outliers",
-    "embedding_label_spectrum",
-    "docs_stratified_sample",
-    "docs_weighted_sample",
-    "docs_hash_sample",
-    "docs_shuffle_shards",
-    "docs_source_cap",
-    "multimodal_shard_manifest",
-    "multimodal_frame_sample",
-    "multimodal_embedding_join",
-    "text_segment_dedup",
-    "text_boilerplate_removal",
-    "text_quality_classifier",
-    "text_ngram_novelty",
-    "text_unigram_surprisal",
-    "text_bigram_pmi",
-    "text_redact",
-    "training_negative_samples",
-    "agg_incremental_maintenance",
-    "cdc_snapshot_diff",
-    "events_seasonal_decompose",
-)
-# first occurrence wins: re-check entries deliberately repeat names
-# that also sit in older tiers further down the list
-_PRIORITY_RANK: dict[str, int] = {}
-for _i, _name in enumerate(_PRIORITY):
-    _PRIORITY_RANK.setdefault(_name, _i)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     qs = all_queries()
     counts, last = _stamp_stats()
@@ -195,20 +92,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # STALENESS-primary: never-stamped queries (last = -1) lead, then
     # whichever queries' most recent passing stamp is oldest — a failed
     # row earns no stamp, so failures also sort back to the front.
-    # Count breaks recency ties (fewer lifetime stamps re-check first).
-    # Until r06 the sort was count-primary, which was right while ~90
-    # queries had count 0; once everything carried >= 1 stamp it left
-    # the truly stalest tier (count=2, last=r02) behind every count=1
-    # query from later rounds (r06 verdict #2 — recency is the
-    # coverage-freshness signal now). Remaining ties: priority list,
-    # then registration order (stable sort).
-    order.sort(
-        key=lambda n: (
-            last.get(n, -1),
-            counts.get(n, 0),
-            _PRIORITY_RANK.get(n, len(_PRIORITY)),
-        )
-    )
+    # Count breaks recency ties (fewer lifetime stamps re-check first);
+    # the stable sort leaves remaining ties in registration order.
+    order.sort(key=lambda n: (last.get(n, -1), counts.get(n, 0)))
     return {name: qs[name] for name in order}
 
 

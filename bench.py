@@ -195,6 +195,10 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _median(samples: list[float]) -> float:
+    return sorted(samples)[len(samples) // 2]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -203,6 +207,15 @@ def main() -> None:
         sf = -1.0
 
     spark = get_spark_session(app_name="bench")
+    # WindowExecBase logs "No Partition Defined for Window operation!"
+    # for every global window; each one has an audited row in
+    # scripts/plan_audit.py, so the warning is noise in the bounded
+    # driver log tail.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     queries = all_queries()
 
     # Warm the session once: file-listing/footer reads for every table
@@ -308,9 +321,7 @@ def main() -> None:
             # memory pressure (no-op for queries that cached nothing)
             release_cached_frames()
             _record_serve(name, reps[name][-1])
-    timings: dict[str, float] = {
-        name: sorted(rs)[len(rs) // 2] for name, rs in reps.items()
-    }
+    timings: dict[str, float] = {name: _median(rs) for name, rs in reps.items()}
 
     # The reference's own workload: a 7-day medallion backfill
     # (bronze ingest → silver flatten → gold aggregates+join, all
@@ -343,58 +354,33 @@ def main() -> None:
             )
         finally:
             shutil.rmtree(lake, ignore_errors=True)
-    timings["pipeline_medallion_7d"] = sorted(
-        reps["pipeline_medallion_7d"]
-    )[1]
+    timings["pipeline_medallion_7d"] = _median(reps["pipeline_medallion_7d"])
     drain_serve_log()  # keep medallion-run noise out of the first extra
 
-    # Extras are single-sample by design (~125 queries); the two WATCH
-    # queries wobbled >1.3x between r03 and r04 from first-touch/JIT
-    # noise alone (warm re-runs measure well under both rounds, and no
-    # commit touched their plans — r04 verdict item 5), so they take
-    # min-of-2 to keep round-over-round comparisons meaningful.
-    WATCH = {"basket_part_pairs", "events_quantile_histogram"}
-    # The 10 slowest extras of the PREVIOUS round (self-updating from
-    # BENCH_DETAIL.json) additionally get a second timed rep (r07
-    # verdict #7): proving dedup_prefix_jaccard's +34% was real took
-    # git archaeology because single samples can't separate plan
-    # regressions from first-touch noise. The REPORTED value stays the
-    # first (cold) sample — identical semantics to every prior round;
-    # for memo-backed queries (ann_topk_ivfpq etc.) the second rep is
-    # the warm repeat, which would flatter extra_total under min-of-2.
-    # Both reps land in BENCH_DETAIL.json.extra_reps for attribution.
-    detail_path = os.path.join(os.path.dirname(__file__), "BENCH_DETAIL.json")
-    try:
-        with open(detail_path) as f:
-            _prev = json.load(f).get("extra_queries") or {}
-        slow_tier = set(sorted(_prev, key=_prev.get, reverse=True)[:10])
-    except (OSError, ValueError, AttributeError, TypeError):
-        slow_tier = set()
-
-    # Every extra whose FIRST (cold) sample lands ≥2s also gets a
-    # second rep (r09 verdict #5): the 2-3s band is exactly where VM
-    # steal noise manufactured r08's false "regressions", and the
-    # prev-round slow tier alone missed single-rep queries that were
-    # fast last round but slow this one. Self-measuring keeps the rule
-    # round-independent; the REPORTED value stays the first (cold)
-    # sample so extra_total semantics never change.
+    # One repetition rule for extras: each is timed once and that
+    # first (cold) sample is the reported value, so extra_total keeps
+    # its meaning round over round. An extra whose first sample is
+    # >= EXTRA_REP_FLOOR_S is timed once more — the 2 s+ band is where
+    # VM steal noise and plan regressions need telling apart — and the
+    # second sample goes only to BENCH_DETAIL.json's extra_reps, for
+    # attribution (for memo-backed queries it is the warm repeat, which
+    # would flatter extra_total if it were reported).
     EXTRA_REP_FLOOR_S = 2.0
     extra: dict[str, float] = {}
     extra_reps: dict[str, list[float]] = {}
+
+    def _time_extra(name: str) -> float:
+        t0 = time.perf_counter()
+        materialize(queries[name](spark, sf_dir))
+        sample = round(time.perf_counter() - t0, 3)
+        release_cached_frames()
+        _record_serve(name, sample)
+        return sample
+
     for name in EXTRA:
-        rs: list[float] = []
-        planned = 2 if (name in WATCH or name in slow_tier) else 1
-        while len(rs) < planned:
-            t0 = time.perf_counter()
-            materialize(queries[name](spark, sf_dir))
-            rs.append(round(time.perf_counter() - t0, 3))
-            release_cached_frames()
-            _record_serve(name, rs[-1])
-            if len(rs) == 1 and rs[0] >= EXTRA_REP_FLOOR_S:
-                planned = 2
-        extra[name] = min(rs) if name in WATCH else rs[0]
-        if len(rs) > 1:
-            extra_reps[name] = rs
+        extra[name] = _time_extra(name)
+        if extra[name] >= EXTRA_REP_FLOOR_S:
+            extra_reps[name] = [extra[name], _time_extra(name)]
 
     total = round(sum(timings.values()), 3)
     # Cold-build vs warm-serve segregation (r10 verdict #3): the first

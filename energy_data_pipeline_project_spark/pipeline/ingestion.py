@@ -37,21 +37,16 @@ def bronze_schema(dataset: DatasetSpec) -> T.StructType:
     )
 
 
-def ingest_dataset(
+def _bronze_frame(
     spark: SparkSession,
-    config: PipelineConfig,
     dataset: DatasetSpec,
     source: PayloadSource,
+    days: list[str],
 ) -> DataFrame | None:
-    """Fetch every backfill day, build the bronze frame, write it.
-
-    Returns the written DataFrame, or None when no day yielded a
-    payload (empty-input guard: nothing is written, any previous
-    bronze table is left untouched).
-    """
+    """Fetch ``days`` on the driver and build the bronze frame with its
+    audit columns; None when no day yielded a payload."""
     records = []
-    for day in config.dates():
-        d = day.isoformat()
+    for d in days:
         payload = source.fetch(dataset, d)
         if payload is None:
             continue
@@ -64,18 +59,36 @@ def ingest_dataset(
         )
     if not records:
         return None
-
     # NB: keep the default createDataFrame slicing (≈1 row/partition
     # here). Bronze rows are heavy (a full day's payload JSON each),
     # and bronze file count IS the downstream silver parallelism —
     # coalescing bronze to 1 file serializes the silver explode and
     # measured 4× slower end-to-end. Many small bronze files is the
     # correct trade at every scale (payloads are MBs, not KBs).
-    df = (
+    return (
         spark.createDataFrame(records, schema=bronze_schema(dataset))
         .withColumn("ingested_at", F.current_timestamp())
         .withColumn("source", F.lit(SOURCE_TAG))
     )
+
+
+def ingest_dataset(
+    spark: SparkSession,
+    config: PipelineConfig,
+    dataset: DatasetSpec,
+    source: PayloadSource,
+) -> DataFrame | None:
+    """Fetch every backfill day, build the bronze frame, write it.
+
+    Returns the written DataFrame, or None when no day yielded a
+    payload (empty-input guard: nothing is written, any previous
+    bronze table is left untouched).
+    """
+    df = _bronze_frame(
+        spark, dataset, source, [day.isoformat() for day in config.dates()]
+    )
+    if df is None:
+        return None
     write_table(
         df,
         table_path(config.lake_root, "bronze", dataset.name),
@@ -221,25 +234,9 @@ def ingest_dataset_incremental(
     if not missing:
         return None
 
-    records = []
-    for d in missing:
-        payload = source.fetch(dataset, d)
-        if payload is None:
-            continue
-        records.append(
-            {
-                dataset.key_column: dataset.key_value,
-                "date": d,
-                "payload_json": json.dumps(payload, ensure_ascii=False),
-            }
-        )
-    if not records:
+    df = _bronze_frame(spark, dataset, source, missing)
+    if df is None:
         return None
-    df = (
-        spark.createDataFrame(records, schema=bronze_schema(dataset))
-        .withColumn("ingested_at", F.current_timestamp())
-        .withColumn("source", F.lit(SOURCE_TAG))
-    )
     # Legacy layout guard: a table previously written UNPARTITIONED
     # (plain ingest_dataset) would keep its root-level files alongside
     # new date= dirs and double-read. Migrate it once: union old rows

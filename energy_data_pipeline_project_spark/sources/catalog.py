@@ -2,22 +2,15 @@
 the engine is queryable through ``spark.sql(...)`` by name — the same
 table names the DuckDB oracle uses, so any oracle SQL in this repo
 (modulo DuckDB-specific functions) can be pasted against Spark SQL.
+``register_views`` lives in ``tables`` (next to the TABLES list and the
+events ts normalization) and is re-exported here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from .tables import TABLES
-from .tables import register_views as _register_views
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> list[str]:
-    """Create/replace one temp view per testdata table; returns names.
-    Delegates to ``tables.register_views`` — one implementation to keep
-    in sync with the events ts normalization and the TABLES list."""
-    _register_views(spark, sf_dir, *names)
-    return list(names or TABLES)
+from .tables import register_views as register_views
 
 
 def analyze_table(

@@ -88,10 +88,12 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+def register_views(spark: SparkSession, sf_dir: str, *names: str) -> list[str]:
     """Register the testdata tables as temp views so ad-hoc users can
     drive the engine through plain ``spark.sql`` — the same names the
     DuckDB oracle uses, so any oracle SQL in this repo is also
-    (modulo dialect) a usable example query."""
-    for name, df in load_tables(spark, sf_dir, *names).items():
+    (modulo dialect) a usable example query. Returns the view names."""
+    tables = load_tables(spark, sf_dir, *names)
+    for name, df in tables.items():
         df.createOrReplaceTempView(name)
+    return list(tables)

@@ -39,6 +39,26 @@ def test_stalest_stamps_sort_first():
         assert tier == sorted(tier)
 
 
+def test_ties_keep_registration_order():
+    """Staleness is the only ordering rule: within one (last stamp,
+    stamp count) tier, queries() lists names in all_queries()
+    registration order — no hand-kept queue-jump list reorders a
+    tier."""
+    from energy_data_pipeline_project_spark.operators import all_queries
+
+    E = _entry()
+    counts, last = E._stamp_stats()
+    registered = list(all_queries())
+    order = list(E.queries())
+    assert sorted(order) == sorted(registered)
+    for tier in {(last.get(n, -1), counts.get(n, 0)) for n in order}:
+        in_tier = [
+            n for n in order if (last.get(n, -1), counts.get(n, 0)) == tier
+        ]
+        members = set(in_tier)
+        assert in_tier == [n for n in registered if n in members], tier
+
+
 def test_stamp_round_sort_survives_double_digit_rounds(tmp_path):
     """Commit 8b5fc8f made the stamp-file ordering numeric; the
     existing invariant test covers recency over the REAL files, which
@@ -66,7 +86,7 @@ def test_stamp_round_sort_survives_double_digit_rounds(tmp_path):
 
 def test_failed_rows_do_not_count_as_stamps():
     E = _entry()
-    counts = E._passing_stamp_counts()
+    counts = E._stamp_stats()[0]
     # rows-only queries with recorded row counts DO count (weaker check
     # is still driver coverage); a no_oracle row with rows is a stamp
     assert counts.get("events_sketch_rollup", 0) >= 1

@@ -208,3 +208,42 @@ def test_recursive_dechunk_rebuilds_originals(spark):
         assert mismatched == 0
     finally:
         joined.unpersist()
+
+
+def test_redact_email_pattern_bounded_and_engines_agree(spark):
+    """text_redact's email pattern feeds both Spark (Java regex) and
+    its DuckDB oracle (RE2). The local part is capped at 64 chars so a
+    long '@'-free document scans in linear time instead of rescanning
+    to the end from every start position; on a 70-char local part both
+    engines must still find the same (leftmost, 64-char-bounded) match
+    and produce the same replacement."""
+    import duckdb
+
+    pat = text.REDACT_EMAIL_PATTERN
+    docs = [
+        ("long_local", "to " + "a" * 70 + "@mail.example.com please"),
+        ("no_at", "x" * 200_000),
+    ]
+    got = {
+        r["k"]: (r["n"], r["red"])
+        for r in spark.createDataFrame(docs, "k string, t string")
+        .select(
+            "k",
+            F.regexp_count("t", F.lit(pat)).cast("int").alias("n"),
+            F.regexp_replace("t", pat, "<EMAIL>").alias("red"),
+        )
+        .collect()
+    }
+    con = duckdb.connect()
+    want = {
+        k: (n, red)
+        for k, n, red in con.execute(
+            "SELECT k, CAST(len(regexp_extract_all(t, $1)) AS INT),"
+            " regexp_replace(t, $1, '<EMAIL>', 'g')"
+            " FROM (VALUES ($2, $3), ($4, $5)) v(k, t)",
+            [pat, *docs[0], *docs[1]],
+        ).fetchall()
+    }
+    assert got == want
+    assert got["long_local"] == (1, "to aaaaaa<EMAIL> please")
+    assert got["no_at"] == (0, "x" * 200_000)
