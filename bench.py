@@ -218,9 +218,10 @@ def main() -> None:
     )
     queries = all_queries()
 
-    # Warm the session once: file-listing/footer reads for every table
-    # plus one tiny materialization, so the first measured query pays
-    # its own execution, not JVM spin-up or catalog cold-start.
+    # Warm the session once: fill the table catalog (one schema
+    # inference per table, so no measured query launches one) plus one
+    # tiny materialization, so the first measured query pays its own
+    # execution, not JVM spin-up or catalog cold-start.
     import shutil
     import tempfile
 

@@ -54,6 +54,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.tables import table_fingerprint
 from .lake import read_table_versioned, write_table_versioned
 
 _MARKER = "_COMPLETE"
@@ -104,19 +105,13 @@ def artifact_root() -> str | None:
 
 
 def corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Content address of one corpus table: absolute path + mtime_ns +
-    size (the same staleness key the session memos use, hashed so it
-    is filesystem-safe). A rewritten fixture gets a new fingerprint
-    and therefore a cold retrain; a missing table gets a sentinel
-    fingerprint rather than an error so the build step surfaces the
-    real failure."""
-    path = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    try:
-        st = os.stat(path)
-        sig = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        sig = (path, -1, -1)
-    return hashlib.sha256(repr(sig).encode()).hexdigest()[:16]
+    """Content address of one corpus table: its table-catalog
+    fingerprint, the staleness key ``load_table`` also uses. Any
+    rewrite (of a file, or of any file in a directory table) gets a
+    new fingerprint and so a cold retrain; an unstattable table gets
+    a sentinel so the build step surfaces the real failure."""
+    path, fp = table_fingerprint(sf_dir, table)
+    return fp or hashlib.sha256(repr((path, -1, -1)).encode()).hexdigest()[:16]
 
 
 def _marker_ok(base: str, names: tuple[str, ...]) -> bool:
@@ -250,8 +245,8 @@ def shared(
     Results are bit-identical to recomputation — every chain is
     deterministic."""
     app = spark.sparkContext.applicationId
-    path = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    fp = corpus_fingerprint(sf_dir, table)
+    path, fp = table_fingerprint(sf_dir, table)
+    fp = fp or corpus_fingerprint(sf_dir, table)
     key = (app, kind, fp)
     with _LOCK:
         hit = _SHARED.get(key)

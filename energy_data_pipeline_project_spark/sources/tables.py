@@ -6,13 +6,17 @@ disk, not catalog entries) over the driver's star-schema testdata.
 
 Scale posture: these are thin ``spark.read.parquet`` scans so Catalyst
 keeps predicate pushdown / column pruning / partition pruning intact —
-no caching, no collect, no schema inference surprises.
+no caching, no collect, and the explicit schema the table catalog holds.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..session import apply_runtime_confs
 
@@ -29,10 +33,25 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor the
-# engine targets (region/nation are fixed-size; supplier/part grow with
-# sf but stay far below fact tables). Used by operators to hint joins.
-BROADCAST_DIMS = frozenset({"region", "nation"})
+# The table catalog: absolute table path -> (fingerprint, schema).
+_CATALOG: dict[str, tuple[str, StructType]] = {}
+
+
+def table_fingerprint(sf_dir: str, name: str) -> tuple[str, str | None]:
+    """(absolute path, fingerprint) of one table: a file hashes (path,
+    mtime_ns, size), a directory its path and every file's (relative
+    name, mtime_ns, size). ``None`` if the path cannot be statted."""
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+    try:
+        st = os.stat(path)
+        sig = (path, st.st_mtime_ns, st.st_size)
+        if os.path.isdir(path):
+            files = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+            stats = [(os.path.relpath(f, path), os.stat(f)) for f in files]
+            sig = (path, sorted((f, s.st_mtime_ns, s.st_size) for f, s in stats))
+    except OSError:
+        return path, None
+    return path, hashlib.sha256(repr(sig).encode()).hexdigest()[:16]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -44,9 +63,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (Spark 4 native nanos read, truncated to micros). Both are
     normalized here to a session-TZ TimestampType (UTC is pinned by the
     engine) so downstream operators see one stable schema.
+
+    The schema is inferred only when the fingerprint differs from the
+    catalog entry; an unstattable path is never cached.
     """
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path, fp = table_fingerprint(sf_dir, name)
+    entry = _CATALOG.get(path)
+    if entry and entry[0] == fp:
+        df = spark.read.schema(entry[1]).parquet(f"{sf_dir}/{name}.parquet")
+    else:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if fp is not None:
+            _CATALOG[path] = (fp, df.schema)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -88,16 +88,28 @@ def main() -> int:
 
     failures: dict[str, str] = {}
     timings: dict[str, float] = {}
+    # Spark jobs launched while BUILDING each query's DataFrame (schema
+    # inference, eager checkpoints, driver-side collects): the registry
+    # job census. One job group per query, so counts never accumulate.
+    sc = spark.sparkContext
+    build_jobs: dict[str, int] = {}
     for i, name in enumerate(names):
         t0 = time.perf_counter()
         try:
+            group = f"build:{name}"
+            sc.setJobGroup(group, "plan construction")
+            try:
+                df = queries[name](spark, sf_dir)
+            finally:
+                sc.setJobGroup(None, None)
+                build_jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
             if name in oracles:
                 res = compare_query(
-                    spark, sf_dir, name, queries[name], oracles[name]
+                    spark, sf_dir, name, lambda s, d: df, oracles[name]
                 )
                 ok, detail = res.ok, res.detail
             else:
-                n_rows = len(queries[name](spark, sf_dir).collect())
+                n_rows = len(df.collect())
                 ok = n_rows >= 1
                 detail = "" if ok else "rows-only query returned 0 rows"
         except Exception as e:  # noqa: BLE001 - report, keep going
@@ -115,6 +127,8 @@ def main() -> int:
         "failed": sorted(failures),
         "warmup_s": warmup_s,
         "slowest": sorted(timings.items(), key=lambda x: -x[1])[:10],
+        "build_jobs_total": sum(build_jobs.values()),
+        "build_jobs_top": sorted(build_jobs.items(), key=lambda x: -x[1])[:10],
     }))
     spark.stop()
     return 1 if failures else 0

@@ -67,6 +67,17 @@ def test_fingerprint_tracks_rewrites(tmp_path):
     assert f1 != f2
     missing = A.corpus_fingerprint(str(tmp_path / "nope"))
     assert missing and missing != f1
+    # a directory table: a part file rewritten in place changes neither
+    # the directory's mtime nor its size, yet must change the key
+    d = tmp_path / "documents.parquet"
+    d.mkdir()
+    part = d / "part-00000.parquet"
+    part.write_bytes(b"v1")
+    st = d.stat()
+    g1 = A.corpus_fingerprint(str(tmp_path), "documents")
+    part.write_bytes(b"v2-rewritten")
+    os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert A.corpus_fingerprint(str(tmp_path), "documents") != g1
 
 
 def test_disabled_tier_trains_every_call(spark, monkeypatch, tmp_path):

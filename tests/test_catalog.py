@@ -171,3 +171,51 @@ def test_auto_format_resolution(spark):
     assert resolve_table_format(spark, "auto") == expected
     assert resolve_table_format(spark, "parquet") == "parquet"
     assert resolve_table_format(spark, "delta") == "delta"
+
+
+def test_directory_table_part_rewrite_refreshes_schema_and_artifact(
+    spark, tmp_path, monkeypatch
+):
+    """A directory table whose part file is rewritten in place (the
+    directory's mtime and size unchanged) with an added column: the
+    table catalog must serve the NEW schema, and the shared-frame memo
+    over the table must miss (cold), not serve the stale frame."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from energy_data_pipeline_project_spark.pipeline import artifacts as A
+    from energy_data_pipeline_project_spark.sources.tables import load_table
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "artifacts"))
+    sf = str(tmp_path / "sf")
+    table = tmp_path / "sf" / "documents.parquet"
+    table.mkdir(parents=True)
+    part = table / "part-00000.parquet"
+    pq.write_table(pa.table({"doc_id": [1, 2]}), part)
+    assert load_table(spark, sf, "documents").columns == ["doc_id"]
+
+    def shared():
+        return A.shared(
+            spark, "catalog_dir@r1", sf, "documents", ("t",),
+            lambda: {"t": load_table(spark, sf, "documents")},
+        )
+
+    A.release_shared()
+    A.drain_serve_log()
+    try:
+        shared()
+        shared()
+        st = table.stat()
+        pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), part)
+        os.utime(table, ns=(st.st_atime_ns, st.st_mtime_ns))
+        df = load_table(spark, sf, "documents")
+        assert df.columns == ["doc_id", "text"]
+        assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b")]
+        assert shared()["t"].columns == ["doc_id", "text"]
+        assert A.drain_serve_log() == [
+            ("catalog_dir@r1", s) for s in ("cold", "memo", "cold")
+        ]
+    finally:
+        A.release_shared()
