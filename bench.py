@@ -46,6 +46,8 @@ HEADLINE = [
 
 # Round-2 additions, timed separately so the headline total stays
 # directly comparable with the BENCH_r01 baseline (same query set).
+# The two dedup headline queries read the published shingle postings
+# since the one-postings-source change: an artifact switch (DESIGN.md).
 EXTRA = [
     "dedup_substring_spans",
     "dedup_span_removal",

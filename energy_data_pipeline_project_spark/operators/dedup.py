@@ -22,7 +22,7 @@ Python UDFs — everything is codegen'd Catalyst expressions.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from ..functions import hashing as H
 from ..pipeline import artifacts as A
@@ -109,8 +109,8 @@ def _shingle_hashes(docs: DataFrame) -> DataFrame:
     """``(doc_id, shingle-hash)`` postings — the shared first stage of
     shingle-Jaccard, containment, MinHash signatures, and the LSH
     quality audit. The tokenize→shingle→md5 explode is the dominant
-    scan of every consumer, so callers that need both views pass ONE
-    persisted copy (r06 review: the quality audit ran it twice).
+    scan of every consumer, so the pair generators take postings and
+    queries pass the published :func:`shared_shingle_postings`.
 
     Postings are SET-semantics per doc, deduped IN-ROW (array_distinct
     over the per-doc hash array — no shuffle): shingles are already
@@ -189,8 +189,9 @@ def capped_posting_arrays(
 ) -> tuple[DataFrame, DataFrame]:
     """(grouped posting arrays, per-doc sizes) over a postings frame,
     with hot shingles dropped BEFORE any array is collected — the
-    Spark core both shingle-Jaccard and containment build on (one
-    spelling, r08 review). ``grouped`` is persisted; call
+    capped-index core of ``curation.text_containment``
+    (``shingle_jaccard_pairs`` caps with its own LEFT ANTI join).
+    ``grouped`` is persisted; call
     release_cached_frames() once consumed."""
     ok_h = (
         hx.groupBy("h")
@@ -211,14 +212,9 @@ def capped_posting_arrays(
     return grouped, sz
 
 
-def _minhash_signatures(
-    docs: DataFrame, hx: DataFrame | None = None
-) -> DataFrame:
-    """doc_id → k minhash columns m0..m{k-1} (shingle-based).
-    ``hx`` optionally supplies a precomputed (ideally persisted)
-    ``_shingle_hashes`` frame."""
-    if hx is None:
-        hx = _shingle_hashes(docs)
+def _minhash_signatures(hx: DataFrame) -> DataFrame:
+    """doc_id → k minhash columns m0..m{k-1} over a ``_shingle_hashes``
+    postings frame."""
     return hx.groupBy("doc_id").agg(
         *[
             F.min(F.expr(H.minhash_expr(i, "h"))).alias(f"m{i}")
@@ -403,9 +399,9 @@ def lsh_candidate_pairs(
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame, *, bucket_cap: int = LSH_BUCKET_CAP
+    hx: DataFrame, *, bucket_cap: int = LSH_BUCKET_CAP
 ) -> DataFrame:
-    """LSH candidate pairs + minhash-estimated Jaccard for a docs frame.
+    """LSH candidate pairs + minhash-estimated Jaccard for postings.
 
     Scale path: candidates come from grouping the melted band frame by
     (band_id, band_val) and expanding pairs inside each bucket array —
@@ -422,10 +418,10 @@ def minhash_lsh_pairs(
 
     The signature frame is tiny relative to the corpus (k ints/doc)
     and feeds three subplans (bands + both estimate sides): persist it
-    so the shingle explode+groupBy runs once. Call
-    release_cached_frames() once the result is consumed.
+    so the postings groupBy runs once. Call release_cached_frames()
+    once the result is consumed.
     """
-    sig = _cached(_minhash_signatures(docs))
+    sig = _cached(_minhash_signatures(hx))
     return pairs_from_signatures(sig, bucket_cap=bucket_cap)
 
 
@@ -515,22 +511,23 @@ def cross_matches_from_signatures(
 
 @query("dedup_minhash_lsh", _minhash_oracle())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
+    return minhash_lsh_pairs(shared_shingle_postings(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
 # Shared pair frame for the graph/CC/curation consumers
 # ---------------------------------------------------------------------------
-# Six query entrypoints consume the same near-dup pair graph of the
+# Nine query entrypoints consume the same near-dup pair graph of the
 # documents table (cluster_cc, pagerank, triangles, k-core, LPA, BFS,
 # keep-best, dup-rate, leakage audit). Recomputing MinHash signatures
 # per query dominated their bench cost (VERDICT r03 perf audit), and
 # it misrepresents the real pipeline, where signatures are computed
 # once per corpus snapshot and every downstream job reads the pair
 # frame. ``artifacts.shared`` memoizes it per session and publishes it
-# to the lake, so a COLD process reads the published symmetric edge
-# table instead of re-shuffling the corpus through
-# shingle→minhash→band→bucket-join. est_jaccard values are exact
+# to the lake, so a COLD process reads the published
+# ``(doc_a, doc_b, est_jaccard)`` pair frame instead of re-shuffling
+# the shingle postings through minhash→band→bucket-join; a cold store
+# builds it from the published postings. est_jaccard values are exact
 # multiples of 1/MINHASH_K, so the parquet round-trip is bit-exact and
 # oracles (which replay the chain in SQL) stay hash-identical whichever
 # tier answered.
@@ -546,7 +543,8 @@ _LSH_PAIRS_CHAIN_REV = 2
 
 
 def shared_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted ``minhash_lsh_pairs`` over ``{sf_dir}/documents``."""
+    """Persisted ``minhash_lsh_pairs`` over the published shingle
+    postings of ``{sf_dir}/documents``."""
     kind = (
         f"lsh_pairs@r{_LSH_PAIRS_CHAIN_REV}"
         f"-k{H.MINHASH_K}b{H.MINHASH_BANDS}"
@@ -559,7 +557,7 @@ def shared_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "documents",
         ("pairs",),
         lambda: {
-            "pairs": minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
+            "pairs": minhash_lsh_pairs(shared_shingle_postings(spark, sf_dir))
         },
     )["pairs"]
 
@@ -587,9 +585,10 @@ def _incr_split_pred() -> F.Column:
 
 
 def incremental_lsh_matches(
-    docs: DataFrame, *, bucket_cap: int = LSH_BUCKET_CAP
+    hx: DataFrame, *, bucket_cap: int = LSH_BUCKET_CAP
 ) -> DataFrame:
-    """(doc_id, dup_of, est_jaccard): incoming docs whose signature
+    """(doc_id, dup_of, est_jaccard) over a ``_shingle_hashes``
+    postings frame: incoming docs whose signature
     band-collides with an indexed doc and whose minhash-estimated
     Jaccard clears ``MINHASH_THRESHOLD``.
 
@@ -598,7 +597,7 @@ def incremental_lsh_matches(
     bucket); capped index buckets are dropped before the join, exactly
     like the batch formulation, and the oracle replays the cap.
     """
-    sig = _cached(_minhash_signatures(docs))
+    sig = _cached(_minhash_signatures(hx))
     is_batch = _incr_split_pred()
     return cross_matches_from_signatures(
         sig.where(is_batch), sig.where(~is_batch), bucket_cap=bucket_cap
@@ -658,7 +657,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Screen the hash-carved 'incoming batch' (~20% of docs) against
     the indexed remainder; batch-internal pairs are deliberately out of
     scope (that is ``dedup_minhash_lsh`` applied to the batch)."""
-    return incremental_lsh_matches(load_table(spark, sf_dir, "documents"))
+    return incremental_lsh_matches(shared_shingle_postings(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -889,12 +888,10 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact n-gram (shingle) Jaccard via inverted index
 # ---------------------------------------------------------------------------
 def shingle_jaccard_pairs(
-    docs: DataFrame,
-    *,
-    shingle_cap: int = SHINGLE_DOC_CAP,
-    hx: DataFrame | None = None,
+    hx: DataFrame, *, shingle_cap: int = SHINGLE_DOC_CAP
 ) -> DataFrame:
-    """Exact shingle-set Jaccard over an inverted index, skew-capped.
+    """Exact shingle-set Jaccard over a ``_shingle_hashes`` postings
+    frame's inverted index, skew-capped.
 
     Postings are (doc_id, shingle-hash): everything shuffles as 8-byte
     ints, not shingle strings. Shingles whose posting list exceeds
@@ -909,8 +906,6 @@ def shingle_jaccard_pairs(
     the final ratio needs no size joins. Call release_cached_frames()
     once the result is consumed.
     """
-    if hx is None:
-        hx = _cached(_shingle_hashes(docs))
     # Cap pass: map-side-combined count per shingle, hot postings
     # dropped BEFORE anything is collected. Phrased as LEFT ANTI
     # against the HOT set (complement of the old ok_h inner join,
@@ -983,16 +978,15 @@ def shingle_jaccard_pairs(
     """,
 )
 def dedup_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shingle_jaccard_pairs(load_table(spark, sf_dir, "documents"))
+    return shingle_jaccard_pairs(shared_shingle_postings(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
 # Exact Jaccard via PREFIX FILTERING (PPJoin-style) — lossless candidates
 # ---------------------------------------------------------------------------
-def prefix_filter_jaccard_pairs(
-    docs: DataFrame, hx: DataFrame | None = None
-) -> DataFrame:
-    """Exact shingle-Jaccard join with prefix-filtering candidates.
+def prefix_filter_jaccard_pairs(hx: DataFrame) -> DataFrame:
+    """Exact shingle-Jaccard join with prefix-filtering candidates over
+    a ``_shingle_hashes`` postings frame.
 
     The scalable EXACT alternative to both the capped inverted index
     (which trades recall inside hot buckets) and MinHash-LSH (which is
@@ -1030,19 +1024,9 @@ def prefix_filter_jaccard_pairs(
     the two docs' sorted hash arrays with array_intersect in a single
     candidate-sized join — the full postings are never self-joined.
     """
-    # Set-semantics postings from the ONE shared source
-    # (_shingle_hashes: in-row array_distinct, no shuffle — two
-    # DISTINCT shingles can collide in the 32-bit hash, and a doubled
-    # posting row emitted (d, d) self-pairs / multiplicity-counted
-    # intersections, r07 review; r08 verdict #3 moved the dedup
-    # in-row, 6.09s -> under the r06 4.55s at sf0.1, then centralized
-    # it here). The oracle's hx0 CTE runs the same in-row
-    # list_distinct, so the engines agree even on degenerate
-    # duplicated-doc_id inputs. ``hx`` optionally supplies a
-    # precomputed (persisted/published) postings frame — the query
-    # wrapper passes the shingle-postings artifact (r11 verdict #6).
-    if hx is None:
-        hx = _cached(_shingle_hashes(docs))
+    # ``hx`` is set-semantics per doc (see _shingle_hashes), as the
+    # oracle's in-row list_distinct is, so the engines agree even on
+    # 32-bit hash collisions and duplicated-doc_id inputs.
     dfreq = hx.groupBy("h").agg(F.count("*").alias("dfreq"))
     # One row per doc: shingle hashes in global rarity order plus the
     # exact prefix length p = n - ceil(n/2) + 1, ceil in INT arithmetic.
@@ -1136,10 +1120,7 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oracle is the NAIVE UNCAPPED all-pairs join at the same
     t = 4/5 threshold: a hash match here is a proof on real data that
     prefix filtering lost nothing."""
-    return prefix_filter_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"),
-        hx=shared_shingle_postings(spark, sf_dir),
-    )
+    return prefix_filter_jaccard_pairs(shared_shingle_postings(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1165,9 +1146,10 @@ def duplicate_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     halves the remaining path length so rounds are O(log diameter), the
     same trick as large-star/small-star from Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14).  The
-    driver only coordinates the convergence test — a COUNT per round on
-    the label frame, never row data.  LSH dup clusters are near-cliques,
-    so in practice 2-3 rounds converge.
+    driver only coordinates the convergence test — a changed-label
+    COUNT observed on each round's checkpoint job, never row data.
+    LSH dup clusters are near-cliques, so in practice 2-3 rounds
+    converge.
 
     Crucially, the loop state holds ONLY docs incident to a dup edge:
     singletons — the overwhelming majority of any real corpus — never
@@ -1226,6 +1208,7 @@ def duplicate_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
         jump = labels.select(
             F.col("doc_id").alias("comp"), F.col("comp").alias("jcomp")
         )
+        obs = Observation()
         stepped = (
             prop.join(jump, "comp", "left")
             .select(
@@ -1233,11 +1216,13 @@ def duplicate_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
                 "old_comp",
                 F.least("comp", F.coalesce("jcomp", "comp")).alias("comp"),
             )
+            .observe(
+                obs, F.count_if(F.col("comp") < F.col("old_comp")).alias("n")
+            )
             .localCheckpoint(eager=True)
         )
-        changed = stepped.where(F.col("comp") < F.col("old_comp")).count()
         labels = stepped.drop("old_comp")
-        if changed == 0:
+        if obs.get["n"] == 0:
             break
     else:
         raise RuntimeError(
@@ -1660,18 +1645,13 @@ def _lsh_eval_oracle() -> str:
 
 @query("dedup_lsh_quality_eval", _lsh_eval_oracle())
 def dedup_lsh_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    # ONE postings frame feeds both the exact-Jaccard truth and the
-    # MinHash signatures — the shingle explode + md5 is this audit's
-    # dominant stage, previously run twice (r06 review), then per
-    # process (r11 verdict #6): it now rides the published
-    # shingle-postings artifact, so a warm process pays a parquet
-    # read, not the explode.
+    # ONE published postings frame feeds both the exact-Jaccard truth
+    # and the MinHash signatures.
     hx = shared_shingle_postings(spark, sf_dir)
-    truth = shingle_jaccard_pairs(docs, hx=hx).select(
+    truth = shingle_jaccard_pairs(hx).select(
         "doc_a", "doc_b", F.lit(1).alias("in_truth")
     )
-    sig = _cached(_minhash_signatures(docs, hx=hx))
+    sig = _cached(_minhash_signatures(hx))
     cand = lsh_candidate_pairs(sig).select(
         "doc_a", "doc_b", F.lit(1).alias("in_cand")
     )
@@ -2019,11 +1999,10 @@ def shared_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is a deterministic corpus derivation, so it rides the same
     session-memo + published-artifact tier as the LSH pair frame and
     the token postings (r11 verdict #6): a cold process reads the
-    published postings instead of re-shingling the corpus. Headline
-    consumers (dedup_minhash_lsh, dedup_shingle_jaccard) deliberately
-    keep computing the postings in-plan so their benched cost stays
-    comparable with r01–r11; the audit/containment/prefix extras ride
-    the artifact."""
+    published postings instead of re-shingling the corpus. Every
+    documents-table shingle query reads this frame, including the
+    ``shared_lsh_pairs`` build, so a session shingles the corpus
+    once."""
     kind = (
         f"shingle_postings@r{_SHINGLE_POSTINGS_CHAIN_REV}-n{SHINGLE_N}"
     )

@@ -29,7 +29,7 @@ the goal here.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ._registry import make_registry
 from .dedup import _minhash_oracle, shared_lsh_pairs, symmetric_edges
@@ -236,25 +236,30 @@ def kcore_nodes(pairs: DataFrame, k: int = KCORE_K) -> DataFrame:
     Scale shape: each peel round is one semi-join of the edge list
     against the surviving node set (both endpoints) + one degree
     aggregate — all on 8-byte ids. ``localCheckpoint`` truncates the
-    per-round plan growth exactly as in the CC/PageRank loops.
+    per-round plan growth exactly as in the CC/PageRank loops, and an
+    ``Observation`` reads the round's counts off that checkpoint's job.
     """
     assert KCORE_ROUNDS >= 1  # the loop must assign `core`
     edges = symmetric_edges(pairs).localCheckpoint(eager=True)
     alive = edges.select(F.col("src").alias("v")).distinct()
-    n_alive = alive.count()
+    survives = F.col("core_degree") >= k
+    counts = (F.count("*").alias("n"), F.count_if(survives).alias("kept"))
     for _ in range(KCORE_ROUNDS):
+        obs = Observation()
         deg = (
             edges.join(alive.withColumnRenamed("v", "src"), "src")
             .join(alive.withColumnRenamed("v", "dst"), "dst")
             .groupBy("src")
             .agg(F.count("*").alias("core_degree"))
+            .observe(obs, *counts)
         )
-        core = deg.where(F.col("core_degree") >= k)
-        nxt = core.select(F.col("src").alias("v")).localCheckpoint(eager=True)
-        n_nxt = nxt.count()
-        if n_nxt == n_alive:
-            break  # fixpoint: every later round is identical
-        alive, n_alive = nxt, n_nxt
+        core = deg.where(survives)
+        alive = core.select(F.col("src").alias("v")).localCheckpoint(eager=True)
+        if obs.get["kept"] == obs.get["n"]:
+            # fixpoint: every later round is identical (an alive node
+            # missing from ``deg`` has no alive neighbour, so dropping
+            # it changes no degree)
+            break
     return core.select(F.col("src").alias("doc_id"), "core_degree")
 
 

@@ -41,6 +41,7 @@ from ..pipeline.lake import write_batch_partition as _write_batch_partition
 from ..operators.dedup import (
     LSH_BUCKET_CAP,
     _minhash_signatures,
+    _shingle_hashes,
     cross_matches_from_signatures,
     pairs_from_signatures,
 )
@@ -58,7 +59,8 @@ def screen_and_index_batch(
     ``(doc_id, dup_of, est_jaccard)`` — ``dup_of`` is the previously
     seen (or same-batch, lower-id) near-duplicate."""
     spark = batch_docs.sparkSession
-    sig_b = _minhash_signatures(batch_docs).localCheckpoint(eager=True)
+    sig_b = _minhash_signatures(_shingle_hashes(batch_docs))
+    sig_b = sig_b.localCheckpoint(eager=True)
 
     within = pairs_from_signatures(sig_b, bucket_cap=bucket_cap).select(
         F.col("doc_b").alias("doc_id"),

@@ -75,7 +75,8 @@ def curate(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
     # release_cached_frames below)
     keep_best = dedup._cached(
         keep_best_per_component(
-            kept_docs, dedup.minhash_lsh_pairs(kept_docs)
+            kept_docs,
+            dedup.minhash_lsh_pairs(dedup._shingle_hashes(kept_docs)),
         ).select(F.col("kept_doc_id").alias("doc_id"))
     )
     n2 = keep_best.count()

@@ -281,6 +281,7 @@ def test_keep_best_prefers_quality_then_min_id(spark):
         quality_scores,
     )
     from energy_data_pipeline_project_spark.operators.dedup import (
+        _shingle_hashes,
         duplicate_components,
         minhash_lsh_pairs,
     )
@@ -288,7 +289,9 @@ def test_keep_best_prefers_quality_then_min_id(spark):
     docs = load_table(spark, SF_SMOKE, "documents")
     comps = {
         r["doc_id"]: r["component_id"]
-        for r in duplicate_components(docs, minhash_lsh_pairs(docs)).collect()
+        for r in duplicate_components(
+            docs, minhash_lsh_pairs(_shingle_hashes(docs))
+        ).collect()
     }
     scores = {
         r["doc_id"]: r["score_milli"]
@@ -358,12 +361,14 @@ def test_triangle_count_matches_python_reference(spark):
     the collected edge list (small at smoke SF)."""
     from energy_data_pipeline_project_spark.operators import graph
     from energy_data_pipeline_project_spark.operators.dedup import (
+        _shingle_hashes,
         minhash_lsh_pairs,
     )
 
     docs = load_table(spark, SF_SMOKE, "documents")
     edges = {
-        (r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(docs).collect()
+        (r["doc_a"], r["doc_b"])
+        for r in minhash_lsh_pairs(_shingle_hashes(docs)).collect()
     }
     dedup.release_cached_frames()
     eset = set(edges)

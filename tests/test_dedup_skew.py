@@ -34,7 +34,9 @@ def test_jaccard_hot_shingle_cap_bounds_pairs(spark):
     try:
         # uncapped, the 6 boilerplate shingles alone would emit
         # 300*299/2 ≈ 45k candidate pairs; the cap drops them
-        out = dedup.shingle_jaccard_pairs(docs, shingle_cap=50)
+        out = dedup.shingle_jaccard_pairs(
+            dedup._shingle_hashes(docs), shingle_cap=50
+        )
         assert out.count() == 0
     finally:
         dedup.release_cached_frames()
@@ -43,7 +45,9 @@ def test_jaccard_hot_shingle_cap_bounds_pairs(spark):
 def test_lsh_hot_bucket_cap_bounds_pairs(spark):
     docs = _boilerplate_corpus(spark, n=300)
     try:
-        capped = dedup.minhash_lsh_pairs(docs, bucket_cap=50)
+        capped = dedup.minhash_lsh_pairs(
+            dedup._shingle_hashes(docs), bucket_cap=50
+        )
         # the "item {i}" tails differ, but the boilerplate prefix
         # dominates the minimum hashes → most docs share band values;
         # the cap must keep the pair space far below quadratic
@@ -58,13 +62,17 @@ def test_caps_do_not_change_testdata_results(spark):
     try:
         capped = {
             tuple(r)
-            for r in dedup.minhash_lsh_pairs(docs, bucket_cap=dedup.LSH_BUCKET_CAP)
+            for r in dedup.minhash_lsh_pairs(
+                dedup._shingle_hashes(docs), bucket_cap=dedup.LSH_BUCKET_CAP
+            )
             .select("doc_a", "doc_b")
             .collect()
         }
         uncapped = {
             tuple(r)
-            for r in dedup.minhash_lsh_pairs(docs, bucket_cap=10**9)
+            for r in dedup.minhash_lsh_pairs(
+                dedup._shingle_hashes(docs), bucket_cap=10**9
+            )
             .select("doc_a", "doc_b")
             .collect()
         }
@@ -73,14 +81,16 @@ def test_caps_do_not_change_testdata_results(spark):
         jc = {
             tuple(r)
             for r in dedup.shingle_jaccard_pairs(
-                docs, shingle_cap=dedup.SHINGLE_DOC_CAP
+                dedup._shingle_hashes(docs), shingle_cap=dedup.SHINGLE_DOC_CAP
             )
             .select("doc_a", "doc_b")
             .collect()
         }
         ju = {
             tuple(r)
-            for r in dedup.shingle_jaccard_pairs(docs, shingle_cap=10**9)
+            for r in dedup.shingle_jaccard_pairs(
+                dedup._shingle_hashes(docs), shingle_cap=10**9
+            )
             .select("doc_a", "doc_b")
             .collect()
         }
@@ -100,7 +110,7 @@ def test_release_cached_frames_unpersists(spark):
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     docs = load_table(spark, SF_SMOKE, "documents")
-    out = dedup.minhash_lsh_pairs(docs)
+    out = dedup.minhash_lsh_pairs(dedup._shingle_hashes(docs))
     out.count()  # materialize → signature frame cached
     assert set(jsc.getPersistentRDDs().keySet().toArray()) - before
     dedup.release_cached_frames()
@@ -192,7 +202,9 @@ def test_incremental_lsh_finds_cross_split_dups(spark):
     try:
         got = {
             (r["doc_id"], r["dup_of"]): r["est_jaccard"]
-            for r in dedup.incremental_lsh_matches(docs).collect()
+            for r in dedup.incremental_lsh_matches(
+                dedup._shingle_hashes(docs)
+            ).collect()
         }
     finally:
         dedup.release_cached_frames()
@@ -265,7 +277,7 @@ def test_shared_lsh_pairs_matches_fresh_and_keys_on_mtime(spark, tmp_path):
         fresh = {
             (r.doc_a, r.doc_b, r.est_jaccard)
             for r in dedup.minhash_lsh_pairs(
-                load_table(spark, sf, "documents")
+                dedup._shingle_hashes(load_table(spark, sf, "documents"))
             ).collect()
         }
         shared1 = dedup.shared_lsh_pairs(spark, sf)
@@ -280,6 +292,95 @@ def test_shared_lsh_pairs_matches_fresh_and_keys_on_mtime(spark, tmp_path):
     finally:
         release_shared()
         dedup.release_cached_frames()
+
+
+def test_documents_dedup_reads_shared_postings(spark, tmp_path, monkeypatch):
+    """Once ``shared_shingle_postings`` is memoized, no documents-table
+    shingle query and no cold ``shared_lsh_pairs`` build shingles the
+    corpus again: they all take the published postings frame."""
+    import os
+    import shutil
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    shutil.copy(f"{SF_SMOKE}/documents.parquet", f"{sf}/documents.parquet")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "artifacts"))
+    release_shared()
+    try:
+        dedup.shared_shingle_postings(spark, sf)
+
+        def _boom(*a, **k):
+            raise AssertionError("documents shingled in-plan")
+
+        monkeypatch.setattr(dedup, "_shingle_hashes", _boom)
+        got = {}
+        for name in (
+            "dedup_minhash_lsh",
+            "dedup_shingle_jaccard",
+            "dedup_incremental_lsh",
+        ):
+            got[name] = dedup.QUERIES[name](spark, sf).collect()
+            dedup.release_cached_frames()
+        pairs = sorted(map(tuple, dedup.shared_lsh_pairs(spark, sf).collect()))
+        assert pairs and pairs == sorted(map(tuple, got["dedup_minhash_lsh"]))
+    finally:
+        release_shared()
+        dedup.release_cached_frames()
+
+
+def test_graph_loops_launch_no_count_jobs(spark, monkeypatch):
+    """The k-core and connected-components loops read their per-round
+    counts from the round's checkpoint job, never a ``count()``; the
+    results match a plain-Python replay of the same fixed rounds."""
+    from energy_data_pipeline_project_spark.operators import graph as G
+
+    try:
+        rows = dedup.shared_lsh_pairs(spark, SF_SMOKE).collect()
+    finally:
+        release_shared()
+    edges = {(r.doc_a, r.doc_b) for r in rows}
+    assert edges, "smoke corpus must produce near-dup pairs"
+    pairs = spark.createDataFrame(
+        sorted(edges), "doc_a bigint, doc_b bigint"
+    )
+    nodes = sorted({v for e in edges for v in e})
+    docs = spark.createDataFrame([(v,) for v in nodes], "doc_id bigint")
+
+    def _boom(*a, **k):
+        raise AssertionError("count() job in a graph loop")
+
+    monkeypatch.setattr(type(pairs), "count", _boom)
+    core = {r.doc_id: r.core_degree for r in G.kcore_nodes(pairs).collect()}
+    comps = {
+        r.doc_id: (r.component_id, r.component_size)
+        for r in dedup.duplicate_components(docs, pairs).collect()
+    }
+    dedup.release_cached_frames()
+
+    nbrs = {v: set() for v in nodes}
+    for a, b in edges:
+        nbrs[a].add(b)
+        nbrs[b].add(a)
+    alive = set(nodes)
+    for _ in range(G.KCORE_ROUNDS):
+        deg = {v: len(nbrs[v] & alive) for v in alive}
+        deg = {v: d for v, d in deg.items() if d > 0}
+        want_core = {v: d for v, d in deg.items() if d >= G.KCORE_K}
+        alive = set(want_core)
+    assert core == want_core
+
+    label = {}
+    for v in nodes:
+        if v in label:
+            continue
+        seen, stack = {v}, [v]
+        while stack:
+            for w in nbrs[stack.pop()] - seen:
+                seen.add(w)
+                stack.append(w)
+        for w in seen:
+            label[w] = (min(seen), len(seen))
+    assert comps == label
 
 
 def test_salted_join_rejects_nonpositive_salt(spark):

@@ -68,6 +68,7 @@ def test_bm25_topk_docs_contain_query_terms(spark):
 
 def test_lsh_eval_confusion_counts_are_consistent(spark):
     from energy_data_pipeline_project_spark.operators.dedup import (
+        _shingle_hashes,
         release_cached_frames,
         shingle_jaccard_pairs,
     )
@@ -76,7 +77,7 @@ def test_lsh_eval_confusion_counts_are_consistent(spark):
     try:
         row = Q["dedup_lsh_quality_eval"](spark, SF_SMOKE).collect()[0]
         docs = load_table(spark, SF_SMOKE, "documents")
-        n_truth = shingle_jaccard_pairs(docs).count()
+        n_truth = shingle_jaccard_pairs(_shingle_hashes(docs)).count()
     finally:
         release_cached_frames()
     assert row["tp"] + row["fn"] == n_truth

@@ -119,7 +119,9 @@ def test_components_collapse_planted_clique_families(spark, big_dir):
 
     docs = load_table(spark, big_dir, "documents")
     try:
-        comps = dd.duplicate_components(docs, dd.minhash_lsh_pairs(docs))
+        comps = dd.duplicate_components(
+            docs, dd.minhash_lsh_pairs(dd._shingle_hashes(docs))
+        )
         rows = comps.where(F.col("component_size") >= N_COPIES).collect()
     finally:
         dd.release_cached_frames()

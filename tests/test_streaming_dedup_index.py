@@ -39,7 +39,9 @@ def test_streamed_index_matches_batch_pairs(spark, tmp_path_factory):
     try:
         batch = {
             (r.doc_a, r.doc_b, r.est_jaccard)
-            for r in dedup.minhash_lsh_pairs(docs).collect()
+            for r in dedup.minhash_lsh_pairs(
+                dedup._shingle_hashes(docs)
+            ).collect()
         }
     finally:
         dedup.release_cached_frames()
