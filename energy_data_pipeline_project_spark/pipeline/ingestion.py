@@ -45,28 +45,35 @@ def _bronze_frame(
 ) -> DataFrame | None:
     """Fetch ``days`` on the driver and build the bronze frame with its
     audit columns; None when no day yielded a payload."""
-    records = []
+    import pyarrow as pa
+
+    dates, payloads = [], []
     for d in days:
         payload = source.fetch(dataset, d)
-        if payload is None:
-            continue
-        records.append(
-            {
-                dataset.key_column: dataset.key_value,
-                "date": d,
-                "payload_json": json.dumps(payload, ensure_ascii=False),
-            }
-        )
-    if not records:
+        if payload is not None:
+            dates.append(d)
+            payloads.append(json.dumps(payload, ensure_ascii=False))
+    if not dates:
         return None
-    # NB: keep the default createDataFrame slicing (≈1 row/partition
-    # here). Bronze rows are heavy (a full day's payload JSON each),
-    # and bronze file count IS the downstream silver parallelism —
-    # coalescing bronze to 1 file serializes the silver explode and
-    # measured 4× slower end-to-end. Many small bronze files is the
-    # correct trade at every scale (payloads are MBs, not KBs).
+    # Built from Arrow, so no row is pickled through a Python worker.
+    # createDataFrame makes one partition per record batch; the table is
+    # cut into defaultParallelism batches, because the bronze file count
+    # is the parallelism of silver's JSON explode. Coalescing bronze to
+    # one file serializes that explode and measured 4x slower end to end.
+    n, p = len(dates), spark.sparkContext.defaultParallelism
+    batch = pa.RecordBatch.from_pydict(
+        {
+            dataset.key_column: [dataset.key_value] * n,
+            "date": dates,
+            "payload_json": payloads,
+        }
+    )
+    cuts = sorted({i * n // p for i in range(p)} | {n})
+    table = pa.Table.from_batches(
+        [batch.slice(lo, hi - lo) for lo, hi in zip(cuts, cuts[1:])]
+    )
     return (
-        spark.createDataFrame(records, schema=bronze_schema(dataset))
+        spark.createDataFrame(table, schema=bronze_schema(dataset))
         .withColumn("ingested_at", F.current_timestamp())
         .withColumn("source", F.lit(SOURCE_TAG))
     )

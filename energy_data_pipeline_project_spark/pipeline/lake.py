@@ -20,6 +20,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.tables import read_parquet, record_schema
+
 LAYERS = ("bronze", "silver", "gold")
 
 
@@ -56,17 +58,29 @@ def delta_available(spark: SparkSession) -> bool:
         return False
 
 
+def _save(
+    df: DataFrame, path: str, fmt: str, partition_by: tuple[str, ...]
+) -> None:
+    """Overwrite ``path`` with ``df``. An unpartitioned parquet write
+    enters ``df.schema`` in the table catalog, so reading the table back
+    infers nothing. Delta rejects a read schema, and a partitioned
+    table's partition columns are typed by read-side inference, not by
+    the written frame: those reads infer once and enter the result."""
+    writer = df.write.format(fmt).mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(path)
+    if fmt == "parquet" and not partition_by:
+        record_schema(path, df.schema)
+
+
 def write_table(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
     partition_by: tuple[str, ...] = (),
 ) -> None:
-    fmt = resolve_table_format(df.sparkSession, fmt)
-    writer = df.write.format(fmt).mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    _save(df, path, resolve_table_format(df.sparkSession, fmt), partition_by)
 
 
 def write_table_observed(
@@ -98,15 +112,15 @@ def write_table_observed(
             .cast("long")
             .alias(f"nulls_{c}")
         )
-    observed = df.observe(obs, *exprs)
-    writer = observed.write.format(fmt).mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    _save(df.observe(obs, *exprs), path, fmt, partition_by)
     return dict(obs.get)
 
 
 def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
+    """Scan the lake table at ``path``. A parquet table is read through
+    the table catalog (``sources.tables.read_parquet``): a table this
+    process wrote, or read before, and has not been rewritten since is
+    scanned with its known schema and launches no inference job."""
     # NON-destructively serve a parked table: a writer that died
     # between _atomic_swap's two renames leaves the data at
     # ._pre_swap, and until r07 every plain read failed with "path
@@ -120,7 +134,10 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     pre = path.rstrip("/") + "._pre_swap"
     if not os.path.exists(path) and os.path.isdir(pre):
         src = pre
-    return spark.read.format(resolve_table_format(spark, fmt)).load(src)
+    fmt = resolve_table_format(spark, fmt)
+    if fmt == "parquet":
+        return read_parquet(spark, src)
+    return spark.read.format(fmt).load(src)
 
 
 def compact_table(

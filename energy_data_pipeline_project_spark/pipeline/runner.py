@@ -10,6 +10,7 @@ is an idempotent full overwrite.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +33,9 @@ class PipelineResult:
     # count + timestamp-null count observed DURING each write — the
     # reference's re-scan verification (main.py:88-101) for free.
     observed: dict[str, dict] = field(default_factory=dict)
+    # Wall seconds of each layer that ran ("bronze", "silver", "gold"):
+    # fetch + build + write + read-back.
+    layer_s: dict[str, float] = field(default_factory=dict)
 
     def counts(self) -> dict[str, int]:
         out = {}
@@ -78,9 +82,11 @@ def run_pipeline(
     # dataset with no payloads writes nothing and is skipped downstream)
     ingest = ingest_dataset_distributed if distributed_fetch else ingest_dataset
     ingested = set()
+    t0 = time.perf_counter()
     for ds in config.datasets:
         if ingest(spark, config, ds, source) is not None:
             ingested.add(ds.name)
+    t0 = _lap(result, "bronze", t0)
 
     # silver: re-scan bronze from disk, flatten to long time series
     for ds in config.datasets:
@@ -123,6 +129,7 @@ def run_pipeline(
                 silver, spath, fmt, null_check_cols=("timestamp",)
             )
         result.silver[ds.name] = read_table(spark, spath, fmt)
+    t0 = _lap(result, "silver", t0)
 
     # gold: daily aggregates + join (assumes the reference's two dataset
     # roles: one entity dataset (power), one probe dataset (price))
@@ -167,4 +174,12 @@ def run_pipeline(
             result.gold["power_daily_by_type"], result.gold["price_daily"]
         ),
     )
+    _lap(result, "gold", t0)
     return result
+
+
+def _lap(result: PipelineResult, layer: str, t0: float) -> float:
+    """Record ``layer``'s wall seconds since ``t0``; return the time now."""
+    now = time.perf_counter()
+    result.layer_s[layer] = now - t0
+    return now

@@ -7,6 +7,14 @@ disk, not catalog entries) over the driver's star-schema testdata.
 Scale posture: these are thin ``spark.read.parquet`` scans so Catalyst
 keeps predicate pushdown / column pruning / partition pruning intact —
 no caching, no collect, and the explicit schema the table catalog holds.
+
+The table catalog is the one schema source for every parquet table the
+engine reads by path: the testdata (``load_table``) and the medallion
+lake (``pipeline.lake.read_table``). An entry maps an absolute path to
+(fingerprint, schema). A read whose fingerprint matches skips parquet
+schema inference; any rewrite changes the fingerprint, so the next read
+infers again. An unpartitioned parquet lake write enters the schema it
+wrote (``record_schema``), so reading a table back launches no job.
 """
 
 from __future__ import annotations
@@ -37,11 +45,12 @@ TABLES = (
 _CATALOG: dict[str, tuple[str, StructType]] = {}
 
 
-def table_fingerprint(sf_dir: str, name: str) -> tuple[str, str | None]:
-    """(absolute path, fingerprint) of one table: a file hashes (path,
-    mtime_ns, size), a directory its path and every file's (relative
-    name, mtime_ns, size). ``None`` if the path cannot be statted."""
-    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+def path_fingerprint(path: str) -> tuple[str, str | None]:
+    """(absolute path, fingerprint) of one table path: a file hashes
+    (path, mtime_ns, size), a directory its path and every file's
+    (relative name, mtime_ns, size). ``None`` if the path cannot be
+    statted."""
+    path = os.path.abspath(path)
     try:
         st = os.stat(path)
         sig = (path, st.st_mtime_ns, st.st_size)
@@ -54,6 +63,33 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple[str, str | None]:
     return path, hashlib.sha256(repr(sig).encode()).hexdigest()[:16]
 
 
+def table_fingerprint(sf_dir: str, name: str) -> tuple[str, str | None]:
+    """:func:`path_fingerprint` of testdata table ``name``."""
+    return path_fingerprint(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def record_schema(path: str, schema: StructType) -> None:
+    """Enter ``schema`` for the table just written at ``path``, keyed by
+    its post-write fingerprint (an unstattable path is not entered)."""
+    key, fp = path_fingerprint(path)
+    if fp is not None:
+        _CATALOG[key] = (fp, schema)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Scan the parquet table at ``path`` with the catalog's schema when
+    its entry matches the current fingerprint; otherwise infer the
+    schema (one Spark job) and enter it."""
+    key, fp = path_fingerprint(path)
+    entry = _CATALOG.get(key)
+    if entry and entry[0] == fp:
+        return spark.read.schema(entry[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if fp is not None:
+        _CATALOG[key] = (fp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame.
 
@@ -64,18 +100,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     normalized here to a session-TZ TimestampType (UTC is pinned by the
     engine) so downstream operators see one stable schema.
 
-    The schema is inferred only when the fingerprint differs from the
-    catalog entry; an unstattable path is never cached.
+    The schema comes from the table catalog (:func:`read_parquet`).
     """
     apply_runtime_confs(spark)
-    path, fp = table_fingerprint(sf_dir, name)
-    entry = _CATALOG.get(path)
-    if entry and entry[0] == fp:
-        df = spark.read.schema(entry[1]).parquet(f"{sf_dir}/{name}.parquet")
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if fp is not None:
-            _CATALOG[path] = (fp, df.schema)
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

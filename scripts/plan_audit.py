@@ -27,6 +27,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from energy_data_pipeline_project_spark.operators import all_queries
+from energy_data_pipeline_project_spark.operators._frames import (
+    release_cached_frames,
+)
 from energy_data_pipeline_project_spark.plans.analyze import (
     plan_report,
     window_partition_specs,
@@ -105,6 +108,9 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 - record, keep auditing
             failures.append((name, repr(e)[:200]))
             continue
+        finally:
+            # no row may plan against an earlier query's persisted frame
+            release_cached_frames()
         rows.append((
             name, rep.n_scans, rep.exchanges, rep.broadcast_joins,
             rep.shuffle_joins,

@@ -219,3 +219,84 @@ def test_directory_table_part_rewrite_refreshes_schema_and_artifact(
         ]
     finally:
         A.release_shared()
+
+
+def test_lake_read_back_uses_the_written_schema(spark, tmp_path):
+    """A parquet table the engine has just written reads back with no
+    Spark job, and with the schema inference would give. Rewriting the
+    path out of band (an added column) changes its fingerprint, so the
+    next read infers the new schema. A partitioned write's partition
+    column keeps its inferred type."""
+    import pyspark.sql.functions as F
+
+    from .test_plans import _jobs_during
+
+    path = str(tmp_path / "silver" / "t")
+    df = spark.range(5).select(
+        F.col("id").cast("int").alias("k"),
+        F.concat(F.lit("ü-"), F.col("id").cast("string")).alias("s"),
+        F.current_timestamp().alias("ts"),
+    )
+    write_table(df, path)
+    back, jobs = _jobs_during(
+        spark, f"lake-read-{tmp_path.name}", lambda s, _: read_table(s, path)
+    )
+    assert jobs == 0
+    assert back.schema == spark.read.parquet(path).schema
+    assert sorted(r["k"] for r in back.collect()) == list(range(5))
+
+    df.withColumn("extra", F.lit(1.5)).write.mode("overwrite").parquet(path)
+    again = read_table(spark, path)
+    assert again.columns == ["k", "s", "ts", "extra"]
+    assert again.schema == spark.read.parquet(path).schema
+    assert {r["extra"] for r in again.collect()} == {1.5}
+
+    # a partitioned write enters nothing: partition columns keep the
+    # type read-side inference gives them, on the first read and after
+    ppath = str(tmp_path / "bronze" / "p")
+    days = spark.createDataFrame([("2025-01-01", 1)], "date string, v int")
+    write_table(days, ppath, partition_by=("date",))
+    for _ in range(2):
+        got = read_table(spark, ppath)
+        assert got.schema == spark.read.parquet(ppath).schema
+        assert dict(got.dtypes)["date"] == "date"
+
+
+def test_pipeline_read_backs_launch_no_jobs(spark, tmp_path, monkeypatch):
+    """Every ``read_table`` inside ``run_pipeline`` (bronze, silver and
+    gold read-backs) reads a table the run has just written, so none
+    launches a schema-inference job."""
+    from energy_data_pipeline_project_spark.pipeline import runner
+    from energy_data_pipeline_project_spark.pipeline.config import (
+        PipelineConfig,
+        default_datasets,
+    )
+    from energy_data_pipeline_project_spark.sources.fixtures import (
+        fixture_payloads,
+    )
+    from energy_data_pipeline_project_spark.sources.payloads import (
+        LocalJsonSource,
+    )
+
+    from .test_plans import _jobs_during
+
+    jobs: dict[str, int] = {}
+
+    def counted(spark, path, fmt="parquet"):
+        group = f"pipeline-read-{tmp_path.name}-{len(jobs)}"
+        df, jobs[path] = _jobs_during(
+            spark, group, lambda s, _: read_table(s, path, fmt)
+        )
+        return df
+
+    monkeypatch.setattr(runner, "read_table", counted)
+    cfg = PipelineConfig(
+        lake_root=str(tmp_path / "lake"),
+        start_date="2025-01-01",
+        end_date="2025-01-03",
+        datasets=default_datasets(),
+    )
+    days = [d.isoformat() for d in cfg.dates()]
+    runner.run_pipeline(spark, cfg, LocalJsonSource(fixture_payloads(days)))
+    assert len(jobs) == 7  # 2 bronze, 2 silver, 3 gold
+    assert jobs == {p: 0 for p in jobs}

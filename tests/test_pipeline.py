@@ -606,3 +606,70 @@ def test_quarantine_catches_empty_time_array_and_empty_probe(spark):
     assert [r["quarantine_reason"] for r in quarantined.collect()] == [
         "empty_time_array"
     ]
+
+
+def test_layer_seconds_reported(result):
+    """run_pipeline returns each layer's wall seconds next to observed."""
+    _, _, res = result
+    assert set(res.layer_s) == {"bronze", "silver", "gold"}
+    assert all(s > 0 for s in res.layer_s.values()), res.layer_s
+
+
+def test_bronze_contract(spark, tmp_path):
+    """Bronze frames keep their contract: the explicit bronze schema
+    plus the two audit columns, ``payload_json`` byte-identical to
+    ``json.dumps(payload, ensure_ascii=False)`` (non-ASCII kept as is),
+    one part file per default-parallelism slice, and no write at all
+    when no day yields a payload."""
+    import glob
+
+    from pyspark.sql import types as T
+
+    from energy_data_pipeline_project_spark.pipeline.ingestion import (
+        _bronze_frame,
+        bronze_schema,
+        ingest_dataset,
+    )
+
+    power = default_datasets()[0]
+    days = [f"2025-02-{i:02d}" for i in range(1, 11)]
+    payloads = {
+        d: {"unix_seconds": [1], "name": f"Wasserkraft – Müller ☀ {d}"}
+        for d in days
+    }
+    src = LocalJsonSource({power.name: payloads})
+
+    df = _bronze_frame(spark, power, src, days)
+    assert df.schema == T.StructType(
+        bronze_schema(power).fields
+        + [
+            T.StructField("ingested_at", T.TimestampType(), False),
+            T.StructField("source", T.StringType(), False),
+        ]
+    )
+    want = {d: json.dumps(p, ensure_ascii=False) for d, p in payloads.items()}
+    assert "ü" in want[days[0]]
+    got = {r["date"]: r["payload_json"] for r in df.collect()}
+    assert got == want
+
+    cfg = PipelineConfig(
+        lake_root=str(tmp_path), start_date=days[0], end_date=days[-1],
+        datasets=(power,),
+    )
+    assert ingest_dataset(spark, cfg, power, src) is not None
+    bronze = f"{tmp_path}/bronze/{power.name}"
+    on_disk = spark.read.parquet(bronze).collect()
+    assert {r["date"]: r["payload_json"].encode() for r in on_disk} == {
+        d: j.encode() for d, j in want.items()
+    }
+    parts = glob.glob(f"{bronze}/part-*.parquet")
+    assert len(parts) == spark.sparkContext.defaultParallelism
+
+    empty_root = tmp_path / "empty"
+    empty_cfg = PipelineConfig(
+        lake_root=str(empty_root), start_date=days[0], end_date=days[-1],
+        datasets=(power,),
+    )
+    assert _bronze_frame(spark, power, LocalJsonSource(), days) is None
+    assert ingest_dataset(spark, empty_cfg, power, LocalJsonSource()) is None
+    assert not empty_root.exists()
