@@ -22,7 +22,14 @@ from pyspark.sql import types as T
 
 from ..pipeline.config import DatasetSpec, PipelineConfig
 from ..sources.payloads import PayloadSource
-from .lake import read_table, resolve_table_format, table_path, write_table
+from .lake import (
+    _recover_pre_swap,
+    read_table,
+    replace_table,
+    resolve_table_format,
+    table_path,
+    write_table,
+)
 
 SOURCE_TAG = "energy-charts"
 
@@ -217,8 +224,6 @@ def ingest_dataset_incremental(
     # the table at ._pre_swap with no live dir — restore it before
     # anything else, else the run would "first-run" and lose every
     # day outside the current config range
-    from .lake import _recover_pre_swap
-
     _recover_pre_swap(path)
 
     if os.path.exists(path):
@@ -252,21 +257,13 @@ def ingest_dataset_incremental(
         e.startswith("date=") for e in os.listdir(path)
     )
     if legacy:
-        from .lake import _atomic_swap
-
         # the new days are by construction absent from the legacy
         # table (missing = target - existing), so the union is
         # duplicate-free without filtering
         old = read_table(spark, path, config.table_format)
-        staged = path.rstrip("/") + "._repartitioning"
-        (
-            old.unionByName(df)
-            .write.format(resolve_table_format(spark, config.table_format))
-            .mode("overwrite")
-            .partitionBy("date")
-            .save(staged)
+        replace_table(
+            old.unionByName(df), path, config.table_format, ("date",)
         )
-        _atomic_swap(path, staged)
         return df
 
     # Dynamic partition overwrite: only the day-partitions present in

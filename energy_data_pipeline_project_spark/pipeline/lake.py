@@ -7,6 +7,12 @@ Writes are full overwrites — every run is an idempotent refresh
 Delta when delta-spark is on the classpath (import-gated; the
 container for this project ships parquet only).
 
+A read-modify-write of a table (compaction, upsert, the incremental
+ingest's legacy migration, the streaming merges) recovers a parked
+table (``_recover_pre_swap``), reads it with ``read_table`` and
+publishes with ``replace_table``: the one stage-and-swap step, so a
+reader never sees a half-written table.
+
 Scale posture: ``partition_by`` is the opt-in day-partitioning knob
 (bronze uses it via incremental ingest's ``date=`` layout; a 100 TB
 deployment would pass ``("date",)`` for silver/gold too so day-keyed
@@ -59,17 +65,25 @@ def delta_available(spark: SparkSession) -> bool:
 
 
 def _save(
-    df: DataFrame, path: str, fmt: str, partition_by: tuple[str, ...]
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    partition_by: tuple[str, ...],
+    stage: str | None = None,
 ) -> None:
-    """Overwrite ``path`` with ``df``. An unpartitioned parquet write
-    enters ``df.schema`` in the table catalog, so reading the table back
-    infers nothing. Delta rejects a read schema, and a partitioned
-    table's partition columns are typed by read-side inference, not by
-    the written frame: those reads infer once and enter the result."""
+    """Overwrite ``path`` with ``df`` — in place, or by writing
+    ``stage`` and swapping it in. An unpartitioned parquet write enters
+    ``df.schema`` in the table catalog under ``path``, so reading the
+    table back infers nothing. Delta rejects a read schema, and a
+    partitioned table's partition columns are typed by read-side
+    inference, not by the written frame: those reads infer once and
+    enter the result."""
     writer = df.write.format(fmt).mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    writer.save(stage or path)
+    if stage:
+        _atomic_swap(path, stage)
     if fmt == "parquet" and not partition_by:
         record_schema(path, df.schema)
 
@@ -81,6 +95,20 @@ def write_table(
     partition_by: tuple[str, ...] = (),
 ) -> None:
     _save(df, path, resolve_table_format(df.sparkSession, fmt), partition_by)
+
+
+def replace_table(
+    df: DataFrame,
+    path: str,
+    fmt: str = "parquet",
+    partition_by: tuple[str, ...] = (),
+) -> None:
+    """Overwrite ``path`` with ``df`` through a staged copy: write the
+    sibling ``._staged`` directory, then publish it with
+    ``_atomic_swap``. Unlike ``write_table``, ``df`` may read ``path``
+    itself. A stale stage left by a crashed attempt is overwritten."""
+    fmt = resolve_table_format(df.sparkSession, fmt)
+    _save(df, path, fmt, partition_by, path.rstrip("/") + "._staged")
 
 
 def write_table_observed(
@@ -159,19 +187,16 @@ def compact_table(
     Mechanics: count once (metadata-only for parquet), then rewrite
     through round-robin ``repartition(n)`` — an all-to-all exchange
     that produces evenly-sized output files (``coalesce`` would skip
-    the shuffle but glues existing partitions, preserving skew).  The
-    rewrite stages into a sibling directory and swaps via rename, so a
-    reader never observes a half-written table; the swap is the same
-    idempotent-overwrite semantic as ``write_table``.
+    the shuffle but glues existing partitions, preserving skew). The
+    rewrite is published by ``replace_table``, so a reader never
+    observes a half-written table.
     """
     import math
 
-    fmt = resolve_table_format(spark, fmt)
     _recover_pre_swap(path)
-    df = spark.read.format(fmt).load(path)
+    df = read_table(spark, path, fmt)
     n_rows = df.count()
     n_files = max(1, math.ceil(n_rows / target_rows_per_file))
-    staged = path.rstrip("/") + "._compacting"
     # A hive-partitioned table (e.g. bronze's date= layout from
     # incremental ingest) must keep its layout through compaction, or
     # partition pruning dies and the next incremental run sees a
@@ -188,13 +213,9 @@ def compact_table(
         # A partition hotter than target_rows_per_file still compacts
         # to a single file: the target is a goal, not a bound.
         shaped = df.repartition(n_files, *[F.col(c) for c in pcols])
-        writer = (
-            shaped.write.format(fmt).mode("overwrite").partitionBy(*pcols)
-        )
     else:
-        writer = df.repartition(n_files).write.format(fmt).mode("overwrite")
-    writer.save(staged)
-    _atomic_swap(path, staged)
+        shaped = df.repartition(n_files)
+    replace_table(shaped, path, fmt, tuple(pcols))
     if pcols:
         # the partitioned path writes one file per hive partition, not
         # n_files — report the real count, not the flat-path estimate
@@ -262,8 +283,9 @@ def _recover_pre_swap(path: str) -> None:
     """Self-heal a crash inside ``_atomic_swap``'s rename window: the
     table parked at ``._pre_swap`` with no live ``path`` is restored;
     a stale parked copy NEXT TO a live table (crash after the second
-    rename) is cleaned up. Centralized here so every swap caller
-    (compaction, upsert, incremental ingest) heals the same way."""
+    rename) is cleaned up. Every read-modify-write caller of
+    ``replace_table`` runs it before reading, so all heal the same
+    way."""
     import shutil
 
     pre = path.rstrip("/") + "._pre_swap"
@@ -329,17 +351,21 @@ def _adopt_legacy_flat(path: str) -> None:
 
 
 def _atomic_swap(path: str, staged: str) -> None:
-    """Replace ``path`` with ``staged`` via two renames. Readers never
-    see a PARTIAL write, but there is an instant between the renames
-    where ``path`` does not exist: a concurrent reader in that window
-    fails fast with path-does-not-exist (retryable), and a writer
-    crash in the window parks the table at ``._pre_swap`` —
-    ``_recover_pre_swap`` heals that on the next read or write. True
-    both-versions-visible swaps need the pointer design of
+    """Publish step of ``replace_table``, the one caller: replace
+    ``path`` with ``staged`` via two renames (one when ``path`` does
+    not exist yet). Readers never see a PARTIAL write, but there is an
+    instant between the renames where ``path`` does not exist: a
+    concurrent reader in that window is served the parked copy by
+    ``read_table``, and a writer crash in the window parks the table
+    at ``._pre_swap`` — ``_recover_pre_swap`` heals that on the next
+    write. True both-versions-visible swaps need the pointer design of
     ``write_table_versioned`` (or a transaction log); an
     object-store deployment would use that path instead."""
     import shutil
 
+    if not os.path.exists(path):
+        os.rename(staged, path)
+        return
     old = path.rstrip("/") + "._pre_swap"
     os.rename(path, old)
     try:
@@ -392,17 +418,18 @@ def upsert_table(
       one, because a stale cache recreates the exact silent-loss bug
       the probe exists to prevent.
 
-    On any detected spanning, the merge falls back to the full staged
-    rewrite + swap (layout preserved). Unpartitioned tables always
-    take the full rewrite + swap. The keep-latest dedup is one window
-    over the key — the same row_number idiom as dedup_latest_order.
+    On any detected spanning, the merge falls back to the full rewrite
+    published by ``replace_table`` (layout preserved). Unpartitioned
+    tables always take the full rewrite. The keep-latest dedup is one
+    window over the key — the same row_number idiom as
+    dedup_latest_order.
     """
     fmt = resolve_table_format(spark, fmt)
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
     _recover_pre_swap(path)
-    existing = spark.read.format(fmt).load(path)
+    existing = read_table(spark, path, fmt)
     tagged_old = existing.withColumn("_upd", F.lit(0))
     tagged_new = updates.select(*existing.columns).withColumn(
         "_upd", F.lit(1)
@@ -491,12 +518,7 @@ def upsert_table(
             .save(path)
         )
     else:
-        staged = path.rstrip("/") + "._upserting"
-        writer = merged.write.format(fmt).mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(staged)
-        _atomic_swap(path, staged)
+        replace_table(merged, path, fmt, partition_by)
 
 
 # ---------------------------------------------------------------------------

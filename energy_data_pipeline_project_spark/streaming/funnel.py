@@ -38,27 +38,19 @@ def batch_user_mins(events: DataFrame) -> DataFrame:
 
 
 def merge_state(state_path: str, batch_mins: DataFrame) -> None:
-    """Elementwise-least merge of batch mins into the state table.
-
-    Staged write + ``lake._atomic_swap`` (rename with rollback) so a
-    concurrent reader sees either the old or the new state, never a
-    partial write. A crash BETWEEN the swap's two renames leaves the
-    previous state parked at ``._pre_swap``; the recovery branch here
-    restores it on the next merge, and because the MIN-merge is
+    """Elementwise-least merge of batch mins into the state table,
+    published by ``lake.replace_table``. A crash leaves the last
+    committed state recoverable, and because the MIN-merge is
     idempotent the re-delivered batch then reconverges — no silent
     state loss."""
-    from ..pipeline.lake import _atomic_swap, _recover_pre_swap
+    from ..pipeline.lake import _recover_pre_swap, read_table, replace_table
 
-    spark = batch_mins.sparkSession
-    # lake._recover_pre_swap owns the crash-window protocol (restore a
-    # parked state with no live table, clear a stale park next to a
-    # live one) — this function carried its own inline copy, which a
-    # future fix to the swap protocol would silently miss (r08 review)
     _recover_pre_swap(state_path)
+    merged = batch_mins
     if os.path.exists(state_path):
-        prev = spark.read.parquet(state_path)
         merged = (
-            prev.select("user_id", "mv", "mc", "mp")
+            read_table(batch_mins.sparkSession, state_path)
+            .select("user_id", "mv", "mc", "mp")
             .unionByName(batch_mins)
             .groupBy("user_id")
             .agg(
@@ -67,16 +59,7 @@ def merge_state(state_path: str, batch_mins: DataFrame) -> None:
                 F.min("mp").alias("mp"),
             )
         )
-        staged = state_path.rstrip("/") + "._merging"
-        merged.write.mode("overwrite").parquet(staged)
-        _atomic_swap(state_path, staged)
-    else:
-        # stage + rename even for the FIRST write: a crash mid-write
-        # must not leave a half-written dir that the merge branch
-        # would then fail to read on every retry
-        staged = state_path.rstrip("/") + "._merging"
-        batch_mins.write.mode("overwrite").parquet(staged)
-        os.rename(staged, state_path)
+    replace_table(merged, state_path)
 
 
 def stream_funnel_state(

@@ -48,10 +48,6 @@ def bronze_stream_schema(key_column: str = "country") -> T.StructType:
     )
 
 
-# the power-dataset shape, kept for existing callers
-BRONZE_STREAM_SCHEMA = bronze_stream_schema("country")
-
-
 def read_bronze_stream(
     spark: SparkSession,
     bronze_dir: str,
@@ -163,7 +159,7 @@ def write_stream_merge_to_lake(
     """
     import os
 
-    from ..pipeline.lake import _recover_pre_swap, upsert_table, write_table
+    from ..pipeline.lake import _recover_pre_swap, replace_table, upsert_table
     from pyspark.sql import Window
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -187,8 +183,8 @@ def write_stream_merge_to_lake(
             .drop("_rn")
         )
         spark = batch_df.sparkSession
-        # A crash inside upsert's _atomic_swap parks the WHOLE table
-        # at ._pre_swap with `path` absent; without restoring it first
+        # A crash inside upsert's swap parks the WHOLE table at
+        # ._pre_swap with `path` absent; without restoring it first
         # the replayed batch would take the first-write branch below
         # and the next upsert's recovery would rmtree the parked full
         # table — every earlier batch silently lost (r07 review; the
@@ -199,19 +195,9 @@ def write_stream_merge_to_lake(
                 spark, path, latest, key_cols=key_cols, order_col=order_col
             )
         else:
-            # Stage-then-rename even the very first write: a crash
-            # mid-write must not leave a half-written dir that every
-            # replayed attempt would then fail to READ in the upsert
-            # branch (the wedge funnel.merge_state documents). The
-            # rename is the commit point; stale staged dirs from
-            # crashed attempts are simply rewritten.
-            import shutil
-
-            staged = path.rstrip("/") + "._staged_first"
-            if os.path.exists(staged):
-                shutil.rmtree(staged)
-            write_table(latest, staged)
-            os.rename(staged, path)
+            # staged even the very first write: a crash mid-write must
+            # not leave a half-written dir every replay fails to READ
+            replace_table(latest, path)
 
     writer = (
         record_stream.writeStream.foreachBatch(merge)

@@ -262,6 +262,64 @@ def test_lake_read_back_uses_the_written_schema(spark, tmp_path):
         assert dict(got.dtypes)["date"] == "date"
 
 
+def test_lake_rewrites_enter_the_catalog(spark, tmp_path):
+    """Every staged rewrite publishes through ``replace_table``, which
+    enters the written schema under the live path: reading the table
+    back after compaction, an unpartitioned upsert or a funnel-state
+    merge launches no job and gives the schema inference would give."""
+    import pyspark.sql.functions as F
+
+    from energy_data_pipeline_project_spark.pipeline.lake import (
+        compact_table,
+        upsert_table,
+    )
+    from energy_data_pipeline_project_spark.streaming.funnel import (
+        merge_state,
+    )
+
+    from .test_plans import _jobs_during
+
+    def read_back(path, step):
+        back, jobs = _jobs_during(
+            spark,
+            f"lake-rewrite-{tmp_path.name}-{step}",
+            lambda s, _: read_table(s, path),
+        )
+        assert jobs == 0, step
+        assert back.schema == spark.read.parquet(path).schema, step
+        return back
+
+    path = str(tmp_path / "t")
+    write_table(
+        spark.range(100).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 2).alias("ver"),
+            F.col("id").cast("string").alias("v"),
+        ),
+        path,
+    )
+    assert compact_table(spark, path) == 1
+    assert read_back(path, "compact").count() == 100
+    updates = spark.createDataFrame(
+        [(1, 500, "x"), (200, 1, "new")], "k long, ver long, v string"
+    )
+    upsert_table(spark, path, updates, key_cols=("k",), order_col="ver")
+    got = {r["k"]: r["v"] for r in read_back(path, "upsert").collect()}
+    assert len(got) == 101 and got[1] == "x" and got[200] == "new"
+
+    state = str(tmp_path / "state")
+    schema = "user_id bigint, mv bigint, mc bigint, mp bigint"
+    merge_state(state, spark.createDataFrame([(1, 5, None, None)], schema))
+    read_back(state, "merge-1")
+    merge_state(
+        state, spark.createDataFrame([(1, 3, 4, None), (2, 7, 8, 9)], schema)
+    )
+    assert sorted(map(tuple, read_back(state, "merge-2").collect())) == [
+        (1, 3, 4, None),
+        (2, 7, 8, 9),
+    ]
+
+
 def test_pipeline_read_backs_launch_no_jobs(spark, tmp_path, monkeypatch):
     """Every ``read_table`` inside ``run_pipeline`` (bronze, silver and
     gold read-backs) reads a table the run has just written, so none

@@ -39,8 +39,7 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     after = sorted(tuple(r) for r in read_table(spark, path).collect())
     assert after == before
     # no leftover staging/backup dirs
-    assert not os.path.exists(path + "._compacting")
-    assert not os.path.exists(path + "._pre_swap")
+    assert not glob.glob(path + "._*")
 
 
 def test_compaction_single_file_floor(spark, tmp_path):

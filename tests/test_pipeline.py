@@ -550,6 +550,9 @@ def test_incremental_backfill_fetches_only_missing_days(spark, tmp_path):
     rows = spark.read.parquet(f"{legacy_root}/bronze/{power.name}").collect()
     assert sorted({str(r["date"]) for r in rows}) == days7[:5]
     assert len(rows) == 5, "migration must not duplicate legacy rows"
+    import glob
+
+    assert not glob.glob(f"{legacy_root}/bronze/{power.name}._*")
 
 
 def test_quarantine_catches_empty_time_array_and_empty_probe(spark):

@@ -423,6 +423,72 @@ def test_stream_merge_sink_keeps_latest_per_key(spark, tmp_path):
     assert got == {1: (1, "a1"), 2: (3, "b3"), 3: (1, "c1")}
 
 
+def _merge_batches(spark, src, lake, ckpt):
+    """Run the merge sink over every not-yet-seen file under ``src``,
+    one file per micro-batch, and return the lake as {k: (ver, v)}."""
+    from energy_data_pipeline_project_spark.streaming.medallion import (
+        write_stream_merge_to_lake,
+    )
+
+    stream = (
+        spark.readStream.schema("k long, ver long, v string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+    )
+    write_stream_merge_to_lake(
+        stream, lake, key_cols=("k",), order_col="ver", checkpoint_dir=ckpt
+    ).awaitTermination()
+    return {
+        r["k"]: (r["ver"], r["v"]) for r in spark.read.parquet(lake).collect()
+    }
+
+
+def test_stream_merge_sink_recovers_parked_table(spark, tmp_path):
+    """A crash inside a merge's swap parks the merged table at
+    ._pre_swap with no live table. The next batch must merge into the
+    parked table, not first-write over it: every earlier key survives
+    and no parked copy is left."""
+    import glob
+    import os
+
+    src, lake = str(tmp_path / "changes"), str(tmp_path / "merged")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "k long, ver long, v string"
+    spark.createDataFrame(
+        [(1, 1, "a1"), (2, 1, "b1")], schema
+    ).coalesce(1).write.parquet(src + "/f0")
+    assert _merge_batches(spark, src, lake, ckpt) == {
+        1: (1, "a1"), 2: (1, "b1")
+    }
+    os.rename(lake, lake + "._pre_swap")  # simulate the crash window
+
+    spark.createDataFrame(
+        [(2, 2, "b2"), (3, 1, "c1")], schema
+    ).coalesce(1).write.parquet(src + "/f1")
+    assert _merge_batches(spark, src, lake, ckpt) == {
+        1: (1, "a1"), 2: (2, "b2"), 3: (1, "c1")
+    }
+    assert not glob.glob(lake + "._*")
+
+
+def test_stream_merge_first_write_overwrites_stale_stage(spark, tmp_path):
+    """A crashed first write leaves a stale ._staged directory; the
+    next first write must publish exactly its batch's rows."""
+    import glob
+
+    src, lake = str(tmp_path / "changes"), str(tmp_path / "merged")
+    schema = "k long, ver long, v string"
+    spark.createDataFrame(
+        [(9, 9, "stale"), (1, 0, "stale")], schema
+    ).write.parquet(lake + "._staged")
+    spark.createDataFrame(
+        [(1, 1, "a1"), (1, 2, "a2"), (2, 1, "b1")], schema
+    ).coalesce(1).write.parquet(src + "/f0")
+    got = _merge_batches(spark, src, lake, str(tmp_path / "ckpt"))
+    assert got == {1: (2, "a2"), 2: (1, "b1")}
+    assert not glob.glob(lake + "._*")
+
+
 def test_stream_static_enrich_parity(spark, event_dir):
     """Stream-static dimension enrichment must equal the same join run
     as a batch query, cover every event exactly once (inner join on a

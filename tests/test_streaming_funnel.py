@@ -5,6 +5,8 @@ change the answer."""
 
 from __future__ import annotations
 
+import glob
+
 from energy_data_pipeline_project_spark.operators.warehouse import QUERIES
 from energy_data_pipeline_project_spark.sources.tables import load_table
 from energy_data_pipeline_project_spark.streaming.funnel import (
@@ -41,6 +43,7 @@ def test_streamed_funnel_matches_batch(spark, tmp_path_factory):
         for r in QUERIES["events_funnel_steps"](spark, SF_SMOKE).collect()
     }
     assert streamed == batch and batch["view"][0] > 0
+    assert not glob.glob(state + "._*")  # no leftover staging/backup dirs
 
 
 def test_funnel_state_recovers_from_mid_swap_crash(spark, tmp_path):

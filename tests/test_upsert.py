@@ -32,7 +32,7 @@ def test_upsert_unpartitioned_keeps_latest(spark, tmp_path):
         3: (10, "c2"),  # tie → update wins
         4: (10, "d"),  # brand-new key inserted
     }
-    assert not os.path.exists(path + "._upserting")
+    assert not glob.glob(path + "._*")  # no leftover staging/backup dirs
 
 
 def test_upsert_partitioned_touches_only_affected_partitions(spark, tmp_path):
