@@ -23,10 +23,10 @@ from pyspark.sql import types as T
 from ..pipeline.config import DatasetSpec, PipelineConfig
 from ..sources.payloads import PayloadSource
 from .lake import (
-    _recover_pre_swap,
+    overwrite_partitions,
+    read_for_rewrite,
     read_table,
     replace_table,
-    resolve_table_format,
     table_path,
     write_table,
 )
@@ -220,13 +220,11 @@ def ingest_dataset_incremental(
 
     path = table_path(config.lake_root, "bronze", dataset.name)
     target = [d.isoformat() for d in config.dates()]
-    # a crash between the legacy migration's two swap renames parks
-    # the table at ._pre_swap with no live dir — restore it before
-    # anything else, else the run would "first-run" and lose every
-    # day outside the current config range
-    _recover_pre_swap(path)
-
-    if os.path.exists(path):
+    # the lake read heals a table parked by a crashed migration swap;
+    # None means first run: no table yet
+    old = read_for_rewrite(spark, path, config.table_format)
+    existing = set()
+    if old is not None:
         # partition-column values are type-inferred as DATE on read;
         # normalize to ISO strings for the set diff. Read errors on an
         # EXISTING table must propagate — silently treating a corrupt
@@ -235,13 +233,10 @@ def ingest_dataset_incremental(
         # double-count rows forever after.
         existing = {
             r["d"]
-            for r in read_table(spark, path, config.table_format)
-            .select(F.col("date").cast("string").alias("d"))
+            for r in old.select(F.col("date").cast("string").alias("d"))
             .distinct()
             .collect()
         }
-    else:  # first run: no table yet
-        existing = set()
     missing = [d for d in target if d not in existing]
     if not missing:
         return None
@@ -260,22 +255,13 @@ def ingest_dataset_incremental(
         # the new days are by construction absent from the legacy
         # table (missing = target - existing), so the union is
         # duplicate-free without filtering
-        old = read_table(spark, path, config.table_format)
         replace_table(
             old.unionByName(df), path, config.table_format, ("date",)
         )
         return df
 
-    # Dynamic partition overwrite: only the day-partitions present in
-    # `df` are replaced; every other day's files are untouched. This
-    # is the per-day idempotent refresh the reference's full overwrite
-    # becomes at scale. Per-writer option, not a session-conf toggle —
-    # conf set/restore races between concurrent writers.
-    (
-        df.write.format(resolve_table_format(spark, config.table_format))
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date")
-        .save(path)
-    )
+    # Only the day-partitions present in `df` are replaced; every other
+    # day's files are untouched. This is the per-day idempotent refresh
+    # the reference's full overwrite becomes at scale.
+    overwrite_partitions(df, path, ("date",), config.table_format)
     return df

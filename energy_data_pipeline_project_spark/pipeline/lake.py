@@ -7,11 +7,13 @@ Writes are full overwrites — every run is an idempotent refresh
 Delta when delta-spark is on the classpath (import-gated; the
 container for this project ships parquet only).
 
-A read-modify-write of a table (compaction, upsert, the incremental
-ingest's legacy migration, the streaming merges) recovers a parked
-table (``_recover_pre_swap``), reads it with ``read_table`` and
-publishes with ``replace_table``: the one stage-and-swap step, so a
-reader never sees a half-written table.
+Table state lives here and nowhere else. ``replace_table`` publishes a
+rewrite by stage-and-swap (a writer dying mid-swap parks the table);
+``read_for_rewrite`` heals a parked table and returns ``None`` for a
+missing one, so read-modify-writes pick their first-write branch from
+it; ``read_table_or_empty`` gives readouts an empty frame for a table
+not written yet; ``overwrite_partitions`` replaces only the partitions
+a frame has rows in.
 
 Scale posture: ``partition_by`` is the opt-in day-partitioning knob
 (bronze uses it via incremental ingest's ``date=`` layout; a 100 TB
@@ -144,28 +146,83 @@ def write_table_observed(
     return dict(obs.get)
 
 
+def overwrite_partitions(
+    df: DataFrame,
+    path: str,
+    partition_by: tuple[str, ...],
+    fmt: str = "parquet",
+) -> None:
+    """Replace only the ``partition_by`` partitions of ``path`` that
+    ``df`` has rows in (dynamic partition overwrite); every other
+    partition is left as it is. The mode is a per-writer option: a
+    session-conf set/restore races concurrent writers and can flip one
+    into static overwrite, which wipes every other partition."""
+    (
+        df.write.format(resolve_table_format(df.sparkSession, fmt))
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .save(path)
+    )
+
+
+def _parked(path: str) -> str:
+    """Where ``_atomic_swap`` parks the old table between its renames."""
+    return path.rstrip("/") + "._pre_swap"
+
+
 def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     """Scan the lake table at ``path``. A parquet table is read through
     the table catalog (``sources.tables.read_parquet``): a table this
     process wrote, or read before, and has not been rewritten since is
     scanned with its known schema and launches no inference job."""
     # NON-destructively serve a parked table: a writer that died
-    # between _atomic_swap's two renames leaves the data at
-    # ._pre_swap, and until r07 every plain read failed with "path
-    # does not exist" until the next swap-calling WRITER healed it.
-    # Reading the parked directory (the funnel_report precedent)
-    # serves both the crashed case and the instant a LIVE writer is
-    # mid-swap — an eager rename here would race that writer's second
-    # rename and strand its new version (r07 diff review); mutation
-    # stays with writers (_recover_pre_swap).
+    # between _atomic_swap's two renames leaves the data parked, and
+    # reading the parked directory serves both that case and the
+    # instant a LIVE writer is mid-swap — an eager rename here would
+    # race that writer's second rename and strand its new version
+    # (r07 diff review); mutation stays with writers (read_for_rewrite).
     src = path
-    pre = path.rstrip("/") + "._pre_swap"
+    pre = _parked(path)
     if not os.path.exists(path) and os.path.isdir(pre):
         src = pre
     fmt = resolve_table_format(spark, fmt)
     if fmt == "parquet":
         return read_parquet(spark, src)
     return spark.read.format(fmt).load(src)
+
+
+def read_table_or_empty(
+    spark: SparkSession, path: str, schema: str, fmt: str = "parquet"
+) -> DataFrame:
+    """Read side of a table that may not exist yet: the table when it
+    is live or parked (``read_table`` serves a parked copy, the last
+    committed state), else an empty frame of ``schema``. A readout
+    over it then answers as its batch query does over no events."""
+    if os.path.exists(path) or os.path.isdir(_parked(path)):
+        return read_table(spark, path, fmt)
+    return spark.createDataFrame([], schema)
+
+
+def read_for_rewrite(
+    spark: SparkSession, path: str, fmt: str = "parquet"
+) -> DataFrame | None:
+    """Write side of a read-modify-write: heal a crash inside
+    ``_atomic_swap``'s rename window, then read the table, or return
+    ``None`` when there is none. A parked table with no live ``path``
+    is restored (taken for a missing one, it would be overwritten by a
+    first write); a stale parked copy next to a live table is removed."""
+    import shutil
+
+    pre = _parked(path)
+    if os.path.exists(pre):
+        if os.path.exists(path):
+            shutil.rmtree(pre)
+        else:
+            os.rename(pre, path)
+    if not os.path.exists(path):
+        return None
+    return read_table(spark, path, fmt)
 
 
 def compact_table(
@@ -193,8 +250,9 @@ def compact_table(
     """
     import math
 
-    _recover_pre_swap(path)
-    df = read_table(spark, path, fmt)
+    df = read_for_rewrite(spark, path, fmt)
+    if df is None:
+        raise FileNotFoundError(f"no table to compact at {path}")
     n_rows = df.count()
     n_files = max(1, math.ceil(n_rows / target_rows_per_file))
     # A hive-partitioned table (e.g. bronze's date= layout from
@@ -279,31 +337,10 @@ def read_parquet_index(spark: SparkSession, path: str) -> "DataFrame | None":
         return None
 
 
-def _recover_pre_swap(path: str) -> None:
-    """Self-heal a crash inside ``_atomic_swap``'s rename window: the
-    table parked at ``._pre_swap`` with no live ``path`` is restored;
-    a stale parked copy NEXT TO a live table (crash after the second
-    rename) is cleaned up. Every read-modify-write caller of
-    ``replace_table`` runs it before reading, so all heal the same
-    way."""
-    import shutil
-
-    pre = path.rstrip("/") + "._pre_swap"
-    if not os.path.exists(pre):
-        return
-    if os.path.exists(path):
-        shutil.rmtree(pre)
-    else:
-        os.rename(pre, path)
-
-
 def write_batch_partition(df: "DataFrame", path: str, batch_id: int) -> None:
     """Replay-idempotent per-batch sink write: rows land in (and only
     in) the batch's own ``batch_id=<n>`` partition; a re-delivered
-    batch REPLACES that partition. The overwrite mode is set as a
-    PER-WRITER option (not a session conf set/restore, which races
-    between concurrently running streaming queries and can flip a
-    writer into static overwrite — wiping every other partition).
+    batch REPLACES that partition (``overwrite_partitions``).
 
     Legacy adoption: a sink directory that predates partitioning
     (flat part-files at the root) would break partition discovery the
@@ -320,12 +357,8 @@ def write_batch_partition(df: "DataFrame", path: str, batch_id: int) -> None:
         # input rows -> same empty output), so there is no stale
         # partition to replace either; skipping is the idempotent act.
         return
-    (
-        df.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+    overwrite_partitions(
+        df.withColumn("batch_id", F.lit(int(batch_id))), path, ("batch_id",)
     )
 
 
@@ -357,7 +390,7 @@ def _atomic_swap(path: str, staged: str) -> None:
     instant between the renames where ``path`` does not exist: a
     concurrent reader in that window is served the parked copy by
     ``read_table``, and a writer crash in the window parks the table
-    at ``._pre_swap`` — ``_recover_pre_swap`` heals that on the next
+    at ``._pre_swap`` — ``read_for_rewrite`` heals that on the next
     write. True both-versions-visible swaps need the pointer design of
     ``write_table_versioned`` (or a transaction log); an
     object-store deployment would use that path instead."""
@@ -366,7 +399,7 @@ def _atomic_swap(path: str, staged: str) -> None:
     if not os.path.exists(path):
         os.rename(staged, path)
         return
-    old = path.rstrip("/") + "._pre_swap"
+    old = _parked(path)
     os.rename(path, old)
     try:
         os.rename(staged, path)
@@ -392,13 +425,12 @@ def upsert_table(
     semantics come from deduplicated rewrite + atomic directory swap.
 
     Scale shape: with ``partition_by`` set, only the partitions the
-    updates actually touch are read, merged, and overwritten (dynamic
-    partition overwrite — per-write option, not session conf). The
-    fast path is only sound while every updated key's rows live in ONE
-    partition: an update whose key also has rows in a different
-    partition leaves the superseded row alive there (dynamic overwrite
-    never rewrites a partition the output doesn't land in),
-    duplicating the key (r07 review). Soundness is established one of
+    updates actually touch are read, merged, and overwritten
+    (``overwrite_partitions``). The fast path is only sound while
+    every updated key's rows live in ONE partition: an update whose
+    key also has rows in a different partition leaves the superseded
+    row alive there (dynamic overwrite never rewrites a partition the
+    output doesn't land in), duplicating the key (r07 review). Soundness is established one of
     two ways:
 
     - ZERO-COST when the partition column is itself one of the key
@@ -420,23 +452,22 @@ def upsert_table(
 
     On any detected spanning, the merge falls back to the full rewrite
     published by ``replace_table`` (layout preserved). Unpartitioned
-    tables always take the full rewrite. The keep-latest dedup is one
-    window over the key — the same row_number idiom as
-    dedup_latest_order.
+    tables always take the full rewrite, and so does a missing table,
+    which merges as an empty one: the first call publishes the latest
+    update per key. The keep-latest dedup is one window over the key —
+    the same row_number idiom as dedup_latest_order.
     """
     fmt = resolve_table_format(spark, fmt)
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    _recover_pre_swap(path)
-    existing = read_table(spark, path, fmt)
-    tagged_old = existing.withColumn("_upd", F.lit(0))
-    tagged_new = updates.select(*existing.columns).withColumn(
-        "_upd", F.lit(1)
-    )
-
+    existing = read_for_rewrite(spark, path, fmt)
     partition_scoped = False
-    if partition_by:
+    if existing is None:
+        # an empty table of the updates' schema (the empty relation is
+        # pruned from the plan); published by the full rewrite below
+        existing = updates.limit(0)
+    elif partition_by:
         pcols = list(partition_by)
         if all(p in key_cols for p in pcols):
             # EVERY partition column ∈ key → one partition tuple per
@@ -485,6 +516,10 @@ def upsert_table(
                 .where(F.col("n_parts") > 1)
             )
             partition_scoped = spanning.isEmpty()
+    tagged_old = existing.withColumn("_upd", F.lit(0))
+    tagged_new = updates.select(*existing.columns).withColumn(
+        "_upd", F.lit(1)
+    )
     if partition_scoped:
         # null-safe touched-partition semi join over the FULL tuple
         # (isin() evaluates to NULL for NULL partition rows, silently
@@ -510,13 +545,7 @@ def upsert_table(
     )
 
     if partition_scoped:
-        (
-            merged.write.format(fmt)
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .save(path)
-        )
+        overwrite_partitions(merged, path, partition_by, fmt)
     else:
         replace_table(merged, path, fmt, partition_by)
 

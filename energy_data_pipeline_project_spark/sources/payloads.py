@@ -12,10 +12,12 @@ the unit the upstream Energy-Charts API serves. Two implementations:
   endpoint. Import of ``requests`` is deferred so hermetic
   environments never need it.
 
-At 100 TB these driver-side loops are the wrong shape — the scale path
-is documented in DESIGN.md: distribute (dataset, day) fetch
-tasks over executors via ``spark.range(...).repartition(...)`` +
-``mapInPandas`` fetch, or a DataSource V2 reader.
+At 100 TB these driver-side loops are the wrong shape. The engine ships
+two executor-side fetch paths for that scale:
+``pipeline/ingestion.py::ingest_dataset_distributed`` spreads
+(dataset, day) fetch tasks over executors with ``mapInPandas``, and
+``sources/datasource.py`` is a Python DataSource V2 reader of the same
+payloads.
 """
 
 from __future__ import annotations

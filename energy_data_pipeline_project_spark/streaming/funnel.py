@@ -19,8 +19,6 @@ tests/test_streaming_funnel.py.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,14 +41,13 @@ def merge_state(state_path: str, batch_mins: DataFrame) -> None:
     committed state recoverable, and because the MIN-merge is
     idempotent the re-delivered batch then reconverges — no silent
     state loss."""
-    from ..pipeline.lake import _recover_pre_swap, read_table, replace_table
+    from ..pipeline.lake import read_for_rewrite, replace_table
 
-    _recover_pre_swap(state_path)
+    prior = read_for_rewrite(batch_mins.sparkSession, state_path)
     merged = batch_mins
-    if os.path.exists(state_path):
+    if prior is not None:
         merged = (
-            read_table(batch_mins.sparkSession, state_path)
-            .select("user_id", "mv", "mc", "mp")
+            prior.select("user_id", "mv", "mc", "mp")
             .unionByName(batch_mins)
             .groupBy("user_id")
             .agg(
@@ -85,21 +82,13 @@ def funnel_report(spark: SparkSession, state_path: str) -> DataFrame:
     """The 3-row funnel report from the state table — same schema and
     semantics as the batch ``events_funnel_steps``. Cold start (no
     non-empty batch processed yet) reports zero users, exactly as the
-    batch query does on an empty events table."""
-    # lake.read_table centralizes the parked-copy fallback this block
-    # pioneered (r06 here, generalized r07): a mid-swap state_path is
-    # served from ._pre_swap — the last COMMITTED state — instead of a
-    # silent cold-start all-zero report; only a genuinely-absent state
-    # (no live dir, no park) cold-starts.
-    from ..pipeline.lake import read_table
+    batch query does on an empty events table; a state caught mid-swap
+    reports its last committed counts."""
+    from ..pipeline.lake import read_table_or_empty
 
-    pre = state_path.rstrip("/") + "._pre_swap"
-    if os.path.exists(state_path) or os.path.exists(pre):
-        state = read_table(spark, state_path)
-    else:
-        state = spark.createDataFrame(
-            [], "user_id bigint, mv bigint, mc bigint, mp bigint"
-        )
+    state = read_table_or_empty(
+        spark, state_path, "user_id bigint, mv bigint, mc bigint, mp bigint"
+    )
     tot = state.agg(
         F.count_if(F.col("mv").isNotNull()).alias("n1"),
         F.count_if(

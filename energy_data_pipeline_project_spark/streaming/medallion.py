@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..pipeline.config import DatasetSpec
+from ..pipeline.lake import overwrite_partitions, upsert_table
 from ..pipeline.silver import extract_timeseries
 
 def bronze_stream_schema(key_column: str = "country") -> T.StructType:
@@ -98,14 +99,7 @@ def write_gold_stream_to_lake(
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # per-write option, NOT a session-conf mutation: a temporary
-        # session-wide 'dynamic' would race concurrent writers
-        (
-            batch_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
+        overwrite_partitions(batch_df, path, partition_cols)
 
     writer = (
         gold_stream.writeStream.foreachBatch(upsert)
@@ -157,9 +151,6 @@ def write_stream_merge_to_lake(
 
     Returns the started StreamingQuery (caller awaits/stops).
     """
-    import os
-
-    from ..pipeline.lake import _recover_pre_swap, replace_table, upsert_table
     from pyspark.sql import Window
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -182,22 +173,10 @@ def write_stream_merge_to_lake(
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        spark = batch_df.sparkSession
-        # A crash inside upsert's swap parks the WHOLE table at
-        # ._pre_swap with `path` absent; without restoring it first
-        # the replayed batch would take the first-write branch below
-        # and the next upsert's recovery would rmtree the parked full
-        # table — every earlier batch silently lost (r07 review; the
-        # funnel merge guards this the same way).
-        _recover_pre_swap(path)
-        if os.path.exists(path):
-            upsert_table(
-                spark, path, latest, key_cols=key_cols, order_col=order_col
-            )
-        else:
-            # staged even the very first write: a crash mid-write must
-            # not leave a half-written dir every replay fails to READ
-            replace_table(latest, path)
+        upsert_table(
+            batch_df.sparkSession, path, latest,
+            key_cols=key_cols, order_col=order_col,
+        )
 
     writer = (
         record_stream.writeStream.foreachBatch(merge)

@@ -23,9 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.timeseries import _EPOCH, _cents, anomaly_from_daily
-from ..pipeline.lake import (
-    write_batch_partition as lake_write_batch_partition,
-)
+from ..pipeline.lake import read_table_or_empty, write_batch_partition
 
 
 def batch_day_totals(events: DataFrame) -> DataFrame:
@@ -37,16 +35,6 @@ def batch_day_totals(events: DataFrame) -> DataFrame:
             "day_no"
         ),
     ).agg(F.sum(_cents("value")).cast("bigint").alias("day_cents"))
-
-
-def write_batch_partition(
-    partial: DataFrame, state_path: str, batch_id: int
-) -> None:
-    """Idempotent per-batch state write — delegates to the shared
-    ``lake.write_batch_partition`` (per-writer dynamic-overwrite
-    option; session-conf toggling would race between concurrent
-    streaming queries)."""
-    lake_write_batch_partition(partial, state_path, batch_id)
 
 
 def stream_day_totals(
@@ -67,28 +55,20 @@ def stream_day_totals(
     )
 
 
+# Cold start (no non-empty batch yet) reads the state as an empty frame
+# of this schema, so both readouts behave like their batch queries over
+# an empty events table.
 _STATE_SCHEMA = (
     "event_type string, d date, day_no int, day_cents bigint,"
     " batch_id bigint"
 )
 
 
-def _read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """The merged day-grain state table; cold start (no non-empty
-    batch yet) reads as an empty frame with the state schema, so both
-    readouts behave like their batch queries over an empty events
-    table."""
-    import os
-
-    if os.path.exists(state_path):
-        return spark.read.parquet(state_path)
-    return spark.createDataFrame([], _STATE_SCHEMA)
-
-
 def anomaly_report(spark: SparkSession, state_path: str) -> DataFrame:
     """Merge the per-batch partials by addition and score — same
     output contract as the batch ``events_anomaly_zscore``."""
-    daily = _read_state(spark, state_path).groupBy("event_type", "d", "day_no").agg(
+    state = read_table_or_empty(spark, state_path, _STATE_SCHEMA)
+    daily = state.groupBy("event_type", "d", "day_no").agg(
         F.sum("day_cents").cast("bigint").alias("day_cents")
     )
     return anomaly_from_daily(daily)
@@ -102,7 +82,8 @@ def ewma_report(spark: SparkSession, state_path: str) -> DataFrame:
     minus the calendar-date column (state holds day numbers)."""
     from ..operators.timeseries import ewma_from_daily
 
-    daily = _read_state(spark, state_path).groupBy("event_type", "day_no").agg(
+    state = read_table_or_empty(spark, state_path, _STATE_SCHEMA)
+    daily = state.groupBy("event_type", "day_no").agg(
         F.sum("day_cents").cast("bigint").alias("day_cents")
     )
     return ewma_from_daily(daily).drop("d")

@@ -102,9 +102,10 @@ def test_partitioned_compaction_does_not_multiply_files(spark, tmp_path):
 
 
 def test_compaction_recovers_crashed_swap(spark, tmp_path):
-    """A crash between _atomic_swap's two renames parks the table at
-    ._pre_swap; the next compaction must self-heal instead of dying
-    with PATH_NOT_FOUND forever (review-pass catch)."""
+    """A writer that dies between a swap's two renames leaves the table
+    parked at ``<path>._pre_swap`` with no live directory (simulated
+    below by moving it there); the next compaction must self-heal
+    instead of dying with PATH_NOT_FOUND forever (review-pass catch)."""
     import os
 
     from energy_data_pipeline_project_spark.pipeline.lake import (

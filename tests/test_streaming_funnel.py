@@ -77,3 +77,42 @@ def test_funnel_state_recovers_from_mid_swap_crash(spark, tmp_path):
         for r in QUERIES["events_funnel_steps"](spark, SF_SMOKE).collect()
     }
     assert got == want, "recovered state must cover both halves"
+
+
+def test_readouts_over_missing_or_parked_state(spark, tmp_path):
+    """The state readouts go through the lake's cold-start read: a
+    funnel state parked at ``<state>._pre_swap`` (a writer died between
+    a swap's two renames) reports the counts it had while live, and
+    state paths never written report the empty-events answer — three
+    zero-user funnel stages and no trend rows."""
+    import os
+
+    from energy_data_pipeline_project_spark.streaming.funnel import (
+        batch_user_mins,
+        merge_state,
+    )
+    from energy_data_pipeline_project_spark.streaming.trend import (
+        anomaly_report,
+        ewma_report,
+    )
+
+    def report(path):
+        return sorted(map(tuple, funnel_report(spark, path).collect()))
+
+    state = str(tmp_path / "state")
+    events = load_table(spark, SF_SMOKE, "events")
+    merge_state(state, batch_user_mins(events))
+    live = report(state)
+    assert live[0][1] > 0
+    os.rename(state, state + "._pre_swap")
+    assert report(state) == live
+    assert not os.path.exists(state)  # the readout heals nothing
+
+    never = str(tmp_path / "never")
+    assert report(never) == [
+        ("view", 0, 1000),
+        ("view_click", 0, None),
+        ("view_click_purchase", 0, None),
+    ]
+    assert anomaly_report(spark, never).count() == 0
+    assert ewma_report(spark, never).count() == 0

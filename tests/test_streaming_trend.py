@@ -6,12 +6,12 @@ partition changes nothing."""
 from __future__ import annotations
 
 from energy_data_pipeline_project_spark.operators.timeseries import QUERIES
+from energy_data_pipeline_project_spark.pipeline.lake import write_batch_partition
 from energy_data_pipeline_project_spark.sources.tables import load_table
 from energy_data_pipeline_project_spark.streaming.trend import (
     anomaly_report,
     batch_day_totals,
     stream_day_totals,
-    write_batch_partition,
 )
 
 from .conftest import SF_SMOKE

@@ -35,6 +35,36 @@ def test_upsert_unpartitioned_keeps_latest(spark, tmp_path):
     assert not glob.glob(path + "._*")  # no leftover staging/backup dirs
 
 
+def test_upsert_into_missing_path_publishes_latest_per_key(spark, tmp_path):
+    """A path with no table merges as an empty table: the first upsert
+    publishes the latest update per key through the staged replace,
+    keeping a requested partition layout, and leaves no sibling
+    directory behind."""
+    updates = spark.createDataFrame(
+        [("d1", 1, 10, "a"), ("d1", 1, 20, "a2"), ("d2", 2, 10, "b")],
+        "day string, k long, ver long, v string",
+    )
+    want = {(1, 20, "a2"), (2, 10, "b")}
+    path = str(tmp_path / "fresh")
+    upsert_table(spark, path, updates, key_cols=("k",), order_col="ver")
+    rows = read_table(spark, path).collect()
+    assert {(r["k"], r["ver"], r["v"]) for r in rows} == want
+    assert len(rows) == 2
+    assert not glob.glob(path + "._*")
+
+    ppath = str(tmp_path / "fresh_parted")
+    upsert_table(
+        spark, ppath, updates, key_cols=("day", "k"), order_col="ver",
+        partition_by=("day",),
+    )
+    rows = read_table(spark, ppath).collect()
+    assert {(r["k"], r["ver"], r["v"]) for r in rows} == want
+    assert sorted(glob.glob(ppath + "/day=*")) == [
+        ppath + "/day=d1", ppath + "/day=d2"
+    ]
+    assert not glob.glob(ppath + "._*")
+
+
 def test_upsert_partitioned_touches_only_affected_partitions(spark, tmp_path):
     path = str(tmp_path / "tp")
     spark.createDataFrame(
@@ -151,10 +181,11 @@ def test_upsert_key_spanning_partitions_within_one_batch(spark, tmp_path):
 
 
 def test_read_table_serves_parked_pre_swap_nondestructively(spark, tmp_path):
-    """A crashed _atomic_swap parks the table at ._pre_swap; a plain
-    read must serve that data WITHOUT renaming anything (an eager heal
-    would race a live writer mid-swap — r07 diff review). Healing
-    stays with the next writer."""
+    """A writer that dies between a swap's two renames leaves the table
+    parked at ``<path>._pre_swap`` with no live directory (simulated
+    below by moving it there); a plain read must serve that data
+    WITHOUT renaming anything (an eager heal would race a live writer
+    mid-swap — r07 diff review). Healing stays with the next writer."""
     import shutil
 
     from energy_data_pipeline_project_spark.pipeline.lake import write_table
