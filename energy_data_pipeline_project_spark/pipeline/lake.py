@@ -7,13 +7,16 @@ Writes are full overwrites — every run is an idempotent refresh
 Delta when delta-spark is on the classpath (import-gated; the
 container for this project ships parquet only).
 
-Table state lives here and nowhere else. ``replace_table`` publishes a
-rewrite by stage-and-swap (a writer dying mid-swap parks the table);
-``read_for_rewrite`` heals a parked table and returns ``None`` for a
-missing one, so read-modify-writes pick their first-write branch from
-it; ``read_table_or_empty`` gives readouts an empty frame for a table
-not written yet; ``overwrite_partitions`` replaces only the partitions
-a frame has rows in.
+Table state lives here and nowhere else. A table is missing when
+neither its path nor its parked copy holds an entry Spark's file
+listing reads (``_holds_table``): a failed first write or an empty
+partition overwrite leaves such a directory. ``replace_table``
+publishes a rewrite by stage-and-swap (a writer dying mid-swap parks
+the table); ``read_for_rewrite`` heals a parked table and returns
+``None`` for a missing one, so read-modify-writes pick their
+first-write branch from it; ``read_table_or_empty`` gives readouts an
+empty frame for a missing table; ``overwrite_partitions`` replaces
+only the partitions a frame has rows in.
 
 Scale posture: ``partition_by`` is the opt-in day-partitioning knob
 (bronze uses it via incremental ingest's ``date=`` layout; a 100 TB
@@ -27,8 +30,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from ..sources.tables import read_parquet, record_schema
+from ..sources.tables import current_schema, read_parquet, record_schema
 
 LAYERS = ("bronze", "silver", "gold")
 
@@ -156,14 +160,35 @@ def overwrite_partitions(
     ``df`` has rows in (dynamic partition overwrite); every other
     partition is left as it is. The mode is a per-writer option: a
     session-conf set/restore races concurrent writers and can flip one
-    into static overwrite, which wipes every other partition."""
+    into static overwrite, which wipes every other partition.
+
+    A parquet table's catalog entry is carried across the write when it
+    matched the table just before it and its data columns (all but
+    ``partition_by``) equal ``df``'s by name and type: the partition
+    columns keep the type read-side inference gave them, so the next
+    read infers nothing. Otherwise nothing is entered and the next read
+    infers once (a stale entry, say of the table's unpartitioned
+    layout, would type a ``date=`` column as its written string)."""
+    fmt = resolve_table_format(df.sparkSession, fmt)
+    carried = current_schema(path) if fmt == "parquet" else None
     (
-        df.write.format(resolve_table_format(df.sparkSession, fmt))
+        df.write.format(fmt)
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_by)
         .save(path)
     )
+
+    def data_columns(schema: StructType) -> list:
+        # types without nullability: a parquet read reports all nullable
+        return [
+            (f.name, f.dataType.simpleString())
+            for f in schema
+            if f.name not in partition_by
+        ]
+
+    if carried is not None and data_columns(carried) == data_columns(df.schema):
+        record_schema(path, carried)
 
 
 def _parked(path: str) -> str:
@@ -171,21 +196,41 @@ def _parked(path: str) -> str:
     return path.rstrip("/") + "._pre_swap"
 
 
+def _holds_table(path: str) -> bool:
+    """The lake's existence rule: ``path`` holds a table when it holds
+    an entry Spark's file listing reads. Spark hides names starting
+    with ``_`` or ``.``; a Delta ``_delta_log`` still counts. A missing
+    path, and a directory holding only ``_SUCCESS`` or nothing (a
+    failed first write, an empty partition overwrite), hold none."""
+    try:
+        names = os.listdir(path)
+    except NotADirectoryError:
+        return True
+    except FileNotFoundError:
+        return False
+    return any(n == "_delta_log" or not n.startswith(("_", ".")) for n in names)
+
+
+def _table_source(path: str) -> str | None:
+    """The directory a read of ``path`` scans: ``path``, else its parked
+    copy (a writer that died between ``_atomic_swap``'s renames, or a
+    live writer inside that window), else ``None`` for a missing table.
+    Serving the parked copy is non-destructive: an eager rename here
+    would race a live writer's second rename and strand its new
+    version; healing stays with writers (``read_for_rewrite``)."""
+    for src in (path, _parked(path)):
+        if _holds_table(src):
+            return src
+    return None
+
+
 def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Scan the lake table at ``path``. A parquet table is read through
-    the table catalog (``sources.tables.read_parquet``): a table this
-    process wrote, or read before, and has not been rewritten since is
-    scanned with its known schema and launches no inference job."""
-    # NON-destructively serve a parked table: a writer that died
-    # between _atomic_swap's two renames leaves the data parked, and
-    # reading the parked directory serves both that case and the
-    # instant a LIVE writer is mid-swap — an eager rename here would
-    # race that writer's second rename and strand its new version
-    # (r07 diff review); mutation stays with writers (read_for_rewrite).
-    src = path
-    pre = _parked(path)
-    if not os.path.exists(path) and os.path.isdir(pre):
-        src = pre
+    """Scan the lake table at ``path`` (or its parked copy). A parquet
+    table is read through the table catalog
+    (``sources.tables.read_parquet``): a table this process wrote, or
+    read before, and has not been rewritten since is scanned with its
+    known schema and launches no inference job."""
+    src = _table_source(path) or path
     fmt = resolve_table_format(spark, fmt)
     if fmt == "parquet":
         return read_parquet(spark, src)
@@ -196,12 +241,12 @@ def read_table_or_empty(
     spark: SparkSession, path: str, schema: str, fmt: str = "parquet"
 ) -> DataFrame:
     """Read side of a table that may not exist yet: the table when it
-    is live or parked (``read_table`` serves a parked copy, the last
-    committed state), else an empty frame of ``schema``. A readout
-    over it then answers as its batch query does over no events."""
-    if os.path.exists(path) or os.path.isdir(_parked(path)):
-        return read_table(spark, path, fmt)
-    return spark.createDataFrame([], schema)
+    is live or parked (the last committed state), else an empty frame
+    of ``schema``. A readout over it then answers as its batch query
+    does over no events."""
+    if _table_source(path) is None:
+        return spark.createDataFrame([], schema)
+    return read_table(spark, path, fmt)
 
 
 def read_for_rewrite(
@@ -209,19 +254,21 @@ def read_for_rewrite(
 ) -> DataFrame | None:
     """Write side of a read-modify-write: heal a crash inside
     ``_atomic_swap``'s rename window, then read the table, or return
-    ``None`` when there is none. A parked table with no live ``path``
-    is restored (taken for a missing one, it would be overwritten by a
-    first write); a stale parked copy next to a live table is removed."""
+    ``None`` when there is none. A parked table with no live table at
+    ``path`` is restored (taken for a missing one, it would be
+    overwritten by a first write); a stale parked copy next to a live
+    table is removed."""
     import shutil
 
-    pre = _parked(path)
-    if os.path.exists(pre):
-        if os.path.exists(path):
-            shutil.rmtree(pre)
-        else:
-            os.rename(pre, path)
-    if not os.path.exists(path):
+    src = _table_source(path)
+    if src is None:
         return None
+    pre = _parked(path)
+    if src == pre:
+        shutil.rmtree(path, ignore_errors=True)
+        os.rename(pre, path)
+    elif os.path.isdir(pre):
+        shutil.rmtree(pre)
     return read_table(spark, path, fmt)
 
 
@@ -311,76 +358,17 @@ def _partition_columns(path: str) -> list[str]:
     return cols
 
 
-def read_parquet_index(spark: SparkSession, path: str) -> "DataFrame | None":
-    """Read a growing foreachBatch index/log directory; ``None`` means
-    cold start — the path is missing OR it is a pre-existing
-    schema-less directory (legacy dirs with only ``_SUCCESS``; empty
-    writes themselves are skipped by the lake-level guard). Any OTHER
-    analysis failure — renamed/missing columns, schema drift — must
-    PROPAGATE: silently treating it as empty would screen/attribute
-    against nothing and persist wrong results. Centralizes the guard
-    attribution.py carried alone while its sibling index readers
-    (dedup_index, span_index) crash-looped on the same legacy-dir
-    case (r07 review)."""
-    from pyspark.errors import AnalysisException
-
-    if not os.path.exists(path):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        infer = getattr(e, "getErrorClass", lambda: None)()
-        if infer != "UNABLE_TO_INFER_SCHEMA" and (
-            "UNABLE_TO_INFER_SCHEMA" not in str(e)
-        ):
-            raise
-        return None
-
-
 def write_batch_partition(df: "DataFrame", path: str, batch_id: int) -> None:
     """Replay-idempotent per-batch sink write: rows land in (and only
     in) the batch's own ``batch_id=<n>`` partition; a re-delivered
-    batch REPLACES that partition (``overwrite_partitions``).
-
-    Legacy adoption: a sink directory that predates partitioning
-    (flat part-files at the root) would break partition discovery the
-    moment ``batch_id=`` dirs appear; such files are moved once into
-    a ``batch_id=-1`` partition, whose value partition-discovery then
-    supplies for the old rows."""
+    batch REPLACES that partition (``overwrite_partitions``). An empty
+    frame writes no part file and replaces no partition; on a new sink
+    it leaves a directory the lake reads as no table."""
     import pyspark.sql.functions as F
 
-    _adopt_legacy_flat(path)
-    if df.isEmpty():
-        # Writing an empty frame would still create the directory with
-        # only _SUCCESS — a schema-less sink that breaks every later
-        # read. An empty batch is deterministic on redelivery (same
-        # input rows -> same empty output), so there is no stale
-        # partition to replace either; skipping is the idempotent act.
-        return
     overwrite_partitions(
         df.withColumn("batch_id", F.lit(int(batch_id))), path, ("batch_id",)
     )
-
-
-def _adopt_legacy_flat(path: str) -> None:
-    """Move root-level data files of ``path`` into ``batch_id=-1/``."""
-    if not os.path.isdir(path):
-        return
-    entries = os.listdir(path)
-    if any(e.startswith("batch_id=") for e in entries):
-        return
-    data = [
-        e
-        for e in entries
-        if not e.startswith(("_", "."))
-        and os.path.isfile(os.path.join(path, e))
-    ]
-    if not data:
-        return
-    legacy = os.path.join(path, "batch_id=-1")
-    os.makedirs(legacy, exist_ok=True)
-    for e in data:
-        os.rename(os.path.join(path, e), os.path.join(legacy, e))
 
 
 def _atomic_swap(path: str, staged: str) -> None:

@@ -14,7 +14,9 @@ lake (``pipeline.lake.read_table``). An entry maps an absolute path to
 (fingerprint, schema). A read whose fingerprint matches skips parquet
 schema inference; any rewrite changes the fingerprint, so the next read
 infers again. An unpartitioned parquet lake write enters the schema it
-wrote (``record_schema``), so reading a table back launches no job.
+wrote (``record_schema``), so reading a table back launches no job; a
+partition overwrite carries a current entry across the write
+(``pipeline.lake.overwrite_partitions``).
 """
 
 from __future__ import annotations
@@ -76,17 +78,23 @@ def record_schema(path: str, schema: StructType) -> None:
         _CATALOG[key] = (fp, schema)
 
 
+def current_schema(path: str) -> StructType | None:
+    """The catalog's schema for ``path`` when its entry matches the
+    path's current fingerprint, else ``None``."""
+    key, fp = path_fingerprint(path)
+    entry = _CATALOG.get(key)
+    return entry[1] if entry and entry[0] == fp else None
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Scan the parquet table at ``path`` with the catalog's schema when
     its entry matches the current fingerprint; otherwise infer the
     schema (one Spark job) and enter it."""
-    key, fp = path_fingerprint(path)
-    entry = _CATALOG.get(key)
-    if entry and entry[0] == fp:
-        return spark.read.schema(entry[1]).parquet(path)
+    schema = current_schema(path)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
     df = spark.read.parquet(path)
-    if fp is not None:
-        _CATALOG[key] = (fp, df.schema)
+    record_schema(path, df.schema)
     return df
 
 

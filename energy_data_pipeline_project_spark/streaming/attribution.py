@@ -45,7 +45,7 @@ from ..operators.timeseries import (
     attribution_purchases,
     attribution_split,
 )
-from ..pipeline.lake import read_parquet_index as _read_parquet_index
+from ..pipeline.lake import read_for_rewrite
 from ..pipeline.lake import write_batch_partition as _write_batch_partition
 
 
@@ -65,10 +65,9 @@ def attribute_batch(
     bp = attribution_purchases(batch_events).localCheckpoint(eager=True)
 
     clicks = bc
-    # cold-start semantics centralized in lake.read_parquet_index
-    # (None = missing dir or legacy schema-less dir; real schema
-    # drift propagates) — shared with the dedup/span index screens
-    log = _read_parquet_index(spark, clicks_path)
+    # None = no click log yet (cold start); schema drift in an
+    # existing log fails the read
+    log = read_for_rewrite(spark, clicks_path)
     if log is not None:
         # STRICTLY-EARLIER batches only: on the live path the
         # current batch has the max id so < and != agree, but a
@@ -92,9 +91,6 @@ def attribute_batch(
         clicks = prior.unionByName(bc)
 
     split = attribution_split(clicks, bp).localCheckpoint(eager=True)
-    # empty-frame handling (schema-less dir hazard) lives inside
-    # _write_batch_partition — a second isEmpty() here was a
-    # redundant Spark job per micro-batch (r06 review)
     _write_batch_partition(bc, clicks_path, batch_id)
     return split
 
@@ -108,15 +104,15 @@ def stream_attribution(
     """Start at-arrival attribution: per-batch split rows land in
     their ``batch_id`` partition of ``splits_path``; the click log
     grows at ``clicks_path``. Roll up with
-    ``timeseries.attribution_report(spark.read.parquet(splits_path))``."""
+    ``timeseries.attribution_report(lake.read_table_or_empty(spark,
+    splits_path, schema))``, ``schema`` the split frame's DDL."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         split = attribute_batch(batch, clicks_path, batch_id)
         # clicks-only batches (normal at stream start) attribute
-        # nothing; the empty-frame guard inside _write_batch_partition
-        # skips the schema-less write
+        # nothing and write no partition
         _write_batch_partition(split, splits_path, batch_id)
 
     return (

@@ -36,7 +36,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..pipeline.lake import read_parquet_index as _read_parquet_index
+from ..pipeline.lake import read_for_rewrite
 from ..pipeline.lake import write_batch_partition as _write_batch_partition
 from ..operators.dedup import (
     LSH_BUCKET_CAP,
@@ -67,7 +67,7 @@ def screen_and_index_batch(
         F.col("doc_a").alias("dup_of"),
         "est_jaccard",
     )
-    idx_df = _read_parquet_index(spark, index_path)
+    idx_df = read_for_rewrite(spark, index_path)
     if idx_df is not None:
         # STRICTLY-EARLIER partitions only: a replay must neither
         # self-match its first-attempt signatures nor see batches that
@@ -112,8 +112,8 @@ def stream_dedup_index(
         verdicts = screen_and_index_batch(
             batch, index_path, batch_id, bucket_cap=bucket_cap
         )
-        # a duplicate-free batch emits no verdicts; the empty-frame
-        # guard inside _write_batch_partition skips the write
+        # a duplicate-free batch emits no verdicts and writes no
+        # partition
         _write_batch_partition(verdicts, verdicts_path, batch_id)
 
     return (

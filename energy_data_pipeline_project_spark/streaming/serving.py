@@ -124,9 +124,8 @@ def serve_ann_stream(
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         # every sibling foreachBatch handler guards the empty trigger;
-        # without it an empty recovery batch still built the LUT and
-        # probed the whole checkpointed code frame just for the sink's
-        # own isEmpty() to skip the write (r08 review)
+        # without it an empty recovery batch still builds the LUT and
+        # scans the whole checkpointed code frame to write no rows
         if batch.isEmpty():
             return
         write_batch_partition(

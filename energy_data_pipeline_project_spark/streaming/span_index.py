@@ -38,7 +38,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..operators.dedup import merge_span_islands, span_gram_frame
-from ..pipeline.lake import read_parquet_index as _read_parquet_index
+from ..pipeline.lake import read_for_rewrite
 from ..pipeline.lake import write_batch_partition as _write_batch_partition
 
 
@@ -54,7 +54,7 @@ def screen_and_index_span_batch(
 
     # within-batch: min-id owner per gram; later ids are flagged
     own_b = g.groupBy("h").agg(F.min("doc_id").alias("owner"))
-    idx_df = _read_parquet_index(spark, index_path)
+    idx_df = read_for_rewrite(spark, index_path)
     idx = (
         idx_df.where(F.col("batch_id") < int(batch_id)).select("h", "owner")
         if idx_df is not None
@@ -104,8 +104,8 @@ def stream_span_index(
         if batch.isEmpty():
             return
         spans = screen_and_index_span_batch(batch, index_path, batch_id)
-        # a duplicate-free batch emits no spans; the empty-frame guard
-        # inside _write_batch_partition skips the write
+        # a duplicate-free batch emits no spans and writes no
+        # partition
         _write_batch_partition(spans, spans_path, batch_id)
 
     return (

@@ -358,3 +358,87 @@ def test_pipeline_read_backs_launch_no_jobs(spark, tmp_path, monkeypatch):
     runner.run_pipeline(spark, cfg, LocalJsonSource(fixture_payloads(days)))
     assert len(jobs) == 7  # 2 bronze, 2 silver, 3 gold
     assert jobs == {p: 0 for p in jobs}
+
+
+def test_batch_sink_carries_its_catalog_entry(spark, tmp_path):
+    """A ``batch_id=`` sink that has been read once reads back after a
+    later batch with no inference job: ``overwrite_partitions`` carries
+    the entry across the write. An empty batch writes no partition: a
+    replayed empty batch 0 keeps its rows, and on a new sink it leaves
+    no table."""
+    import pyspark.sql.functions as F
+
+    from energy_data_pipeline_project_spark.pipeline.lake import (
+        read_for_rewrite,
+        write_batch_partition,
+    )
+
+    from .test_plans import _jobs_during
+
+    path = str(tmp_path / "index")
+    rows = spark.range(50).select(
+        F.col("id").alias("h"), (F.col("id") % 7).cast("int").alias("owner")
+    )
+    write_batch_partition(rows, path, 0)
+    assert read_for_rewrite(spark, path).count() == 50
+    write_batch_partition(rows.where("h < 3"), path, 1)
+    idx, jobs = _jobs_during(
+        spark,
+        f"sink-read-{tmp_path.name}",
+        lambda s, _: read_for_rewrite(s, path),
+    )
+    assert jobs == 0
+    assert idx.schema == spark.read.parquet(path).schema
+    assert idx.count() == 53
+
+    write_batch_partition(rows.limit(0), path, 0)
+    counts = read_for_rewrite(spark, path).groupBy("batch_id").count()
+    assert sorted(map(tuple, counts.collect())) == [(0, 50), (1, 3)]
+
+    fresh = str(tmp_path / "fresh")
+    write_batch_partition(rows.limit(0), fresh, 0)
+    assert read_for_rewrite(spark, fresh) is None
+
+
+def test_partition_overwrite_carries_only_a_current_entry(spark, tmp_path):
+    """``overwrite_partitions`` carries a catalog entry only when it
+    matched the table before the write. An unpartitioned table's entry
+    goes stale when the table is republished partitioned by ``date``;
+    carried onto the ``date=`` layout it would type ``date`` as the
+    written string instead of the inferred ``DATE``."""
+    from energy_data_pipeline_project_spark.pipeline.lake import (
+        overwrite_partitions,
+        replace_table,
+    )
+
+    from .test_plans import _jobs_during
+
+    schema = "date string, v int"
+    path = str(tmp_path / "t")
+    write_table(
+        spark.createDataFrame([("2025-01-01", 1), ("2025-01-02", 2)], schema),
+        path,
+    )
+    assert dict(read_table(spark, path).dtypes)["date"] == "string"
+    replace_table(read_table(spark, path), path, partition_by=("date",))
+    overwrite_partitions(
+        spark.createDataFrame([("2025-01-02", 3)], schema), path, ("date",)
+    )
+    back = read_table(spark, path)
+    assert dict(back.dtypes)["date"] == "date"
+    assert back.schema == spark.read.parquet(path).schema
+    assert sorted((str(r["date"]), r["v"]) for r in back.collect()) == [
+        ("2025-01-01", 1),
+        ("2025-01-02", 3),
+    ]
+
+    # the entry that read entered is current: the next day carries it
+    overwrite_partitions(
+        spark.createDataFrame([("2025-01-03", 4)], schema), path, ("date",)
+    )
+    again, jobs = _jobs_during(
+        spark, f"day-read-{tmp_path.name}", lambda s, _: read_table(s, path)
+    )
+    assert jobs == 0
+    assert again.schema == back.schema
+    assert again.count() == 3

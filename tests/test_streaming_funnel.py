@@ -84,9 +84,14 @@ def test_readouts_over_missing_or_parked_state(spark, tmp_path):
     funnel state parked at ``<state>._pre_swap`` (a writer died between
     a swap's two renames) reports the counts it had while live, and
     state paths never written report the empty-events answer — three
-    zero-user funnel stages and no trend rows."""
+    zero-user funnel stages and no trend rows. So does an empty
+    directory, the state a failed first write leaves: the writer side
+    reads it as no table and takes its first-write branch."""
     import os
 
+    from energy_data_pipeline_project_spark.pipeline.lake import (
+        read_for_rewrite,
+    )
     from energy_data_pipeline_project_spark.streaming.funnel import (
         batch_user_mins,
         merge_state,
@@ -108,11 +113,16 @@ def test_readouts_over_missing_or_parked_state(spark, tmp_path):
     assert report(state) == live
     assert not os.path.exists(state)  # the readout heals nothing
 
-    never = str(tmp_path / "never")
-    assert report(never) == [
-        ("view", 0, 1000),
-        ("view_click", 0, None),
-        ("view_click_purchase", 0, None),
-    ]
-    assert anomaly_report(spark, never).count() == 0
-    assert ewma_report(spark, never).count() == 0
+    failed = str(tmp_path / "failed")
+    os.makedirs(failed)
+    for cold in (str(tmp_path / "never"), failed):
+        assert report(cold) == [
+            ("view", 0, 1000),
+            ("view_click", 0, None),
+            ("view_click_purchase", 0, None),
+        ]
+        assert anomaly_report(spark, cold).count() == 0
+        assert ewma_report(spark, cold).count() == 0
+    assert read_for_rewrite(spark, failed) is None
+    merge_state(failed, batch_user_mins(events))
+    assert report(failed) == live
