@@ -324,7 +324,6 @@ def compact_table(
     if pcols:
         # the partitioned path writes one file per hive partition, not
         # n_files — report the real count, not the flat-path estimate
-        # (r06 diff review: the operator log printed the wrong number)
         import glob as _glob
 
         return len(
@@ -418,8 +417,8 @@ def upsert_table(
     every updated key's rows live in ONE partition: an update whose
     key also has rows in a different partition leaves the superseded
     row alive there (dynamic overwrite never rewrites a partition the
-    output doesn't land in), duplicating the key (r07 review). Soundness is established one of
-    two ways:
+    output doesn't land in), duplicating the key. Soundness is
+    established one of two ways:
 
     - ZERO-COST when the partition column is itself one of the key
       columns: each key then has exactly one partition value by
@@ -460,29 +459,27 @@ def upsert_table(
         if all(p in key_cols for p in pcols):
             # EVERY partition column ∈ key → one partition tuple per
             # key by definition, spanning is impossible: fast path
-            # with no probe job at all (r07 advisor; r08 review
-            # tightened the test from partition_by[0] to ALL columns —
+            # with no probe job at all. ALL columns, not the first:
             # with ("date","region") partitioning and only date in
-            # the key, a key could still span region values and the
-            # old first-column shortcut stranded the loser's row)
+            # the key, a key can still span region values, and a
+            # first-column shortcut strands the loser's row
             partition_scoped = True
         else:
             # The fast path is sound iff every updated key's rows —
             # existing AND update — live in ONE partition tuple: then
             # the winning row lands in that partition, the dynamic
             # overwrite rewrites it, and every loser is retired with
-            # it. A weaker input-partition-set comparison missed an
+            # it. A weaker input-partition-set comparison misses an
             # update batch that itself carries the same key in two
             # partitions (the losing row's partition gets no output
-            # and its stale row survives — r07 diff review).
+            # and its stale row survives).
             # Spanning is measured over the FULL partition tuple
             # (countDistinct of the struct — a struct is never NULL
-            # itself, so NULL-bearing tuples are counted distinctly,
-            # replacing the old isNull max term), and the updated-key
-            # semi-join is NULL-SAFE: a plain leftsemi never matches
-            # NULL keys, so a NULL-keyed moved row slipped past the
-            # probe while the merge window (which groups NULLs) would
-            # have retired it on the slow path (r08 review). The
+            # itself, so NULL-bearing tuples are counted distinctly),
+            # and the updated-key semi-join is NULL-SAFE: a plain
+            # leftsemi never matches NULL keys, so a NULL-keyed moved
+            # row would slip past the probe while the merge window
+            # (which groups NULLs) retires it on the slow path. The
             # existing-side read selects only key+partition columns,
             # so the parquet scan is column-pruned.
             cand_cols = list(dict.fromkeys([*key_cols, *pcols]))
@@ -590,25 +587,28 @@ def published_table_versions(path: str) -> set[int]:
 
     The pointer alone cannot distinguish a crashed writer's orphan
     from once-published history after the pointer moves PAST the
-    orphan's number (r08 review: retention then counted the partial
-    dir as history and deleted a valid snapshot instead). Each publish
-    appends to a `_PUBLISHED` log (atomic rewrite+replace, same
-    single-writer assumption as the pointer swap). Legacy tables with
-    no log fall back to the old pointer rule (everything <= pointer),
-    preserving their previous behavior. A log that EXISTS but fails
-    to parse raises instead of falling back (r08 advisor): silently
-    reverting to pointer-counting would reintroduce the exact
-    orphan-vs-history confusion the log was added to fix — vacuum
-    could delete real history — with no signal the log is damaged."""
+    orphan's number: retention would count the partial dir as history
+    and delete a valid snapshot instead. Each publish appends to a
+    `_PUBLISHED` log (atomic rewrite+replace, same single-writer
+    assumption as the pointer swap) before it moves the pointer, so
+    the log is the only record read. A table with neither file is new
+    (no versions). A `_LATEST` pointer with no log, or a log that
+    fails to parse, raises: pointer-counting would reintroduce the
+    orphan-vs-history confusion the log exists to fix — vacuum could
+    delete real history — with no signal anything is wrong."""
     log_path = os.path.join(path, _PUBLISHED_LOG)
     try:
         with open(log_path) as f:
             raw = f.read()
-    except OSError:
-        published = latest_table_version(path)
-        if published is None:
+    except FileNotFoundError:
+        if not os.path.exists(os.path.join(path, _LATEST_FILE)):
             return set()
-        return {v for v in list_table_versions(path) if v <= published}
+        raise FileNotFoundError(
+            f"versioned table at {path} has a {_LATEST_FILE} pointer but "
+            f"no {_PUBLISHED_LOG} log at {log_path}. Write the log by "
+            "hand, one published version number per line (every "
+            "version the pointer has ever named), then retry."
+        ) from None
     try:
         return {int(line) for line in raw.split() if line}
     except ValueError as exc:
@@ -650,7 +650,7 @@ def write_table_versioned(
     # the publish-log append comes FIRST: a crash between the two
     # writes leaves a logged-but-unpointed version — harmless history
     # — while the reverse order would leave a pointed-but-unlogged
-    # version that retention could then vacuum (r08 review)
+    # version that retention could then vacuum
     log = published_table_versions(path) | {version}
     log_tmp = os.path.join(path, _PUBLISHED_LOG + ".tmp")
     with open(log_tmp, "w") as f:
@@ -661,12 +661,10 @@ def write_table_versioned(
         f.write(str(version))
     os.replace(ptr_tmp, os.path.join(path, _LATEST_FILE))
     if keep_versions is not None:
-        # delegate to the orphan-aware vacuum: the old inline prune
-        # counted crashed-writer orphan dirs as retained history, so
-        # it could delete a valid published snapshot while KEEPING a
-        # half-written orphan as "history" (r08 review); vacuum
-        # counts retention over published-or-older versions only and
-        # clears orphans as a bonus
+        # delegate to the orphan-aware vacuum: it counts retention
+        # over published versions only, so a crashed writer's orphan
+        # dir is never kept as "history" in place of a valid snapshot,
+        # and it clears orphans as a bonus
         vacuum_table_versions(path, keep_versions)
     return version
 
@@ -684,9 +682,9 @@ def read_table_versioned(
             raise FileNotFoundError(f"no published version at {path}")
     elif version not in published_table_versions(path):
         # a dir the publish log never recorded is a crashed writer's
-        # partial orphan, not a snapshot — scanning it returned
-        # silently truncated data despite the module contract that
-        # half-written versions are unreachable (r08 review)
+        # partial orphan, not a snapshot — scanning it would return
+        # silently truncated data, breaking the module contract that
+        # half-written versions are unreachable
         raise FileNotFoundError(
             f"version {version} was never published at {path}"
             f" (published: {sorted(published_table_versions(path))})"
@@ -709,8 +707,8 @@ def vacuum_table_versions(path: str, keep_versions: int = 2) -> list[int]:
     versions = list_table_versions(path)
     # only versions the publish log records count as history: an
     # orphan below a later pointer is still a crashed write, not a
-    # snapshot (r08 review — the <=-pointer rule kept such a partial
-    # dir while deleting real history)
+    # snapshot (a <=-pointer rule would keep such a partial dir while
+    # deleting real history)
     logged = published_table_versions(path)
     history = [v for v in versions if v in logged]
     keep = set(history[-keep_versions:]) if keep_versions > 0 else set()

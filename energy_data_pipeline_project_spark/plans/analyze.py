@@ -14,10 +14,29 @@ from __future__ import annotations
 
 import io
 import re
+import uuid
 from contextlib import redirect_stdout
 from dataclasses import dataclass, field
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+
+def jobs_during(
+    spark: SparkSession, fn: Callable[..., Any], *args: Any
+) -> tuple[Any, int]:
+    """Call ``fn(*args)`` and return ``(result, n_jobs)``: its result
+    and the number of Spark jobs the call launched. The jobs are
+    counted under a job group unique to this call, so a count never
+    includes another call's jobs."""
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs_during")
+    try:
+        result = fn(*args)
+    finally:
+        sc.setJobGroup(None, None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def formatted_plan(df: DataFrame) -> str:

@@ -47,6 +47,7 @@ from ..operators.timeseries import (
 )
 from ..pipeline.lake import read_for_rewrite
 from ..pipeline.lake import write_batch_partition as _write_batch_partition
+from .jobs import run_micro_batches
 
 
 def attribute_batch(
@@ -59,9 +60,9 @@ def attribute_batch(
     spark = batch_events.sparkSession
     bc = attribution_clicks(batch_events).localCheckpoint(eager=True)
     # checkpoint the purchase side too: the min(pts) bounds collect and
-    # the attribution_split join each re-scanned the micro-batch source
-    # for bp, a duplicate source read on the per-batch hot path (r08
-    # review; bc one line up got its checkpoint for the same reason)
+    # the attribution_split join would each re-scan the micro-batch
+    # source for bp, a duplicate source read on the per-batch hot path
+    # (bc one line up is checkpointed for the same reason)
     bp = attribution_purchases(batch_events).localCheckpoint(eager=True)
 
     clicks = bc
@@ -74,7 +75,7 @@ def attribute_batch(
         # REPLAY of an old batch must not see clicks that arrived
         # after its first attempt — batch_id != current would let
         # a later-delivered out-of-order click retro-attribute the
-        # replayed purchases and break idempotence (review pass 4)
+        # replayed purchases and break idempotence
         prior = log.where(
             F.col("batch_id") < int(batch_id)
         ).drop("batch_id")
@@ -108,16 +109,7 @@ def stream_attribution(
     splits_path, schema))``, ``schema`` the split frame's DDL."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         split = attribute_batch(batch, clicks_path, batch_id)
-        # clicks-only batches (normal at stream start) attribute
-        # nothing and write no partition
         _write_batch_partition(split, splits_path, batch_id)
 
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_micro_batches(events_stream, handle, checkpoint)

@@ -45,6 +45,7 @@ from ..operators.dedup import (
     cross_matches_from_signatures,
     pairs_from_signatures,
 )
+from .jobs import run_micro_batches
 
 
 def screen_and_index_batch(
@@ -73,8 +74,8 @@ def screen_and_index_batch(
         # self-match its first-attempt signatures nor see batches that
         # arrived after its first attempt — the latter would emit
         # (this-batch, later-batch) pairs the later batch already
-        # emitted, changing this partition's contents (review pass 4;
-        # on the live path current == max id, so < and != agree)
+        # emitted, changing this partition's contents (on the live
+        # path current == max id, so < and != agree)
         sig_i = idx_df.where(
             F.col("batch_id") < int(batch_id)
         ).drop("batch_id")
@@ -107,18 +108,9 @@ def stream_dedup_index(
     grows at ``index_path``. Both writes are replayable."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         verdicts = screen_and_index_batch(
             batch, index_path, batch_id, bucket_cap=bucket_cap
         )
-        # a duplicate-free batch emits no verdicts and writes no
-        # partition
         _write_batch_partition(verdicts, verdicts_path, batch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_micro_batches(docs_stream, handle, checkpoint)

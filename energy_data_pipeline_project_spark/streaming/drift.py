@@ -61,7 +61,7 @@ def _drift_fn(reference_counts: list[int]):
     # 16-bucket running grid, so a short reference (e.g. built from a
     # groupBy that omitted empty buckets) would silently TRUNCATE the
     # comparison — PSI understated every micro-batch, a real >0.25
-    # drift never alerting (r08 review). A misordered reference is the
+    # drift never alerting. A misordered reference is the
     # caller's contract (bucket index = list position), stated here.
     if len(ref) != PSI_BUCKETS:
         raise ValueError(

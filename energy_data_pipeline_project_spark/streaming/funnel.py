@@ -22,6 +22,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .jobs import run_micro_batches
+
 
 def batch_user_mins(events: DataFrame) -> DataFrame:
     """Per-user conditional first-occurrence micros for one batch."""
@@ -64,17 +66,10 @@ def stream_funnel_state(
 ):
     """Start the stateful funnel: each arriving micro-batch folds its
     per-user mins into ``state_path``."""
-
-    def handle(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        merge_state(state_path, batch_user_mins(batch))
-
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return run_micro_batches(
+        events_stream,
+        lambda b, _: merge_state(state_path, batch_user_mins(b)),
+        checkpoint,
     )
 
 

@@ -19,13 +19,21 @@ Late-data policy: watermark 1 hour — rows later than (max event time
 − 1h) are dropped from open windows; at 100 TB the watermark bounds
 state size per key, which is what makes these aggregations runnable
 forever.
+
+Stream starts: ``run_to_memory`` (memory sink, for parity checks) and
+``run_micro_batches``, the one foreachBatch starter, which alone owns
+the empty-trigger guard, the availableNow trigger and the checkpoint
+option.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -158,14 +166,13 @@ def windowed_distinct_users(events: DataFrame) -> DataFrame:
     # and two same-day events can be up to 24h apart. With the 1h
     # delay, a (day, user) key was evicted an hour after the user's
     # first event and a later same-day event re-emitted — silently
-    # over-counting n_users (r06 review). The cost of exactness is
+    # over-counting n_users. The cost of exactness is
     # day-grain state lifetime and day-close emission lag; the cheap
     # alternative at extreme cardinality stays approx_count_distinct.
     # NULL user_ids must not count as a user: dropDuplicatesWithinWatermark
     # groups NULL keys together and keeps one row per (day, NULL), and the
     # downstream count('*') would count it — while the batch twin's
-    # countDistinct(user_id) skips NULLs, a silent +1 per affected day
-    # (r08 review).
+    # countDistinct(user_id) skips NULLs, a silent +1 per affected day.
     deduped = (
         events.where(F.col("user_id").isNotNull())
         .select(
@@ -200,15 +207,47 @@ def run_to_memory(
     return spark.table(name)
 
 
+def run_micro_batches(
+    stream: DataFrame,
+    handle: Callable[[DataFrame, int], None],
+    checkpoint: str | None,
+    *,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """Start ``stream`` to completion (availableNow), calling
+    ``handle(batch, batch_id)`` for each micro-batch that holds rows;
+    every foreachBatch stream in the package starts here.
+
+    Spark hands foreachBatch a 0-row batch for an empty source file
+    and for a batch filtered down to nothing. One ``isEmpty()`` skips
+    it, so no handler screens, serves, merges or writes an empty frame
+    (a serving batch would still build its LUT and scan the whole code
+    frame to write no rows). ``checkpoint`` None runs without restart
+    recovery: each run replays the whole source. Returns the started
+    query; the caller awaits or stops it."""
+
+    def guarded(batch: DataFrame, batch_id: int) -> None:
+        if not batch.isEmpty():
+            handle(batch, batch_id)
+
+    writer = (
+        stream.writeStream.foreachBatch(guarded)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
+
+
 CONVERSION_WINDOW = "30 minutes"
 
 
 def _conversion_interval_join(events: DataFrame, how: str) -> DataFrame:
     """Watermarked click/purchase sides + the interval join condition —
     the ONE spelling both the inner (click_purchase_conversions) and
-    left-outer (click_conversion_outcomes) forms build on; they had
-    drifted into verbatim copies of the projections and join predicate,
-    so a watermark or window change had to land twice (r08 review)."""
+    left-outer (click_conversion_outcomes) forms build on, so a
+    watermark or window change lands once."""
     clicks = (
         events.where(F.col("event_type") == "click")
         .select(

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from ..pipeline.config import DatasetSpec
 from ..pipeline.lake import overwrite_partitions, upsert_table
 from ..pipeline.silver import extract_timeseries
+from .jobs import run_micro_batches
 
 def bronze_stream_schema(key_column: str = "country") -> T.StructType:
     """Bronze schema for a dataset keyed by ``key_column``.
@@ -37,7 +38,7 @@ def bronze_stream_schema(key_column: str = "country") -> T.StructType:
     schema read the price table's market column back as all-NULL
     country and then crashed ``stream_silver`` with an unresolved
     market reference, so the streaming path silently only worked for
-    the power dataset (r08 review)."""
+    the power dataset."""
     return T.StructType(
         [
             T.StructField(key_column, T.StringType()),
@@ -95,20 +96,12 @@ def write_gold_stream_to_lake(
 
     Returns the started StreamingQuery (caller awaits/stops).
     """
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        overwrite_partitions(batch_df, path, partition_cols)
-
-    writer = (
-        gold_stream.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .trigger(availableNow=True)
+    return run_micro_batches(
+        gold_stream,
+        lambda b, _: overwrite_partitions(b, path, partition_cols),
+        checkpoint_dir,
+        output_mode="update",
     )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def stream_power_daily(silver_stream: DataFrame) -> DataFrame:
@@ -154,14 +147,12 @@ def write_stream_merge_to_lake(
     from pyspark.sql import Window
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # Deterministic keep-latest: order_col ties (duplicate CDC
         # records stamped in the same instant) must pick the SAME
         # winner on every delivery of the batch, or replay is not
         # idempotent — break ties by a hash of the whole row
         # (xxhash64 rejects MapType, so map columns are skipped —
-        # same filter as functions/skew.py, r07 review).
+        # same filter as functions/skew.py).
         hashable = [
             c for c, t in batch_df.dtypes if "map<" not in t.lower()
         ] or list(key_cols)
@@ -178,11 +169,4 @@ def write_stream_merge_to_lake(
             key_cols=key_cols, order_col=order_col,
         )
 
-    writer = (
-        record_stream.writeStream.foreachBatch(merge)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return run_micro_batches(record_stream, merge, checkpoint_dir)

@@ -33,6 +33,7 @@ from ..operators.dedup import (
     bloom_prefilter,
 )
 from ..sources.tables import load_table
+from .jobs import run_micro_batches
 
 
 def build_benchmark(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -48,7 +49,7 @@ def build_benchmark(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
 
 
 # Sentinel: distinguishes "caller omitted carve_benchmark" (warn once
-# about the r08 default flip, then behave as False) from an explicit
+# about the default flip, then behave as False) from an explicit
 # False. Remove with the warning after one release.
 _CARVE_UNSET: object = object()
 
@@ -62,14 +63,11 @@ def screen_batch(
 ) -> DataFrame:
     """One micro-batch of documents → contamination verdicts.
 
-    .. versionchanged:: r08
-       ``carve_benchmark`` now defaults to ``False`` (screen
-       everything). It previously defaulted to ``True``, which
-       silently exempted benchmark-keyed ingest from screening;
-       callers relying on the old default must now pass
-       ``carve_benchmark=True`` explicitly. Omitting the parameter
-       emits a one-release ``DeprecationWarning`` (r08 advisor:
-       flag the semantic flip to existing external callers).
+    ``carve_benchmark`` defaults to ``False`` (screen everything). It
+    once defaulted to ``True``; callers relying on that must pass
+    ``carve_benchmark=True`` explicitly, and omitting the parameter
+    emits a one-release ``DeprecationWarning`` so existing external
+    callers see the semantic flip.
 
     The default screens EVERY arriving document — the correct posture
     for production crawl ingest, where nothing should silently bypass
@@ -77,16 +75,16 @@ def screen_batch(
     fixture's key-carve: benchmark-keyed documents appearing in the
     stream screen out of the corpus side (they ARE the benchmark —
     correct only when the replay contains the benchmark members
-    themselves, as the parity fixtures do). The carve was previously
-    the DEFAULT, which silently exempted the ~1/17 benchmark-keyed
-    slice of real ingest from screening with no verdict and no skipped
-    record (r08 review); a dangerous mode must be opt-in. With a
+    themselves, as the parity fixtures do). As a default the carve
+    would silently exempt the ~1/17 benchmark-keyed slice of real
+    ingest from screening with no verdict and no skipped record; a
+    dangerous mode must be opt-in. With a
     carve, ``skipped_benchmark_docs`` accounts for what the screen did
     not verdict."""
     if carve_benchmark is _CARVE_UNSET:
         warnings.warn(
             "screen_batch: carve_benchmark's default flipped True->False"
-            " in r08 (everything is screened now). Pass it explicitly;"
+            " (everything is screened now). Pass it explicitly;"
             " this warning disappears after one release.",
             DeprecationWarning,
             stacklevel=2,
@@ -121,8 +119,6 @@ def screen_stream(
     together cover every arriving document."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         # batch_id-partitioned dynamic overwrite: a re-delivered batch
         # REPLACES its own verdict (and skipped) partitions instead of
         # appending, so at-least-once delivery cannot double-count a
@@ -140,9 +136,4 @@ def screen_stream(
                 skipped_benchmark_docs(batch), skipped_dir, batch_id
             )
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_micro_batches(docs_stream, handle, checkpoint)

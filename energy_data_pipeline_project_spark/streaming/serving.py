@@ -12,11 +12,11 @@ Implementation note: top-k needs a ranking window, and ranking windows
 are not allowed on unbounded streams (there is no watermark that
 bounds "rank within query"). ``foreachBatch`` is the standard answer —
 each micro-batch is a bounded DataFrame, so the full batch pipeline
-(joins + window) applies verbatim, and the sink callback appends the
+(joins + window) applies verbatim, and the sink callback writes the
 batch's results. State lives entirely in the static index; the stream
 side is stateless, so replay/recovery follows the sink's idempotence
-(here: parquet append keyed by query_id — rewrites are dedupable
-downstream by (query_id, rank)).
+(here: the batch_id-partitioned sink, whose partition a redelivered
+batch overwrites).
 """
 
 from __future__ import annotations
@@ -35,6 +35,7 @@ from ..operators.pq import (
     _trained_m,
     adc_distances,
 )
+from .jobs import run_micro_batches
 
 
 @dataclass
@@ -54,9 +55,8 @@ def build_pq_index(spark: SparkSession, sf_dir: str) -> PQIndex:
     # against (same melted frame, same PQ_TRAIN_SAMPLE cap), served by
     # artifacts.shared: session memo → published lake artifact →
     # training. The server therefore reads the SAME persisted index the
-    # batch queries serve from (r08 verdict #3's unification) — a cold
-    # serving process trains nothing if any prior run published the
-    # chain. Bit-identical either way.
+    # batch queries serve from — a cold serving process trains nothing
+    # if any prior run published the chain. Bit-identical either way.
     codes, cent = _trained_m(spark, sf_dir)
     return PQIndex(
         codes=codes, centroids=cent, corpus_melted=_melted(spark, sf_dir)
@@ -67,7 +67,7 @@ def _serve_batch(
     batch: DataFrame, index: PQIndex, *, queries_share_corpus_ids: bool = True
 ) -> DataFrame:
     """The batch ADC+refine pipeline applied to one micro-batch of
-    (query_id, embedding) rows — literally the SAME code since r08
+    (query_id, embedding) rows — literally the SAME code
     (pq.adc_distances + pq._refine_topk), not a maintained copy.
 
     ``queries_share_corpus_ids`` controls the self-match exclusion:
@@ -75,13 +75,12 @@ def _serve_batch(
     neighbor_id`` is a self-match and is dropped (the pinned parity
     contract). A caller whose query_ids are EXTERNAL request ids must
     pass False — otherwise a corpus vector that merely shares the
-    request's numeric id would be silently excluded from the top-k
-    (r06 review)."""
+    request's numeric id would be silently excluded from the top-k."""
     # VALID_VEC on the INCOMING queries (the corpus side is gated at
     # pq._melted): a NaN/±Inf query element survives FLOOR as a silent
     # Long extreme and overflows the ADC LUT subtraction under ANSI,
-    # killing the whole stream (r10 third-wave sweep). A malformed
-    # query degrades to "no answer for that request id" instead.
+    # killing the whole stream. A malformed query degrades to "no
+    # answer for that request id" instead.
     from ..operators.similarity import VALID_VEC_SPARK
 
     qm = batch.where(VALID_VEC_SPARK).select(
@@ -118,16 +117,11 @@ def serve_ann_stream(
     to ``out_dir`` as a batch_id-partitioned parquet lake — the same
     idempotent sink every other foreachBatch handler in this package
     uses, so an at-least-once redelivery overwrites its own partition
-    instead of appending duplicate answer rows (r06 review). Returns
-    the StreamingQuery."""
+    instead of appending duplicate answer rows. Returns the
+    StreamingQuery."""
     from ..pipeline.lake import write_batch_partition
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        # every sibling foreachBatch handler guards the empty trigger;
-        # without it an empty recovery batch still builds the LUT and
-        # scans the whole checkpointed code frame to write no rows
-        if batch.isEmpty():
-            return
         write_batch_partition(
             _serve_batch(
                 batch,
@@ -138,12 +132,7 @@ def serve_ann_stream(
             batch_id,
         )
 
-    return (
-        queries_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_micro_batches(queries_stream, handle, checkpoint)
 
 
 def save_pq_index(index: PQIndex, path: str) -> None:

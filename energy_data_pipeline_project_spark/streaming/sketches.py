@@ -143,9 +143,8 @@ def fold_count_grid(
     ``value_counts`` over ``col``, persist, return the running pair.
 
     One implementation for both the CMS row fold and the PSI bucket
-    fold (streaming/drift.py) — they had drifted into near-verbatim
-    copies, so a fix to dtype/NaN handling had to land twice (r08
-    review). ``value_counts`` skips NaN: NULL keys must be dropped (or
+    fold (streaming/drift.py), so a fix to dtype/NaN handling lands
+    once. ``value_counts`` skips NaN: NULL keys must be dropped (or
     clamped) UPSTREAM so ``n_seen`` matches the batch twin — both
     callers document how they guarantee that.
     """

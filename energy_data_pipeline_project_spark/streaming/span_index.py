@@ -22,7 +22,7 @@ the index with ``batch_id < current`` (STRICTLY earlier) — a
 re-delivered batch replaces its own partitions, never matches its
 first-attempt grams, and never sees grams that arrived after its
 first attempt (which would flag different spans and break
-idempotence; review pass 4). The carve is shared with
+idempotence). The carve is shared with
 ``streaming/dedup_index.py``.
 
 Index state: one row per DISTINCT gram hash (h, owner) — smaller than
@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from ..operators.dedup import merge_span_islands, span_gram_frame
 from ..pipeline.lake import read_for_rewrite
 from ..pipeline.lake import write_batch_partition as _write_batch_partition
+from .jobs import run_micro_batches
 
 
 def screen_and_index_span_batch(
@@ -101,16 +102,7 @@ def stream_span_index(
     index grows at ``index_path``. Both writes are replayable."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spans = screen_and_index_span_batch(batch, index_path, batch_id)
-        # a duplicate-free batch emits no spans and writes no
-        # partition
         _write_batch_partition(spans, spans_path, batch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_micro_batches(docs_stream, handle, checkpoint)

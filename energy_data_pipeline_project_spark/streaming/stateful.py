@@ -34,11 +34,11 @@ SESSION_GAP_SECONDS = 30 * 60
 # gap may still be bridged into it by a late in-watermark event (gaps
 # are transitive), so it cannot close before the watermark passes its
 # last event + gap — emitting it immediately diverged from the batch
-# twin when the bridge arrived in a later micro-batch (r07 review).
+# twin when the bridge arrived in a later micro-batch.
 # Parked runs are bounded by watermark_delay / gap per user (≤ 2 for
 # the 1h/30min defaults).
 #
-# UPGRADE NOTE (r07 grew this schema from 3 to 6 fields): Spark's
+# UPGRADE NOTE (this schema grew from 3 to 6 fields): Spark's
 # state store pins the state schema in checkpoint metadata and
 # refuses to restore a stream whose STATE_SCHEMA no longer matches
 # (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE, raised JVM-side before
@@ -108,7 +108,7 @@ def _sessionize_fn(
     # stream AND poisoning the checkpoint (the restart replays the
     # same batch into the same crash). An untimestamped event cannot
     # place in any session; it is dropped like the batch twin's
-    # to_date(NULL) group (r09 degenerate streaming sweep).
+    # to_date(NULL) group.
     ts = sorted(
         t.timestamp()
         for pdf in batches
@@ -131,7 +131,7 @@ def _sessionize_fn(
 
     # Interval-gap merge: session merging is transitive (an event at
     # start-35min plus one at start-20min both join a session starting
-    # at `start` under a 30-min gap — r07 advisor), and a late
+    # at `start` under a 30-min gap), and a late
     # in-watermark event may BRIDGE previously separate runs, even
     # across micro-batches. Sorting every run (parked sessions, the
     # open session, new singleton events) by start and merging where
@@ -151,7 +151,7 @@ def _sessionize_fn(
     # The LAST run stays open. An earlier run closes only once the
     # watermark passes its last event + gap — before that, a late
     # event in [watermark, run.last + gap] could still chain into it;
-    # emitting it early diverged from the batch twin (r07 review). The
+    # emitting it early diverges from the batch twin. The
     # not-yet-expired remainder parks in state.
     wm_s = state.getCurrentWatermarkMs() / 1000.0
     open_run = merged[-1]

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.timeseries import _EPOCH, _cents, anomaly_from_daily
 from ..pipeline.lake import read_table_or_empty, write_batch_partition
+from .jobs import run_micro_batches
 
 
 def batch_day_totals(events: DataFrame) -> DataFrame:
@@ -41,17 +42,10 @@ def stream_day_totals(
     events_stream: DataFrame, state_path: str, checkpoint: str
 ):
     """Start the stateful day-grain aggregation."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        write_batch_partition(batch_day_totals(batch), state_path, batch_id)
-
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return run_micro_batches(
+        events_stream,
+        lambda b, i: write_batch_partition(batch_day_totals(b), state_path, i),
+        checkpoint,
     )
 
 

@@ -62,11 +62,10 @@ class RunningUserTotals(StatefulProcessor):
             # cents template (functions/money.CENTS_TPL): NaN (a NULL
             # value arrives as NaN here), ±Inf, AND out-of-domain
             # finite magnitudes |x| > CENTS_ABS_MAX all become NULL —
-            # floor(NaN+0.5).astype('int64') is INT64_MIN garbage
-            # (r06 review), and an in-range-for-float but
-            # out-of-cents-domain reading (1e15) summed here while the
-            # batch side NULLs it would silently corrupt the lifetime
-            # ValueState forever (r09 advisor).
+            # floor(NaN+0.5).astype('int64') is INT64_MIN garbage,
+            # and an in-range-for-float but out-of-cents-domain
+            # reading (1e15) summed here while the batch side NULLs it
+            # would silently corrupt the lifetime ValueState forever.
             import numpy as np
 
             s = pdf["value"]
@@ -103,9 +102,8 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     Anonymous (NULL user_id) events are excluded: a lifetime rollup
     has no identity to accumulate under, and the NULL group's key
     reaches the handler as None, where ``int(user_id)`` would kill the
-    stream (r11 review — the engagement-frame posture of
-    events_dau_mau applied here; the parity test's batch aggregate
-    carries the same filter)."""
+    stream (the engagement-frame posture of events_dau_mau; the parity
+    test's batch aggregate carries the same filter)."""
     import pyspark.sql.functions as F
 
     return events.where(

@@ -20,6 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from energy_data_pipeline_project_spark.operators import all_oracles, all_queries
+from energy_data_pipeline_project_spark.plans.analyze import jobs_during
 from energy_data_pipeline_project_spark.session import get_spark_session
 from energy_data_pipeline_project_spark.testing import compare_query
 
@@ -90,19 +91,14 @@ def main() -> int:
     timings: dict[str, float] = {}
     # Spark jobs launched while BUILDING each query's DataFrame (schema
     # inference, eager checkpoints, driver-side collects): the registry
-    # job census. One job group per query, so counts never accumulate.
-    sc = spark.sparkContext
+    # job census.
     build_jobs: dict[str, int] = {}
     for i, name in enumerate(names):
         t0 = time.perf_counter()
         try:
-            group = f"build:{name}"
-            sc.setJobGroup(group, "plan construction")
-            try:
-                df = queries[name](spark, sf_dir)
-            finally:
-                sc.setJobGroup(None, None)
-                build_jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            df, build_jobs[name] = jobs_during(
+                spark, queries[name], spark, sf_dir
+            )
             if name in oracles:
                 res = compare_query(
                     spark, sf_dir, name, lambda s, d: df, oracles[name]

@@ -7,6 +7,7 @@ from energy_data_pipeline_project_spark.pipeline.lake import (
     read_table,
     write_table,
 )
+from energy_data_pipeline_project_spark.plans.analyze import jobs_during
 from energy_data_pipeline_project_spark.sources.catalog import register_views
 
 from .conftest import SF_SMOKE
@@ -229,8 +230,6 @@ def test_lake_read_back_uses_the_written_schema(spark, tmp_path):
     column keeps its inferred type."""
     import pyspark.sql.functions as F
 
-    from .test_plans import _jobs_during
-
     path = str(tmp_path / "silver" / "t")
     df = spark.range(5).select(
         F.col("id").cast("int").alias("k"),
@@ -238,9 +237,7 @@ def test_lake_read_back_uses_the_written_schema(spark, tmp_path):
         F.current_timestamp().alias("ts"),
     )
     write_table(df, path)
-    back, jobs = _jobs_during(
-        spark, f"lake-read-{tmp_path.name}", lambda s, _: read_table(s, path)
-    )
+    back, jobs = jobs_during(spark, read_table, spark, path)
     assert jobs == 0
     assert back.schema == spark.read.parquet(path).schema
     assert sorted(r["k"] for r in back.collect()) == list(range(5))
@@ -277,14 +274,8 @@ def test_lake_rewrites_enter_the_catalog(spark, tmp_path):
         merge_state,
     )
 
-    from .test_plans import _jobs_during
-
     def read_back(path, step):
-        back, jobs = _jobs_during(
-            spark,
-            f"lake-rewrite-{tmp_path.name}-{step}",
-            lambda s, _: read_table(s, path),
-        )
+        back, jobs = jobs_during(spark, read_table, spark, path)
         assert jobs == 0, step
         assert back.schema == spark.read.parquet(path).schema, step
         return back
@@ -336,15 +327,10 @@ def test_pipeline_read_backs_launch_no_jobs(spark, tmp_path, monkeypatch):
         LocalJsonSource,
     )
 
-    from .test_plans import _jobs_during
-
     jobs: dict[str, int] = {}
 
     def counted(spark, path, fmt="parquet"):
-        group = f"pipeline-read-{tmp_path.name}-{len(jobs)}"
-        df, jobs[path] = _jobs_during(
-            spark, group, lambda s, _: read_table(s, path, fmt)
-        )
+        df, jobs[path] = jobs_during(spark, read_table, spark, path, fmt)
         return df
 
     monkeypatch.setattr(runner, "read_table", counted)
@@ -373,8 +359,6 @@ def test_batch_sink_carries_its_catalog_entry(spark, tmp_path):
         write_batch_partition,
     )
 
-    from .test_plans import _jobs_during
-
     path = str(tmp_path / "index")
     rows = spark.range(50).select(
         F.col("id").alias("h"), (F.col("id") % 7).cast("int").alias("owner")
@@ -382,11 +366,7 @@ def test_batch_sink_carries_its_catalog_entry(spark, tmp_path):
     write_batch_partition(rows, path, 0)
     assert read_for_rewrite(spark, path).count() == 50
     write_batch_partition(rows.where("h < 3"), path, 1)
-    idx, jobs = _jobs_during(
-        spark,
-        f"sink-read-{tmp_path.name}",
-        lambda s, _: read_for_rewrite(s, path),
-    )
+    idx, jobs = jobs_during(spark, read_for_rewrite, spark, path)
     assert jobs == 0
     assert idx.schema == spark.read.parquet(path).schema
     assert idx.count() == 53
@@ -411,8 +391,6 @@ def test_partition_overwrite_carries_only_a_current_entry(spark, tmp_path):
         replace_table,
     )
 
-    from .test_plans import _jobs_during
-
     schema = "date string, v int"
     path = str(tmp_path / "t")
     write_table(
@@ -436,9 +414,7 @@ def test_partition_overwrite_carries_only_a_current_entry(spark, tmp_path):
     overwrite_partitions(
         spark.createDataFrame([("2025-01-03", 4)], schema), path, ("date",)
     )
-    again, jobs = _jobs_during(
-        spark, f"day-read-{tmp_path.name}", lambda s, _: read_table(s, path)
-    )
+    again, jobs = jobs_during(spark, read_table, spark, path)
     assert jobs == 0
     assert again.schema == back.schema
     assert again.count() == 3

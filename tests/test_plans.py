@@ -14,6 +14,7 @@ from energy_data_pipeline_project_spark.operators import (
 from energy_data_pipeline_project_spark.plans.analyze import (
     assert_scan_pruned,
     formatted_plan,
+    jobs_during,
     plan_report,
 )
 from energy_data_pipeline_project_spark.sources.tables import load_table
@@ -85,19 +86,6 @@ def test_topk_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in rep.plan  # per-partition top-k, no full sort
 
 
-def _jobs_during(spark, group, fn):
-    """Build ``fn(spark, SF_SMOKE)`` under job group ``group`` (unique
-    per call: reused names accumulate counts) and return the frame and
-    the number of Spark jobs its construction launched."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "plan construction only")
-    try:
-        df = fn(spark, SF_SMOKE)
-    finally:
-        sc.setJobGroup(None, None)
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_tfidf_is_one_lazy_plan(spark):
     """Corpus size must be a broadcast 1-row agg inside the plan, not a
     driver-side .count() (which would run an extra full scan per
@@ -105,7 +93,9 @@ def test_tfidf_is_one_lazy_plan(spark):
     from energy_data_pipeline_project_spark.operators import text
 
     text.QUERIES["text_tfidf"](spark, SF_SMOKE)  # fills the table catalog
-    df, tfidf_jobs = _jobs_during(spark, "tfidf-build", text.QUERIES["text_tfidf"])
+    df, tfidf_jobs = jobs_during(
+        spark, text.QUERIES["text_tfidf"], spark, SF_SMOKE
+    )
     assert tfidf_jobs == 0
     rep = plan_report(df)
     assert "BroadcastNestedLoopJoin" in rep.plan or "BroadcastExchange" in rep.plan
@@ -124,7 +114,7 @@ def test_headline_builds_launch_no_jobs(spark):
     for name in bench.HEADLINE:  # the medallion run is timed separately
         queries[name](spark, SF_SMOKE)
     got = {
-        n: _jobs_during(spark, f"headline-build-{n}", queries[n])[1]
+        n: jobs_during(spark, queries[n], spark, SF_SMOKE)[1]
         for n in bench.HEADLINE
     }
     assert got == {n: int(n == "ann_topk_numpy") for n in bench.HEADLINE}

@@ -792,3 +792,51 @@ def test_price_dataset_streams_through_silver(spark, tmp_path_factory):
         for r in extract_timeseries(bronze, price_ds).collect()
     )
     assert got == want and got
+
+
+def test_micro_batch_runner_skips_empty_batches(spark, tmp_path):
+    """Spark hands foreachBatch a 0-row batch for an empty source file
+    and for a stream filtered down to nothing. ``run_micro_batches``
+    calls the handler only for the batch that holds rows, so a state
+    stream over an all-empty source leaves no table."""
+    from energy_data_pipeline_project_spark.pipeline.lake import (
+        read_for_rewrite,
+    )
+    from energy_data_pipeline_project_spark.streaming.trend import (
+        stream_day_totals,
+    )
+
+    schema = "k long, v string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame([], schema).write.parquet(src)
+    spark.range(3).selectExpr("id AS k", "CAST(id AS string) AS v").coalesce(
+        1
+    ).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+    def run(sdf, name):
+        calls = []
+        q = jobs.run_micro_batches(
+            sdf,
+            lambda b, i: calls.append(sorted(r["k"] for r in b.collect())),
+            str(tmp_path / f"ckpt-{name}"),
+        )
+        q.awaitTermination()
+        # Spark ran one batch per file, the empty one included
+        assert {p["batchId"] for p in q.recentProgress} == {0, 1}
+        return calls
+
+    assert run(stream, "files") == [[0, 1, 2]]
+    assert run(stream.where(F.col("k") < 0), "filtered") == []
+
+    events = str(tmp_path / "events")
+    spark.createDataFrame([], jobs.EVENT_SCHEMA).write.parquet(events)
+    state = str(tmp_path / "state")
+    stream_day_totals(
+        jobs.read_event_stream(spark, events), state, str(tmp_path / "ckpt")
+    ).awaitTermination()
+    assert read_for_rewrite(spark, state) is None

@@ -163,8 +163,8 @@ def test_corrupt_publish_log_raises_not_falls_back(spark, tmp_path):
     silently revert to the <=-pointer rule (r08 advisor): pointer
     counting cannot tell a crashed writer's orphan from superseded
     history, so a silent fallback would let vacuum delete real history
-    with no signal the log is damaged. Missing log (legacy table)
-    still falls back."""
+    with no signal the log is damaged. A pointer with no log at all
+    raises too, naming the missing log."""
     import pytest
 
     from energy_data_pipeline_project_spark.pipeline.lake import (
@@ -183,6 +183,9 @@ def test_corrupt_publish_log_raises_not_falls_back(spark, tmp_path):
     with pytest.raises(ValueError, match="corrupt publish log"):
         published_table_versions(path)
 
-    # legacy table (no log at all): pointer fallback still works
+    # pointer but no log at all: the same loud refusal
     os.remove(log)
-    assert published_table_versions(path) == {1, 2}
+    with pytest.raises(FileNotFoundError, match="no _PUBLISHED log"):
+        published_table_versions(path)
+    # neither file: a new table, no versions
+    assert published_table_versions(str(tmp_path / "new")) == set()
