@@ -63,8 +63,7 @@ def power_price_daily(
     # Re-aggregate after the normalized match: power_daily is grouped
     # by the RAW label, so two variant spellings of offshore wind on
     # the same date arrive as two rows — without this SUM the join
-    # emitted duplicate date rows with split production, the exact
-    # drift the normalization exists to absorb (r07 review). One row
+    # would emit duplicate date rows with split production. One row
     # per date is the join-key contract.
     offshore = (
         power_daily.where(

@@ -98,10 +98,8 @@ def run_pipeline(
         if quarantine:
             # persist bronze across the TWO write actions this branch
             # runs (quarantine + silver): each is an independent job,
-            # and without the persist both re-read and re-JSON-parse
-            # every payload — the pipeline's most expensive pass paid
-            # twice (r07 review; the docstring always claimed the
-            # branches share the scan)
+            # and without the persist both would re-read and re-parse
+            # every payload, paying the most expensive pass twice
             bronze = bronze.persist()
             try:
                 silver, quarantined = extract_timeseries_with_quarantine(
@@ -147,9 +145,7 @@ def run_pipeline(
         return result  # nothing ingested for one of the roles → no gold
 
     def _gold(name: str, df) -> None:
-        # one write-observe / read-back spelling for every gold table —
-        # the 6-line pattern had drifted into three verbatim copies
-        # with table_path computed twice each (r08 review)
+        # one write-observe / read-back spelling for every gold table
         path = table_path(config.lake_root, "gold", name)
         result.observed[f"gold/{name}"] = write_table_observed(df, path, fmt)
         result.gold[name] = read_table(spark, path, fmt)

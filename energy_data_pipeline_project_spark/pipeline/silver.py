@@ -14,8 +14,10 @@ Replaces the reference's two hand-written transforms
 - probe shape: ``get_json_object`` JSONPath probes over candidate
   field names, first non-null via ``coalesce`` (schema drift
   tolerance).
-- epoch→timestamp via ``to_timestamp(from_unixtime(...))`` — session
-  TZ dependent in the reference; this engine pins UTC (session.py).
+- epoch→timestamp via ``timestamp_seconds``: instant-exact in any
+  session TZ and loud on overflow, where the reference's round trip
+  through a formatted string is neither. ``to_date`` day bucketing
+  still follows the session TZ, which session.py pins to UTC.
 - rows with null timestamp OR null value are dropped (this is the
   late/misaligned-data policy: zip-padded tails vanish here).
 
@@ -60,10 +62,9 @@ def extract_timeseries(bronze: DataFrame, dataset: DatasetSpec) -> DataFrame:
     spec = dataset.extract
     if not spec.entity_array and not spec.value_probes:
         # load_config validates YAML specs, but a directly-constructed
-        # DatasetSpec with the default ExtractSpec reached the bare
-        # F.coalesce() below and died with an opaque TypeError inside
-        # plan construction (r07 review) — guard at the consumer so
-        # every caller gets the named error
+        # DatasetSpec with the default ExtractSpec would reach the bare
+        # F.coalesce() below and die with an opaque TypeError: guard
+        # here so every caller gets the named error
         raise ValueError(
             f"dataset {dataset.name!r} has no extract shape: set"
             " extract.entity_array or extract.value_probes"
@@ -107,12 +108,11 @@ def extract_timeseries(bronze: DataFrame, dataset: DatasetSpec) -> DataFrame:
             .alias("_t"),
             # first NON-EMPTY probe: plain coalesce skips only NULLs,
             # so a present-but-empty front field ({"price": [],
-            # "prices": [1,2,3]}) masked a populated fallback and the
-            # whole day silently produced zero silver rows (r08
-            # review; deliberate hardening over the reference's plain
-            # coalesce — quarantine_predicate applies the same rule so
-            # a row is quarantined exactly when extraction yields
-            # nothing)
+            # "prices": [1,2,3]}) would mask a populated fallback and
+            # yield zero silver rows for the day (deliberate hardening
+            # over the reference; quarantine_predicate applies the same
+            # rule, so a row quarantines exactly when extraction
+            # yields nothing)
             F.coalesce(
                 *[F.when(F.size(pr) > 0, pr) for pr in probes]
             ).alias("_vals"),
@@ -123,7 +123,7 @@ def extract_timeseries(bronze: DataFrame, dataset: DatasetSpec) -> DataFrame:
     out = zipped.select(
         *keep,
         *entity_cols,
-        F.to_timestamp(F.from_unixtime(F.col("_p._t"))).alias("timestamp"),
+        F.timestamp_seconds(F.col("_p._t")).alias("timestamp"),
         F.col("_p._vals").cast("double").alias(dataset.value_column),
     )
     return out.where(
@@ -165,7 +165,6 @@ def quarantine_predicate(dataset: DatasetSpec) -> F.Column:
             # present-but-EMPTY time array: arrays_zip pads every value
             # row with a NULL timestamp, so extraction yields zero
             # silver rows — an inconsistency to surface, not policy
-            # (r08 review)
             | (F.size(payload[spec.time_field]) == 0)
             | arr.isNull()
             | (F.size(usable) == 0)
@@ -206,10 +205,9 @@ def extract_timeseries_with_quarantine(
     bad = quarantine_predicate(dataset)
     invalid = F.get_json_object("payload_json", "$").isNull()
     # reason mapping mirrors every quarantine clause: an empty time
-    # array is a time defect, not "missing_values" — the r08 empty-
-    # array clauses landed without their reason and an operator
-    # replaying quarantine saw values blamed on a row whose values
-    # were fine (tests now pin the reasons, not just the counts)
+    # array is a time defect, not "missing_values", or an operator
+    # replaying quarantine would see values blamed on a row whose
+    # values are fine (tests pin the reasons, not just the counts)
     if spec.entity_array:
         payload = F.from_json("payload_json", _payload_schema(spec))
         reason = (

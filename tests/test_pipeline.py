@@ -676,3 +676,71 @@ def test_bronze_contract(spark, tmp_path):
     assert _bronze_frame(spark, power, LocalJsonSource(), days) is None
     assert ingest_dataset(spark, empty_cfg, power, LocalJsonSource()) is None
     assert not empty_root.exists()
+
+
+def _silver_power(spark, epochs, tz):
+    """extract_timeseries over one power day whose ``unix_seconds``
+    holds ``epochs``, under session TZ ``tz``: (epoch back out of the
+    timestamp, year, month, day, hour, minute, second) per row."""
+    import pyspark.sql.functions as F
+
+    from energy_data_pipeline_project_spark.pipeline.silver import (
+        extract_timeseries,
+    )
+
+    payload = {
+        "unix_seconds": list(epochs),
+        "production_types": [{"name": "Solar", "data": [1.0] * len(epochs)}],
+    }
+    bronze = spark.createDataFrame(
+        [("de", "2025-10-26", json.dumps(payload))], schema=S.BRONZE_POWER
+    )
+    ts = F.col("timestamp")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        return [
+            tuple(r)
+            for r in extract_timeseries(bronze, default_datasets()[0])
+            .select(
+                F.unix_seconds(ts), F.year(ts), F.month(ts),
+                F.dayofmonth(ts), F.hour(ts), F.minute(ts), F.second(ts),
+            )
+            .collect()
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_silver_keeps_repeated_fall_back_instants_distinct(spark):
+    """2025-10-26 00:30 and 01:30 UTC both read 02:30 on a Berlin wall
+    clock. Silver must keep them two instants: a round trip through the
+    formatted walltime maps the second onto the first."""
+    rows = _silver_power(spark, [1761438600, 1761442200], "Europe/Berlin")
+    assert sorted(r[0] for r in rows) == [1761438600, 1761442200]
+
+
+def test_silver_timestamps_match_python_utc(spark):
+    """Under UTC, every silver timestamp is the instant
+    ``datetime.fromtimestamp(e, tz=timezone.utc)`` over the whole
+    0001-01-01..9999-12-31 range, and an epoch past the long-micros
+    range fails the silver action instead of writing a wrapped row."""
+    import random
+    from datetime import datetime, timezone
+
+    from py4j.protocol import Py4JJavaError
+
+    lo, hi = -62135596800, 253402300799
+    rng = random.Random(13)
+    epochs = [lo, hi, -1, 0, 1, 951782400, 1761442200] + [
+        rng.randint(lo, hi) for _ in range(300)
+    ]
+    want = {}
+    for e in epochs:
+        d = datetime.fromtimestamp(e, tz=timezone.utc)
+        want[e] = (e, d.year, d.month, d.day, d.hour, d.minute, d.second)
+    got = {r[0]: r for r in _silver_power(spark, epochs, "UTC")}
+    assert got == want
+
+    with pytest.raises(Py4JJavaError, match="long overflow"):
+        _silver_power(spark, [2**62], "UTC")

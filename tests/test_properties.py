@@ -393,7 +393,7 @@ def test_psi_nonnegative_and_zero_on_identity(c_old, c_new):
 # session TZ (r09 verdict #6). session.py pins UTC for determinism,
 # but the reference's config declares Europe/Berlin and
 # get_spark_session accepts overrides — the engine's epoch→timestamp→
-# date chain (silver's to_timestamp(from_unixtime(_t)), gold's
+# date chain (silver's extract_timeseries, gold's
 # to_date) must bucket by the SESSION calendar, agreeing with
 # zoneinfo and DuckDB's ICU timezone() on every instant, including
 # the spring-forward day (92 quarter-hours, not 96) and the
@@ -405,24 +405,30 @@ _BERLIN = "Europe/Berlin"
 
 
 def _berlin_days(spark, epochs):
-    """(epoch → date) via the engine's own chain under a Berlin
-    session TZ, restoring the session TZ afterwards."""
+    """(epoch → date) via silver's ``extract_timeseries`` and gold's
+    ``to_date`` under a Berlin session TZ, restoring the session TZ
+    afterwards. Each epoch rides in its own bronze row keyed by the
+    epoch, so the key does not depend on the conversion under test."""
     import pyspark.sql.functions as F
 
+    price = default_datasets()[1]
+    bronze = spark.createDataFrame(
+        [
+            (str(e), "2025-01-01",
+             json.dumps({"unix_seconds": [e], "price": [0.0]}))
+            for e in set(epochs)
+        ],
+        schema=BRONZE_PRICE,
+    )
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", _BERLIN)
     try:
         rows = (
-            spark.createDataFrame([(e,) for e in epochs], "e long")
-            .select(
-                "e",
-                F.to_date(
-                    F.to_timestamp(F.from_unixtime(F.col("e")))
-                ).alias("d"),
-            )
+            extract_timeseries(bronze, price)
+            .select("market", F.to_date("timestamp").alias("d"))
             .collect()
         )
-        return {r["e"]: r["d"] for r in rows}
+        return {int(r["market"]): r["d"] for r in rows}
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
 
