@@ -72,17 +72,6 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark_session(app_name="energy-pipeline")
     try:
-        # resolve table_format="auto" once, against the live session,
-        # so every consumer (pipeline, compaction, re-reads) sees a
-        # concrete format
-        from dataclasses import replace
-
-        from .pipeline.lake import resolve_table_format
-
-        config = replace(
-            config,
-            table_format=resolve_table_format(spark, config.table_format),
-        )
         result = run_pipeline(
             spark, config, source,
             distributed_fetch=args.distributed_fetch,

@@ -28,7 +28,7 @@ class ExtractSpec:
       (entity, timestamp).
     - ``value_probes`` set (price): payload has a time array plus a
       flat value array under one of several candidate field names
-      (schema drift) → first non-null probe wins, one row per
+      (schema drift) → first non-empty probe wins, one row per
       timestamp.
     """
 
@@ -60,9 +60,9 @@ class PipelineConfig:
     lake_root: str
     start_date: str
     end_date: str
-    timezone: str = "UTC"
     # "parquet" | "delta" | "auto" (auto → delta when delta-spark is
-    # on the classpath, else parquet; resolved by lake.resolve_table_format)
+    # on the classpath, else parquet; each pipeline/lake.py IO call
+    # resolves it)
     table_format: str = "parquet"
     api_base_url: str = "https://api.energy-charts.info"
     request_timeout_s: int = 30
@@ -115,7 +115,7 @@ def load_config(path_or_dict: "str | dict") -> PipelineConfig:
     # `section:` with no children parses as None, and raw.get(k, {})
     # returns that None because the key EXISTS — every section lookup
     # goes through `or {}` so an empty section means defaults, not an
-    # AttributeError before validation (r07 review)
+    # AttributeError before validation
     run = (raw.get("run") or {}).get("backfill") or {}
     datasets = []
     for d in raw.get("datasets") or []:
@@ -124,7 +124,7 @@ def load_config(path_or_dict: "str | dict") -> PipelineConfig:
         if isinstance(probes, str):
             # tuple('price') silently becomes ('p','r','i','c','e')
             # and every probe misses — a one-character YAML mistake
-            # (scalar instead of list) emptied the dataset (r07 review)
+            # (scalar instead of list) must not empty the dataset
             raise ValueError(
                 f"dataset {d['name']!r}: extract.value_probes must be"
                 f" a list of field names, got the string {probes!r}"
@@ -161,8 +161,8 @@ def load_config(path_or_dict: "str | dict") -> PipelineConfig:
             # extraction prefers entity_array while the runner assigns
             # the price ROLE to any dataset with value_probes, so
             # entity-shaped silver rows flowed into price_daily and a
-            # wrong avg_price_eur_mwh published with no error (r08
-            # review). One shape per dataset, decided in config.
+            # wrong avg_price_eur_mwh published with no error. One
+            # shape per dataset, decided in config.
             raise ValueError(
                 f"dataset {d['name']!r} sets BOTH extract.entity_array"
                 " and extract.value_probes: the shapes are mutually"
@@ -170,11 +170,21 @@ def load_config(path_or_dict: "str | dict") -> PipelineConfig:
                 " datasets feed price_daily) — split it into two"
                 " datasets or drop one shape"
             )
+    tz = (raw.get("project") or {}).get("timezone", "UTC")
+    if tz != "UTC":
+        # session.py pins spark.sql.session.timeZone to UTC, so every
+        # silver/gold day is a UTC day: a config declaring another zone
+        # would be bucketed in UTC without a word
+        raise ValueError(
+            f"project.timezone {tz!r} is not supported: the engine pins"
+            " the Spark session time zone to UTC, so days are bucketed"
+            " in UTC — set project.timezone to \"UTC\" or omit it"
+        )
     if raw.get("datasets") == []:
         # an EXPLICITLY empty list is a decision, not an omission:
         # silently substituting the defaults would ingest two datasets
-        # against the live API that nobody asked for (r08 review) —
-        # omit the key entirely to get the defaults
+        # against the live API that nobody asked for — omit the key
+        # entirely to get the defaults
         raise ValueError(
             "datasets: [] is explicit — omit the key for the default"
             " datasets, or list at least one dataset"
@@ -182,11 +192,10 @@ def load_config(path_or_dict: "str | dict") -> PipelineConfig:
     return PipelineConfig(
         lake_root=raw.get("lake_root", "data"),
         # str(): YAML parses an UNQUOTED 2025-01-01 into datetime.date,
-        # which crashed dates()'s fromisoformat far from the config
-        # layer (r08 review); str(date) is the ISO form either way
+        # which would crash dates()'s fromisoformat far from the
+        # config layer; str(date) is the ISO form either way
         start_date=str(run.get("start_date", "2025-01-01")),
         end_date=str(run.get("end_date", "2025-01-07")),
-        timezone=(raw.get("project") or {}).get("timezone", "UTC"),
         table_format=raw.get("table_format", "parquet"),
         api_base_url=(raw.get("api") or {}).get(
             "base_url", "https://api.energy-charts.info"

@@ -145,7 +145,7 @@ def ingest_dataset_distributed(
     if days_per_task < 1:
         # 0 crashed as ZeroDivisionError below; a negative silently
         # collapsed a multi-year backfill into ONE serial fetch task
-        # (r07 review — same knob the DSv2 reader validates)
+        # (the DSv2 reader validates the same knob)
         raise ValueError(f"days_per_task must be >= 1, got {days_per_task!r}")
     days = [d.isoformat() for d in config.dates()]
     if not days:
@@ -175,8 +175,8 @@ def ingest_dataset_distributed(
     # localCheckpoint(eager=True), not persist(): persist is
     # BEST-EFFORT — an evicted block or lost executor re-runs the
     # mapInPandas partition and re-hits the API mid-write, so the
-    # written table could differ from what the empty-guard counted
-    # (r08 review). Checkpointing cuts the lineage entirely: the count
+    # written table could differ from what the empty-guard counted.
+    # Checkpointing cuts the lineage entirely: the count
     # and the write both read materialized blocks, and a recompute is
     # impossible (an executor loss fails loudly instead of silently
     # refetching — on a cluster, point setCheckpointDir at reliable

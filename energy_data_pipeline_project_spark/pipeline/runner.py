@@ -66,16 +66,7 @@ def run_pipeline(
     crash or drop data."""
     apply_runtime_confs(spark)
     source = source or LocalJsonSource()
-    if config.table_format == "auto":
-        from dataclasses import replace
-
-        from .lake import resolve_table_format
-
-        config = replace(
-            config,
-            table_format=resolve_table_format(spark, config.table_format),
-        )
-    fmt = config.table_format
+    fmt = config.table_format  # each lake IO call resolves "auto"
     result = PipelineResult()
 
     # bronze: fetch + persist raw payloads (empty-input guard H6: a
@@ -95,37 +86,29 @@ def run_pipeline(
         bpath = table_path(config.lake_root, "bronze", ds.name)
         bronze = read_table(spark, bpath, fmt)
         result.bronze[ds.name] = bronze
-        if quarantine:
-            # persist bronze across the TWO write actions this branch
-            # runs (quarantine + silver): each is an independent job,
-            # and without the persist both would re-read and re-parse
-            # every payload, paying the most expensive pass twice
-            bronze = bronze.persist()
-            try:
-                silver, quarantined = extract_timeseries_with_quarantine(
-                    bronze, ds
-                )
+        spath = table_path(config.lake_root, "silver", f"{ds.name}_silver")
+        try:
+            if quarantine:
+                # persist bronze across this branch's two writes
+                # (quarantine + silver): each is its own job, and
+                # without the persist both would re-read and re-parse
+                # every payload, paying the most expensive pass twice
+                bronze.persist()
+                _, quarantined = extract_timeseries_with_quarantine(bronze, ds)
                 qpath = table_path(
                     config.lake_root, "silver", f"{ds.name}_quarantine"
                 )
                 result.observed[f"quarantine/{ds.name}"] = (
                     write_table_observed(quarantined, qpath, fmt)
                 )
-                spath = table_path(
-                    config.lake_root, "silver", f"{ds.name}_silver"
-                )
-                result.observed[f"silver/{ds.name}"] = write_table_observed(
-                    silver, spath, fmt, null_check_cols=("timestamp",)
-                )
-            finally:
-                bronze.unpersist()
-        else:
-            silver = extract_timeseries(bronze, ds)
-            spath = table_path(config.lake_root, "silver", f"{ds.name}_silver")
             # keyed like PipelineResult.counts() ("silver/<dataset name>")
             result.observed[f"silver/{ds.name}"] = write_table_observed(
-                silver, spath, fmt, null_check_cols=("timestamp",)
+                extract_timeseries(bronze, ds), spath, fmt,
+                null_check_cols=("timestamp",),
             )
+        finally:
+            if quarantine:
+                bronze.unpersist()
         result.silver[ds.name] = read_table(spark, spath, fmt)
     t0 = _lap(result, "silver", t0)
 

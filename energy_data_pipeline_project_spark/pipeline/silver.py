@@ -12,7 +12,7 @@ Replaces the reference's two hand-written transforms
   time array against each entity's values (``arrays_zip`` pads the
   shorter array with nulls), explode the pairs (Generate #2).
 - probe shape: ``get_json_object`` JSONPath probes over candidate
-  field names, first non-null via ``coalesce`` (schema drift
+  field names, first non-empty via ``coalesce`` (schema drift
   tolerance).
 - epoch→timestamp via ``timestamp_seconds``: instant-exact in any
   session TZ and loud on overflow, where the reference's round trip
@@ -20,6 +20,13 @@ Replaces the reference's two hand-written transforms
   still follows the session TZ, which session.py pins to UTC.
 - rows with null timestamp OR null value are dropped (this is the
   late/misaligned-data policy: zip-padded tails vanish here).
+
+Quarantine rule: a bronze row is quarantined exactly when extraction
+yields no row for it, i.e. when no index of its time array and of some
+value array (an entity's, or the first non-empty probe) holds two
+non-null elements. ``quarantine_reason`` states that rule once over
+the same parsed arrays extraction reads, so the two cannot drift; its
+other clauses only name the defect.
 
 Cardinality: 1 bronze row/day → ×|entities| → ×|time slots|. At
 100 TB this plan is two Generates inside one codegen stage — no
@@ -29,7 +36,7 @@ shuffle at all until the gold aggregation.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
 from .config import DatasetSpec
@@ -55,6 +62,24 @@ def _payload_schema(spec) -> T.StructType:
             )
         )
     return T.StructType(fields)
+
+
+def _probe(field: str) -> Column:
+    """Probe shape: the typed ``array<double>`` under ``$.field``; NULL
+    when the field is missing or not an array of numbers."""
+    return F.from_json(
+        F.get_json_object("payload_json", f"$.{field}"),
+        T.ArrayType(T.DoubleType()),
+    )
+
+
+def _first_non_empty_probe(spec) -> Column:
+    # plain coalesce skips only NULLs, so a present-but-empty front
+    # field ({"price": [], "prices": [1,2,3]}) would mask a populated
+    # fallback and yield zero silver rows for the day
+    return F.coalesce(
+        *[F.when(F.size(pr) > 0, pr) for pr in map(_probe, spec.value_probes)]
+    )
 
 
 def extract_timeseries(bronze: DataFrame, dataset: DatasetSpec) -> DataFrame:
@@ -93,29 +118,10 @@ def extract_timeseries(bronze: DataFrame, dataset: DatasetSpec) -> DataFrame:
         )
         entity_cols = [dataset.entity_column or "entity"]
     else:
-        time_json = F.get_json_object("payload_json", f"$.{spec.time_field}")
-        probes = [
-            F.from_json(
-                F.get_json_object("payload_json", f"$.{p}"),
-                T.ArrayType(T.DoubleType()),
-            )
-            for p in spec.value_probes
-        ]
         exploded = bronze.select(
             *keep,
-            F.from_json(time_json, T.ArrayType(T.DoubleType()))
-            .cast("array<long>")
-            .alias("_t"),
-            # first NON-EMPTY probe: plain coalesce skips only NULLs,
-            # so a present-but-empty front field ({"price": [],
-            # "prices": [1,2,3]}) would mask a populated fallback and
-            # yield zero silver rows for the day (deliberate hardening
-            # over the reference; quarantine_predicate applies the same
-            # rule, so a row quarantines exactly when extraction
-            # yields nothing)
-            F.coalesce(
-                *[F.when(F.size(pr) > 0, pr) for pr in probes]
-            ).alias("_vals"),
+            _probe(spec.time_field).cast("array<long>").alias("_t"),
+            _first_non_empty_probe(spec).alias("_vals"),
         )
         entity_cols = []
 
@@ -131,102 +137,63 @@ def extract_timeseries(bronze: DataFrame, dataset: DatasetSpec) -> DataFrame:
     )
 
 
-def quarantine_predicate(dataset: DatasetSpec) -> F.Column:
-    """True for bronze rows whose payload cannot yield silver rows.
+def quarantine_reason(dataset: DatasetSpec) -> Column:
+    """NULL for a bronze row that yields at least one silver row, else
+    why it yields none: ``unparseable_json``, ``missing_time_array``,
+    ``empty_time_array`` (empty or all-null) or ``missing_values``.
 
-    The reference fails the whole job on a malformed day
-    (bronze_to_silver.py lets from_json degrade silently or the
-    pipeline crash upstream); an engine must instead QUARANTINE the
-    bad rows and keep the batch flowing. A row is quarantined when its
-    payload is unparseable JSON (from_json → NULL struct), its time
-    array is missing, or it carries no value source (empty entity
-    array / every value probe null). The predicate is pure Catalyst
-    expressions over payload_json — evaluated in the same scan that
-    feeds extraction, no extra pass."""
+    The reference fails the whole job on a malformed day; an engine
+    must instead quarantine the bad rows and keep the batch flowing.
+    The column is pure Catalyst expressions over payload_json, so it
+    is evaluated in the scan that feeds extraction, no extra pass.
+    ``from_json`` nulls a present but wrongly typed field (scalar
+    time, string prices, an entity's null data array), so such a row
+    quarantines instead of vanishing."""
     spec = dataset.extract
-    # from_json PERMISSIVE yields an all-null struct (not a NULL
-    # struct) for malformed input, so JSON validity is probed with
-    # get_json_object(payload, '$') — NULL exactly when the document
-    # does not parse. All field checks run on the PARSED (typed)
-    # forms, so a field that is present but wrongly typed (scalar
-    # time, string prices, entities with null data arrays) — which
-    # from_json nulls out and extraction then silently drops —
-    # quarantines instead of vanishing.
-    invalid = F.get_json_object("payload_json", "$").isNull()
+
+    def aligned(times: Column, values: Column) -> Column:
+        # some index holds a non-null time AND a non-null value: the
+        # rows extraction's arrays_zip + null drop keeps
+        return F.array_contains(
+            F.zip_with(times, values, lambda t, v: t.isNotNull() & v.isNotNull()),
+            True,
+        )
+
     if spec.entity_array:
         payload = F.from_json("payload_json", _payload_schema(spec))
-        arr = payload[spec.entity_array]
-        usable = F.filter(
-            arr, lambda e: e[spec.entity_values_field].isNotNull()
+        times = payload[spec.time_field]
+        yields = F.exists(
+            payload[spec.entity_array],
+            lambda e: aligned(times, e[spec.entity_values_field]),
         )
-        return (
-            invalid
-            | payload[spec.time_field].isNull()
-            # present-but-EMPTY time array: arrays_zip pads every value
-            # row with a NULL timestamp, so extraction yields zero
-            # silver rows — an inconsistency to surface, not policy
-            | (F.size(payload[spec.time_field]) == 0)
-            | arr.isNull()
-            | (F.size(usable) == 0)
-        )
-    time_parsed = F.from_json(
-        F.get_json_object("payload_json", f"$.{spec.time_field}"),
-        T.ArrayType(T.DoubleType()),
+    else:
+        times = _probe(spec.time_field)
+        yields = aligned(times, _first_non_empty_probe(spec))
+    # from_json PERMISSIVE yields an all-null struct (not a NULL
+    # struct) for malformed input, so JSON validity is probed with
+    # get_json_object(payload, '$'), NULL exactly when it does not parse
+    defect = (
+        F.when(F.get_json_object("payload_json", "$").isNull(), "unparseable_json")
+        .when(times.isNull(), "missing_time_array")
+        .when(~F.exists(times, lambda t: t.isNotNull()), "empty_time_array")
+        .otherwise("missing_values")
     )
-    probes = [
-        F.from_json(
-            F.get_json_object("payload_json", f"$.{p}"),
-            T.ArrayType(T.DoubleType()),
-        )
-        for p in spec.value_probes
-    ]
-    # usable probe = first non-empty (matching extraction); empty time
-    # array quarantines for the same reason as the entity path
-    return (
-        invalid
-        | time_parsed.isNull()
-        | (F.size(time_parsed) == 0)
-        | F.coalesce(
-            *[F.when(F.size(pr) > 0, pr) for pr in probes]
-        ).isNull()
-    )
+    # a NULL array anywhere makes `yields` NULL, which means no row
+    return F.when(~F.coalesce(yields, F.lit(False)), defect)
 
 
 def extract_timeseries_with_quarantine(
     bronze: DataFrame, dataset: DatasetSpec
 ) -> tuple[DataFrame, DataFrame]:
-    """(silver rows from clean payloads, quarantined bronze rows).
+    """(silver rows, quarantined bronze rows).
 
     The quarantine frame keeps the FULL bronze row (so a fixed parser
-    can replay it) plus a ``quarantine_reason`` audit column. Clean
-    rows flow through the standard ``extract_timeseries`` plan — the
-    split is one predicate, both branches share the scan."""
-    spec = dataset.extract
-    bad = quarantine_predicate(dataset)
-    invalid = F.get_json_object("payload_json", "$").isNull()
-    # reason mapping mirrors every quarantine clause: an empty time
-    # array is a time defect, not "missing_values", or an operator
-    # replaying quarantine would see values blamed on a row whose
-    # values are fine (tests pin the reasons, not just the counts)
-    if spec.entity_array:
-        payload = F.from_json("payload_json", _payload_schema(spec))
-        reason = (
-            F.when(invalid, "unparseable_json")
-            .when(payload[spec.time_field].isNull(), "missing_time_array")
-            .when(F.size(payload[spec.time_field]) == 0, "empty_time_array")
-            .otherwise("missing_values")
-        )
-    else:
-        time_parsed = F.from_json(
-            F.get_json_object("payload_json", f"$.{spec.time_field}"),
-            T.ArrayType(T.DoubleType()),
-        )
-        reason = (
-            F.when(invalid, "unparseable_json")
-            .when(time_parsed.isNull(), "missing_time_array")
-            .when(F.size(time_parsed) == 0, "empty_time_array")
-            .otherwise("missing_values")
-        )
-    good = extract_timeseries(bronze.where(~bad), dataset)
-    quarantined = bronze.where(bad).withColumn("quarantine_reason", reason)
-    return good, quarantined
+    can replay it) plus a ``quarantine_reason`` audit column. Silver is
+    the plain ``extract_timeseries`` plan: a quarantined row yields no
+    silver row by construction, so no split predicate is needed."""
+    silver = extract_timeseries(bronze, dataset)
+    reason = quarantine_reason(dataset)
+    quarantined = bronze.withColumn("quarantine_reason", reason).where(
+        F.col("quarantine_reason").isNotNull()
+    )
+    return silver, quarantined

@@ -76,7 +76,7 @@ class EnergyPayloadReader(DataSourceReader):
             options["start_date"], options["end_date"]
         )
         # fail LOUD at plan time, not with a silent empty result at
-        # execution time (r07 review): a reader with neither backend
+        # execution time: a reader with neither backend
         # configured can never yield a row
         if options.get("payload_root") is None and (
             options.get("api_base_url") is None
@@ -126,12 +126,12 @@ class EnergyPayloadReader(DataSourceReader):
             # the fixture dir is a CACHE in front of the API, not an
             # exclusive backend: a day missing from the dir falls
             # through to the API when one is configured (an `elif`
-            # here silently dropped such days — r07 review). The GET
+            # here would silently drop such days). The GET
             # itself is payloads.fetch_day_http — the one spelling of
             # the param quirk AND the transient-retry ladder; this
             # reader's own copy had dropped the retries, so one 429
             # failed the whole day-chunk task and each Spark task
-            # retry re-fetched every day from the start (r08 review).
+            # retry re-fetched every day from the start.
             if payload is None and base is not None:
                 from .payloads import fetch_day_http
 

@@ -49,10 +49,9 @@ class LocalJsonSource:
     def fetch(self, dataset: DatasetSpec, day: str) -> dict[str, Any] | None:
         # the dict is a CACHE in front of the directory, not an
         # exclusive backend: a day missing from the dict falls through
-        # to root_dir (mere key presence used to shadow the directory
-        # entirely, recording on-disk fixture days as unavailable —
-        # r08 review; the same elif→fall-through fix datasource.read
-        # got in r07)
+        # to root_dir (mere key presence must not shadow the directory,
+        # recording on-disk fixture days as unavailable; datasource.read
+        # falls through the same way)
         if dataset.name in self._payloads:
             hit = self._payloads[dataset.name].get(day)
             if hit is not None:
@@ -71,7 +70,7 @@ def day_request_params(
     """The reference's per-day param contract, ONE spelling: the
     market/bidding-zone upper-case quirk (api_client.py:69) plus the
     start/end day bounds. Shared by RestSource and the DSv2 reader,
-    which had drifted into a re-implementation (r08 review)."""
+    so the two cannot drift apart."""
     p = dict(params)
     if key_column == "market":
         p["bzn"] = key_value.upper()
@@ -101,7 +100,7 @@ def fetch_day_http(
     spelling both RestSource and sources/datasource.py call — the
     DSv2 reader's own copy had silently dropped the retries, so one
     transient 429 failed a whole day-chunk task and each task retry
-    re-fetched every day from the start (r08 review)."""
+    re-fetched every day from the start."""
     import time
 
     import requests

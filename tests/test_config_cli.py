@@ -18,7 +18,6 @@ EXAMPLE = os.path.join(os.path.dirname(__file__), "..", "examples", "config.yaml
 
 def test_load_example_yaml_matches_defaults():
     cfg = load_config(EXAMPLE)
-    assert cfg.timezone == "UTC"
     assert [d.name for d in cfg.datasets] == [
         d.name for d in default_datasets()
     ]
@@ -38,8 +37,18 @@ def test_empty_yaml_sections_load_as_defaults():
         {"run": None, "api": None, "project": None, "datasets": None}
     )
     assert cfg.start_date == "2025-01-01"
-    assert cfg.timezone == "UTC"
     assert len(cfg.datasets) == 2  # defaults kick in
+
+
+def test_project_timezone_must_be_utc():
+    """The Spark session time zone is pinned to UTC, so every day is a
+    UTC day: a config that declares another zone raises instead of
+    being bucketed in UTC without a word. UTC and an absent key load."""
+    with pytest.raises(ValueError, match="pins the Spark session time zone to UTC"):
+        load_config({"project": {"timezone": "Europe/Berlin"}})
+    load_config({"project": {"timezone": "UTC"}})
+    load_config({"project": {}})
+    load_config({})
 
 
 def test_scalar_value_probes_rejected_loudly():

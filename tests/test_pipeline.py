@@ -611,6 +611,143 @@ def test_quarantine_catches_empty_time_array_and_empty_probe(spark):
     ]
 
 
+def test_quarantine_catches_all_null_arrays(spark):
+    """An all-null value array or an all-null time array yields no
+    silver row in either shape, so the row must quarantine; values
+    that never line up with a non-null time yield none either."""
+    from energy_data_pipeline_project_spark.pipeline.silver import (
+        extract_timeseries_with_quarantine,
+    )
+
+    power, price = default_datasets()
+    power_rows = {
+        "2024-02-01": '{"unix_seconds": [1700000000, 1700000900],'
+        ' "production_types": [{"name": "solar", "data": [null, null]},'
+        ' {"name": "wind", "data": [null]}]}',
+        "2024-02-02": '{"unix_seconds": [null, null],'
+        ' "production_types": [{"name": "solar", "data": [1.0, 2.0]}]}',
+        "2024-02-03": '{"unix_seconds": [null, 1700000900],'
+        ' "production_types": [{"name": "solar", "data": [1.0, null]}]}',
+        # one usable entity is enough: the day yields rows
+        "2024-02-04": '{"unix_seconds": [1700000000],'
+        ' "production_types": [{"name": "solar", "data": [null]},'
+        ' {"name": "wind", "data": [3.0]}]}',
+    }
+    price_rows = {
+        # the first NON-EMPTY probe is the all-null one, so the
+        # populated fallback is never read and the day yields nothing
+        "2024-02-01": '{"unix_seconds": [1700000000],'
+        ' "price": [null], "prices": [1.0]}',
+        "2024-02-02": '{"unix_seconds": [null], "price": [42.0]}',
+        "2024-02-03": '{"unix_seconds": [1700000000], "price": [42.0]}',
+    }
+    expected = {
+        "2024-02-01": "missing_values",
+        "2024-02-02": "empty_time_array",
+        "2024-02-03": "missing_values",
+    }
+    for ds, key, rows, quarantined_days in (
+        (power, "country", power_rows, expected),
+        (price, "market", price_rows, {
+            d: r for d, r in expected.items() if d != "2024-02-03"
+        }),
+    ):
+        # keyed by the day, so price silver (no date column) names it
+        bronze = spark.createDataFrame(
+            [(d, d, p) for d, p in rows.items()],
+            f"{key} string, date string, payload_json string",
+        )
+        silver, quarantined = extract_timeseries_with_quarantine(bronze, ds)
+        q = {r["date"]: r["quarantine_reason"] for r in quarantined.collect()}
+        assert q == quarantined_days, ds.name
+        # exactly the days not quarantined reach silver
+        got = {r[key] for r in silver.collect()}
+        assert got == set(rows) - set(q), ds.name
+
+
+def _sorted_rows(df):
+    return sorted(
+        (tuple(r) for r in df.collect()), key=lambda t: tuple(map(str, t))
+    )
+
+
+def test_run_pipeline_quarantine_matches_plain_run(spark, tmp_path):
+    """run_pipeline(quarantine=True) writes the same silver and gold
+    tables as a plain run, plus silver/<name>_quarantine holding
+    exactly the broken days: an all-null power time array and an
+    all-null price array, both of which yield no silver row."""
+    days = DAYS[:4]
+    payloads = fixture_payloads(days)
+    power, price = default_datasets()
+    broken_power = payloads[power.name][days[2]]
+    broken_power["unix_seconds"] = [None] * len(broken_power["unix_seconds"])
+    broken_price = payloads[price.name][days[3]]
+    (field,) = [f for f in ("price", "prices", "data") if f in broken_price]
+    broken_price[field] = [None] * len(broken_price[field])
+
+    runs = {}
+    for quarantine in (False, True):
+        cfg = PipelineConfig(
+            lake_root=str(tmp_path / f"lake_q{int(quarantine)}"),
+            start_date=days[0],
+            end_date=days[-1],
+            datasets=default_datasets(),
+        )
+        runs[quarantine] = run_pipeline(
+            spark, cfg, LocalJsonSource(payloads), quarantine=quarantine
+        )
+    plain, quar = runs[False], runs[True]
+    for layer in ("silver", "gold"):
+        tables = getattr(plain, layer)
+        assert set(getattr(quar, layer)) == set(tables)
+        for name, df in tables.items():
+            assert _sorted_rows(getattr(quar, layer)[name]) == _sorted_rows(
+                df
+            ), f"{layer}/{name}"
+    root = str(tmp_path / "lake_q1")
+    from energy_data_pipeline_project_spark.pipeline.lake import (
+        read_table,
+        table_path,
+    )
+
+    for ds, day, reason in (
+        (power, days[2], "empty_time_array"),
+        (price, days[3], "missing_values"),
+    ):
+        q = read_table(
+            spark, table_path(root, "silver", f"{ds.name}_quarantine")
+        ).collect()
+        assert [(r["date"], r["quarantine_reason"]) for r in q] == [
+            (day, reason)
+        ], ds.name
+        assert quar.observed[f"quarantine/{ds.name}"]["n_rows"] == 1
+
+
+def test_run_pipeline_auto_table_format(spark, tmp_path):
+    """table_format="auto" goes to the lake IO calls as is: each
+    resolves it, so the run writes every layer and reads it back."""
+    days = DAYS[:2]
+    cfg = PipelineConfig(
+        lake_root=str(tmp_path / "lake"),
+        start_date=days[0],
+        end_date=days[-1],
+        table_format="auto",
+        datasets=default_datasets(),
+    )
+    res = run_pipeline(spark, cfg, LocalJsonSource(fixture_payloads(days)))
+    counts = res.counts()
+    assert set(counts) == {
+        "bronze/public_power_de", "bronze/price_de_lu",
+        "silver/public_power_de", "silver/price_de_lu",
+        "gold/power_daily_by_type", "gold/price_daily",
+        "gold/power_price_daily",
+    }
+    assert counts["bronze/public_power_de"] == 2
+    assert counts["gold/power_price_daily"] == 2
+    for key, metrics in res.observed.items():
+        assert metrics["n_rows"] == counts[key], key
+
+
 def test_layer_seconds_reported(result):
     """run_pipeline returns each layer's wall seconds next to observed."""
     _, _, res = result
