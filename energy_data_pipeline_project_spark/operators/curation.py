@@ -1,4 +1,4 @@
-"""Corpus-curation operators, round 3: semantic dedup, hashed quality
+"""Corpus-curation operators: semantic dedup, hashed quality
 classification, interval (range) joins, and containment detection.
 
 These extend the LLM-data surface in ``operators/dedup.py`` /
@@ -29,13 +29,14 @@ engine extension per SURVEY.md §2.10):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..functions import hashing as H
 from ..pipeline import artifacts as A
 from ..sources.tables import load_table
 from ._registry import make_registry
 from . import dedup as D
+from .similarity import EMB_DIM, VALID_VEC_DUCK, VALID_VEC_SPARK
 from .timeseries import _CENTS_TPL, _cents  # noqa: E402
 from .dedup import (
     COSINE_QUANT,
@@ -72,14 +73,12 @@ def _semantic_oracle() -> str:
     # the global operator's values where both report a pair (pinned
     # by tests/test_curation_ops.py); val (FLOOR at SEM_QUANT) stays
     # the kmeans-idiom assignment grid. Integer dp/n2 sums are
-    # partition-order-independent — the r06 float-sum lesson.
-    from .similarity import VALID_VEC_DUCK
-
+    # partition-order-independent, where float sums are not.
     k, q, t = SEM_K, SEM_QUANT, SEM_THRESHOLD
     return f"""
     WITH m AS (
       -- VALID_VEC: a NaN/Inf element aborts the integer-grid cast in
-      -- both engines (r10 third-wave sweep)
+      -- both engines
       SELECT vec_id, u['d'] AS dim,
              CAST(FLOOR(CAST(u['v'] AS DOUBLE) * {q}) AS BIGINT) AS val,
              CAST(ROUND(CAST(u['v'] AS DOUBLE) * {COSINE_QUANT}, 0)
@@ -119,51 +118,52 @@ def _semantic_oracle() -> str:
     """
 
 
-def _semantic_melt(emb: DataFrame) -> DataFrame:
-    from .similarity import VALID_VEC_SPARK
+def _int_sum(expr: str) -> Column:
+    """Exact BIGINT left fold of an integer array expression."""
+    return F.expr(f"aggregate({expr}, CAST(0 AS BIGINT), (acc, x) -> acc + x)")
 
-    # VALID_VEC mirrors the oracle melt (r10 third-wave sweep)
-    emb = emb.where(VALID_VEC_SPARK)
-    return _cached(
-        emb.select(
-            "vec_id", F.posexplode("embedding").alias("pos0", "vf")
-        ).select(
-            "vec_id",
-            (F.col("pos0") + 1).alias("dim"),
-            F.floor(F.col("vf").cast("double") * SEM_QUANT)
-            .cast("bigint")
-            .alias("val"),
-            # cosine grid: SAME quantization as dedup_embedding_cosine
-            # so within-cluster cosines equal the global operator's
-            # exactly; integer sums are order-independent (r06 lesson)
-            F.round(F.col("vf").cast("double") * COSINE_QUANT, 0)
-            .cast("bigint")
-            .alias("qv"),
-        )
+
+def _semantic_grids(emb: DataFrame) -> DataFrame:
+    """``(vec_id, val, qv)`` — one row per valid embeddings row: its
+    embedding on the FLOOR grid at SEM_QUANT (assignment) and on the
+    ROUND grid at COSINE_QUANT (pairs; dedup_embedding_cosine's grid,
+    so within-cluster cosines equal the global operator's exactly).
+    VALID_VEC mirrors the oracle, so each array holds exactly EMB_DIM
+    finite elements."""
+    x = "CAST(x AS DOUBLE)"
+    return emb.where(VALID_VEC_SPARK).select(
+        "vec_id",
+        F.expr(
+            f"transform(embedding, x -> CAST(FLOOR({x} * {SEM_QUANT}) AS BIGINT))"
+        ).alias("val"),
+        F.expr(
+            f"transform(embedding, x -> CAST(ROUND({x} * {COSINE_QUANT}, 0) AS BIGINT))"
+        ).alias("qv"),
     )
 
 
 def semantic_cluster_assignment(
-    emb: DataFrame, *, k: int = SEM_K, m: DataFrame | None = None
+    emb: DataFrame, *, k: int = SEM_K
 ) -> DataFrame:
-    """``(vec_id, cluster)`` — the SemDeDup coarse assignment, public
-    so tests can verify the decomposition is LOSSLESS (within one
-    cluster, exactly the global pairs are found — r06 review: the
-    completeness direction was untestable without this)."""
-    if m is None:
-        m = _semantic_melt(emb)
+    """``(vec_id, cluster)`` — the SemDeDup coarse assignment: each
+    valid vector's nearest seed centroid (valid ``vec_id < k``) by
+    squared FLOOR-grid distance, one exact integer fold per broadcast
+    centroid; ties go to the lowest cluster via ``dist * k + cluster``.
+    A vec_id held by several valid rows sums the distance over every
+    pair of copies, as the oracle's per-dimension join does. Public so
+    tests can verify the decomposition is LOSSLESS (within one
+    cluster, exactly the global pairs are found)."""
+    g = _semantic_grids(emb)
     cent = F.broadcast(
-        m.where(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cluster"),
-            "dim",
-            F.col("val").alias("cval"),
+        g.where(F.col("vec_id") < k).select(
+            F.col("vec_id").alias("cluster"), F.col("val").alias("cval")
         )
     )
-    d = F.col("val") - F.col("cval")
+    dist = _int_sum("zip_with(val, cval, (x, y) -> (x - y) * (x - y))")
     return (
-        m.join(cent, "dim")
+        g.crossJoin(cent)
         .groupBy("vec_id", "cluster")
-        .agg(F.sum(d * d).alias("dist"))
+        .agg(F.sum(dist).alias("dist"))
         .groupBy("vec_id")
         .agg(
             (F.min(F.col("dist") * k + F.col("cluster")) % k)
@@ -173,36 +173,36 @@ def semantic_cluster_assignment(
     )
 
 
-def semantic_assigned_melt(
+def semantic_assigned_vectors(
     emb: DataFrame, *, k: int = SEM_K
 ) -> DataFrame:
-    """``(vec_id, cluster, dim, qv)`` — every valid vector's
-    cosine-grid melt tagged with its SemDeDup cluster: the trained
-    assignment attached to the quantized features, i.e. exactly the
-    frame the within-cluster pair stage consumes. All-integer columns,
-    so a parquet round-trip is bit-exact (the artifact-tier
+    """``(vec_id, cluster, qv, n2)`` — one row per valid vec_id: its
+    cosine-grid array and squared norm, tagged with its SemDeDup
+    cluster, i.e. exactly the frame the within-cluster pair stage
+    consumes. A vec_id held by several valid rows folds into one row
+    the way the oracle's per-dimension sums see it: ``qv`` is the
+    elementwise sum of the copies (so ``dp`` sums over every pair of
+    copies) and ``n2`` the sum of their squared norms. All-integer
+    columns, so a parquet round-trip is bit-exact (the artifact-tier
     contract)."""
-    m = _semantic_melt(emb)
-    asn = semantic_cluster_assignment(emb, k=k, m=m)
-    return m.join(asn, "vec_id").select("vec_id", "cluster", "dim", "qv")
+    q = F.col("qv")
+    vectors = _semantic_grids(emb).groupBy("vec_id").agg(
+        F.array(*(F.sum(q[i]) for i in range(EMB_DIM))).alias("qv"),
+        F.sum(_int_sum("transform(qv, x -> x * x)")).alias("n2"),
+    )
+    return vectors.join(
+        semantic_cluster_assignment(emb, k=k), "vec_id"
+    ).select("vec_id", "cluster", "qv", "n2")
 
 
 def semantic_dup_pairs(
     emb: DataFrame, *, k: int = SEM_K, threshold: float = SEM_THRESHOLD
 ) -> DataFrame:
-    """Within-cluster cosine near-dup pairs (SemDeDup shape).
-
-    Plan: melt once (vec_id, dim, val-int, v-f64); assignment joins the
-    melted frame to K broadcast centroids and argmins with an integer
-    composite key (exact, tie-stable); the pair stage self-joins the
-    melted frame on (cluster, dim) so the shuffle key carries the
-    cluster — pair space is Σ n_c², never n². At 100 TB, k grows with
-    the corpus (SemDeDup uses k ≈ √n·const) keeping n_c bounded; the
-    melt is 64× row inflation but 3 skinny columns, and the float fast
-    path for the pair stage is the Arrow/BLAS kernel in
-    ``similarity.ann_topk_numpy``.
-    """
-    ec = _cached(semantic_assigned_melt(emb, k=k))
+    """Within-cluster cosine near-dup pairs (SemDeDup shape): assign
+    each vector to a cluster, then pair only within clusters — pair
+    space is Σ n_c², never n². At 100 TB, k grows with the corpus
+    (SemDeDup uses k ≈ √n·const) keeping n_c bounded."""
+    ec = _cached(semantic_assigned_vectors(emb, k=k))
     return semantic_pairs_from_assigned(ec, threshold=threshold)
 
 
@@ -210,65 +210,59 @@ def semantic_pairs_from_assigned(
     ec: DataFrame, *, threshold: float = SEM_THRESHOLD
 ) -> DataFrame:
     """The SemDeDup pair stage over an (already persisted/published)
-    assigned-melt frame. Norms are derived from ``ec`` itself: a valid
-    vector that joined no centroid dim (and so was never assigned)
-    cannot appear in any within-cluster pair, so restricting n2 to
-    assigned vectors changes nothing — pinned by the oracle, whose nrm
+    assigned-vectors frame: a join on ``cluster`` with ``vec_a <
+    vec_b`` emits one row per within-cluster pair, and ``dp`` is an
+    exact BIGINT fold over the two EMB_DIM-element arrays — a fixed
+    bound per row, unlike a ``collect_list`` per (cluster, dim), which
+    grows with the cluster. The streamed side is spread over
+    ``defaultParallelism`` partitions so the pairs use every core even
+    when the published frame is one file.
+
+    Norms come from ``ec`` itself: a never-assigned vector cannot be
+    in any within-cluster pair, so this matches the oracle, whose nrm
     CTE covers all valid vectors but only ever joins assigned ones."""
-    nrm = ec.groupBy("vec_id").agg(
-        F.sum(F.col("qv") * F.col("qv")).cast("bigint").alias("n2")
-    )
-    a = ec.select(
-        F.col("vec_id").alias("vec_a"),
-        "cluster",
-        "dim",
-        F.col("qv").alias("qa"),
-    )
-    b = ec.select(
-        F.col("vec_id").alias("vec_b"),
-        "cluster",
-        "dim",
-        F.col("qv").alias("qb"),
-    )
-    dots = (
-        a.join(b, ["cluster", "dim"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .groupBy("vec_a", "vec_b", "cluster")
-        .agg(F.sum(F.col("qa") * F.col("qb")).cast("bigint").alias("dp"))
-    )
-    na = nrm.select(F.col("vec_id").alias("vec_a"), F.col("n2").alias("na2"))
-    nb = nrm.select(F.col("vec_id").alias("vec_b"), F.col("n2").alias("nb2"))
-    # raw ratio of exact-int grid values — identical IEEE tree both
-    # engines; ROUND(double, 4) itself diverged on near-ties (r07).
-    # Positive-norm gate: NULL-vs-NaN zero-division divergence (r07)
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            F.col("vec_id").alias(f"vec_{s}"),
+            "cluster",
+            F.col("qv").alias(f"q{s}"),
+            F.col("n2").alias(f"n{s}2"),
+        )
+
+    spread = ec.repartition(ec.sparkSession.sparkContext.defaultParallelism)
+    a, b = side(spread, "a"), side(ec, "b")
+    dp = _int_sum("zip_with(qa, qb, (x, y) -> x * y)")
+    # raw ratio of exact-int grid values — identical IEEE tree in both
+    # engines, where ROUND(double, 4) diverges on near-ties.
+    # Positive-norm gate: a zero-norm vector's 0/0 is NULL in Spark
+    # but NaN in DuckDB, which would rank it above the threshold.
     cos = F.when(
         (F.col("na2") > 0) & (F.col("nb2") > 0),
-        F.col("dp") / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2"))),
+        dp / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2"))),
     )
     return (
-        dots.join(na, "vec_a")
-        .join(nb, "vec_b")
+        a.join(b, "cluster")
+        .where(F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b", "cluster", cos.alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 
 
-# Bump on ANY change to the melt/assignment derivation (quantization
-# grids, K, centroid init, VALID_VEC semantics, tie-break) — see
-# dedup._LSH_PAIRS_CHAIN_REV for the discipline.
-_SEM_EC_CHAIN_REV = 1
+# Bump on ANY change to the assignment derivation or published layout
+# (quantization grids, K, centroid init, VALID_VEC semantics,
+# tie-break, columns) — see dedup._LSH_PAIRS_CHAIN_REV.
+_SEM_EC_CHAIN_REV = 2
 
 
 def shared_semantic_assignment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Published SemDeDup assigned-melt frame of ``{sf_dir}/embeddings``
-    — the k-means assignment chain as a train-once/serve-many artifact
-    (r11 verdict #3): the coarse clustering is a model trained on the
-    corpus, so a warm process reads the published assignment instead
-    of re-melting and re-assigning per query. All-integer columns
-    (vec_id, cluster, dim, qv) make the parquet round-trip bit-exact,
-    and the kind signature carries every constant of the chain."""
+    """Published SemDeDup assigned-vectors frame of
+    ``{sf_dir}/embeddings``: the k-means assignment is a model trained
+    on the corpus, so a warm process reads it instead of re-quantizing
+    and re-assigning per query. All-integer columns make the parquet
+    round-trip bit-exact; the kind carries every chain constant."""
     kind = (
         f"sem_ec@r{_SEM_EC_CHAIN_REV}"
         f"-k{SEM_K}q{SEM_QUANT}c{COSINE_QUANT}"
@@ -280,7 +274,7 @@ def shared_semantic_assignment(
         "embeddings",
         ("ec",),
         lambda: {
-            "ec": semantic_assigned_melt(load_table(spark, sf_dir, "embeddings"))
+            "ec": semantic_assigned_vectors(load_table(spark, sf_dir, "embeddings"))
         },
     )["ec"]
 
@@ -448,8 +442,7 @@ def join_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_clicks"),
             # integer cents, never ROUND(SUM(double)): a float sum is
             # partition-order-dependent and decimal rounding of it
-            # splits across engines on near-ties (r07 review; the
-            # events_ab_lift class)
+            # splits across engines on near-ties
             F.sum(_cents("value"))
             .cast("bigint")
             .alias("click_cents"),
@@ -496,11 +489,11 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup.release_cached_frames()`` after consuming.
     """
     # the ONE capped-index core (dedup.py): in-row-distinct postings +
-    # hot-shingle cap + sizes — this function carried a ~25-line copy
-    # that a set-semantics or cap fix would silently miss (r08 review).
-    # Postings ride the published shingle-postings artifact (r11
-    # verdict #6): a warm process pays a parquet read, not the
-    # tokenize→shingle→md5 explode.
+    # hot-shingle cap + sizes — no local copy, so a set-semantics or
+    # cap fix reaches this operator too.
+    # Postings ride the published shingle-postings artifact: a warm
+    # process pays a parquet read, not the tokenize→shingle→md5
+    # explode.
     hx = D.shared_shingle_postings(spark, sf_dir)
     grouped, sz = D.capped_posting_arrays(hx)
     common = (
@@ -704,7 +697,7 @@ _BPE_CHAIN_REV = 1
 def trained_bpe_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The {BPE_ITERS}-row merge-rule table
     ``(step, tok_a, tok_b, pair_count)`` as a content-addressed lake
-    artifact (r09 verdict #3): the rules are deterministic on the
+    artifact: the rules are deterministic on the
     corpus fingerprint exactly like the IVF/PQ codebooks, so training
     runs once per corpus snapshot and every later session — batch
     encode, bench, parity — reads the published table and pays only
@@ -795,7 +788,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact or one training run), so the encode itself pays ONLY the
     apply pass: with the rules known, all {BPE_ITERS} merge rounds are
     literal-rule window chains in ONE static plan — no per-round pair
-    count, argmax, or eager checkpoint (r09 verdict #3). The
+    count, argmax, or eager checkpoint. The
     ``.collect()`` is bounded at BPE_ITERS rows (one rule per round) —
     driver-sized by construction, like the IVF query-vector set.
     Semantics are unchanged from the trainer's own merged sequence
@@ -1034,7 +1027,7 @@ def join_fuzzy_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # persisted: p feeds both self-join sides (different projections,
     # no exchange to reuse) — unpersisted, documents was scanned and
-    # tokenized twice per run (r08 review)
+    # tokenized twice per run
     p = _cached(docs.select(
         "doc_id",
         F.expr(f"substr(text, 1, {FUZZY_PREFIX_CHARS})").alias("pfx"),
@@ -1086,7 +1079,7 @@ def _dup_rate_oracle() -> str:
     -- through the join with its (also duplicated) component label,
     -- quadrupling one doc's weight in the rate; keyless docs cannot
     -- join to a component at all. The metric is over DISTINCT doc
-    -- ids (r09 degenerate sweep).
+    -- ids.
     j AS (
       SELECT DISTINCT d.doc_id, d.source, cc.component_size
       FROM (SELECT DISTINCT doc_id, source FROM documents
@@ -1195,7 +1188,7 @@ def agg_trimmed_mean_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         # SQL SUM semantics: NULL cents (arriving as NaN) are skipped,
         # and an all-NULL kept range sums to NULL, not 0 — pandas
         # .sum() would otherwise return 0.0 where the oracle's SUM
-        # returns NULL (r09 degenerate sweep)
+        # returns NULL
         if kept["c"].count() == 0:
             return None
         return int(kept["c"].sum())
@@ -1203,7 +1196,7 @@ def agg_trimmed_mean_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # persisted: c feeds BOTH the UDAF aggregate and the JVM counts —
     # different aggregates, no exchange reuse, so the events scan ran
-    # twice (r08 review; the countmin/IQR class)
+    # twice
     c = _cached(
         ev.select(
             "event_type",
@@ -1227,8 +1220,8 @@ def agg_trimmed_mean_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # null-safe join: a NULL event_type is a legitimate group in both
     # engines' GROUP BY, but a plain equi-join between the two
-    # aggregates silently dropped it (r09 degenerate sweep — the r08
-    # upsert lesson again: every group-key rejoin must be eqNullSafe)
+    # aggregates silently drops it: every group-key rejoin must be
+    # eqNullSafe
     return counts.join(
         trimmed, counts["event_type"].eqNullSafe(trimmed["event_type"])
     ).select(
@@ -1261,7 +1254,7 @@ def _neg_part(duck: bool) -> str:
     cross join). The earlier hardcoded ``% 2000`` was the sf0.01 part
     count and off-by-one against TPC-H partkeys 1..N: it could emit
     the nonexistent partkey 0 and never sample partkey 2000, and at
-    any larger sf ignored all but the first 2000 parts (r07 review)."""
+    any larger sf ignored all but the first 2000 parts."""
     cast = "VARCHAR" if duck else "STRING"
     h = H.md5_int64(f"(CAST(c_custkey AS {cast}) || ':' || CAST(i AS {cast}))", duck=duck)
     return f"((({h}) % n_parts) + 1)"
@@ -1394,7 +1387,7 @@ def join_fuzzy_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     # persisted: names feeds the segment index AND the probe fan-out
     # (two different explode subtrees) — unpersisted, part was scanned
-    # and DISTINCT-shuffled twice per run (r08 review)
+    # and DISTINCT-shuffled twice per run
     names = _cached(
         part.select(F.col("p_name").alias("nm"))
         .where(F.length("nm") >= 3)

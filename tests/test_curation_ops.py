@@ -8,14 +8,25 @@ physical-plan properties the 100 TB posture depends on.
 
 from __future__ import annotations
 
+import math
+import random
+import re
+import struct
+from decimal import ROUND_HALF_UP, Decimal
+
 import pyspark.sql.functions as F
 
 from energy_data_pipeline_project_spark.operators import curation, dedup
 from energy_data_pipeline_project_spark.operators.curation import (
     CONTAINMENT_THRESHOLD,
+    COSINE_QUANT,
+    SEM_K,
+    SEM_QUANT,
     SEM_THRESHOLD,
+    semantic_cluster_assignment,
     semantic_dup_pairs,
 )
+from energy_data_pipeline_project_spark.operators.similarity import EMB_DIM
 from energy_data_pipeline_project_spark.plans.analyze import plan_report
 from energy_data_pipeline_project_spark.sources.tables import load_table
 
@@ -114,9 +125,6 @@ def test_semantic_agrees_with_global_pairs_inside_cluster(spark):
     vectors (r06 review: the completeness direction was previously
     unasserted, so a decomposition silently dropping within-cluster
     candidates would have passed)."""
-    from energy_data_pipeline_project_spark.operators.curation import (
-        semantic_cluster_assignment,
-    )
     from energy_data_pipeline_project_spark.operators.dedup import (
         COSINE_SUBSET,
         dedup_embedding_cosine,
@@ -151,6 +159,151 @@ def test_semantic_agrees_with_global_pairs_inside_cluster(spark):
     # exact agreement: same pair set AND same (integer-grid) cosines
     assert sub == expected
     assert expected  # non-trivial on this corpus
+
+
+def _f32(x: float) -> float:
+    return struct.unpack("f", struct.pack("f", x))[0]
+
+
+def _semantic_replay(vectors, *, k, threshold):
+    """Plain-Python integer replay of ``_semantic_oracle``: VALID_VEC,
+    the FLOOR-grid argmin over the valid seeds ``vec_id < k`` (ties to
+    the lowest cluster through ``dist * k + cluster``), then the
+    ROUND-grid ``dp``/``n2`` within each cluster with the
+    positive-norm gate. A vec_id held by several valid rows sums over
+    every pair of copies, as the oracle's per-dimension joins do.
+    Returns ``(cluster_of, pairs)``."""
+
+    def half_up(d: float) -> int:  # Spark ROUND(double, 0)
+        return int(Decimal(repr(d)).quantize(Decimal(1), ROUND_HALF_UP))
+
+    val, qv = {}, {}
+    for vid, e in vectors:
+        if e is None or len(e) != EMB_DIM:
+            continue
+        e = [_f32(x) for x in e]
+        if all(math.isfinite(x) for x in e):
+            val.setdefault(vid, []).append([math.floor(x * SEM_QUANT) for x in e])
+            qv.setdefault(vid, []).append([half_up(x * COSINE_QUANT) for x in e])
+    cent = {c: val[c] for c in val if c < k}
+    cluster_of = {
+        v: min(
+            sum(
+                (x - y) ** 2
+                for copy in val[v]
+                for c_copy in cv
+                for x, y in zip(copy, c_copy)
+            )
+            * k
+            + c
+            for c, cv in cent.items()
+        )
+        % k
+        for v in val
+    }
+    n2 = {v: sum(x * x for copy in q for x in copy) for v, q in qv.items()}
+    pairs = {}
+    for a in val:
+        for b in val:
+            if not (a < b and cluster_of[a] == cluster_of[b]):
+                continue
+            if n2[a] <= 0 or n2[b] <= 0:
+                continue
+            dp = sum(
+                x * y for ca in qv[a] for cb in qv[b] for x, y in zip(ca, cb)
+            )
+            cos = dp / (math.sqrt(n2[a]) * math.sqrt(n2[b]))
+            if cos >= threshold:
+                pairs[(a, b)] = (cluster_of[a], cos)
+    return cluster_of, pairs
+
+
+def test_semantic_chain_equals_integer_replay(spark):
+    """The SemDeDup assignment and pair stage equal an independent
+    integer replay of the oracle's definition, on a corpus holding
+    every edge the chain must get exactly right: a vector at equal
+    distance from two seeds, a zero vector, an exact duplicate pair,
+    a NaN element, a vector shorter than EMB_DIM and a vec_id held by
+    two rows."""
+    rng = random.Random(15)
+
+    def rand_vec():
+        return [rng.uniform(-1.0, 1.0) for _ in range(EMB_DIM)]
+
+    # exact multiples of 1/16 keep both grids free of rounding, so the
+    # tie below is a tie on the FLOOR grid too
+    mid = [((7 * j) % 16 - 8) / 16 for j in range(EMB_DIM)]
+    seeds = [rand_vec() for _ in range(SEM_K)]
+    seeds[2] = [mid[0] + 1 / 16] + mid[1:]
+    seeds[5] = [mid[0] - 1 / 16] + mid[1:]
+    dup = rand_vec()
+    nan = rand_vec()
+    nan[3] = float("nan")
+    vectors = list(enumerate(seeds)) + [
+        (8, mid),  # equidistant from seeds 2 and 5: tie -> cluster 2
+        (9, [0.0] * EMB_DIM),  # zero norm: never in a pair
+        (10, dup),
+        (11, list(dup)),  # exact duplicate of 10
+        (12, nan),  # invalid: NaN element
+        (13, rand_vec()[:-1]),  # invalid: EMB_DIM - 1 elements
+    ]
+    vectors += [(v, rand_vec()) for v in range(14, 40)]
+    vectors += [(v, [x + 0.01 for x in mid]) for v in range(40, 44)]
+    vectors += [(44, [x - 0.01 for x in mid]), (44, rand_vec())]
+    emb = spark.createDataFrame(
+        vectors, "vec_id long, embedding array<float>"
+    )
+    for threshold in (SEM_THRESHOLD, -2.0):
+        want_cluster, want_pairs = _semantic_replay(
+            vectors, k=SEM_K, threshold=threshold
+        )
+        got_cluster = {
+            r["vec_id"]: r["cluster"]
+            for r in semantic_cluster_assignment(emb).collect()
+        }
+        got_pairs = {
+            (r["vec_a"], r["vec_b"]): (r["cluster"], r["cosine"])
+            for r in semantic_dup_pairs(emb, threshold=threshold).collect()
+        }
+        dedup.release_cached_frames()
+        assert got_cluster == want_cluster
+        assert got_pairs == want_pairs
+    assert want_cluster[8] == 2 and 12 not in want_cluster
+    assert 13 not in want_cluster
+    assert (10, 11) in want_pairs and (8, 44) in want_pairs
+    assert not any(9 in p for p in want_pairs)
+
+
+def test_semantic_pair_stage_layout(spark):
+    """One row per valid vector in the published frame, each carrying
+    an EMB_DIM-element cosine-grid array; the pair stage neither melts
+    (Generate) nor aggregates (Aggregate), and its join runs over
+    defaultParallelism partitions of the streamed side."""
+    from energy_data_pipeline_project_spark.operators.similarity import (
+        VALID_VEC_SPARK,
+    )
+
+    ec = curation.shared_semantic_assignment(spark, SF_SMOKE)
+    assert ec.schema.simpleString() == (
+        "struct<vec_id:bigint,cluster:int,qv:array<bigint>,n2:bigint>"
+    )
+    n_valid = (
+        load_table(spark, SF_SMOKE, "embeddings").where(VALID_VEC_SPARK).count()
+    )
+    assert ec.count() == n_valid
+    assert ec.select("vec_id").distinct().count() == n_valid
+    assert ec.where(F.size("qv") != EMB_DIM).count() == 0
+
+    df = curation.QUERIES["dedup_semantic"](spark, SF_SMOKE)
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    nodes = set(re.findall(r"^[\s:+\-|*()\d]*([A-Z]\w*)", opt, re.M))
+    assert "Join" in nodes
+    assert not nodes & {"Generate", "Aggregate"}, nodes
+    n = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() == n
+    assert f"RoundRobinPartitioning({n})" in (
+        df._jdf.queryExecution().executedPlan().toString()
+    )
 
 
 def test_containment_detects_subset_docs(spark):
