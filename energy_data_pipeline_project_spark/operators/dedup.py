@@ -1,22 +1,33 @@
 """Deduplication operators over the ``documents`` / ``embeddings`` tables.
 
-Four families, each the standard large-scale design:
+Five near-dup families, each the standard large-scale design:
 
 - **Exact** — content-hash (md5) group-by: one shuffle on the hash, the
   100 TB-safe way to dedup (never group on raw multi-KB text).
-- **MinHash + LSH** — shingle → k minhashes → band → bucket equi-join.
-  Candidate generation is linear in corpus size + bucket-collision
-  pairs; the full O(n²) pair space is never materialized.
-- **SimHash** — 16-bit signature from token hashes; equal signatures →
-  near-dup bucket.
-- **N-gram Jaccard** — exact shingle-set Jaccard via inverted-index
-  self-join (token→doc postings), the verification stage after LSH.
+- **MinHash + LSH** — shingle → k minhashes → band → capped bucket
+  arrays, candidate pairs expanded inside each bucket. Candidate
+  generation is linear in corpus size + bucket-collision pairs; the
+  full O(n²) pair space is never materialized.
+- **SimHash** — a 16-bit signature from token hashes (equal signatures
+  → near-dup bucket), and a 64-bit signature whose four 16-bit
+  quarters band a Hamming join, lossless at distance <= 3 by
+  pigeonhole.
+- **N-gram Jaccard** — exact shingle-set Jaccard over a capped
+  inverted index: intersections are counted by expanding pairs inside
+  each bounded posting array (no postings self-join); prefix filtering
+  is the lossless uncapped twin. It verifies what LSH proposes.
 - **Embedding cosine** — near-dup by vector similarity (bounded subset
   here; the scalable ANN path lives in operators/similarity.py).
 
-All hashing comes from functions/hashing.py so the DuckDB oracle SQL
-(generated below from the same constants) matches bit-for-bit. No
-Python UDFs — everything is codegen'd Catalyst expressions.
+Around them: connected-component clustering of the pair graph,
+benchmark decontamination, duplicated-span removal and
+sorted-neighborhood blocking.
+
+All hashing comes from functions/hashing.py, and each wide dedup
+expression (signatures, band keys, match count, Hamming verify) is
+one SQL text that the DuckDB oracle and the engine both read, so the
+two match bit-for-bit. No Python UDFs — everything is codegen'd
+Catalyst expressions.
 """
 
 from __future__ import annotations
@@ -42,9 +53,8 @@ JACCARD_T_DEN = 2
 JACCARD_THRESHOLD = JACCARD_T_NUM / JACCARD_T_DEN
 # PPJoin threshold t = NUM/DEN as an exact integer fraction — the ONE
 # source for the prefix length, the bucket-expansion length filter,
-# the verify predicate, and the oracle SQL (r08 advisor: three
-# independent spellings meant a future threshold change could silently
-# break the lossless-filter guarantee by missing one copy).
+# the verify predicate, and the oracle SQL, so a threshold change
+# cannot break the lossless-filter guarantee by missing one copy.
 JACCARD_NUM = 4
 JACCARD_DEN = 5
 COSINE_DUP_THRESHOLD = 0.3  # calibrated: testdata embeddings max out ~0.4
@@ -117,9 +127,9 @@ def _shingle_hashes(docs: DataFrame) -> DataFrame:
     distinct per doc, but two distinct shingles can collide in the
     32-bit hash, and a doubled (doc, h) row put the doc twice in a
     posting array, emitting a (d, d) self-pair the a < b oracles can
-    never produce (the r07 prefix-Jaccard bug — r08 fixed it at this
-    shared source for the Jaccard/containment consumers too; the
-    minhash MIN is multiplicity-blind either way).
+    never produce. Deduping here, at the shared source, covers every
+    Jaccard/containment consumer (the minhash MIN is
+    multiplicity-blind either way).
 
     NULL doc_ids are excluded HERE, at the index source: a NULL
     identity cannot participate in identity pairs (the
@@ -127,8 +137,8 @@ def _shingle_hashes(docs: DataFrame) -> DataFrame:
     expansions downstream pair array entries without ever comparing
     ids, so a NULL-id doc whose text duplicates another doc's leaked a
     (NULL, x) pair that every a < b oracle rejects — and its postings
-    counted toward hot-shingle caps only on one side (r11 fuzz seed
-    69). The oracle CTE heads carry the same WHERE."""
+    counted toward hot-shingle caps only on one side. The oracle CTE
+    heads carry the same WHERE."""
     toks = docs.where(F.col("doc_id").isNotNull()).select(
         "doc_id", F.expr(_TOKS_SPARK).alias("toks")
     )
@@ -157,8 +167,8 @@ def shingle_index_ctes(cap: int = SHINGLE_DOC_CAP) -> str:
     """DuckDB twin of the capped shingle inverted index: CTEs
     ``t → hx0 (in-row-distinct postings) → hx (hot shingles dropped)
     → sz (per-doc sizes over the capped index)``. ONE spelling for the
-    dedup_shingle_jaccard and curation.text_containment oracles, which
-    had drifted into copies (r08 review) — and the in-row
+    dedup_shingle_jaccard and curation.text_containment oracles — and
+    the in-row
     list_distinct matches :func:`_shingle_hashes` exactly, so the
     engines agree even on 32-bit within-doc hash collisions."""
     return f"""
@@ -177,7 +187,7 @@ def _prefix_index_ctes() -> str:
     distinct postings, NO hot-shingle cap): the prefix-filter join is
     lossless by construction and must see every posting, so only the
     set-semantics spelling is shared — one source with the capped
-    variant (r08 review)."""
+    variant."""
     return f"""
     WITH t AS (SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
            WHERE doc_id IS NOT NULL),  -- pair-identity index: see _shingle_hashes
@@ -212,57 +222,138 @@ def capped_posting_arrays(
     return grouped, sz
 
 
+# ---------------------------------------------------------------------------
+# Wide dedup expressions: one SQL text, read by both engines
+# ---------------------------------------------------------------------------
+# The minhash and SimHash signatures, the band keys, the minhash match
+# count and the Hamming verify are 16- to 64-term expressions. Each is
+# spelled once below as SQL text: the DuckDB oracle interpolates it,
+# and the engine applies the same text as expressions on a frame
+# (``selectExpr`` for projections, one ``agg(*map(F.expr, ...))`` for
+# aggregates) instead of building a Column tree node by node. Both
+# dialects read ``>>``, ``&``, ``bit_count``, ``concat_ws``, ``CASE``
+# and ``MIN``/``SUM`` alike. xor is the one switch (Spark ``^``;
+# DuckDB ``xor()``, whose ``^`` is power). A ratio divides by
+# ``CAST(k AS DOUBLE)``, because Spark types a bare ``16.0`` DECIMAL.
+
+# The k signature columns, aggregated per doc_id over its postings
+# (doc_id, h). MIN is multiplicity-blind, so a posting may repeat.
+_MINHASH_MINS = [
+    f"MIN({H.minhash_expr(i, 'h')}) AS m{i}" for i in range(H.MINHASH_K)
+]
+
+
 def _minhash_signatures(hx: DataFrame) -> DataFrame:
     """doc_id → k minhash columns m0..m{k-1} over a ``_shingle_hashes``
     postings frame."""
-    return hx.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(H.minhash_expr(i, "h"))).alias(f"m{i}")
-            for i in range(H.MINHASH_K)
-        ]
+    return hx.groupBy("doc_id").agg(*map(F.expr, _MINHASH_MINS))
+
+
+# Bucket key of each LSH band: its MINHASH_ROWS minhashes joined by ','.
+_MINHASH_BAND_KEYS = [
+    "concat_ws(',', "
+    + ", ".join(
+        f"m{i}" for i in range(b * H.MINHASH_ROWS, (b + 1) * H.MINHASH_ROWS)
     )
+    + ")"
+    for b in range(H.MINHASH_BANDS)
+]
 
 
-def _band_melt_sql(src: str) -> str:
-    """Oracle band-melt: one (doc_id, band_id, band_val) row per band
-    from a signature CTE ``src`` — THE banded-LSH layout, defined once
-    (r07 review: three oracles hand-built identical copies, the same
-    drift risk capped_bucket_pairs documents for the Spark side)."""
+def _band_melt_sql(src: str, keys: list[str]) -> str:
+    """Oracle melt: one (doc_id, band_id, band_val) row per band key of
+    each ``src`` row; band_id is the key's position, as in
+    :func:`_melt_bands`."""
     return "\n    UNION ALL\n    ".join(
-        "SELECT doc_id, {b} AS band_id, concat_ws(',', {cols}) AS band_val"
-        " FROM {src}".format(
-            b=b,
-            cols=", ".join(
-                f"m{i}"
-                for i in range(b * H.MINHASH_ROWS, (b + 1) * H.MINHASH_ROWS)
-            ),
-            src=src,
-        )
-        for b in range(H.MINHASH_BANDS)
+        f"SELECT doc_id, {b} AS band_id, {k} AS band_val FROM {src}"
+        for b, k in enumerate(keys)
     )
 
 
-def _minhash_oracle() -> str:
-    mins = ",\n           ".join(
-        f"MIN({H.minhash_expr(i, 'h')}) AS m{i}" for i in range(H.MINHASH_K)
+def _melt_bands(sig: DataFrame, keys: list[str]) -> DataFrame:
+    """Engine melt of a signature frame to (doc_id, band_id, band_val)
+    in ONE pass. ``stack``, not ``posexplode(array(..))``: Spark's
+    lexer reads a ``>>`` after an ``array`` token in the same statement
+    as two closing type brackets, and the SimHash quarter keys shift."""
+    rows = ", ".join(f"{b}, {k}" for b, k in enumerate(keys))
+    return sig.selectExpr(
+        "doc_id", f"stack({len(keys)}, {rows}) AS (band_id, band_val)"
     )
-    # Melted-band formulation mirroring the Spark plan (bucket equi-join
-    # + hot-bucket cap), not the old all-pairs band-OR — so the cap's
-    # semantics are hash-checked too.
-    band_rows = _band_melt_sql("sig")
-    matches = " + ".join(
+
+
+# Fraction of equal minhashes between the signature rows ``sa`` and
+# ``sb``: an exact multiple of 1/k.
+_MINHASH_EST = (
+    "("
+    + " + ".join(
         f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END"
         for i in range(H.MINHASH_K)
     )
+    + f") / CAST({H.MINHASH_K} AS DOUBLE)"
+)
+
+
+def _pair_sides(
+    cand: DataFrame, sa: DataFrame, sb: DataFrame, a: str, b: str
+) -> DataFrame:
+    """``cand`` with the signature row of its ``a`` side as ``sa`` and
+    of its ``b`` side as ``sb``: the rows a verify expression reads.
+    :func:`_pair_sides_sql` is the oracle's spelling."""
+    return (
+        cand.alias("cand")
+        .join(sa.alias("sa"), F.col(f"cand.{a}") == F.col("sa.doc_id"))
+        .join(sb.alias("sb"), F.col(f"cand.{b}") == F.col("sb.doc_id"))
+    )
+
+
+def _pair_sides_sql(cand: str, sa: str, sb: str, a: str, b: str) -> str:
+    return (
+        f"{cand} cand JOIN {sa} sa ON cand.{a} = sa.doc_id"
+        f" JOIN {sb} sb ON cand.{b} = sb.doc_id"
+    )
+
+
+def _minhash_verify_sql(
+    sa: str, sb: str, a: str = "doc_a", b: str = "doc_b"
+) -> str:
+    """Oracle LSH verify over the candidate CTE ``cand``: ``(a, b,
+    est_jaccard)`` where the estimate clears MINHASH_THRESHOLD."""
     return f"""
+    SELECT cand.{a}, cand.{b}, {_MINHASH_EST} AS est_jaccard
+    FROM {_pair_sides_sql("cand", sa, sb, a, b)}
+    WHERE {_MINHASH_EST} >= {MINHASH_THRESHOLD}"""
+
+
+def _minhash_verify(
+    cand: DataFrame,
+    sa: DataFrame,
+    sb: DataFrame,
+    a: str = "doc_a",
+    b: str = "doc_b",
+) -> DataFrame:
+    """Engine twin of :func:`_minhash_verify_sql`."""
+    return (
+        _pair_sides(cand, sa, sb, a, b)
+        .selectExpr(f"cand.{a}", f"cand.{b}", f"{_MINHASH_EST} AS est_jaccard")
+        .where(F.col("est_jaccard") >= MINHASH_THRESHOLD)
+    )
+
+
+# t → sh → hx → sig: the signature head of the minhash oracles.
+_MINHASH_SIG_CTES = f"""
     WITH t AS (SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
            WHERE doc_id IS NOT NULL),  -- pair-identity index: see _shingle_hashes
     sh AS (SELECT doc_id, unnest({H.shingles_sql("toks", SHINGLE_N, duck=True)}) AS s
            FROM t),
     hx AS (SELECT doc_id, {H.md5_int64("s", duck=True)} AS h FROM sh),
-    sig AS (SELECT doc_id, {mins} FROM hx GROUP BY doc_id),
+    sig AS (SELECT doc_id, {", ".join(_MINHASH_MINS)}
+            FROM hx GROUP BY doc_id)"""
+
+# bands → bands_ok → cand over ``sig``: the oracle twin of
+# lsh_candidate_pairs, hot-bucket cap included.
+_LSH_CAND_CTES = f"""
     bands AS (
-    {band_rows}
+    {_band_melt_sql("sig", _MINHASH_BAND_KEYS)}
     ),
     bands_ok AS (
       SELECT doc_id, band_id, band_val FROM (
@@ -276,13 +367,14 @@ def _minhash_oracle() -> str:
       FROM bands_ok a
       JOIN bands_ok b ON a.band_id = b.band_id AND a.band_val = b.band_val
                      AND a.doc_id < b.doc_id
-    )
-    SELECT cand.doc_a, cand.doc_b,
-           ({matches}) / {float(H.MINHASH_K)} AS est_jaccard
-    FROM cand
-    JOIN sig sa ON cand.doc_a = sa.doc_id
-    JOIN sig sb ON cand.doc_b = sb.doc_id
-    WHERE ({matches}) / {float(H.MINHASH_K)} >= {MINHASH_THRESHOLD}
+    )"""
+
+
+def _minhash_oracle() -> str:
+    # Melted-band formulation mirroring the Spark plan (bucket equi-join
+    # + hot-bucket cap), so the cap's semantics are hash-checked too.
+    return f"""{_MINHASH_SIG_CTES},{_LSH_CAND_CTES}
+    {_minhash_verify_sql("sig", "sig")}
     """
 
 
@@ -317,7 +409,7 @@ def _bucket_pairs_lenfilter_sql(
 
     ``with_sizes=True`` emits ``(doc_a, doc_b, na, nb)`` so a
     multiplicity-counting consumer can aggregate straight to the
-    Jaccard ratio with NO size joins afterwards (r08 verdict #4)."""
+    Jaccard ratio with NO size joins afterwards."""
     a = arr_col
     payload = (
         "struct(x.doc_id AS doc_a, y.doc_id AS doc_b,"
@@ -333,31 +425,12 @@ def _bucket_pairs_lenfilter_sql(
     )
 
 
-def _melt_bands(sig: DataFrame) -> DataFrame:
-    """Melt a signature frame to (doc_id, band_id, band_val) in ONE pass."""
-    band_vals = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[
-                    f"m{i}"
-                    for i in range(b * H.MINHASH_ROWS, (b + 1) * H.MINHASH_ROWS)
-                ],
-            )
-            for b in range(H.MINHASH_BANDS)
-        ]
-    )
-    return sig.select(
-        "doc_id", F.posexplode(band_vals).alias("band_id", "band_val")
-    )
-
-
 def capped_bucket_pairs(bands: DataFrame, bucket_cap: int) -> DataFrame:
     """Distinct (doc_a < doc_b) candidate pairs from a
     ``(doc_id, band_id, band_val)`` postings frame, with the
-    hot-bucket skew cap. Shared by MinHash-LSH and SimHash-Hamming
-    banding (r06 review: the expansion was previously copy-pasted,
-    so a cap-semantics fix could silently miss one caller)."""
+    hot-bucket skew cap. The one expansion MinHash-LSH and
+    SimHash-Hamming banding share, so a cap-semantics fix reaches
+    both."""
     # doc_ids are unique per bucket, so COUNT(*) is the bucket's doc
     # count; only buckets in [2, cap] can produce candidate pairs.
     bcnt = bands.groupBy("band_id", "band_val").agg(F.count("*").alias("bcnt"))
@@ -379,8 +452,7 @@ def symmetric_edges(pairs: DataFrame) -> DataFrame:
     ``(src, dst)`` edge list. Distinct by construction (a<b rows
     cannot collide with a>b rows), so no dedup shuffle is needed —
     the invariant lives HERE, next to the pair generators that
-    establish it, instead of being re-stated at five call sites
-    (r06 review)."""
+    establish it, instead of being re-stated at five call sites."""
     return pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).union(
@@ -395,7 +467,7 @@ def lsh_candidate_pairs(
     frame — the pre-verification stage, exposed separately so its
     recall/precision can be measured against exact ground truth
     (``dedup_lsh_quality_eval``)."""
-    return capped_bucket_pairs(_melt_bands(sig), bucket_cap)
+    return capped_bucket_pairs(_melt_bands(sig, _MINHASH_BAND_KEYS), bucket_cap)
 
 
 def minhash_lsh_pairs(
@@ -433,29 +505,7 @@ def pairs_from_signatures(
     streaming ingest index (streaming/dedup_index.py) where
     signatures arrive precomputed."""
     cand = lsh_candidate_pairs(sig, bucket_cap=bucket_cap)
-
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"m{i}").alias(f"ma{i}") for i in range(H.MINHASH_K)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"m{i}").alias(f"mb{i}") for i in range(H.MINHASH_K)],
-    )
-    matches = sum(
-        F.when(F.col(f"ma{i}") == F.col(f"mb{i}"), 1).otherwise(0)
-        for i in range(H.MINHASH_K)
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (matches / F.lit(float(H.MINHASH_K))).alias("est_jaccard"),
-        )
-        .where(F.col("est_jaccard") >= MINHASH_THRESHOLD)
-    )
+    return _minhash_verify(cand, sig, sig)
 
 
 def cross_matches_from_signatures(
@@ -469,8 +519,8 @@ def cross_matches_from_signatures(
     ``incremental_lsh_matches``, with the hot-bucket cap on the INDEX
     side (same rationale: a boilerplate index bucket would fan every
     colliding batch doc out to the whole bucket)."""
-    batch_bands = _melt_bands(sig_batch)
-    index_bands = _melt_bands(sig_index)
+    batch_bands = _melt_bands(sig_batch, _MINHASH_BAND_KEYS)
+    index_bands = _melt_bands(sig_index, _MINHASH_BAND_KEYS)
     iok = (
         index_bands.groupBy("band_id", "band_val")
         .agg(F.count("*").alias("bcnt"))
@@ -485,28 +535,7 @@ def cross_matches_from_signatures(
         .select("doc_id", "dup_of")
         .distinct()
     )
-    sa = sig_batch.select(
-        "doc_id",
-        *[F.col(f"m{i}").alias(f"ba{i}") for i in range(H.MINHASH_K)],
-    )
-    sb = sig_index.select(
-        F.col("doc_id").alias("dup_of"),
-        *[F.col(f"m{i}").alias(f"bi{i}") for i in range(H.MINHASH_K)],
-    )
-    matches = sum(
-        F.when(F.col(f"ba{i}") == F.col(f"bi{i}"), 1).otherwise(0)
-        for i in range(H.MINHASH_K)
-    )
-    return (
-        cand.join(sa, "doc_id")
-        .join(sb, "dup_of")
-        .select(
-            "doc_id",
-            "dup_of",
-            (matches / F.lit(float(H.MINHASH_K))).alias("est_jaccard"),
-        )
-        .where(F.col("est_jaccard") >= MINHASH_THRESHOLD)
-    )
+    return _minhash_verify(cand, sig_batch, sig_index, "doc_id", "dup_of")
 
 
 @query("dedup_minhash_lsh", _minhash_oracle())
@@ -520,7 +549,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Nine query entrypoints consume the same near-dup pair graph of the
 # documents table (cluster_cc, pagerank, triangles, k-core, LPA, BFS,
 # keep-best, dup-rate, leakage audit). Recomputing MinHash signatures
-# per query dominated their bench cost (VERDICT r03 perf audit), and
+# per query dominated their bench cost, and
 # it misrepresents the real pipeline, where signatures are computed
 # once per corpus snapshot and every downstream job reads the pair
 # frame. ``artifacts.shared`` memoizes it per session and publishes it
@@ -536,9 +565,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # banding, cap or threshold semantics) so a stale published frame can
 # never serve the new code — the constants below ride the kind name,
 # but logic changes need this literal (see pq._PQ_CHAIN_REV).
-# r2: NULL-id docs excluded from the signature population (r11 fuzz
-# seed 69) — a stale r1 pair frame could carry NULL-doc bucket-cap
-# effects.
+# Rev 2: NULL-id docs left the signature population, so a rev-1 pair
+# frame could carry NULL-doc bucket-cap effects.
 _LSH_PAIRS_CHAIN_REV = 2
 
 
@@ -605,33 +633,17 @@ def incremental_lsh_matches(
 
 
 def _incremental_oracle() -> str:
-    mins = ",\n           ".join(
-        f"MIN({H.minhash_expr(i, 'h')}) AS m{i}" for i in range(H.MINHASH_K)
-    )
     key = H.md5_int64("CAST(doc_id AS VARCHAR)", duck=True)
-
-    melt = _band_melt_sql
-
-    matches = " + ".join(
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END"
-        for i in range(H.MINHASH_K)
-    )
-    return f"""
-    WITH t AS (SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents
-           WHERE doc_id IS NOT NULL),  -- pair-identity index: see _shingle_hashes
-    sh AS (SELECT doc_id, unnest({H.shingles_sql("toks", SHINGLE_N, duck=True)}) AS s
-           FROM t),
-    hx AS (SELECT doc_id, {H.md5_int64("s", duck=True)} AS h FROM sh),
-    sig AS (SELECT doc_id, {mins} FROM hx GROUP BY doc_id),
+    return f"""{_MINHASH_SIG_CTES},
     bsig AS (SELECT * FROM sig
              WHERE ({key} % {INCR_BATCH_MOD}) = {INCR_BATCH_REM}),
     isig AS (SELECT * FROM sig
              WHERE ({key} % {INCR_BATCH_MOD}) != {INCR_BATCH_REM}),
     bbands AS (
-    {melt("bsig")}
+    {_band_melt_sql("bsig", _MINHASH_BAND_KEYS)}
     ),
     ibands AS (
-    {melt("isig")}
+    {_band_melt_sql("isig", _MINHASH_BAND_KEYS)}
     ),
     iok AS (
       SELECT band_id, band_val FROM ibands
@@ -643,12 +655,7 @@ def _incremental_oracle() -> str:
       JOIN (SELECT ib.* FROM ibands ib JOIN iok USING (band_id, band_val)) i
         USING (band_id, band_val)
     )
-    SELECT cand.doc_id, cand.dup_of,
-           ({matches}) / {float(H.MINHASH_K)} AS est_jaccard
-    FROM cand
-    JOIN bsig sa ON cand.doc_id = sa.doc_id
-    JOIN isig sb ON cand.dup_of = sb.doc_id
-    WHERE ({matches}) / {float(H.MINHASH_K)} >= {MINHASH_THRESHOLD}
+    {_minhash_verify_sql("bsig", "isig", "doc_id", "dup_of")}
     """
 
 
@@ -663,56 +670,120 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # SimHash signatures
 # ---------------------------------------------------------------------------
-def _simhash_oracle() -> str:
-    sums = ",\n           ".join(
-        f"SUM(CASE WHEN ((h >> {j}) & 1) = 1 THEN 1 ELSE -1 END) AS s{j}"
-        for j in range(H.SIMHASH_BITS)
+def _simhash_votes(src: str, bits: int, prefix: str) -> list[str]:
+    """Per-bit votes over a doc's word hashes ``src``: ``{prefix}{j}``
+    sums +1 for each hash with bit j set and -1 for each without."""
+    return [
+        f"SUM(CASE WHEN (({src} >> {j}) & 1) = 1 THEN 1 ELSE -1 END)"
+        f" AS {prefix}{j}"
+        for j in range(bits)
+    ]
+
+
+def _simhash_pack_sql(prefix: str, bits: int) -> str:
+    """The votes ``{prefix}0..`` packed into a BIGINT whose bit j is
+    set iff vote j is positive."""
+    terms = " + ".join(
+        f"CASE WHEN {prefix}{j} > 0 THEN {1 << j} ELSE 0 END"
+        for j in range(bits)
     )
-    combine = " + ".join(
-        f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END"
-        for j in range(H.SIMHASH_BITS)
-    )
+    return f"CAST({terms} AS BIGINT)"
+
+
+# (output column, md5 slice feeding it) per signature half, and the
+# bits per half: the 16-bit signature, and the 64-bit one as two 32-bit
+# halves so no expression touches the int64 sign bit in either engine.
+_SIMHASH16 = ((("simhash", H.md5_int64),), H.SIMHASH_BITS)
+_SIMHASH64 = ((("sim_hi", H.md5_int64_hi), ("sim_lo", H.md5_int64)), 32)
+
+
+def _simhash_parts(
+    spec: tuple, *, duck: bool
+) -> tuple[list[str], list[str], list[str]]:
+    """A SimHash signature over a ``(doc_id, w)`` word relation as three
+    select lists: word hashes, per-bit votes (aggregated per doc_id)
+    and the packed halves."""
+    halves, bits = spec
+    hashes, votes, packs = [], [], []
+    for i, (col, md5) in enumerate(halves):
+        hashes.append(f"{md5('w', duck=duck)} AS h{i}")
+        votes += _simhash_votes(f"h{i}", bits, f"v{i}_")
+        packs.append(f"{_simhash_pack_sql(f'v{i}_', bits)} AS {col}")
+    return hashes, votes, packs
+
+
+def _simhash_sql(words: str, spec: tuple) -> str:
+    """Oracle signature of the word relation ``words``."""
+    hashes, votes, packs = _simhash_parts(spec, duck=True)
     return f"""
-    WITH t AS (SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents),
-    tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS w FROM t),
-    hx AS (SELECT doc_id, {H.md5_int64("w", duck=True)} AS h FROM tok),
-    bits AS (SELECT doc_id, {sums} FROM hx GROUP BY doc_id)
-    SELECT doc_id, CAST({combine} AS BIGINT) AS simhash FROM bits
-    """
+    SELECT doc_id, {", ".join(packs)} FROM (
+      SELECT doc_id, {", ".join(votes)}
+      FROM (SELECT doc_id, {", ".join(hashes)} FROM {words}) hx
+      GROUP BY doc_id) bits"""
 
 
-@query("dedup_simhash", _simhash_oracle())
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
+def _simhash_frame(words: DataFrame, spec: tuple) -> DataFrame:
+    """Engine twin of :func:`_simhash_sql`."""
+    hashes, votes, packs = _simhash_parts(spec, duck=False)
+    return (
+        words.selectExpr("doc_id", *hashes)
+        .groupBy("doc_id")
+        .agg(*map(F.expr, votes))
+        .selectExpr("doc_id", *packs)
+    )
+
+
+def _distinct_words(docs: DataFrame) -> DataFrame:
+    """(doc_id, w): each document's distinct text tokens, the word set
+    both SimHash signatures vote over."""
+    return docs.select(
         "doc_id", F.explode(F.array_distinct(F.expr(_TOKS_SPARK))).alias("w")
     )
-    hx = toks.select("doc_id", F.expr(H.md5_int64("w", duck=False)).alias("h"))
-    bits = hx.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.expr(f"(shiftright(h, {j}) & 1) = 1"), 1).otherwise(-1)
-            ).alias(f"s{j}")
-            for j in range(H.SIMHASH_BITS)
-        ]
-    )
-    combine = sum(
-        F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(0)
-        for j in range(H.SIMHASH_BITS)
-    )
-    return bits.select("doc_id", combine.cast("bigint").alias("simhash"))
+
+
+_SIMHASH_TOKEN_CTE = (
+    "t AS (SELECT doc_id, " + _TOKS_DUCK + " AS toks FROM documents),\n"
+    "    tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS w FROM t)"
+)
+
+
+@query(
+    "dedup_simhash", f"WITH {_SIMHASH_TOKEN_CTE}{_simhash_sql('tok', _SIMHASH16)}"
+)
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    return _simhash_frame(_distinct_words(docs), _SIMHASH16)
 
 
 # ---------------------------------------------------------------------------
 # 64-bit SimHash + Hamming-banded near-dup JOIN (Manku et al. WWW'07)
 # ---------------------------------------------------------------------------
-# 64 signature bits split as two 32-bit halves (sim_hi, sim_lo) so no
-# expression ever touches the int64 sign bit in either engine. Bands
-# are the four 16-bit quarters: by pigeonhole, hamming(a,b) <= 3 over
-# 64 bits forces at least one identical quarter, so the banded
-# candidate join is LOSSLESS at HAMMING_MAX = 3.
+# Bands are the four 16-bit quarters of (sim_hi, sim_lo): by pigeonhole,
+# hamming(a,b) <= 3 over 64 bits forces at least one identical quarter,
+# so the banded candidate join is LOSSLESS at HAMMING_MAX = 3.
 SIMHASH64_HAMMING_MAX = 3
 SIMHASH64_BUCKET_CAP = 100  # same skew rationale as LSH_BUCKET_CAP
+
+# The four 16-bit quarters of (sim_hi, sim_lo); band_id is the position.
+_SIMHASH64_QUARTERS = [
+    "(sim_hi >> 16)",
+    "(sim_hi & 65535)",
+    "(sim_lo >> 16)",
+    "(sim_lo & 65535)",
+]
+
+
+def _hamming_sql(*, duck: bool) -> str:
+    """Hamming distance (INT) between the 64-bit signature rows ``sa``
+    and ``sb``."""
+
+    def xor(half: str) -> str:
+        if duck:  # DuckDB's ^ is power
+            return f"xor(sa.{half}, sb.{half})"
+        return f"(sa.{half} ^ sb.{half})"
+
+    bits = f"bit_count({xor('sim_hi')}) + bit_count({xor('sim_lo')})"
+    return f"CAST({bits} AS INT)"
 
 
 def simhash64_signature(words: DataFrame) -> DataFrame:
@@ -720,83 +791,16 @@ def simhash64_signature(words: DataFrame) -> DataFrame:
     SimHash bit-vote. Word extraction is the caller's choice — distinct
     text tokens for documents, byte n-grams for binary payloads
     (operators/multimodal.py) — the vote/pack machinery is shared."""
-    hx = words.select(
-        "doc_id",
-        F.expr(H.md5_int64("w", duck=False)).alias("hlo"),
-        F.expr(H.md5_int64_hi("w", duck=False)).alias("hhi"),
-    )
-    sums = []
-    for half, src in (("lo", "hlo"), ("hi", "hhi")):
-        sums.extend(
-            F.sum(
-                F.when(F.expr(f"(shiftright({src}, {j}) & 1) = 1"), 1).otherwise(-1)
-            ).alias(f"{half}{j}")
-            for j in range(32)
-        )
-    bits = hx.groupBy("doc_id").agg(*sums)
-    combine = {
-        half: sum(
-            F.when(F.col(f"{half}{j}") > 0, F.lit(1 << j)).otherwise(0)
-            for j in range(32)
-        )
-        for half in ("lo", "hi")
-    }
-    return bits.select(
-        "doc_id",
-        combine["hi"].cast("bigint").alias("sim_hi"),
-        combine["lo"].cast("bigint").alias("sim_lo"),
-    )
+    return _simhash_frame(words, _SIMHASH64)
 
 
-def _simhash64_frame(docs: DataFrame) -> DataFrame:
-    """doc_id → 64-bit SimHash over distinct text tokens."""
-    return simhash64_signature(
-        docs.select(
-            "doc_id",
-            F.explode(F.array_distinct(F.expr(_TOKS_SPARK))).alias("w"),
-        )
-    )
-
-
-_SIMHASH64_TOKEN_CTE = (
-    "t AS (SELECT doc_id, " + _TOKS_DUCK + " AS toks FROM documents),\n"
-    "    tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS w FROM t)"
-)
-
-
-def _simhash64_oracle(words_cte: str = _SIMHASH64_TOKEN_CTE) -> str:
-    sums = ",\n           ".join(
-        f"SUM(CASE WHEN ((h{half} >> {j}) & 1) = 1 THEN 1 ELSE -1 END) AS {half}{j}"
-        for half in ("lo", "hi")
-        for j in range(32)
-    )
-    combine = {
-        half: " + ".join(
-            f"CASE WHEN {half}{j} > 0 THEN {1 << j} ELSE 0 END"
-            for j in range(32)
-        )
-        for half in ("lo", "hi")
-    }
-    band_rows = "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, {bid} AS band_id, {expr} AS band_val FROM sig"
-        for bid, expr in enumerate(
-            [
-                "(sim_hi >> 16)",
-                "(sim_hi & 65535)",
-                "(sim_lo >> 16)",
-                "(sim_lo & 65535)",
-            ]
-        )
-    )
+def _simhash64_oracle(words_cte: str = _SIMHASH_TOKEN_CTE) -> str:
+    sides = _pair_sides_sql("cand", "sig", "sig", "doc_a", "doc_b")
     return f"""
     WITH {words_cte},
-    hx AS (SELECT doc_id, {H.md5_int64("w", duck=True)} AS hlo,
-                  {H.md5_int64_hi("w", duck=True)} AS hhi FROM tok),
-    bits AS (SELECT doc_id, {sums} FROM hx GROUP BY doc_id),
-    sig AS (SELECT doc_id, CAST({combine["hi"]} AS BIGINT) AS sim_hi,
-                   CAST({combine["lo"]} AS BIGINT) AS sim_lo FROM bits),
+    sig AS ({_simhash_sql("tok", _SIMHASH64)}),
     bands AS (
-      {band_rows}
+    {_band_melt_sql("sig", _SIMHASH64_QUARTERS)}
     ),
     bcnt AS (SELECT band_id, band_val, COUNT(*) AS cnt
              FROM bands GROUP BY 1, 2),
@@ -809,12 +813,7 @@ def _simhash64_oracle(words_cte: str = _SIMHASH64_TOKEN_CTE) -> str:
       WHERE c.cnt <= {SIMHASH64_BUCKET_CAP}
     )
     SELECT doc_a, doc_b, hamming FROM (
-      SELECT doc_a, doc_b,
-             CAST(bit_count(xor(sa.sim_hi, sb.sim_hi))
-                  + bit_count(xor(sa.sim_lo, sb.sim_lo)) AS INT) AS hamming
-      FROM cand
-      JOIN sig sa ON cand.doc_a = sa.doc_id
-      JOIN sig sb ON cand.doc_b = sb.doc_id
+      SELECT doc_a, doc_b, {_hamming_sql(duck=True)} AS hamming FROM {sides}
     ) WHERE hamming <= {SIMHASH64_HAMMING_MAX}
     """
 
@@ -831,11 +830,8 @@ def simhash_hamming_pairs(
     is two xor+bit_count integer ops per candidate. Everything shuffles
     fixed-width ints; signatures are one pass over distinct tokens.
     """
-    # no caller-side _cached: hamming_pairs_from_signature persists
-    # the signature itself since r09 (a second wrap double-registered
-    # the frame; r09 second diff review)
     return hamming_pairs_from_signature(
-        _simhash64_frame(docs), bucket_cap=bucket_cap
+        simhash64_signature(_distinct_words(docs)), bucket_cap=bucket_cap
     )
 
 
@@ -843,38 +839,18 @@ def hamming_pairs_from_signature(
     sig: DataFrame, *, bucket_cap: int = SIMHASH64_BUCKET_CAP
 ) -> DataFrame:
     """Banded candidate generation + xor verify over any 64-bit
-    signature frame (doc_id, sim_hi, sim_lo)."""
+    signature frame (doc_id, sim_hi, sim_lo). Persists ``sig`` itself
+    (callers pass it unpersisted); release_cached_frames() frees it."""
     # sig feeds THREE subplans (band melt + both verify sides) and
-    # Spark has no cross-subtree scan CSE — unpersisted, the full
-    # vote aggregate (explode + 64-term groupBy) re-ran per consumer
-    # (r09 plan probe: 4 scans / ~4.1s for the payload variant; the
-    # r07 _frames lesson). release_cached_frames() frees it.
+    # Spark has no cross-subtree scan CSE: unpersisted, the vote
+    # aggregate (explode + 64-term groupBy) re-ran per consumer.
     sig = _cached(sig)
-    quarters = F.array(
-        F.expr("shiftright(sim_hi, 16)"),
-        F.expr("sim_hi & 65535"),
-        F.expr("shiftright(sim_lo, 16)"),
-        F.expr("sim_lo & 65535"),
-    )
-    bands = sig.select(
-        "doc_id", F.posexplode(quarters).alias("band_id", "band_val")
-    )
-    cand = capped_bucket_pairs(bands, bucket_cap)
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sim_hi").alias("ha"),
-        F.col("sim_lo").alias("la"),
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sim_hi").alias("hb"),
-        F.col("sim_lo").alias("lb"),
-    )
-    hamming = F.expr("bit_count(ha ^ hb) + bit_count(la ^ lb)").cast("int")
+    cand = capped_bucket_pairs(_melt_bands(sig, _SIMHASH64_QUARTERS), bucket_cap)
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
+        _pair_sides(cand, sig, sig, "doc_a", "doc_b")
+        .selectExpr(
+            "cand.doc_a", "cand.doc_b", f"{_hamming_sql(duck=False)} AS hamming"
+        )
         .where(F.col("hamming") <= SIMHASH64_HAMMING_MAX)
     )
 
@@ -901,8 +877,8 @@ def shingle_jaccard_pairs(
     ratio stays internally consistent. Intersection counts come from
     expanding pairs inside each (bounded) posting array rather than a
     postings self-join — see minhash_lsh_pairs for why that plan
-    shape wins — and since r09 each posting carries its doc's capped
-    size so the PPJoin length filter prunes inside the expansion and
+    shape wins — and each posting carries its doc's capped size so
+    the PPJoin length filter prunes inside the expansion and
     the final ratio needs no size joins. Call release_cached_frames()
     once the result is consumed.
     """
@@ -912,8 +888,8 @@ def shingle_jaccard_pairs(
     # identical rows): hot is bounded by total_postings/cap — tiny on
     # real corpora — so AQE broadcasts it and the postings frame
     # reaches the doc-grouping WITHOUT the extra hash exchange the
-    # inner join forced (r09: one of four full-postings shuffles
-    # removed; no hint — AQE owns the strategy, r08 rule).
+    # inner join forced (one of four full-postings shuffles; no hint
+    # — AQE owns the join strategy).
     hot = (
         hx.groupBy("h")
         .agg(F.count("*").alias("cnt"))
@@ -921,8 +897,8 @@ def shingle_jaccard_pairs(
         .select("h")
     )
     capped = hx.join(hot, "h", "left_anti")
-    # Per-doc capped size rides WITH every posting (r08 verdict #4,
-    # following the prefix-Jaccard rewrite): ONE doc-grouping yields
+    # Per-doc capped size rides WITH every posting (as in the
+    # prefix-Jaccard plan): ONE doc-grouping yields
     # (hs, n), the in-row re-explode rebuilds the postings carrying n
     # with no extra corpus scan, and the h-grouping collects
     # (doc_id, n) structs. The PPJoin LENGTH filter — lossless at the
@@ -1237,7 +1213,7 @@ def duplicate_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
     # distinct: components are over the SET of doc ids — a duplicated
     # doc_id row emitted two identical membership rows where the
-    # oracle's recursive UNION kept one (r09 degenerate sweep)
+    # oracle's recursive UNION kept one
     return (
         docs.select("doc_id")
         .distinct()
@@ -1318,14 +1294,14 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise cosine over the bounded subset, on the INTEGER grid.
 
-    r06 review catch: the original summed raw float products, whose
-    addition order is partition/engine-dependent — a pair near a 4-dp
-    rounding boundary (or at the threshold) could flip under the
-    bit-exact oracle gate. Components quantize to BIGINT at
+    Raw float products would sum in a partition/engine-dependent
+    order — a pair near a 4-dp rounding boundary (or at the
+    threshold) could flip under the bit-exact oracle gate. So
+    components quantize to BIGINT at
     COSINE_QUANT first (the module's standard idiom), so dp/n2 are
     exact integers and the only float ops (sqrt, one divide) run on
     identical inputs in both engines — bit-identical results, emitted
-    RAW (r07: the final ROUND(,4) was itself a divergence source).
+    RAW (a final ROUND(,4) would itself be a divergence source).
     Overflow headroom: |q| <= 1e4 so dp <= 64 * 1e8 << 2^63."""
     emb = load_table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") < COSINE_SUBSET
@@ -1355,12 +1331,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # RAW ratio, no ROUND: dp/n2 are exact ints, so both engines run
     # the identical IEEE tree (sqrt is correctly rounded) and the
     # double is bit-identical — while ROUND(double, 4) itself splits
-    # on near-tie doubles even with identical inputs (r07 review;
-    # threshold membership now also compares the identical raw value)
+    # on near-tie doubles even with identical inputs (threshold
+    # membership compares the identical raw value too)
     # positive-norm gate: a zero-norm vector (all components quantize
     # to 0) gives Spark NULL (dropped by the threshold) but DuckDB
     # 0/0 = NaN, which its total order ranks above the threshold —
-    # divergent row membership (r07 review)
+    # divergent row membership
     cos = F.when(
         (F.col("na2") > 0) & (F.col("nb2") > 0),
         F.col("dp") / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2"))),
@@ -1586,16 +1562,11 @@ def dedup_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_eval_oracle() -> str:
-    mins = ",\n           ".join(
-        f"MIN({H.minhash_expr(i, 'h')}) AS m{i}" for i in range(H.MINHASH_K)
-    )
-    band_rows = _band_melt_sql("sig")
-    # truth CTEs come from the SHARED set-semantics index spelling —
-    # the r08 in-row dedup changed _shingle_hashes for every Spark
-    # consumer, and this oracle's hand-built multiplicity copy would
-    # have diverged on within-doc hash collisions (r08 review caught
-    # it before it shipped); sig reads the same distinct hx0 (MIN is
-    # multiplicity-blind, so signatures are unchanged either way).
+    # truth reads the shared set-semantics index (shingle_index_ctes),
+    # the same postings every Spark consumer reads, so the engines
+    # agree on within-doc hash collisions; sig reads its distinct hx0
+    # (MIN is multiplicity-blind, so signatures match the other
+    # minhash oracles either way).
     return f"""{shingle_index_ctes()},
     common AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
@@ -1608,23 +1579,8 @@ def _lsh_eval_oracle() -> str:
                   JOIN sz sb ON doc_b = sb.doc_id
       WHERE c * 1.0 / (sa.n + sb.n - c) >= {JACCARD_THRESHOLD}
     ),
-    sig AS (SELECT doc_id, {mins} FROM hx0 GROUP BY doc_id),
-    bands AS (
-    {band_rows}
-    ),
-    bands_ok AS (
-      SELECT doc_id, band_id, band_val FROM (
-        SELECT doc_id, band_id, band_val,
-               COUNT(*) OVER (PARTITION BY band_id, band_val) AS bcnt
-        FROM bands
-      ) WHERE bcnt <= {LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands_ok a
-      JOIN bands_ok b ON a.band_id = b.band_id AND a.band_val = b.band_val
-                     AND a.doc_id < b.doc_id
-    ),
+    sig AS (SELECT doc_id, {", ".join(_MINHASH_MINS)}
+            FROM hx0 GROUP BY doc_id),{_LSH_CAND_CTES},
     m AS (
       SELECT tr.doc_a IS NOT NULL AS in_truth,
              ca.doc_a IS NOT NULL AS in_cand
@@ -1751,8 +1707,8 @@ def merge_span_islands(flagged: DataFrame, *extra_aggs) -> DataFrame:
     i.e. position gap <= G — not just gap 1. (With a gap-1-only rule,
     flagged positions p and p+2 would yield two spans whose coverage
     intervals OVERLAP, double-counting span_tokens and breaking the
-    cut == sum(span_tokens) conservation the removal pass relies on;
-    round-5 review finding.) Within a span, coverage is contiguous —
+    cut == sum(span_tokens) conservation the removal pass relies
+    on.) Within a span, coverage is contiguous —
     consecutive flagged windows overlap/touch — so span_tokens =
     end - start + 1 is the exact union size, while interior windows
     at UNflagged positions need not themselves be duplicated. Extra
@@ -1812,7 +1768,7 @@ def span_removal_frame(docs: DataFrame) -> DataFrame:
     # oracle's cut CTE): otherwise Spark's size(NULL) = -1 feeds
     # sequence(1, -1) = [1, 0, -1] and md5(NULL) while DuckDB yields
     # NULL n_tokens and md5('') — full-row divergence on any corpus
-    # with a NULL-text document (r06 review catch).
+    # with a NULL-text document.
     t = docs.select(
         "doc_id", F.expr(f"coalesce({_TOKS_SPARK}, array())").alias("toks")
     )
@@ -1963,9 +1919,9 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SN_WINDOW-1 neighbors in that order — O(w*n) candidate pairs by
 # construction, no pair-space blowup possible. At 100 TB the sort is a
 # range-partitioned shuffle (Spark's sort machinery) decomposed into
-# size-adaptive contiguous slices — NOT one window task per language (r10
-# verdict #1: one dominant language would otherwise sort the whole
-# corpus in a single task). Each slice sorts independently; a tiny
+# size-adaptive contiguous slices — NOT one window task per language
+# (one dominant language would otherwise sort the whole corpus in a
+# single task). Each slice sorts independently; a tiny
 # per-slice count frame turns local row numbers into global positions,
 # and neighbor pairs come from an equi-join on (lang, position) — so a
 # neighborhood that spans a slice boundary (even across several
@@ -1995,10 +1951,10 @@ def shared_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Published ``_shingle_hashes`` postings of the documents table —
     the shared first stage of shingle-Jaccard, containment, MinHash
     signatures, and the LSH quality audit. The tokenize→shingle→md5
-    explode is the dominant scan of every consumer (r06 review), and
-    it is a deterministic corpus derivation, so it rides the same
+    explode is the dominant scan of every consumer, and it is a
+    deterministic corpus derivation, so it rides the same
     session-memo + published-artifact tier as the LSH pair frame and
-    the token postings (r11 verdict #6): a cold process reads the
+    the token postings: a cold process reads the
     published postings instead of re-shingling the corpus. Every
     documents-table shingle query reads this frame, including the
     ``shared_lsh_pairs`` build, so a session shingles the corpus
@@ -2024,8 +1980,7 @@ def shared_token_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     any future token-set verifier shares it). A deterministic corpus
     derivation, so it rides the same session-memo + published-artifact
     tier as the LSH pair frame: a cold process reads the published
-    postings instead of re-paying the explode→distinct shuffle (r10
-    verdict #1b)."""
+    postings instead of re-paying the explode→distinct shuffle."""
     h = H.md5_int64("tok", duck=False)
 
     def _build() -> dict[str, DataFrame]:
@@ -2062,7 +2017,7 @@ def _sn_oracle() -> str:
       -- engines' LEAST/GREATEST SKIP nulls, so a (NULL, x) neighbor
       -- pair silently becomes the self-pair (x, x) — and the two
       -- engines order NULL ids differently, pairing the NULL row
-      -- with different neighbors (r11 fuzz)
+      -- with different neighbors
       SELECT doc_id, lang, substr(lower(text), 1, {SN_KEY_LEN}) AS k
       FROM documents WHERE doc_id IS NOT NULL
     ),
@@ -2077,7 +2032,7 @@ def _sn_oracle() -> str:
     -- SET of distinct-identity pairs: duplicate doc_ids hold two
     -- window rows, re-emitting (a, b) per adjacency (the multiplicity
     -- drove c past min(na, nb) and the denominator to zero) and
-    -- pairing a doc with its own other row (r11 fuzz seed 125)
+    -- pairing a doc with its own other row
     pairs AS (SELECT DISTINCT a, b FROM pairs0 WHERE a <> b),
     tok AS (
       SELECT DISTINCT doc_id, {h} AS h
@@ -2106,7 +2061,7 @@ def sorted_neighborhood_candidates(
 ) -> DataFrame:
     """``(a, b)`` candidate pairs: each doc with its next SN_WINDOW-1
     followers in ``(lang, k NULLS LAST, doc_id)`` order, WITHOUT a
-    single-task per-language sort (r10 verdict #1a).
+    single-task per-language sort.
 
     Decomposition (``functions/windows.sliced_row_number``): a range
     exchange slices the composite sort order into contiguous,
@@ -2144,7 +2099,7 @@ def sorted_neighborhood_candidates(
         F.col("gpos").alias("r_pos"),
     )
     # null-SAFE on lang: NULL lang is a window GROUP in the oracle's
-    # PARTITION BY, and a plain equi-join dropped its pairs (r11 fuzz)
+    # PARTITION BY, and a plain equi-join would drop its pairs
     return (
         tgt.join(
             nxt,
@@ -2160,8 +2115,8 @@ def sorted_neighborhood_candidates(
         # same (a, b) was emitted per adjacency and the verify join's
         # multiplicity-counted intersection c exceeded min(na, nb) —
         # driving the Jaccard denominator (na + nb - c) to ZERO (ANSI
-        # div crash, r11 fuzz seed 125); and a doc paired with its own
-        # other row is an identity self-pair, not a near-dup verdict
+        # div crash); and a doc paired with its own other row is an
+        # identity self-pair, not a near-dup verdict
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
@@ -2191,7 +2146,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.expr(f"substr(lower(text), 1, {SN_KEY_LEN})").alias("k"),
-    )  # NULL ids can't pair — see the oracle note (r11 fuzz)
+    )  # NULL ids can't pair — see the oracle note
     pairs = sorted_neighborhood_candidates(t)
     # published artifact (memo-persisted): feeds both join arms AND
     # the size agg (3 consumers)

@@ -346,8 +346,8 @@ _Q = 10000
 # CASE len>0 AND no-bad-element: DuckDB's list_aggregate sums an
 # EMPTY list to NULL while Spark's aggregate folds it to the 0 init,
 # a NULL ELEMENT is skipped by DuckDB's 'sum' but NULL-propagates
-# through Spark's fold (r09 sweep + diff review), and a NaN/Inf
-# element aborts the BIGINT cast in both engines (r10 third wave) —
+# through Spark's fold, and a NaN/Inf element aborts the BIGINT
+# cast in both engines —
 # pin both engines to NULL for empty/NULL/NULL-or-non-finite-element
 # embeddings (mass unmeasurable). BAD_ELEM_LAMBDA is the one shared
 # spelling (operators/similarity.py).
@@ -437,7 +437,7 @@ N_EXPORT_SHARDS = 16
       -- keyless (NULL doc_id) items cannot be manifested: they hash
       -- to a NULL shard whose members_fp diverged between engines
       -- (Spark collect_list skips the NULL id -> md5(''), DuckDB's
-      -- array_to_string nulls the whole fp; r09 degenerate sweep)
+      -- array_to_string nulls the whole fp)
       SELECT doc_id,
              ({H.md5_int64("CAST(doc_id AS VARCHAR)", duck=True)})
                % {N_EXPORT_SHARDS} AS shard,
@@ -458,9 +458,8 @@ def multimodal_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").where("doc_id IS NOT NULL")
     )
     # plain %: md5_int64 is constructed non-negative ([0, 2^32) —
-    # hashing.py's contract every other consumer relies on); the old
-    # sign-fix double-mod falsely signaled the hash could be negative
-    # (r08 review)
+    # hashing.py's contract every other consumer relies on), so no
+    # sign-fix double-mod
     shard = F.expr(
         f"({H.md5_int64('CAST(doc_id AS STRING)', duck=False)})"
         f" % {N_EXPORT_SHARDS}"

@@ -20,8 +20,6 @@ stream side is stateless; the benchmark state is static.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..pipeline.lake import write_batch_partition as _write_batch_partition
@@ -48,26 +46,14 @@ def build_benchmark(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     return bench, bloom
 
 
-# Sentinel: distinguishes "caller omitted carve_benchmark" (warn once
-# about the default flip, then behave as False) from an explicit
-# False. Remove with the warning after one release.
-_CARVE_UNSET: object = object()
-
-
 def screen_batch(
     batch_docs: DataFrame,
     bench: DataFrame,
     bloom: DataFrame,
     *,
-    carve_benchmark: bool | object = _CARVE_UNSET,
+    carve_benchmark: bool = False,
 ) -> DataFrame:
     """One micro-batch of documents → contamination verdicts.
-
-    ``carve_benchmark`` defaults to ``False`` (screen everything). It
-    once defaulted to ``True``; callers relying on that must pass
-    ``carve_benchmark=True`` explicitly, and omitting the parameter
-    emits a one-release ``DeprecationWarning`` so existing external
-    callers see the semantic flip.
 
     The default screens EVERY arriving document — the correct posture
     for production crawl ingest, where nothing should silently bypass
@@ -81,16 +67,7 @@ def screen_batch(
     dangerous mode must be opt-in. With a
     carve, ``skipped_benchmark_docs`` accounts for what the screen did
     not verdict."""
-    if carve_benchmark is _CARVE_UNSET:
-        warnings.warn(
-            "screen_batch: carve_benchmark's default flipped True->False"
-            " (everything is screened now). Pass it explicitly;"
-            " this warning disappears after one release.",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-        carve_benchmark = False
-    corp, _ = _contamination_postings(batch_docs, carve=bool(carve_benchmark))
+    corp, _ = _contamination_postings(batch_docs, carve=carve_benchmark)
     survivors = bloom_prefilter(corp, bloom)
     return _contamination_report(survivors.join(bench, "h"))
 

@@ -8,13 +8,18 @@ the engine's semantics, under randomized inputs.
   first present one (in probe order) wins.
 - cross-engine hashing: Spark's md5→int64 and minhash permutations
   agree with DuckDB bit-for-bit on arbitrary unicode tokens.
+- shared SimHash/Hamming SQL: the one text both engines read gives
+  the same signatures and distances in Spark, DuckDB and a Python
+  reference, sign-adjacent bit 31 and all-ones halves included.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 
 import duckdb
+import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -98,21 +103,22 @@ def test_coalesce_probe_first_present_wins(spark, fields, n, data):
     assert [r["price_eur_mwh"] for r in rows] == values[winner]
 
 
-@SETTINGS
-@given(
-    tokens=st.lists(
-        st.text(
-            alphabet=st.characters(
-                blacklist_categories=("Cs",), blacklist_characters="'\"\\\x00"
-            ),
-            min_size=1,
-            max_size=20,
+TOKENS = st.lists(
+    st.text(
+        alphabet=st.characters(
+            blacklist_categories=("Cs",), blacklist_characters="'\"\\\x00"
         ),
         min_size=1,
-        max_size=8,
-        unique=True,
-    )
+        max_size=20,
+    ),
+    min_size=1,
+    max_size=8,
+    unique=True,
 )
+
+
+@SETTINGS
+@given(tokens=TOKENS)
 def test_hash_parity_spark_duckdb(spark, tokens):
     import pyspark.sql.functions as F
 
@@ -133,6 +139,93 @@ def test_hash_parity_spark_duckdb(spark, tokens):
             [t, t, t],
         ).fetchone()
         assert got[t] == (h, m0, m7), t
+    con.close()
+
+
+def _md5_half(w: str, start: int) -> int:
+    return int(hashlib.md5(w.encode()).hexdigest()[start : start + 8], 16)
+
+
+def _vote_pack(hashes: list[int], bits: int) -> int:
+    """Python reference SimHash: bit j set iff more hashes set it than not."""
+    return sum(
+        1 << j
+        for j in range(bits)
+        if sum(1 if (h >> j) & 1 else -1 for h in hashes) > 0
+    )
+
+
+# 32-bit signature halves: any value, plus the sign-adjacent bit 31
+# alone, the all-ones half and its complement below bit 31
+HALVES = st.one_of(
+    st.integers(0, 2**32 - 1), st.sampled_from([2**31, 2**32 - 1, 2**31 - 1])
+)
+
+
+@SETTINGS
+@given(
+    tokens=TOKENS,
+    votes=st.lists(st.integers(-2, 2), min_size=32, max_size=32),
+    sigs=st.lists(st.tuples(HALVES, HALVES), min_size=1, max_size=4),
+)
+def test_simhash_fragments_parity_spark_duckdb(spark, tokens, votes, sigs):
+    """The shared SimHash vote/pack and Hamming verify texts read alike
+    in Spark and DuckDB (the xor switch included) and match a Python
+    reference."""
+    from energy_data_pipeline_project_spark.operators import dedup as D
+
+    con = duckdb.connect()
+    words = spark.createDataFrame([(1, t) for t in tokens], "doc_id long, w string")
+    duck_words = "(SELECT 1 AS doc_id, unnest($1) AS w)"
+    lo = [_md5_half(t, 0) for t in tokens]
+    hi = [_md5_half(t, 8) for t in tokens]
+    for spec, want in (
+        (D._SIMHASH16, (1, _vote_pack(lo, 16))),
+        (D._SIMHASH64, (1, _vote_pack(hi, 32), _vote_pack(lo, 32))),
+    ):
+        got = D._simhash_frame(words, spec).collect()
+        assert [tuple(r) for r in got] == [want]
+        duck = con.execute(D._simhash_sql(duck_words, spec), [tokens]).fetchall()
+        assert duck == [want]
+
+    # pack alone: the drawn votes and all-positive votes (all-ones half)
+    cols = [f"lo{j}" for j in range(32)]
+    pack = D._simhash_pack_sql("lo", 32)
+    for v in (votes, [1] * 32):
+        want = sum(1 << j for j in range(32) if v[j] > 0)
+        row = spark.createDataFrame([v], ", ".join(f"{c} int" for c in cols))
+        assert row.selectExpr(pack).first()[0] == want
+        duck_row = ", ".join(f"{x} AS {c}" for x, c in zip(v, cols))
+        duck = con.execute(f"SELECT {pack} FROM (SELECT {duck_row})").fetchone()
+        assert duck[0] == want
+
+    # Hamming: each drawn signature with a partner two bits away (bit 31
+    # of sim_hi, bit 0 of sim_lo), and an all-ones signature with a
+    # partner one bit 31 away
+    rows = [r for h, l in sigs for r in ((h, l), (h ^ 2**31, l ^ 1))]
+    rows += [(2**32 - 1, 2**32 - 1), (2**31 - 1, 2**32 - 1)]
+    sig = [(i, h, l) for i, (h, l) in enumerate(rows)]
+    cand = [(a[0], b[0]) for a in sig for b in sig if a[0] < b[0]]
+    want = sorted(
+        (a[0], b[0], bin(a[1] ^ b[1]).count("1") + bin(a[2] ^ b[2]).count("1"))
+        for a in sig
+        for b in sig
+        if a[0] < b[0]
+    )
+    got = D._pair_sides(
+        spark.createDataFrame(cand, "doc_a long, doc_b long"),
+        *[spark.createDataFrame(sig, "doc_id long, sim_hi long, sim_lo long")] * 2,
+        "doc_a",
+        "doc_b",
+    ).selectExpr("cand.doc_a", "cand.doc_b", D._hamming_sql(duck=False))
+    assert sorted(tuple(r) for r in got.collect()) == want
+    con.register("sig", pd.DataFrame(sig, columns=["doc_id", "sim_hi", "sim_lo"]))
+    con.register("cand", pd.DataFrame(cand, columns=["doc_a", "doc_b"]))
+    sides = D._pair_sides_sql("cand", "sig", "sig", "doc_a", "doc_b")
+    duck = con.execute(
+        f"SELECT doc_a, doc_b, {D._hamming_sql(duck=True)} FROM {sides}"
+    ).fetchall()
+    assert sorted(duck) == want
     con.close()
 
 

@@ -5,8 +5,6 @@ verdicts are batch-local and the union over batches is exact)."""
 
 from __future__ import annotations
 
-import pytest
-
 from energy_data_pipeline_project_spark.operators.dedup import (
     dedup_contamination_bloom,
 )
@@ -73,12 +71,8 @@ def test_screening_accounts_for_every_arriving_doc(spark, tmp_path_factory):
     assert skipped, "fixture carve must be non-empty"
     assert not (carved & skipped), "carved screen never verdicts benchmark docs"
 
-    # omitted carve_benchmark: behaves as False AND emits the
-    # one-release DeprecationWarning about the r08 default flip
-    with pytest.warns(DeprecationWarning, match="carve_benchmark"):
-        full_df = screen_batch(docs, bench, bloom)
-    full = {r.doc_id for r in full_df.collect()}
-    # explicit False is the warning-free spelling of the new default
+    # an omitted carve_benchmark screens everything, as explicit False
+    full = {r.doc_id for r in screen_batch(docs, bench, bloom).collect()}
     explicit = {
         r.doc_id
         for r in screen_batch(
