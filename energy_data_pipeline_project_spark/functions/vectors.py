@@ -12,6 +12,34 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 
+# Valid-vector predicate, one spelling per engine: the embeddings
+# contract is non-NULL dim-64 arrays of FINITE floats, but real 100 TB
+# ingest leaks NULL/ragged rows and NaN/±Inf elements, and those KILL
+# whole jobs downstream (DuckDB list_dot_product rejects
+# dim-mismatch/NULL; numpy stacks ragged batches as object arrays; the
+# 1e4 integer-grid quantization casts NaN/Inf to BIGINT, which aborts
+# under Spark ANSI and errors in DuckDB — one non-finite element
+# crashed or diverged 13 vector queries). Malformed vectors are excluded at the source of each
+# vector operator — identically in the oracle — so one corrupt row
+# degrades to "not indexed", never to a dead job.
+EMB_DIM = 64
+# The bad-ELEMENT lambda body, shared by both engines' spellings and
+# by every inline fold guard in hof/multimodal/embedding queries:
+# NULL, NaN, or ±Inf — any of them makes the vector unmeasurable.
+BAD_ELEM_LAMBDA = (
+    "x -> x IS NULL OR isnan(CAST(x AS DOUBLE))"
+    " OR abs(CAST(x AS DOUBLE)) = CAST('Infinity' AS DOUBLE)"
+)
+VALID_VEC_SPARK = (
+    f"(embedding IS NOT NULL AND size(embedding) = {EMB_DIM}"
+    f" AND NOT exists(embedding, {BAD_ELEM_LAMBDA}))"
+)
+VALID_VEC_DUCK = (
+    f"(embedding IS NOT NULL AND len(embedding) = {EMB_DIM}"
+    f" AND len(list_filter(embedding, {BAD_ELEM_LAMBDA})) = 0)"
+)
+
+
 def as_double(col: str) -> Column:
     """Cast array<float> → array<double> so accumulation is f64."""
     return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")

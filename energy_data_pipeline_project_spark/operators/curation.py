@@ -36,7 +36,16 @@ from ..pipeline import artifacts as A
 from ..sources.tables import load_table
 from ._registry import make_registry
 from . import dedup as D
-from .similarity import EMB_DIM, VALID_VEC_DUCK, VALID_VEC_SPARK
+from .clustering import (
+    GRID_QUANT,
+    argmin_key_sql,
+    distance_sql,
+    grid_sql,
+    melt_cte,
+    nearest_cte,
+    seed_cte,
+)
+from .similarity import EMB_DIM, VALID_VEC_SPARK
 from .timeseries import _CENTS_TPL, _cents  # noqa: E402
 from .dedup import (
     COSINE_QUANT,
@@ -56,14 +65,17 @@ _TOKS_SPARK = H.tokens_sql("text", duck=False)
 # ---------------------------------------------------------------------------
 # Facebook's SemDeDup (Abbas et al. 2023, public) deduplicates web-scale
 # corpora by k-means-clustering embeddings and comparing cosine
-# similarity only within each cluster. The kmeans machinery is shared
-# with operators/clustering.py: quantize to an integer grid so the
-# assignment is EXACT and reproducible in DuckDB, assign each vector to
-# its nearest seed centroid (vec_id < K, ties to lowest cluster id via
-# a composite integer key), then compute exact float cosine for
-# within-cluster pairs only.
+# similarity only within each cluster. The assignment is one step of
+# operators/clustering.py's integer-grid Lloyd step, so it is EXACT and
+# reproducible in DuckDB: each vector goes to its nearest seed centroid
+# (vec_id < K, ties to the lowest cluster id via the composite argmin
+# key); then exact float cosine is computed for within-cluster pairs
+# only. The engine keeps each vector as one row holding its grid array
+# and folds the distance over the array (``semantic_cluster_assignment``);
+# the oracle runs the shared melt-form CTEs. Both sum a duplicated
+# vec_id's distance over every pair of copies.
 SEM_K = 8
-SEM_QUANT = 10000
+SEM_QUANT = GRID_QUANT  # the Lloyd grid, under its historical name
 SEM_THRESHOLD = 0.3  # calibrated: testdata embedding pairs max out ~0.5
 
 
@@ -71,35 +83,24 @@ def _semantic_oracle() -> str:
     # qv rides the SAME integer grid as dedup_embedding_cosine
     # (ROUND at COSINE_QUANT), so within-cluster cosines are exactly
     # the global operator's values where both report a pair (pinned
-    # by tests/test_curation_ops.py); val (FLOOR at SEM_QUANT) stays
-    # the kmeans-idiom assignment grid. Integer dp/n2 sums are
-    # partition-order-independent, where float sums are not.
-    k, q, t = SEM_K, SEM_QUANT, SEM_THRESHOLD
+    # by tests/test_curation_ops.py); val (the Lloyd grid) stays the
+    # assignment grid. Integer dp/n2 sums are partition-order-independent,
+    # where float sums are not.
+    k, t = SEM_K, SEM_THRESHOLD
+    qv = f"CAST(ROUND(CAST(u['v'] AS DOUBLE) * {COSINE_QUANT}, 0) AS BIGINT) AS qv"
+    keys = ("vec_id",)
+    dists = distance_sql("m", "cent", keys=keys, cid="cluster")
+    asn = nearest_cte(
+        "asn", f"({dists})", keys=keys, cid="cluster", mult=k, decode=True
+    )
     return f"""
-    WITH m AS (
-      -- VALID_VEC: a NaN/Inf element aborts the integer-grid cast in
-      -- both engines
-      SELECT vec_id, u['d'] AS dim,
-             CAST(FLOOR(CAST(u['v'] AS DOUBLE) * {q}) AS BIGINT) AS val,
-             CAST(ROUND(CAST(u['v'] AS DOUBLE) * {COSINE_QUANT}, 0)
-                  AS BIGINT) AS qv
-      FROM (SELECT vec_id,
-                   unnest(list_transform(generate_series(1, len(embedding)),
-                          i -> {{'d': i, 'v': embedding[i]}})) AS u
-            FROM embeddings WHERE {VALID_VEC_DUCK})
-    ), cent AS (
-      SELECT vec_id AS cluster, dim, val AS cval FROM m WHERE vec_id < {k}
-    ), asn AS (
-      SELECT vec_id, CAST(MIN(dist * {k} + cluster) % {k} AS INT) AS cluster
-      FROM (SELECT m.vec_id, c.cluster,
-                   SUM((m.val - c.cval) * (m.val - c.cval)) AS dist
-            FROM m JOIN cent c USING (dim)
-            GROUP BY 1, 2)
-      GROUP BY vec_id
-    ), nrm AS (SELECT vec_id, CAST(SUM(qv * qv) AS BIGINT) AS n2
+    WITH {melt_cte("m", extra=[qv])},
+    {seed_cte("cent", "m", k=k, cid="cluster")},
+    {asn},
+    nrm AS (SELECT vec_id, CAST(SUM(qv * qv) AS BIGINT) AS n2
                FROM m GROUP BY 1),
     ec AS (
-      SELECT m.vec_id, asn.cluster, m.dim, m.qv
+      SELECT m.vec_id, CAST(asn.cluster AS INT) AS cluster, m.dim, m.qv
       FROM m JOIN asn USING (vec_id)
     ), dots AS (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.cluster AS cluster,
@@ -125,19 +126,17 @@ def _int_sum(expr: str) -> Column:
 
 def _semantic_grids(emb: DataFrame) -> DataFrame:
     """``(vec_id, val, qv)`` — one row per valid embeddings row: its
-    embedding on the FLOOR grid at SEM_QUANT (assignment) and on the
+    embedding on the Lloyd grid (assignment) and on the
     ROUND grid at COSINE_QUANT (pairs; dedup_embedding_cosine's grid,
     so within-cluster cosines equal the global operator's exactly).
     VALID_VEC mirrors the oracle, so each array holds exactly EMB_DIM
     finite elements."""
-    x = "CAST(x AS DOUBLE)"
     return emb.where(VALID_VEC_SPARK).select(
         "vec_id",
+        F.expr(f"transform(embedding, x -> {grid_sql('x')})").alias("val"),
         F.expr(
-            f"transform(embedding, x -> CAST(FLOOR({x} * {SEM_QUANT}) AS BIGINT))"
-        ).alias("val"),
-        F.expr(
-            f"transform(embedding, x -> CAST(ROUND({x} * {COSINE_QUANT}, 0) AS BIGINT))"
+            "transform(embedding,"
+            f" x -> CAST(ROUND(CAST(x AS DOUBLE) * {COSINE_QUANT}, 0) AS BIGINT))"
         ).alias("qv"),
     )
 
@@ -147,10 +146,12 @@ def semantic_cluster_assignment(
 ) -> DataFrame:
     """``(vec_id, cluster)`` — the SemDeDup coarse assignment: each
     valid vector's nearest seed centroid (valid ``vec_id < k``) by
-    squared FLOOR-grid distance, one exact integer fold per broadcast
-    centroid; ties go to the lowest cluster via ``dist * k + cluster``.
+    squared grid distance, one exact integer fold per broadcast
+    centroid; ties go to the lowest cluster via the shared argmin key.
     A vec_id held by several valid rows sums the distance over every
-    pair of copies, as the oracle's per-dimension join does. Public so
+    pair of copies, as the oracle's per-dimension join does. This
+    stays per-row, not the shared melt: the published frame and the
+    pair stage hold one array row per vector too. Public so
     tests can verify the decomposition is LOSSLESS (within one
     cluster, exactly the global pairs are found)."""
     g = _semantic_grids(emb)
@@ -166,9 +167,9 @@ def semantic_cluster_assignment(
         .agg(F.sum(dist).alias("dist"))
         .groupBy("vec_id")
         .agg(
-            (F.min(F.col("dist") * k + F.col("cluster")) % k)
-            .cast("int")
-            .alias("cluster")
+            F.expr(
+                f"CAST({argmin_key_sql(k, 'cluster')} % {k} AS INT) AS cluster"
+            )
         )
     )
 
@@ -265,7 +266,7 @@ def shared_semantic_assignment(
     round-trip bit-exact; the kind carries every chain constant."""
     kind = (
         f"sem_ec@r{_SEM_EC_CHAIN_REV}"
-        f"-k{SEM_K}q{SEM_QUANT}c{COSINE_QUANT}"
+        f"-k{SEM_K}q{GRID_QUANT}c{COSINE_QUANT}"
     )
     return A.shared(
         spark,

@@ -183,10 +183,15 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # already binary and the same hex-gram expression applies.
 
 # hex() casing differs across engines (Spark upper, DuckDB lower):
-# normalize with upper() on both sides.
+# normalize with upper() on both sides. The engine cuts each 4-byte
+# gram from the binary payload and hexes it: binary substring indexes
+# by byte, so the split is linear in payload length, where 8-character
+# slices of the hex string walked the UTF-8 string from its start on
+# every slice (quadratic). The empty payload's one empty gram is
+# filtered out, as the oracle's range yields none.
 _PAYLOAD_GRAMS_SPARK = (
-    "filter(transform(sequence(1, int(ceil(length(hx) / 8.0))), "
-    "i -> substring(hx, (i - 1) * 8 + 1, 8)), g -> g != '')"
+    "filter(transform(sequence(1, int(ceil(octet_length(payload) / 4.0))), "
+    "i -> upper(hex(substring(payload, (i - 1) * 4 + 1, 4)))), g -> g != '')"
 )
 
 
@@ -208,8 +213,7 @@ def multimodal_payload_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = attach_media(load_table(spark, sf_dir, "documents"))
     grams = docs.select(
-        "doc_id",
-        F.upper(F.hex(F.col("media.payload"))).alias("hx"),
+        "doc_id", F.col("media.payload").alias("payload")
     ).select(
         "doc_id",
         F.explode(

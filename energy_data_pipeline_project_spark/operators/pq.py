@@ -10,14 +10,15 @@ Search never reconstructs vectors: a per-query lookup table of
 and a vector's approximate distance is the sum of M table lookups
 (asymmetric distance computation, ADC).
 
-Exactness strategy (same as ``clustering.kmeans_embeddings``, whose
-Lloyd-on-integer-grid idiom this reuses per subspace): embeddings are
-quantized to an integer grid, all distances are exact int64 sums,
-argmins tie-break to the lowest code via a composite ``dist*K + code``
-key, and centroid updates floor the exact integer mean — so codebook
-training, encoding, AND the ADC ranking are bitwise identical in the
-DuckDB oracle, which replays the full chain as a generated CTE
-sequence. No floats anywhere, including the reported distances.
+Exactness strategy: every step is ``operators/clustering.py``'s
+integer-grid Lloyd step, run per subspace (``keys=("vec_id", "sub")``):
+embeddings are quantized to an integer grid, all distances are exact
+int64 sums, argmins tie-break to the lowest code via a composite
+``dist*K + code`` key, and centroid updates floor the exact integer
+mean — so codebook training, encoding, AND the ADC ranking are bitwise
+identical in the DuckDB oracle, which replays the full chain as a CTE
+sequence generated from the same SQL texts. No floats anywhere,
+including the reported distances.
 
 Scale shape: codebooks are M×K×(D/M) rows — always broadcast; training
 shuffles the melted frame once per Lloyd round (keyed by dim / vec);
@@ -38,7 +39,22 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..pipeline import artifacts as A
 from ..sources.tables import load_table
 from ._registry import make_registry
-from .similarity import N_QUERY_VECS, TOP_K, VALID_VEC_DUCK, VALID_VEC_SPARK
+from .clustering import (
+    GRID_QUANT,
+    centroid_distances,
+    centroid_means,
+    distance_sql,
+    grid_melt,
+    lloyd,
+    lloyd_ctes,
+    mean_cte,
+    melt_cte,
+    nearest_centroid,
+    nearest_cte,
+    rank_key_sql,
+    sq_dist_sql,
+)
+from .similarity import N_QUERY_VECS, TOP_K
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -47,7 +63,7 @@ PQ_M = 8  # subspaces
 PQ_SUBDIM = PQ_DIM // PQ_M
 PQ_K = 16  # codes per subspace (4 bits)
 PQ_ITERS = 3  # Lloyd rounds per sub-codebook
-PQ_QUANT = 10000  # integer grid, matches clustering.KMEANS_QUANT
+PQ_QUANT = GRID_QUANT  # the Lloyd grid, under its historical name
 
 
 def _code_key_case() -> str:
@@ -60,66 +76,20 @@ def _code_key_case() -> str:
     return f"(CASE sub {arms} END)"
 
 
-def _pq_melt_cte() -> str:
-    """``m``: the embeddings table melted to the integer grid."""
-    # MATERIALIZED: every consumer (Lloyd rounds, LUT, refine) re-reads
-    # this CTE; DuckDB 1.0 inlines by default, re-running the melt per
-    # reference — measured 13s→0.4s on the IVF-PQ oracle (r06).
-    q, sd = PQ_QUANT, PQ_SUBDIM
-    # VALID_VEC: a NaN/Inf element would abort the integer-grid cast
-    # in BOTH engines (r10 third-wave sweep) — malformed vectors are
-    # excluded from training and encoding, identically on both sides.
-    return f"""m AS MATERIALIZED (
-      SELECT vec_id, u['d'] AS dim, (u['d'] - 1) // {sd} AS sub,
-             CAST(FLOOR(CAST(u['v'] AS DOUBLE) * {q}) AS BIGINT) AS val
-      FROM (SELECT vec_id,
-                   unnest(list_transform(generate_series(1, len(embedding)),
-                          i -> {{'d': i, 'v': embedding[i]}})) AS u
-            FROM embeddings WHERE {VALID_VEC_DUCK})
-    )"""
-
-
 def _pq_lloyd_chain(src: str) -> str:
     """CTE chain ``c0 … codes``: PQ_ITERS Lloyd rounds of per-subspace
-    codebook training over any melted-grid CTE ``src`` with columns
-    (vec_id, dim, sub, val) — ``m`` for plain PQ, the residual frame
-    for IVF-PQ. Emits ``codes`` = final (vec_id, sub, code, sq_err)."""
+    codebook training over any melted-grid relation ``src`` with
+    columns (vec_id, dim, sub, val) — ``m`` for plain PQ, the residual
+    frame for IVF-PQ. Emits ``codes`` = final (vec_id, sub, code,
+    sq_err)."""
     k = PQ_K
-    parts = [
-        f""", c0 AS (
-      SELECT vec_id AS code, sub, dim, val AS cval
-      FROM {src} WHERE vec_id < {k}
-    )"""
-    ]
-    for it in range(1, PQ_ITERS + 1):
-        prev = f"c{it - 1}"
-        parts.append(
-            f""", a{it} AS (
-      SELECT vec_id, sub, MIN(dist * {k} + code) AS key
-      FROM (SELECT s.vec_id, s.sub, c.code,
-                   SUM((s.val - c.cval) * (s.val - c.cval)) AS dist
-            FROM {src} s JOIN {prev} c ON s.dim = c.dim
-            GROUP BY 1, 2, 3)
-      GROUP BY 1, 2
-    )"""
-        )
-        if it < PQ_ITERS:
-            parts.append(
-                f""", c{it} AS MATERIALIZED (
-      SELECT a.key % {k} AS code, s.sub, s.dim,
-             CAST(FLOOR(CAST(SUM(s.val) AS DOUBLE) / COUNT(*)) AS BIGINT)
-               AS cval
-      FROM {src} s JOIN a{it} a ON s.vec_id = a.vec_id AND s.sub = a.sub
-      GROUP BY 1, 2, 3
-    )"""
-            )
-    parts.append(
-        f""", codes AS MATERIALIZED (
+    chain = lloyd_ctes(
+        src, k=k, iters=PQ_ITERS, keys=("vec_id", "sub"), cid="code"
+    )
+    return f"""{chain}, codes AS MATERIALIZED (
       SELECT vec_id, sub, key % {k} AS code, key // {k} AS sq_err
       FROM a{PQ_ITERS}
     )"""
-    )
-    return "".join(parts)
 
 
 def _pq_oracle_prefix() -> str:
@@ -127,6 +97,14 @@ def _pq_oracle_prefix() -> str:
     (PQ_ITERS Lloyd rounds) → final code per (vec, sub)."""
     return f"""
     WITH {_pq_melt_cte()}{_pq_lloyd_chain("m")}"""
+
+
+def _pq_melt_cte() -> str:
+    """``m``: the embeddings table melted to the grid, with ``sub``.
+    MATERIALIZED: every consumer (Lloyd rounds, LUT, refine) re-reads
+    it, and DuckDB 1.0 inlines a CTE by default, re-running the melt
+    per reference (13 s → 0.4 s on the IVF-PQ oracle)."""
+    return melt_cte("m", subdim=PQ_SUBDIM, materialized=True)
 
 
 def _codes_oracle() -> str:
@@ -144,9 +122,8 @@ PQ_SHORTLIST = 50  # ADC candidates refined with exact distances
 def _refine_oracle_tail(shortlist_n: int) -> str:
     """Shared oracle tail: ADC shortlist → exact grid re-rank → top-k.
     Expects CTEs ``adist(query_id, neighbor_id, adist_sq)`` and the
-    melted frame ``m``; identical between plain PQ and IVF-PQ except
-    the shortlist size (r07 review: was copy-pasted in both oracles,
-    mirroring the copy-pasted Spark block)."""
+    melted frame ``m``; plain PQ and IVF-PQ differ only in the
+    shortlist size."""
     return f""", shortlist AS (
       SELECT query_id, neighbor_id FROM (
         SELECT query_id, neighbor_id,
@@ -156,8 +133,7 @@ def _refine_oracle_tail(shortlist_n: int) -> str:
       ) WHERE rn <= {shortlist_n}
     ), refined AS (
       SELECT s.query_id, s.neighbor_id,
-             CAST(SUM((mq.val - mn.val) * (mq.val - mn.val)) AS BIGINT)
-               AS dist_sq
+             CAST({sq_dist_sql("mq.val", "mn.val")} AS BIGINT) AS dist_sq
       FROM shortlist s
       JOIN m mq ON mq.vec_id = s.query_id
       JOIN m mn ON mn.vec_id = s.neighbor_id AND mn.dim = mq.dim
@@ -179,12 +155,12 @@ def _adc_oracle() -> str:
     # top-PQ_SHORTLIST per query is then re-ranked by the EXACT grid
     # distance (the standard PQ refine stage — ADC generates
     # candidates; the final order never depends on quantization error).
+    qm = f"(SELECT vec_id AS query_id, dim, sub, val FROM m WHERE vec_id < {N_QUERY_VECS})"
+    lut = distance_sql(
+        qm, f"c{PQ_ITERS - 1}", keys=("query_id", "sub"), cid="code", out="d2"
+    )
     return f"""{_pq_oracle_prefix()}, lut AS (
-      SELECT m.vec_id AS query_id, c.sub, c.code,
-             SUM((m.val - c.cval) * (m.val - c.cval)) AS d2
-      FROM m JOIN c{PQ_ITERS - 1} c ON m.dim = c.dim
-      WHERE m.vec_id < {N_QUERY_VECS}
-      GROUP BY 1, 2, 3
+      {lut}
     ), adist AS (
       SELECT l.query_id, cd.vec_id AS neighbor_id,
              CAST(SUM(l.d2) AS BIGINT) AS adist_sq
@@ -210,26 +186,12 @@ def _melted(spark: SparkSession, sf_dir: str) -> DataFrame:
     query. All-BIGINT, so the parquet round-trip is bit-exact."""
 
     def _build() -> dict[str, DataFrame]:
-        # VALID_VEC mirrors the oracle melt: one NaN/Inf element
-        # aborted the FLOOR→BIGINT grid cast under ANSI (r10 third-wave
-        # sweep)
-        emb = load_table(spark, sf_dir, "embeddings").where(VALID_VEC_SPARK)
-        return {
-            "melt": emb.select(
-                "vec_id", F.posexplode("embedding").alias("pos0", "v")
-            ).select(
-                "vec_id",
-                (F.col("pos0") + 1).cast("bigint").alias("dim"),
-                (F.col("pos0") / PQ_SUBDIM).cast("bigint").alias("sub"),
-                F.floor(F.col("v").cast("double") * PQ_QUANT)
-                .cast("bigint")
-                .alias("val"),
-            )
-        }
+        emb = load_table(spark, sf_dir, "embeddings")
+        return {"melt": grid_melt(emb, subdim=PQ_SUBDIM)}
 
     return A.shared(
         spark,
-        f"pq_melt@r{_PQ_CHAIN_REV}-q{PQ_QUANT}",
+        f"pq_melt@r{_PQ_CHAIN_REV}-q{GRID_QUANT}",
         sf_dir,
         "embeddings",
         ("melt",),
@@ -247,23 +209,6 @@ def _melted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # always trains on all vectors — stays hash-identical; the sampled
 # path is pinned separately by tests/test_pq.py.
 PQ_TRAIN_SAMPLE = 100_000
-
-
-def _assign(frame: DataFrame, cent: DataFrame) -> DataFrame:
-    """Per-(vec, sub) argmin code vs a broadcast codebook, as the
-    exact composite key ``min(dist*K + code)``."""
-    return (
-        frame.join(F.broadcast(cent.drop("sub")), "dim")
-        .groupBy("vec_id", "sub", "code")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("cval"))
-                * (F.col("val") - F.col("cval"))
-            ).alias("dist")
-        )
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.col("dist") * PQ_K + F.col("code")).alias("key"))
-    )
 
 
 def _train_codes(
@@ -287,31 +232,12 @@ def _train_codes(
         train = melted.where(
             F.expr(f"pmod(xxhash64(CAST(vec_id AS STRING)), {mod}) = 0")
         )
-    cent = melted.where(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("code"), "sub", "dim", F.col("val").alias("cval")
+    assign, cent = lloyd(
+        melted, k=k, iters=PQ_ITERS, keys=("vec_id", "sub"), cid="code",
+        train=train,
     )
-    for _ in range(PQ_ITERS - 1):
-        assign = _assign(train, cent)
-        cent = (
-            train.join(
-                assign.select(
-                    "vec_id", "sub", (F.col("key") % k).alias("code")
-                ),
-                ["vec_id", "sub"],
-            )
-            .groupBy("code", "sub", "dim")
-            .agg(
-                F.floor(F.sum("val").cast("double") / F.count("*"))
-                .cast("bigint")
-                .alias("cval")
-            )
-            .localCheckpoint(eager=True)
-        )
-    codes = _assign(melted, cent).select(
-        "vec_id",
-        "sub",
-        (F.col("key") % k).alias("code"),
-        F.expr(f"key DIV {k}").alias("sq_err"),
+    codes = assign.selectExpr(
+        "vec_id", "sub", f"key % {k} AS code", f"key DIV {k} AS sq_err"
     )
     return codes, cent
 
@@ -322,8 +248,8 @@ def _trained_m(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     chain, so in a single-session parity pass the second consumer
     reuses the first's frames.
 
-    Tiering (r08 verdict #3): ``artifacts.shared`` — session memo →
-    published lake artifact → Lloyd training. A COLD process reads the
+    Tiering: ``artifacts.shared`` — session memo → published lake
+    artifact → Lloyd training. A COLD process reads the
     code table + codebook published by an earlier run instead of
     retraining; the chain is integer-exact and deterministic, so
     read-back equals retraining bit for bit and the replayed-SQL
@@ -341,7 +267,7 @@ def _trained_m(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     art = A.shared(
         spark,
         f"pq_m@r{_PQ_CHAIN_REV}-m{PQ_M}k{PQ_K}i{PQ_ITERS}"
-        f"q{PQ_QUANT}s{PQ_TRAIN_SAMPLE}",
+        f"q{GRID_QUANT}s{PQ_TRAIN_SAMPLE}",
         sf_dir,
         "embeddings",
         ("codes", "centroids"),
@@ -390,17 +316,9 @@ def adc_distances(
     ``(query_id, dim, sub, val)``: per-query per-subspace lookup table
     against the codebook, candidate distance = sum of M lookups over
     the code frame. One spelling for the batch query (ann_topk_pq) and
-    the online server (streaming/serving.py), which had drifted into a
-    third copy of the block (r08 review)."""
-    lut = (
-        qm.join(F.broadcast(cent.drop("sub")), "dim")
-        .groupBy("query_id", "sub", "code")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("cval"))
-                * (F.col("val") - F.col("cval"))
-            ).alias("d2")
-        )
+    the online server (streaming/serving.py)."""
+    lut = centroid_distances(
+        qm, cent, keys=("query_id", "sub"), cid="code", out="d2"
     )
     return (
         codes.join(F.broadcast(lut), ["sub", "code"])
@@ -419,10 +337,8 @@ def _refine_topk(
     qm_query_col: str = "vec_id",
 ) -> DataFrame:
     """Shared refine stage: ADC shortlist → exact grid re-rank →
-    top-k, the Spark twin of ``_refine_oracle_tail`` (r07 review: the
-    ~45-line block was copy-pasted between plain PQ and IVF-PQ, so a
-    refine fix could land in only one of them; r08 retired the third
-    copy in streaming/serving.py). ``exclude_self`` drops
+    top-k, the Spark twin of ``_refine_oracle_tail``, shared by plain
+    PQ, IVF-PQ and streaming/serving.py. ``exclude_self`` drops
     query_id == neighbor_id matches — correct when queries ARE corpus
     vectors, wrong for external request ids; ``qm_query_col`` names
     the query-id column in ``qm`` (vec_id for the batch twins,
@@ -455,14 +371,7 @@ def _refine_topk(
             ["neighbor_id", "dim"],
         )
         .groupBy("query_id", "neighbor_id")
-        .agg(
-            F.sum(
-                (F.col("qval") - F.col("nval"))
-                * (F.col("qval") - F.col("nval"))
-            )
-            .cast("bigint")
-            .alias("dist_sq")
-        )
+        .agg(F.expr(f"CAST({sq_dist_sql('qval', 'nval')} AS BIGINT) AS dist_sq"))
     )
     wr = Window.partitionBy("query_id").orderBy("dist_sq", "neighbor_id")
     return (
@@ -507,7 +416,7 @@ IVFPQ_CELL_MULT = 1024  # composite-key multiplier; labels < 1024
 # at scale (Jégou et al. 2011 §V-A).
 IVFPQ_COARSE_ITERS = 2
 
-# Artifact algorithm signatures (r09 diff review): the lake artifact
+# Artifact algorithm signatures: the lake artifact
 # store is content-addressed by CORPUS fingerprint, which cannot see
 # code — a changed Lloyd chain would silently serve the OLD published
 # index while the replayed-SQL oracle computes the NEW chain. The
@@ -525,76 +434,76 @@ IVFPQ_SHORTLIST = 100
 
 
 def _ivfpq_head_ctes() -> str:
-    """CTEs up to the residual melt: coarse centroids, cell
+    """CTEs up to the residual melt: coarse centroids (label-seeded,
+    then IVFPQ_COARSE_ITERS Lloyd rounds), cell distances and
     assignment, and the residual frame ``rm``."""
     cm = IVFPQ_CELL_MULT
+    keys = ("vec_id",)
     parts = [
-        f""", co0 AS (
-      SELECT l.label AS cell, m.dim,
-             CAST(FLOOR(CAST(SUM(m.val) AS DOUBLE) / COUNT(*)) AS BIGINT)
-               AS ccval
-      FROM m JOIN (SELECT vec_id, label FROM embeddings) l
-             ON m.vec_id = l.vec_id
-      GROUP BY 1, 2
-    )"""
+        mean_cte(
+            "co0", "m", "(SELECT vec_id, label AS cell FROM embeddings)",
+            on=keys, by=("cell", "dim"), out="ccval",
+        )
     ]
     for it in range(1, IVFPQ_COARSE_ITERS + 1):
-        parts.append(
-            f""", ka{it} AS (
-      SELECT vec_id, MIN(dist * {cm} + cell) % {cm} AS cell
-      FROM (SELECT m.vec_id, c.cell,
-                   SUM((m.val - c.ccval) * (m.val - c.ccval)) AS dist
-            FROM m JOIN co{it - 1} c ON m.dim = c.dim
-            GROUP BY 1, 2)
-      GROUP BY 1
-    ), co{it} AS (
-      SELECT a.cell, m.dim,
-             CAST(FLOOR(CAST(SUM(m.val) AS DOUBLE) / COUNT(*)) AS BIGINT)
-               AS ccval
-      FROM m JOIN ka{it} a USING (vec_id)
-      GROUP BY 1, 2
-    )"""
+        dists = distance_sql(
+            "m", f"co{it - 1}", keys=keys, cid="cell", cval="ccval"
         )
-    parts.append(
-        f""", coarse AS MATERIALIZED (
+        parts += [
+            nearest_cte(
+                f"ka{it}", f"({dists})",
+                keys=keys, cid="cell", mult=cm, decode=True,
+            ),
+            mean_cte(
+                f"co{it}", "m", f"ka{it}",
+                on=keys, by=("cell", "dim"), out="ccval",
+            ),
+        ]
+    cdist = distance_sql("m", "coarse", keys=keys, cid="cell", cval="ccval")
+    parts += [
+        f"""coarse AS MATERIALIZED (
       SELECT cell, dim, ccval FROM co{IVFPQ_COARSE_ITERS}
-    ), cdist AS MATERIALIZED ("""
-    )
-    return "".join(parts) + f"""
-      SELECT m.vec_id, c.cell,
-             SUM((m.val - c.ccval) * (m.val - c.ccval)) AS dist
-      FROM m JOIN coarse c ON m.dim = c.dim
-      GROUP BY 1, 2
-    ), cells AS MATERIALIZED (
-      SELECT vec_id, MIN(dist * {cm} + cell) % {cm} AS cell
-      FROM cdist GROUP BY 1
-    ), rm AS MATERIALIZED (
+    )""",
+        f"""cdist AS MATERIALIZED (
+      {cdist}
+    )""",
+        nearest_cte(
+            "cells", "cdist",
+            keys=keys, cid="cell", mult=cm, decode=True, materialized=True,
+        ),
+        """rm AS MATERIALIZED (
       SELECT m.vec_id, m.dim, m.sub, m.val - co.ccval AS val
       FROM m JOIN cells ce ON m.vec_id = ce.vec_id
              JOIN coarse co ON co.cell = ce.cell AND co.dim = m.dim
-    )"""
+    )""",
+    ]
+    return "".join(f", {p}" for p in parts)
 
 
 def _ivfpq_oracle() -> str:
     np_, nq, cm = IVFPQ_NPROBE, N_QUERY_VECS, IVFPQ_CELL_MULT
+    # the query's residual against each probed cell, then its LUT
+    # against the residual codebook
+    resid = """(SELECT q.query_id, q.cell, m.dim, m.sub,
+                    m.val - co.ccval AS val
+             FROM qprobe q
+             JOIN m ON m.vec_id = q.query_id
+             JOIN coarse co ON co.cell = q.cell AND co.dim = m.dim)"""
+    lut = distance_sql(
+        resid, f"c{PQ_ITERS - 1}",
+        keys=("query_id", "cell", "sub"), cid="code", out="d2",
+    )
     return f"""
     WITH {_pq_melt_cte()}{_ivfpq_head_ctes()}{_pq_lloyd_chain("rm")},
     qprobe AS (
       SELECT vec_id AS query_id, cell FROM (
         SELECT vec_id, cell,
                ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY dist * {cm} + cell) AS rn
+                    ORDER BY {rank_key_sql(cm, "cell")}) AS rn
         FROM cdist WHERE vec_id < {nq}
       ) WHERE rn <= {np_}
     ), lut AS (
-      SELECT q.query_id, q.cell, cb.sub, cb.code,
-             SUM((m.val - co.ccval - cb.cval)
-                 * (m.val - co.ccval - cb.cval)) AS d2
-      FROM qprobe q
-      JOIN m ON m.vec_id = q.query_id
-      JOIN coarse co ON co.cell = q.cell AND co.dim = m.dim
-      JOIN c{PQ_ITERS - 1} cb ON cb.dim = m.dim
-      GROUP BY 1, 2, 3, 4
+      {lut}
     ), adist AS (
       SELECT l.query_id, cd.vec_id AS neighbor_id,
              CAST(SUM(l.d2) AS BIGINT) AS adist_sq
@@ -613,8 +522,8 @@ def _trained_ivfpq(
     residual codes, residual codebook). Deterministic Lloyd chains
     over checkpointed frames.
 
-    Tiering (r08 verdict #3): ``artifacts.shared`` — session memo →
-    published lake artifact → training. At 100 TB these four frames
+    Tiering: ``artifacts.shared`` — session memo → published lake
+    artifact → training. At 100 TB these four frames
     ARE the index a serving fleet reads — coarse centroids + codebook
     broadcast-sized, cells + codes the per-vector inverted file
     (partition by cell there) — so a cold session reads the published
@@ -624,7 +533,7 @@ def _trained_ivfpq(
     art = A.shared(
         spark,
         f"ivfpq@r{_IVFPQ_CHAIN_REV}-m{PQ_M}k{PQ_K}i{PQ_ITERS}"
-        f"q{PQ_QUANT}s{PQ_TRAIN_SAMPLE}"
+        f"q{GRID_QUANT}s{PQ_TRAIN_SAMPLE}"
         f"c{IVFPQ_CELL_MULT}ci{IVFPQ_COARSE_ITERS}",
         sf_dir,
         "embeddings",
@@ -643,53 +552,27 @@ def _train_ivfpq_chain(
     cm = IVFPQ_CELL_MULT
 
     lab = emb.select("vec_id", F.col("label").alias("cell"))
+    keys = ("vec_id",)
 
-    def _cell_means(assign: DataFrame) -> DataFrame:
-        return (
-            melted.join(assign, "vec_id")
-            .groupBy("cell", "dim")
-            .agg(
-                F.floor(F.sum("val").cast("double") / F.count("*"))
-                .cast("bigint")
-                .alias("ccval")
-            )
+    def nearest_cell(coarse: DataFrame) -> DataFrame:
+        return nearest_centroid(
+            melted, coarse, keys=keys, cid="cell", mult=cm, cval="ccval",
+            decode=True,
         )
 
-    # Label-seeded init, then IVFPQ_COARSE_ITERS Lloyd rounds on the
-    # integer grid (composite-key argmin, floored-int-mean update) so
-    # cells are geometric. Each centroid frame is cells x dims rows —
-    # checkpointed so the iteration doesn't stack re-computed plans.
-    coarse = _cell_means(lab).localCheckpoint(eager=True)
+    def cell_means(assign: DataFrame) -> DataFrame:
+        # cells x dims rows, checkpointed so the rounds don't stack
+        # re-computed plans
+        return centroid_means(
+            melted, assign, on=keys, by=("cell", "dim"), out="ccval"
+        ).localCheckpoint(eager=True)
+
+    # Label-seeded init, then IVFPQ_COARSE_ITERS Lloyd rounds so the
+    # cells are geometric.
+    coarse = cell_means(lab)
     for _ in range(IVFPQ_COARSE_ITERS):
-        assign = (
-            melted.join(F.broadcast(coarse), "dim")
-            .groupBy("vec_id", "cell")
-            .agg(
-                F.sum(
-                    (F.col("val") - F.col("ccval"))
-                    * (F.col("val") - F.col("ccval"))
-                ).alias("dist")
-            )
-            .groupBy("vec_id")
-            .agg(
-                (F.min(F.col("dist") * cm + F.col("cell")) % cm)
-                .alias("cell")
-            )
-        )
-        coarse = _cell_means(assign).localCheckpoint(eager=True)
-    cells = (
-        melted.join(F.broadcast(coarse), "dim")
-        .groupBy("vec_id", "cell")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("ccval"))
-                * (F.col("val") - F.col("ccval"))
-            ).alias("dist")
-        )
-        .groupBy("vec_id")
-        .agg((F.min(F.col("dist") * cm + F.col("cell")) % cm).alias("cell"))
-        .localCheckpoint(eager=True)
-    )
+        coarse = cell_means(nearest_cell(coarse))
+    cells = nearest_cell(coarse).localCheckpoint(eager=True)
     # materialize the residual frame: Lloyd training re-scans its
     # input once per round (plus the final full assignment), and
     # without this every scan re-runs the coarse/cdist/assignment
@@ -697,9 +580,7 @@ def _train_ivfpq_chain(
     rm = (
         melted.join(cells, "vec_id")
         .join(F.broadcast(coarse), ["cell", "dim"])
-        .select(
-            "vec_id", "dim", "sub", (F.col("val") - F.col("ccval")).alias("val")
-        )
+        .selectExpr("vec_id", "dim", "sub", "val - ccval AS val")
         .localCheckpoint(eager=True)
     )
     codes, cb = _train_codes(rm, n_vecs=_n_vecs(spark, sf_dir))
@@ -730,20 +611,10 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-call: full-corpus cell distances feed only the query probe
     # set, so the vec_id < N_QUERY_VECS predicate pushes through the
     # aggregate into the melted scan — serving cost, not training cost
-    cdist = (
-        melted.join(F.broadcast(coarse), "dim")
-        .groupBy("vec_id", "cell")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("ccval"))
-                * (F.col("val") - F.col("ccval"))
-            ).alias("dist")
-        )
+    cdist = centroid_distances(
+        melted, coarse, keys=("vec_id",), cid="cell", cval="ccval"
     )
-
-    wq = Window.partitionBy("vec_id").orderBy(
-        F.col("dist") * cm + F.col("cell")
-    )
+    wq = Window.partitionBy("vec_id").orderBy(F.expr(rank_key_sql(cm, "cell")))
     qprobe = (
         cdist.where(F.col("vec_id") < N_QUERY_VECS)
         .withColumn("rn", F.row_number().over(wq))
@@ -751,18 +622,16 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("query_id"), "cell")
     )
     qm = melted.where(F.col("vec_id") < N_QUERY_VECS)
-    lut = (
+    # the query's residual against each probed cell, then its LUT
+    # against the residual codebook
+    resid = (
         qm.withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(qprobe), "query_id")
         .join(F.broadcast(coarse), ["cell", "dim"])
-        .join(F.broadcast(cb.drop("sub")), "dim")
-        .groupBy("query_id", "cell", "sub", "code")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("ccval") - F.col("cval"))
-                * (F.col("val") - F.col("ccval") - F.col("cval"))
-            ).alias("d2")
-        )
+        .selectExpr("query_id", "cell", "dim", "sub", "val - ccval AS val")
+    )
+    lut = centroid_distances(
+        resid, cb, keys=("query_id", "cell", "sub"), cid="code", out="d2"
     )
     adist = (
         codes.join(cells, "vec_id")

@@ -50,9 +50,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import vectors as V
+from ..functions.vectors import (  # noqa: F401 (re-exported)
+    BAD_ELEM_LAMBDA,
+    EMB_DIM,
+    VALID_VEC_DUCK,
+    VALID_VEC_SPARK,
+)
 from ..pipeline import artifacts as A
 from ..sources.tables import load_table
 from ._registry import make_registry
+from .clustering import GRID_QUANT
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -83,33 +90,6 @@ LSH_TABLES = 12
 LSH_BITS = 3
 LSH_DIM = 64
 
-# Valid-vector predicate, one spelling per engine: the embeddings
-# contract is non-NULL dim-64 arrays of FINITE floats, but real 100 TB
-# ingest leaks NULL/ragged rows and NaN/±Inf elements, and those KILL
-# whole jobs downstream (DuckDB list_dot_product rejects
-# dim-mismatch/NULL; numpy stacks ragged batches as object arrays; the
-# 1e4 integer-grid quantization casts NaN/Inf to BIGINT, which aborts
-# under Spark ANSI and errors in DuckDB — the r10 third-wave sweep
-# found 13 vector queries crashing or diverging on ONE non-finite
-# element). Malformed vectors are excluded at the source of each
-# vector operator — identically in the oracle — so one corrupt row
-# degrades to "not indexed", never to a dead job.
-EMB_DIM = 64
-# The bad-ELEMENT lambda body, shared by both engines' spellings and
-# by every inline fold guard in hof/multimodal/embedding queries:
-# NULL, NaN, or ±Inf — any of them makes the vector unmeasurable.
-BAD_ELEM_LAMBDA = (
-    "x -> x IS NULL OR isnan(CAST(x AS DOUBLE))"
-    " OR abs(CAST(x AS DOUBLE)) = CAST('Infinity' AS DOUBLE)"
-)
-VALID_VEC_SPARK = (
-    f"(embedding IS NOT NULL AND size(embedding) = {EMB_DIM}"
-    f" AND NOT exists(embedding, {BAD_ELEM_LAMBDA}))"
-)
-VALID_VEC_DUCK = (
-    f"(embedding IS NOT NULL AND len(embedding) = {EMB_DIM}"
-    f" AND len(list_filter(embedding, {BAD_ELEM_LAMBDA})) = 0)"
-)
 
 
 def _plane(j: int) -> list[int]:
@@ -346,12 +326,6 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# IVF assignment grid — interpolated into the artifact signature AND
-# both engines' expressions so a grid change can never serve a stale
-# published centroid table (r09 second diff review)
-IVF_GRID_QUANT = 10000
-
-
 def _ivf_centroid_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(label, cv)`` coarse-centroid arrays on the exact integer-sum
     grid — the IVF training artifact.
@@ -378,7 +352,7 @@ def _ivf_centroid_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.expr(
                 "transform(CAST(embedding AS ARRAY<DOUBLE>),"
-                f" x -> FLOOR(x * {IVF_GRID_QUANT}.0))"
+                f" x -> FLOOR(x * {GRID_QUANT}.0))"
             ).alias("qde"),
         ).where(F.expr("size(filter(qde, x -> x != 0)) > 0"))
         ep = grid.select(
@@ -399,12 +373,14 @@ def _ivf_centroid_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the @r2-q{grid} suffix is the algorithm signature (see
     # pq._PQ_CHAIN_REV's comment): a changed derivation must never
-    # serve an index published by the old code. r2: VALID_VEC now
+    # serve an index published by the old code. GRID_QUANT reaches the
+    # suffix and both engines' assignment grids in ann_topk_ivf, so a
+    # grid change cannot read a stale centroid table. r2: VALID_VEC now
     # excludes NaN/Inf-element vectors, changing the training
     # population (r10 third-wave sweep).
     return A.shared(
         spark,
-        f"ivf_coarse@r2-q{IVF_GRID_QUANT}",
+        f"ivf_coarse@r2-q{GRID_QUANT}",
         sf_dir,
         "embeddings",
         ("centroids",),
@@ -417,7 +393,7 @@ def _ivf_centroid_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH e0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS de,
                       list_transform(CAST(embedding AS DOUBLE[]),
-                                     x -> FLOOR(x * 10000.0)) AS qde
+                                     x -> FLOOR(x * {GRID_QUANT}.0)) AS qde
                FROM embeddings WHERE {VALID_VEC_DUCK}),
     -- zero-grid-norm vectors (zero/empty/NULL embeddings, or magnitudes
     -- below the 1e-4 grid) have no direction on the assignment grid:
@@ -498,7 +474,7 @@ def ann_topk_ivf(
         # cosine keeps the raw components.
         F.expr(
             "transform(CAST(embedding AS ARRAY<DOUBLE>),"
-            " x -> FLOOR(x * 10000.0))"
+            f" x -> FLOOR(x * {GRID_QUANT}.0))"
         ).alias("qde"),
     )
 

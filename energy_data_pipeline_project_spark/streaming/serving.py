@@ -6,7 +6,11 @@ frame + codebooks, built once by ``operators/pq._train_codes``) is a
 static DataFrame; queries arrive as a stream; each micro-batch runs
 the identical ADC-shortlist → exact-refine pipeline the batch query
 (``ann_topk_pq``) runs, so online results match offline results
-row-for-row (pinned by tests/test_streaming_serving.py).
+row-for-row (pinned by tests/test_streaming_serving.py). The
+incoming query vectors are melted by the same integer-grid Lloyd step
+that built the index (``operators/clustering.grid_melt``), and their
+lookup tables come from its per-centroid distance step, so a query and
+a corpus vector land on the grid identically.
 
 Implementation note: top-k needs a ranking window, and ranking windows
 are not allowed on unbounded streams (there is no watermark that
@@ -23,11 +27,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.clustering import grid_melt
 from ..operators.pq import (
-    PQ_QUANT,
     PQ_SHORTLIST,
     PQ_SUBDIM,
     _melted,
@@ -76,23 +79,11 @@ def _serve_batch(
     contract). A caller whose query_ids are EXTERNAL request ids must
     pass False — otherwise a corpus vector that merely shares the
     request's numeric id would be silently excluded from the top-k."""
-    # VALID_VEC on the INCOMING queries (the corpus side is gated at
-    # pq._melted): a NaN/±Inf query element survives FLOOR as a silent
-    # Long extreme and overflows the ADC LUT subtraction under ANSI,
-    # killing the whole stream. A malformed query degrades to "no
-    # answer for that request id" instead.
-    from ..operators.similarity import VALID_VEC_SPARK
-
-    qm = batch.where(VALID_VEC_SPARK).select(
-        "query_id", F.posexplode("embedding").alias("pos0", "v")
-    ).select(
-        "query_id",
-        (F.col("pos0") + 1).cast("bigint").alias("dim"),
-        (F.col("pos0") / PQ_SUBDIM).cast("bigint").alias("sub"),
-        F.floor(F.col("v").cast("double") * PQ_QUANT)
-        .cast("bigint")
-        .alias("val"),
-    )
+    # grid_melt drops invalid INCOMING queries as it does corpus
+    # vectors: a NaN/±Inf query element would overflow the ADC LUT
+    # subtraction under ANSI and kill the whole stream, so a malformed
+    # query degrades to "no answer for that request id" instead.
+    qm = grid_melt(batch, "query_id", subdim=PQ_SUBDIM)
     adist = adc_distances(qm, index.codes, index.centroids)
     return _refine_topk(
         adist,

@@ -30,6 +30,67 @@ def test_kmeans_inertia_monotone_nonincreasing(spark):
     assert inertia[3] <= inertia[1]
 
 
+def test_lloyd_step_engine_equals_oracle_text(spark):
+    """The shared integer-grid Lloyd step gives identical rows in the
+    engine and in DuckDB on cases no operator test reaches: a point
+    equidistant from centroids 2 and 5 goes to 2; a vec_id held by two
+    rows sums both rows' distances (per row, one would go to 2 and the
+    other to 5); a negative sum's mean floors toward -inf (-17 / 3 is
+    -6, not -5)."""
+    import duckdb
+
+    from energy_data_pipeline_project_spark.operators.clustering import (
+        centroid_means,
+        distance_sql,
+        mean_cte,
+        nearest_centroid,
+        nearest_cte,
+    )
+
+    mult, keys = 8, ("vec_id",)
+    cent = {0: (1000, 1000), 1: (-1000, 1000), 2: (0, 10),
+            3: (1000, -1000), 4: (-1000, -1000), 5: (0, -10)}
+    vecs = [(10, (0, 0)), (11, (0, 9)), (11, (0, -11)),
+            (12, (-3, -15)), (13, (1, 3))]
+    cent_rows = [
+        (c, d + 1, v) for c, xs in cent.items() for d, v in enumerate(xs)
+    ]
+    point_rows = [(i, d + 1, v) for i, xs in vecs for d, v in enumerate(xs)]
+
+    points = spark.createDataFrame(point_rows, "vec_id long, dim long, val long")
+    cents = spark.createDataFrame(cent_rows, "cluster long, dim long, cval long")
+    nearest = nearest_centroid(
+        points, cents, keys=keys, cid="cluster", mult=mult
+    )
+    labels = nearest_centroid(
+        points, cents, keys=keys, cid="cluster", mult=mult, decode=True
+    )
+    means = centroid_means(points, labels, on=keys, by=("cluster", "dim"))
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE p (vec_id BIGINT, dim BIGINT, val BIGINT)")
+    con.executemany("INSERT INTO p VALUES (?, ?, ?)", point_rows)
+    con.execute("CREATE TABLE c (cluster BIGINT, dim BIGINT, cval BIGINT)")
+    con.executemany("INSERT INTO c VALUES (?, ?, ?)", cent_rows)
+    dists = f"({distance_sql('p', 'c', keys=keys, cid='cluster')})"
+    near = nearest_cte("a", dists, keys=keys, cid="cluster", mult=mult)
+    lab = nearest_cte(
+        "l", dists, keys=keys, cid="cluster", mult=mult, decode=True
+    )
+    upd = mean_cte("u", "p", "l", on=keys, by=("cluster", "dim"))
+
+    def duck(sql: str) -> list[tuple]:
+        return con.execute(sql).fetchall()
+
+    key = [(10, 100 * mult + 2), (11, 362 * mult + 5),
+           (12, 34 * mult + 5), (13, 50 * mult + 2)]
+    assert sorted(tuple(r) for r in nearest.collect()) == key
+    assert duck(f"WITH {near} SELECT * FROM a ORDER BY 1") == key
+    mean = [(2, 1, 0), (2, 2, 1), (5, 1, -1), (5, 2, -6)]
+    assert sorted(tuple(r) for r in means.collect()) == mean
+    assert duck(f"WITH {lab}, {upd} SELECT * FROM u ORDER BY 1, 2") == mean
+
+
 def test_label_spectrum_matches_local_numpy(spark):
     """The grouped-map kernel must reproduce an in-process numpy
     computation exactly (same sort order, same float64 path)."""

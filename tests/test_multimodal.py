@@ -117,7 +117,7 @@ def test_payload_simhash_pairs_identical_payloads(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     grams = df.select(
-        "doc_id", F.upper(F.hex(F.encode("text", "UTF-8"))).alias("hx")
+        "doc_id", F.encode("text", "UTF-8").alias("payload")
     ).select(
         "doc_id",
         F.explode(F.array_distinct(F.expr(_PAYLOAD_GRAMS_SPARK))).alias("w"),
@@ -130,3 +130,41 @@ def test_payload_simhash_pairs_identical_payloads(spark):
     }
     assert pairs.get((1, 2)) == 0
     assert (1, 3) not in pairs and (2, 3) not in pairs
+
+
+def test_payload_grams_equal_python_hex_split(spark):
+    """The engine's payload gram split equals the oracle's: distinct
+    8-hex-character slices of the upper-case hex payload, on a payload
+    of over 200 000 bytes (cut in one pass, not a quadratic walk of
+    the hex string), on byte lengths that are not a multiple of 4 (a
+    short last gram), and on an empty payload (no grams)."""
+    import random
+
+    import pyspark.sql.functions as F
+
+    from energy_data_pipeline_project_spark.operators.multimodal import (
+        _PAYLOAD_GRAMS_SPARK,
+    )
+
+    rnd = random.Random(7)
+    payloads = {
+        1: bytes(rnd.getrandbits(8) for _ in range(200_003)),
+        2: b"abcde",
+        3: b"abcdef",
+        4: b"\x00\xffz",
+        5: b"",
+        6: b"abcdefgh",
+    }
+    df = spark.createDataFrame(
+        list(payloads.items()), "doc_id long, payload binary"
+    )
+    got = {
+        r.doc_id: set(r.grams)
+        for r in df.select(
+            "doc_id",
+            F.array_distinct(F.expr(_PAYLOAD_GRAMS_SPARK)).alias("grams"),
+        ).collect()
+    }
+    for doc_id, payload in payloads.items():
+        hx = payload.hex().upper()
+        assert got[doc_id] == {hx[i : i + 8] for i in range(0, len(hx), 8)}
