@@ -798,7 +798,7 @@ def _simhash64_oracle(words_cte: str = _SIMHASH_TOKEN_CTE) -> str:
     sides = _pair_sides_sql("cand", "sig", "sig", "doc_a", "doc_b")
     return f"""
     WITH {words_cte},
-    sig AS ({_simhash_sql("tok", _SIMHASH64)}),
+    sig AS MATERIALIZED ({_simhash_sql("tok", _SIMHASH64)}),
     bands AS (
     {_band_melt_sql("sig", _SIMHASH64_QUARTERS)}
     ),

@@ -104,18 +104,18 @@ def _table_bucket_sql(
 ) -> str:
     """Bucket id for table t: k sign bits from planes [t*k, (t+1)*k).
 
-    ``pre_quantized=True`` means ``emb_col`` already holds the 1e4
-    FLOOR grid values: the quantization then runs ONCE per row instead
-    of inside all LSH_TABLES×LSH_BITS plane folds (the r09 profile
-    showed 64 redundant FLOOR+CAST per element dominating the Spark
+    ``pre_quantized=True`` means ``emb_col`` already holds the
+    ``GRID_QUANT`` FLOOR grid values: the quantization then runs ONCE
+    per row instead of inside all LSH_TABLES×LSH_BITS plane folds (64
+    redundant FLOOR+CAST per element otherwise dominate the Spark
     side) — bitwise-identical sign bits either way."""
-    # Components are FLOOR-quantized to the 1e4 integer grid before
-    # the plane dot: every product and partial sum is then an exactly
-    # representable integer-valued double (|term| <= 1e4*1024, 64-term
-    # sum << 2^53), so the sign test is EXACT in both engines — the
-    # raw-float dot was computed by different kernels (DuckDB
-    # list_dot_product vs the Spark fold) whose near-zero results
-    # could disagree and flip a vector's bucket (r07 review).
+    # Components are FLOOR-quantized to the GRID_QUANT integer grid
+    # before the plane dot: every product and partial sum is then an
+    # exactly representable integer-valued double (|term| <= GRID_QUANT*1024,
+    # 64-term sum << 2^53), so the sign test is EXACT in both engines.
+    # A raw-float dot runs through different kernels (DuckDB
+    # list_dot_product vs the Spark fold) whose near-zero results can
+    # disagree and flip a vector's bucket.
     terms = []
     for b in range(LSH_BITS):
         j = t * LSH_BITS + b
@@ -126,7 +126,7 @@ def _table_bucket_sql(
                 if pre_quantized
                 else (
                     f"list_transform(CAST({emb_col} AS DOUBLE[]), "
-                    f"x -> FLOOR(x * 10000.0))"
+                    f"x -> FLOOR(x * {GRID_QUANT}.0))"
                 )
             )
             dot = f"list_dot_product({src}, [{lits}]::DOUBLE[])"
@@ -136,7 +136,7 @@ def _table_bucket_sql(
             elem = (
                 "x * y"
                 if pre_quantized
-                else "FLOOR(CAST(x AS DOUBLE) * 10000.0) * y"
+                else f"FLOOR(CAST(x AS DOUBLE) * {GRID_QUANT}.0) * y"
             )
             dot = (
                 f"aggregate(zip_with({emb_col}, array({lits}), "
@@ -223,7 +223,7 @@ def _lsh_oracle() -> str:
     WITH e0 AS MATERIALIZED (
                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS de,
                       list_transform(CAST(embedding AS DOUBLE[]),
-                                     x -> FLOOR(x * 10000.0)) AS qde
+                                     x -> FLOOR(x * {GRID_QUANT}.0)) AS qde
                FROM embeddings WHERE {VALID_VEC_DUCK}),
     e AS MATERIALIZED (
                SELECT vec_id, de, {V.norm_duck("de")} AS nrm,
@@ -269,14 +269,14 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a degenerate all-zero dot in Spark but ABORTS DuckDB's
     # fixed-width list kernel — and neither belongs in the index
     emb = load_table(spark, sf_dir, "embeddings").where(VALID_VEC_SPARK)
-    # quantize ONCE per row (pre_quantized buckets): the grid FLOOR
-    # previously re-ran inside all 64 plane folds (r09 profile)
+    # quantize ONCE per row (pre_quantized buckets), not inside all 64
+    # plane folds
     eq = emb.select(
         "vec_id",
         F.col("embedding").alias("de"),
         F.expr(
             "transform(CAST(embedding AS ARRAY<DOUBLE>),"
-            " x -> FLOOR(x * 10000.0))"
+            f" x -> FLOOR(x * {GRID_QUANT}.0))"
         ).alias("qde"),
     )
     bucket_arr = F.array(

@@ -16,7 +16,9 @@ the table); ``read_for_rewrite`` heals a parked table and returns
 ``None`` for a missing one, so read-modify-writes pick their
 first-write branch from it; ``read_table_or_empty`` gives readouts an
 empty frame for a missing table; ``overwrite_partitions`` replaces
-only the partitions a frame has rows in.
+only the partitions a frame has rows in. A growing streaming index
+writes each batch into its own partition (``write_batch_partition``)
+and reads the strictly-earlier ones (``read_earlier_batches``).
 
 Scale posture: ``partition_by`` is the opt-in day-partitioning knob
 (bronze uses it via incremental ingest's ``date=`` layout; a 100 TB
@@ -30,7 +32,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from ..sources.tables import current_schema, read_parquet, record_schema
 
@@ -362,12 +364,40 @@ def write_batch_partition(df: "DataFrame", path: str, batch_id: int) -> None:
     in) the batch's own ``batch_id=<n>`` partition; a re-delivered
     batch REPLACES that partition (``overwrite_partitions``). An empty
     frame writes no part file and replaces no partition; on a new sink
-    it leaves a directory the lake reads as no table."""
+    it leaves a directory the lake reads as no table. The first
+    non-empty write to a new sink enters its schema in the table
+    catalog, so no read of the sink infers; later writes carry the
+    entry (``overwrite_partitions``)."""
     import pyspark.sql.functions as F
 
-    overwrite_partitions(
-        df.withColumn("batch_id", F.lit(int(batch_id))), path, ("batch_id",)
-    )
+    new_sink = _table_source(path) is None
+    df = df.withColumn("batch_id", F.lit(int(batch_id)))
+    overwrite_partitions(df, path, ("batch_id",))
+    if new_sink and _holds_table(path):
+        # as a fresh read infers it: every column nullable, batch_id
+        # an int (a bigint past 2^31 - 1), as F.lit typed it
+        fields = [
+            StructField(f.name, f.dataType, True, f.metadata) for f in df.schema
+        ]
+        record_schema(path, StructType(fields))
+
+
+def read_earlier_batches(
+    spark: SparkSession, path: str, batch_id: int
+) -> DataFrame | None:
+    """The replay rule of a growing ``write_batch_partition`` index:
+    its partitions strictly below ``batch_id``, without the column, or
+    ``None`` when no table exists yet. A replayed batch never meets its
+    first attempt nor a later batch. The partition filter keeps the
+    batch's own partition out even when it is written before the frame
+    runs; the earlier ones are read lazily, so consume the frame before
+    the index is written again."""
+    import pyspark.sql.functions as F
+
+    df = read_for_rewrite(spark, path)
+    if df is None:
+        return None
+    return df.where(F.col("batch_id") < int(batch_id)).drop("batch_id")
 
 
 def _atomic_swap(path: str, staged: str) -> None:

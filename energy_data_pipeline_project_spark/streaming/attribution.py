@@ -17,15 +17,11 @@ behavior (the money was attributed when the conversion landed), and
 the documented divergence from an after-the-fact batch recompute —
 the same honest-divergence style as the LSH/span index twins.
 
-Replay idempotence: the click log AND the split sink are partitioned
-by ``batch_id`` with dynamic partition overwrite, and the attribution
-join reads the log with ``batch_id < current`` (strictly earlier) — a
-re-delivered batch replaces its own partitions, never double-joins
-its own first-attempt clicks, and never sees clicks that arrived
-AFTER its first attempt (which would retro-attribute and break
-idempotence). The carve is shared with streaming/dedup_index.py /
-span_index.py / trend.py; the strict inequality is what the
-at-arrival contract adds.
+Replay idempotence: the click log AND the split sink are ``batch_id=``
+sinks (``lake.write_batch_partition``), and the attribution join reads
+the log through the lake's replay rule (``lake.read_earlier_batches``),
+as streaming/dedup_index.py and span_index.py do: a replayed purchase
+never meets a click that arrived after its first attempt.
 
 State growth: the click log only ever matters within ATTR_WINDOW_DAYS
 of incoming purchases, so the read prunes to the batch's window
@@ -45,7 +41,7 @@ from ..operators.timeseries import (
     attribution_purchases,
     attribution_split,
 )
-from ..pipeline.lake import read_for_rewrite
+from ..pipeline.lake import read_earlier_batches
 from ..pipeline.lake import write_batch_partition as _write_batch_partition
 from .jobs import run_micro_batches
 
@@ -56,7 +52,9 @@ def attribute_batch(
     """Attribute this batch's purchases against the click log + the
     batch's own clicks; append the batch's clicks to their log
     partition. Returns the split frame
-    ``(channel, purchase_id, attr_cents)``."""
+    ``(channel, purchase_id, attr_cents)``. The frame reads the log's
+    earlier partitions lazily: consume it before the log is written
+    again."""
     spark = batch_events.sparkSession
     bc = attribution_clicks(batch_events).localCheckpoint(eager=True)
     # checkpoint the purchase side too: the min(pts) bounds collect and
@@ -68,17 +66,8 @@ def attribute_batch(
     clicks = bc
     # None = no click log yet (cold start); schema drift in an
     # existing log fails the read
-    log = read_for_rewrite(spark, clicks_path)
-    if log is not None:
-        # STRICTLY-EARLIER batches only: on the live path the
-        # current batch has the max id so < and != agree, but a
-        # REPLAY of an old batch must not see clicks that arrived
-        # after its first attempt — batch_id != current would let
-        # a later-delivered out-of-order click retro-attribute the
-        # replayed purchases and break idempotence
-        prior = log.where(
-            F.col("batch_id") < int(batch_id)
-        ).drop("batch_id")
+    prior = read_earlier_batches(spark, clicks_path, batch_id)
+    if prior is not None:
         # window prune: clicks older than any possible touch are
         # dead weight for THIS batch's join (they stay in the log
         # for replays of later batches)
@@ -91,7 +80,7 @@ def attribute_batch(
             )
         clicks = prior.unionByName(bc)
 
-    split = attribution_split(clicks, bp).localCheckpoint(eager=True)
+    split = attribution_split(clicks, bp)
     _write_batch_partition(bc, clicks_path, batch_id)
     return split
 

@@ -9,15 +9,11 @@ O(batch + collisions) against the banded index, never a corpus
 re-pair; the index table holds K small ints per document.
 
 Replay idempotence (at-least-once sources re-deliver batches): both
-the signature index AND the verdict sink are partitioned by
-``batch_id`` and written with dynamic partition overwrite — a
-re-delivered batch REPLACES its own partitions instead of appending,
-and the cross-screen reads the index with ``batch_id < current``
-(strictly earlier) so a retry never matches a document against its
-own first-attempt signatures, nor against batches that arrived after
-its first attempt. This is the same idempotence carve as
-``streaming/trend.py``; contrast ``streaming/funnel.py``, whose MIN
-state needs none.
+the signature index AND the verdict sink are ``batch_id=`` sinks
+(``lake.write_batch_partition``), so a re-delivered batch REPLACES its
+own partitions, and the cross-screen reads the index through the
+lake's replay rule (``lake.read_earlier_batches``). Contrast
+``streaming/funnel.py``, whose MIN state needs none.
 
 Exactness contract (pinned in tests/test_streaming_dedup_index.py):
 replaying a corpus through the stream in ANY batch partitioning yields
@@ -36,7 +32,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..pipeline.lake import read_for_rewrite
+from ..pipeline.lake import read_earlier_batches
 from ..pipeline.lake import write_batch_partition as _write_batch_partition
 from ..operators.dedup import (
     LSH_BUCKET_CAP,
@@ -58,7 +54,9 @@ def screen_and_index_batch(
     """Screen one batch against the index + itself; write the batch's
     signatures into its index partition. Returns the verdict frame
     ``(doc_id, dup_of, est_jaccard)`` — ``dup_of`` is the previously
-    seen (or same-batch, lower-id) near-duplicate."""
+    seen (or same-batch, lower-id) near-duplicate. The frame reads the
+    index's earlier partitions lazily: consume it before the index is
+    written again."""
     spark = batch_docs.sparkSession
     sig_b = _minhash_signatures(_shingle_hashes(batch_docs))
     sig_b = sig_b.localCheckpoint(eager=True)
@@ -68,17 +66,8 @@ def screen_and_index_batch(
         F.col("doc_a").alias("dup_of"),
         "est_jaccard",
     )
-    idx_df = read_for_rewrite(spark, index_path)
-    if idx_df is not None:
-        # STRICTLY-EARLIER partitions only: a replay must neither
-        # self-match its first-attempt signatures nor see batches that
-        # arrived after its first attempt — the latter would emit
-        # (this-batch, later-batch) pairs the later batch already
-        # emitted, changing this partition's contents (on the live
-        # path current == max id, so < and != agree)
-        sig_i = idx_df.where(
-            F.col("batch_id") < int(batch_id)
-        ).drop("batch_id")
+    sig_i = read_earlier_batches(spark, index_path, batch_id)
+    if sig_i is not None:
         # a re-ingested doc_id meets its own earlier signature in the
         # index — that is id-level re-arrival (the exact-dedup tier's
         # concern), not a near-dup verdict; drop the identity pairs
@@ -88,9 +77,6 @@ def screen_and_index_batch(
         verdicts = within.unionByName(cross)
     else:
         verdicts = within
-    # materialize BEFORE the index write so the verdict join cannot
-    # observe the batch's own signatures on the index side
-    verdicts = verdicts.localCheckpoint(eager=True)
     _write_batch_partition(sig_b, index_path, batch_id)
     return verdicts
 

@@ -16,14 +16,10 @@ pins. The batch op flags BOTH members (df >= 2); at ingest time the
 earlier copy was original when it arrived — the same deliberate
 divergence documented for the LSH index twin.
 
-Replay idempotence: the gram index and the span sink are partitioned
-by ``batch_id`` with dynamic partition overwrite, and the screen reads
-the index with ``batch_id < current`` (STRICTLY earlier) — a
-re-delivered batch replaces its own partitions, never matches its
-first-attempt grams, and never sees grams that arrived after its
-first attempt (which would flag different spans and break
-idempotence). The carve is shared with
-``streaming/dedup_index.py``.
+Replay idempotence: the gram index and the span sink are ``batch_id=``
+sinks (``lake.write_batch_partition``), and the screen reads the index
+through the lake's replay rule (``lake.read_earlier_batches``), as
+``streaming/dedup_index.py`` does.
 
 Index state: one row per DISTINCT gram hash (h, owner) — smaller than
 the postings frame, and bounded by corpus vocabulary of G-grams. At
@@ -38,7 +34,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..operators.dedup import merge_span_islands, span_gram_frame
-from ..pipeline.lake import read_for_rewrite
+from ..pipeline.lake import read_earlier_batches
 from ..pipeline.lake import write_batch_partition as _write_batch_partition
 from .jobs import run_micro_batches
 
@@ -49,18 +45,15 @@ def screen_and_index_span_batch(
     """Screen one batch against the gram index + itself; append the
     batch's first-sighted grams to its index partition. Returns the
     span frame ``(doc_id, span_id, start_tok, end_tok, span_tokens,
-    n_grams)`` for positions duplicated at arrival time."""
+    n_grams)`` for positions duplicated at arrival time. The frame reads
+    the index's earlier partitions lazily: consume it before the index
+    is written again."""
     spark = batch_docs.sparkSession
     g = span_gram_frame(batch_docs).localCheckpoint(eager=True)
 
     # within-batch: min-id owner per gram; later ids are flagged
     own_b = g.groupBy("h").agg(F.min("doc_id").alias("owner"))
-    idx_df = read_for_rewrite(spark, index_path)
-    idx = (
-        idx_df.where(F.col("batch_id") < int(batch_id)).select("h", "owner")
-        if idx_df is not None
-        else None
-    )
+    idx = read_earlier_batches(spark, index_path, batch_id)
 
     if idx is not None:
         # ONE index scan per batch: the left join gives both the
@@ -86,7 +79,7 @@ def screen_and_index_span_batch(
         .where(F.col("owner") != F.col("doc_id"))
         .select("doc_id", "pos")
     )
-    spans = merge_span_islands(flagged).localCheckpoint(eager=True)
+    spans = merge_span_islands(flagged)
     _write_batch_partition(new_grams, index_path, batch_id)
     return spans
 

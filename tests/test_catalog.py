@@ -380,6 +380,76 @@ def test_batch_sink_carries_its_catalog_entry(spark, tmp_path):
     assert read_for_rewrite(spark, fresh) is None
 
 
+def test_new_batch_sink_enters_its_schema(spark, tmp_path):
+    """The first non-empty ``write_batch_partition`` into a new path
+    enters the sink's schema in the table catalog: reading the sink
+    back launches no job and gives the schema a fresh read infers
+    (every column nullable, ``batch_id`` an ``int``). An empty first
+    write enters nothing; the first write with rows then does."""
+    import pyspark.sql.functions as F
+
+    from energy_data_pipeline_project_spark.pipeline.lake import (
+        read_for_rewrite,
+        write_batch_partition,
+    )
+    from energy_data_pipeline_project_spark.sources.tables import (
+        current_schema,
+    )
+
+    rows = spark.range(20).select(
+        F.col("id").alias("h"),
+        F.array(F.col("id").cast("int")).alias("v"),
+        F.lit("x").alias("s"),
+    )
+    path = str(tmp_path / "index")
+    write_batch_partition(rows, path, 0)
+    idx, jobs = jobs_during(spark, read_for_rewrite, spark, path)
+    assert jobs == 0
+    assert idx.schema == spark.read.parquet(path).schema
+    assert dict(idx.dtypes)["batch_id"] == "int"
+    assert idx.count() == 20
+
+    late = str(tmp_path / "late")
+    write_batch_partition(rows.limit(0), late, 0)
+    assert current_schema(late) is None
+    write_batch_partition(rows, late, 1)
+    idx, jobs = jobs_during(spark, read_for_rewrite, spark, late)
+    assert jobs == 0
+    assert idx.schema == spark.read.parquet(late).schema
+
+
+def test_earlier_batches_read_is_strict(spark, tmp_path):
+    """``read_earlier_batches`` is the replay rule of every growing
+    index: only the partitions strictly below the given id, without the
+    ``batch_id`` column, and ``None`` before the first write. A frame
+    built from it may run after the batch's own partition is written
+    (a first attempt or a replay): that partition never reaches it."""
+    from energy_data_pipeline_project_spark.pipeline.lake import (
+        read_earlier_batches,
+        write_batch_partition,
+    )
+
+    path = str(tmp_path / "index")
+    assert read_earlier_batches(spark, path, 0) is None
+
+    def batch(b):
+        return spark.range(b * 10, b * 10 + 10).withColumnRenamed("id", "h")
+
+    def hs(frame):
+        return sorted(r["h"] for r in frame.collect())
+
+    write_batch_partition(batch(0), path, 0)
+    for b in (1, 2):
+        earlier = read_earlier_batches(spark, path, b)
+        write_batch_partition(batch(b), path, b)
+        assert earlier.columns == ["h"]
+        assert hs(earlier) == list(range(b * 10))
+    assert hs(read_earlier_batches(spark, path, 0)) == []
+    replay = read_earlier_batches(spark, path, 1)
+    write_batch_partition(batch(1), path, 1)
+    assert hs(replay) == list(range(10))
+
+
 def test_partition_overwrite_carries_only_a_current_entry(spark, tmp_path):
     """``overwrite_partitions`` carries a catalog entry only when it
     matched the table before the write. An unpartitioned table's entry
